@@ -482,6 +482,11 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
       finally out.close()
     }
     commitMarker(layer, snap, requireParent, op)
+    if (config.format == "parquet")
+      committedSchemas.put(snap.toString,
+        org.apache.spark.sql.NewspipeSqlBridge.nullableSchema(
+          org.apache.spark.sql.types.StructType(df.schema.fields.filterNot(f =>
+            partitionBy.exists(_.equalsIgnoreCase(f.name))))))
     // Keep the DECLARED layout property in sync with what this full
     // overwrite actually committed: a `writeAtomic(partitionBy = …)` is a
     // layout declaration too (the catalog's `partitioning()` — and so the
@@ -689,24 +694,76 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
     */
   def metadataRowCount(layer: String): Option[Long] =
     latestSnapshot(layer).flatMap { snap =>
-      sidecarStats(layer).flatMap { case (statsBase, stats) =>
-        val inv = snapshotInventory(layer, snap)
-        val rebase =
-          if (statsBase == layerPath(layer)) (p: String) => p
-          else (p: String) => s"_v/${snap.getName}/$p"
-        val rowsByRel = stats.map(st => rebase(st.path) -> st.rows).toMap
-        if (!inv.forall(rowsByRel.contains)) None
-        else {
-          val total = inv.iterator.map(rowsByRel).sum
-          val dvDeleted = dvMapOf(snap).iterator.map {
-            case (fileRel, payloadRel) =>
-              // clone-carried refs: the payload keys source-relative rels
-              dvPayload(layerPath(layer), payloadRel)
-                .getOrElse(payloadKeyOf(fileRel), Nil).size.toLong
-          }.sum
-          Some(total - dvDeleted)
-        }
+      liveFileStats(layer, snap).map { live =>
+        val dvDeleted = dvMapOf(snap).iterator.map {
+          case (fileRel, payloadRel) =>
+            // clone-carried refs: the payload keys source-relative rels
+            dvPayload(layerPath(layer), payloadRel)
+              .getOrElse(payloadKeyOf(fileRel), Nil).size.toLong
+        }.sum
+        live.iterator.map(_.rows).sum - dvDeleted
       }
+    }
+
+  /** Min and max of a top-level column over the layer's current rows,
+    * answered from METADATA ONLY (the stats sidecar's per-file bounds) —
+    * the [[metadataRowCount]] role for `agg(min(c), max(c))`.
+    *
+    * `Some(Some((min, max)))` carries `Long` for integral columns and
+    * `java.time.LocalDate` for dates. `Some(None)` means no live row holds a non-null value (an
+    * all-null column or an empty snapshot), where the aggregate returns
+    * nulls. None means metadata cannot answer exactly and callers scan:
+    * a live file without stats for the column, deletion vectors (a
+    * deleted row may hold the bound), a partition column, or any other
+    * type (string bounds may be truncated, floating point loses its
+    * bounds on NaN, decimals and timestamps are not decoded).
+    */
+  def metadataMinMax(layer: String,
+      column: String): Option[Option[(Any, Any)]] =
+    latestSnapshot(layer).filter(dvMapOf(_).isEmpty).flatMap { snap =>
+      import org.apache.spark.sql.types._
+      val decode: Option[(String, Long => Any)] =
+        layerSchema(layer).find(_.name == column).map(_.dataType).collect {
+          case ByteType | ShortType | IntegerType | LongType =>
+            ("long", (v: Long) => v)
+          case DateType => ("date", (v: Long) => java.time.LocalDate.ofEpochDay(v))
+        }
+      val physical = mappingOf(snap).getOrElse(column, column)
+      for {
+        (tag, out) <- decode
+        live <- liveFileStats(layer, snap)
+        // per file: Some(bounds), Some(None) when it holds no non-null
+        // value, None when its stats cannot say
+        perFile = live.map { st =>
+          st.cols.get(physical).filter(_.tag == tag) match {
+            case _ if st.rows == 0 => Some(None)
+            case Some(FileStats.ColStats(_, Some(lo), Some(hi), _)) =>
+              Some(Some((lo.toLong, hi.toLong)))
+            case Some(FileStats.ColStats(_, None, None, Some(n)))
+                if n == st.rows => Some(None)
+            case _ => None
+          }
+        }
+        if perFile.forall(_.isDefined)
+      } yield {
+        val bounds = perFile.flatten.flatten
+        if (bounds.isEmpty) None
+        else Some((out(bounds.map(_._1).min), out(bounds.map(_._2).max)))
+      }
+    }
+
+  /** The stats sidecar entry of EVERY live file of `snap` (the layer's
+    * head), in inventory order, or None when any live file lacks one.
+    */
+  private def liveFileStats(layer: String,
+      snap: Path): Option[Seq[FileStats.FileStat]] =
+    sidecarStats(layer).flatMap { case (statsBase, stats) =>
+      val inv = snapshotInventory(layer, snap)
+      val rebase =
+        if (statsBase == layerPath(layer)) (p: String) => p
+        else (p: String) => s"_v/${snap.getName}/$p"
+      val byRel = stats.map(st => rebase(st.path) -> st).toMap
+      if (inv.forall(byRel.contains)) Some(inv.map(byRel)) else None
     }
 
   /** Hive partition columns of the layer (the current snapshot's
@@ -1027,35 +1084,25 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
     * ~100 MB JSON walk; the cache turns that into one). A MISS is never
     * cached: the not-yet-committed window must stay re-checkable.
     */
-  private val manifestCache =
-    new java.util.LinkedHashMap[String, SnapshotManifest](64, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, SnapshotManifest]): Boolean =
-        size() > 32 // holds a full delta chain so head folds stay O(1)
-    }
+  private val manifestCache = // holds a full delta chain: head folds stay O(1)
+    new LruCache[String, SnapshotManifest](32)
 
   /** Parsed `_DELTA.json` of an INCREMENTAL commit (see [[DeltaDoc]]), if
     * the snapshot is one. Cached like manifests — committed docs are
     * immutable, misses stay re-checkable.
     */
-  private val deltaCache =
-    new java.util.LinkedHashMap[String, DeltaDoc](64, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, DeltaDoc]): Boolean = size() > 32
-    }
+  private val deltaCache = new LruCache[String, DeltaDoc](32)
 
   private def deltaDocOf(snap: Path): Option[DeltaDoc] = {
     val key = snap.toString
-    deltaCache.synchronized {
-      val hit = deltaCache.get(key)
-      if (hit != null) return Some(hit)
-    }
-    val p = new Path(snap, DeltaDoc.FileName)
-    if (!fs(p).exists(p)) None
-    else {
-      val d = DeltaDoc.fromJson(readFully(p))
-      deltaCache.synchronized { deltaCache.put(key, d) }
-      Some(d)
+    deltaCache.get(key).orElse {
+      val p = new Path(snap, DeltaDoc.FileName)
+      if (!fs(p).exists(p)) None
+      else {
+        val d = DeltaDoc.fromJson(readFully(p))
+        deltaCache.put(key, d)
+        Some(d)
+      }
     }
   }
 
@@ -1074,11 +1121,9 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
       .getOrElse(config.checkpointInterval)
 
   private def manifestOf(snap: Path): Option[SnapshotManifest] = {
-    def cached(p: Path): Option[SnapshotManifest] = manifestCache.synchronized {
-      Option(manifestCache.get(p.toString))
-    }
+    def cached(p: Path): Option[SnapshotManifest] = manifestCache.get(p.toString)
     def store(p: Path, m: SnapshotManifest): SnapshotManifest = {
-      manifestCache.synchronized { manifestCache.put(p.toString, m) }
+      manifestCache.put(p.toString, m)
       m
     }
     def fullOf(p: Path): Option[SnapshotManifest] = {
@@ -1235,18 +1280,22 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
       case None =>
         // self-contained snapshot: the indexed read applies too (one
         // listing, automatic stats skipping) when non-partitioned parquet;
-        // schema comes from one sample footer (cached) — the same single
-        // file mergeSchema=false discovery would have consulted
+        // schema comes from what this instance committed, else one sample
+        // footer (cached) — the same single file mergeSchema=false
+        // discovery would have consulted. Hive-partitioned snapshots hand
+        // the committed data schema to discovery (partition columns still
+        // come from the directory names), which skips its inference job.
         lazy val rels = snapshotDirFilesRel(snap)
+        val committed =
+          if (mergeSchema) None else committedSchemas.get(snap.toString)
         if (!mergeSchema && config.format == "parquet" && rels.nonEmpty &&
             !rels.exists(_.contains("="))) {
-          val sample = s"${snap.toString}/${rels.head}"
-          val schema = schemaCache.computeIfAbsent(sample,
-            _ => spark.read.format(config.format).load(sample).schema)
-          readIndexed(snap.toString, snap, rels, schema)
+          readIndexed(snap.toString, snap, rels, committed.getOrElse(
+            footerSchema(s"${snap.toString}/${rels.head}")))
         } else {
           val reader = spark.read.format(config.format)
-          (if (mergeSchema) reader.option("mergeSchema", "true") else reader)
+          (if (mergeSchema) reader.option("mergeSchema", "true")
+           else committed.fold(reader)(reader.schema))
             .load(snap.toString)
         }
       case Some(m) if m.files.isEmpty =>
@@ -1543,9 +1592,7 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
     }
     put(SnapshotManifest.FileName, head) // head LAST (checkpoint rule)
     f.delete(new Path(snap, DeltaDoc.FileName), false)
-    manifestCache.synchronized {
-      manifestCache.put(snap.toString, updated)
-    }
+    manifestCache.put(snap.toString, updated)
   }
 
   // ---- identity columns ----------------------------------------------------
@@ -2242,14 +2289,15 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
   private def dvMapOf(snap: Path): Map[String, String] =
     manifestOf(snap).map(_.dvs).getOrElse(Map.empty)
 
-  private val dvPayloadCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Map[String, Seq[Long]]]()
+  private val dvPayloadCache = new LruCache[String, Map[String, Seq[Long]]](128)
 
   /** Parsed DV payload document (cached — payloads are immutable). */
   private def dvPayload(base: String,
-      payloadRel: String): Map[String, Seq[Long]] =
-    dvPayloadCache.computeIfAbsent(resolveRel(base, payloadRel),
-      p => DeletionVectors.fromJson(readFully(new Path(p))))
+      payloadRel: String): Map[String, Seq[Long]] = {
+    val p = resolveRel(base, payloadRel)
+    dvPayloadCache.getOrElseUpdate(p)(
+      DeletionVectors.fromJson(readFully(new Path(p))))
+  }
 
   /** (qualified absolute file path, deleted position) pairs of a
     * snapshot's DVs, optionally restricted to a file scope — the
@@ -2595,8 +2643,23 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
   /** One-footer schema cache for [[resolveCondition]] (keyed by the sample
     * file, which is immutable).
     */
-  private val schemaCache = new java.util.concurrent
-    .ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
+  private val schemaCache =
+    new LruCache[String, org.apache.spark.sql.types.StructType](32)
+
+  /** Read schema of each self-contained parquet snapshot THIS instance
+    * committed, keyed by snapshot path: the data columns every footer
+    * carries (partition columns excluded), nullable as file reads are.
+    * Reading a snapshot right after committing it then skips the
+    * footer-inference job. Sound because a committed snapshot is
+    * immutable and its path is never reused.
+    */
+  private val committedSchemas =
+    new LruCache[String, org.apache.spark.sql.types.StructType](32)
+
+  /** Footer schema of one immutable data file (cached). */
+  private def footerSchema(file: String): org.apache.spark.sql.types.StructType =
+    schemaCache.getOrElseUpdate(file)(
+      spark.read.format(config.format).load(file).schema)
 
   /** Resolve the predicate WITHOUT listing the layer: analyze+optimize the
     * filter over an empty LogicalRDD with the layer's schema (one cached
@@ -2619,8 +2682,7 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
     try {
       val first = stats.head
       val sampleFile = resolveRel(base, first.path)
-      val fileSchema = schemaCache.computeIfAbsent(sampleFile,
-        _ => spark.read.format(config.format).load(sampleFile).schema)
+      val fileSchema = footerSchema(sampleFile)
       val partCols = stats.iterator.flatMap(_.partitionValues.keysIterator)
         .toSeq.distinct.filterNot(fileSchema.fieldNames.contains)
       val schema = StructType(fileSchema.fields ++
@@ -2706,8 +2768,7 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
     * per query and the JSON parse is the dominant fixed cost of a pruned
     * read at bench scale.
     */
-  private val sidecarCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[FileStats.FileStat]]()
+  private val sidecarCache = new LruCache[String, Seq[FileStats.FileStat]](32)
 
   /** Newest committed snapshot's sidecar stats, if any, with the base the
     * stats paths are relative to: the snapshot dir for self-contained
@@ -2736,12 +2797,12 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
 
   /** One snapshot's parsed `_STATS.json`, cached; Nil when absent. */
   private def snapshotSidecar(snap: Path): Seq[FileStats.FileStat] =
-    sidecarCache.computeIfAbsent(snap.toString, _ => {
+    sidecarCache.getOrElseUpdate(snap.toString) {
       val p = new Path(snap, FileStats.SidecarName)
       val f = fs(p)
       if (!f.exists(p)) Nil
       else FileStats.fromJson(readFully(p))
-    })
+    }
 
   // ---- per-file Bloom index (see [[BloomIndex]]) --------------------------
 
@@ -5022,19 +5083,18 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
     * consult the head several times.
     */
   private val foldedStatsCache =
-    new java.util.LinkedHashMap[String, Map[String, FileStats.FileStat]](
-      16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, Map[String, FileStats.FileStat]])
-          : Boolean = size() > 8
-    }
+    new LruCache[String, Map[String, FileStats.FileStat]](8)
+
+  /** This instance's metadata caches by name (for bound checks). */
+  private[io] def caches: Map[String, LruCache[String, _ <: AnyRef]] = Map(
+    "manifest" -> manifestCache, "delta" -> deltaCache,
+    "dvPayload" -> dvPayloadCache, "schema" -> schemaCache,
+    "committedSchema" -> committedSchemas, "sidecar" -> sidecarCache,
+    "foldedStats" -> foldedStatsCache)
 
   private def statsOfSnapshot(layer: String,
       snap: Path): Map[String, FileStats.FileStat] = {
-    foldedStatsCache.synchronized {
-      val hit = foldedStatsCache.get(snap.toString)
-      if (hit != null) return hit
-    }
+    foldedStatsCache.get(snap.toString).foreach(hit => return hit)
     val p = new Path(snap, FileStats.SidecarName)
     val f = fs(p)
     val own: Map[String, FileStats.FileStat] =
@@ -5057,9 +5117,7 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
         statsOfSnapshot(layer,
           new Path(snap.getParent, deltaDocOf(snap).get.parent)) ++ own
       else own
-    foldedStatsCache.synchronized {
-      foldedStatsCache.put(snap.toString, folded)
-    }
+    foldedStatsCache.put(snap.toString, folded)
     folded
   }
 
@@ -6207,10 +6265,9 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
         lazy val rels = snapshotDirFilesRel(snap)
         if (config.format == "parquet" && rels.nonEmpty &&
             !rels.exists(_.contains("="))) {
-          val sample = s"${snap.toString}/${rels.head}"
           org.apache.spark.sql.NewspipeSqlBridge.nullableSchema(
-            schemaCache.computeIfAbsent(sample,
-              _ => spark.read.format(config.format).load(sample).schema))
+            committedSchemas.get(snap.toString).getOrElse(
+              footerSchema(s"${snap.toString}/${rels.head}")))
         } else loadSnapshot(layer, snap, mergeSchema = false).schema
     }
 
@@ -8052,18 +8109,13 @@ object Lake {
     * across [[Lake]] instances (the catalog mints one per call, so an
     * instance-level cache would never warm).
     */
-  private val committedCache =
-    new java.util.LinkedHashMap[String, java.lang.Boolean](1024, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, java.lang.Boolean]): Boolean =
-        size() > 65536
-    }
+  private val committedCache = new LruCache[String, java.lang.Boolean](65536)
 
   private[io] def committedCacheContains(key: String): Boolean =
-    committedCache.synchronized(committedCache.containsKey(key))
+    committedCache.contains(key)
 
   private[io] def committedCacheAdd(key: String): Unit =
-    committedCache.synchronized(committedCache.put(key, java.lang.Boolean.TRUE))
+    committedCache.put(key, java.lang.Boolean.TRUE)
 
   /** JVM-global incremental COPY INTO ledger: layer root → (version names
     * already scanned for a `_COPY` marker, union of loaded staging
@@ -8074,27 +8126,20 @@ object Lake {
     * Bounded; eviction only costs a rescan.
     */
   private val copyLedgerCache =
-    new java.util.LinkedHashMap[String, (Set[String], Set[String])](
-      64, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, (Set[String], Set[String])])
-          : Boolean = size() > 256
-    }
+    new LruCache[String, (Set[String], Set[String])](256)
 
   private[io] def copyLedgerGet(layerKey: String): (Set[String], Set[String]) =
-    copyLedgerCache.synchronized(
-      Option(copyLedgerCache.get(layerKey))
-        .getOrElse((Set.empty[String], Set.empty[String])))
+    copyLedgerCache.get(layerKey)
+      .getOrElse((Set.empty[String], Set.empty[String]))
 
   private[io] def copyLedgerPut(layerKey: String,
       scanned: Set[String], loaded: Set[String]): Unit =
-    copyLedgerCache.synchronized(
-      copyLedgerCache.put(layerKey, (scanned, loaded)))
+    copyLedgerCache.put(layerKey, (scanned, loaded))
 
   /** Dropping a layer must drop its cached ledger — a table recreated at
     * the same path starts with a blank loading history. */
   private[io] def copyLedgerInvalidate(layerKey: String): Unit =
-    copyLedgerCache.synchronized(copyLedgerCache.remove(layerKey))
+    copyLedgerCache.remove(layerKey)
 
   /** Serialized `_METRICS` commit document (DESCRIBE HISTORY's
     * operationMetrics + operationParameters + commit instant): file

@@ -125,7 +125,7 @@ class LakeChangeSource extends StreamSourceProvider {
       schema: Option[StructType], providerName: String,
       parameters: Map[String, String]): Source = {
     val (base, layer) = layerOf(parameters)
-    new LakeChangeStream(sqlContext.sparkSession, base, layer,
+    new LakeChangeStream(sqlContext.sparkSession, base, layer, metadataPath,
       parameters.getOrElse("startingVersion", "earliest"),
       parameters.get("startingTimestamp").map(_.toLong),
       parameters.get("maxVersionsPerTrigger").map { v =>
@@ -177,7 +177,8 @@ object LakeChangeSource {
   * scan volume, `Trigger.AvailableNow` bounds the run.
   */
 private[source] class LakeChangeStream(spark: SparkSession, basePath: String,
-    layer: String, startingVersion: String, startingTimestamp: Option[Long],
+    layer: String, metadataPath: String,
+    startingVersion: String, startingTimestamp: Option[Long],
     maxVersionsPerTrigger: Option[Int], maxBytesPerTrigger: Option[Long],
     keyColumns: Seq[String], tracked: Boolean = false,
     skipChangeCommits: Boolean = false)
@@ -207,19 +208,43 @@ private[source] class LakeChangeStream(spark: SparkSession, basePath: String,
   private def versionOf(o: V1Offset): String = o.json
 
   /** Version the FIRST batch diffs from; None = replay the oldest retained
-    * snapshot in full. Resolved once at stream start ("latest" must pin
-    * what "current" meant then, not at first-batch time).
+    * snapshot in full. Resolved once per CHECKPOINT and kept under the
+    * source's metadata path, as KafkaSource keeps its initial offsets:
+    * "latest" must pin what "current" meant at the first start. A restart
+    * re-initialises the last committed batch with `getBatch(None, end)`,
+    * and a base re-resolved then (newer than `end`) would reverse that
+    * batch's range.
     */
-  private val baseVersion: Option[String] = startingTimestamp match {
-    case Some(ts) => Some(lake.resolveVersionAt(layer, ts))
-    case None => startingVersion match {
-      case "earliest" => None
-      case "latest" => lake.listVersions(layer).headOption
-      case v =>
-        require(lake.listVersions(layer).contains(v),
-          s"startingVersion '$v' is not a committed snapshot of '$layer' " +
-            s"(known: ${lake.listVersions(layer).mkString(", ")})")
-        Some(v)
+  private val baseVersion: Option[String] = {
+    val file = new org.apache.hadoop.fs.Path(metadataPath, "startingVersion")
+    val f = file.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (f.exists(file)) {
+      val in = f.open(file)
+      try Some(new String(in.readAllBytes(), "UTF-8")).filter(_.nonEmpty)
+      finally in.close()
+    }
+    else {
+      val resolved = startingTimestamp match {
+        case Some(ts) => Some(lake.resolveVersionAt(layer, ts))
+        case None => startingVersion match {
+          case "earliest" => None
+          case "latest" => lake.listVersions(layer).headOption
+          case v =>
+            require(lake.listVersions(layer).contains(v),
+              s"startingVersion '$v' is not a committed snapshot of " +
+                s"'$layer' (known: ${lake.listVersions(layer).mkString(", ")})")
+            Some(v)
+        }
+      }
+      // temp + rename: a crash mid-write never leaves a torn start
+      val tmp = new org.apache.hadoop.fs.Path(metadataPath,
+        s".startingVersion-${java.util.UUID.randomUUID()}.tmp")
+      val out = f.create(tmp, true)
+      try out.write(resolved.getOrElse("").getBytes("UTF-8"))
+      finally out.close()
+      if (!f.rename(tmp, file)) throw new java.io.IOException(
+        s"lake change feed: could not record the stream's start at $file")
+      resolved
     }
   }
 

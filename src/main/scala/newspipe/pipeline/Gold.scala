@@ -91,9 +91,11 @@ object Gold {
     silver.groupBy("COUNTRY").count()
       .orderBy(desc("count"), asc("COUNTRY"))
 
-  /** Full silver→gold: dims + fact, one silver scan, dims broadcast into the
-    * fact instead of being recomputed per-write as the reference does
-    * (SURVEY.md §3 E3.3).
+  /** Full silver→gold as three frames over one silver frame: dims + fact,
+    * the dims broadcast into the fact. Writing all three runs the dim
+    * builds twice (once per dim write, once inside the fact's
+    * broadcasts); [[Pipeline.run]] writes the dims first and joins the
+    * fact against the written layers instead.
     */
   def build(silver: DataFrame, keyMode: String = "legacy")
       : (DataFrame, DataFrame, DataFrame) = {

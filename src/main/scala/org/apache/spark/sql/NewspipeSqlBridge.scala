@@ -121,6 +121,14 @@ object NewspipeSqlBridge {
   def nullableSchema(s: org.apache.spark.sql.types.StructType)
       : org.apache.spark.sql.types.StructType = s.asNullable
 
+  /** `c` marked non-nullable without a runtime check (Catalyst's
+    * `KnownNotNull`) — for columns whose values are known non-null but
+    * whose reader widened them to nullable.
+    */
+  def knownNotNull(c: Column): Column =
+    column(org.apache.spark.sql.catalyst.expressions.KnownNotNull(
+      convertedExpression(c)))
+
   /** The ANALYZED plan of a composed DataFrame — what a resolution rule
     * must splice in when substituting an already-resolved relation (the
     * unanalyzed form still carries unresolved nodes with no `output`).

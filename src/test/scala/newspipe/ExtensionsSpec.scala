@@ -174,21 +174,13 @@ class ExtensionsSpec extends SparkTestBase {
       .toDF("id", "text").createOrReplaceTempView("mhlazy")
     Seq((1L, Seq(1.0f, 0.0f)), (2L, Seq(0.0f, 1.0f)))
       .toDF("id", "v").createOrReplaceTempView("vecs_lazy")
-    @volatile var jobs = 0
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs += 1
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      // analysis + optimization + physical planning, but NO execution
+    // analysis + optimization + physical planning, but NO execution (the
+    // old eager localCheckpoint ran planning jobs)
+    jobsDuring {
       val df = spark.sql("SELECT * FROM minhash_pairs('mhlazy', 'id', 'text', 0.8)")
       df.queryExecution.executedPlan // force full planning
       spark.sql("EXPLAIN SELECT * FROM knn_join('vecs_lazy', 'id', 'v', 2, 1)")
-      Thread.sleep(1000) // listener events are async; planning jobs (the old
-                         // eager localCheckpoint) would have posted by now
-      jobs shouldBe 0
-    } finally spark.sparkContext.removeSparkListener(listener)
+    } shouldBe 0
   }
 
   test("chunk is callable in FROM position and matches the DataFrame API") {

@@ -7,6 +7,30 @@ import org.scalatest.matchers.should.Matchers
 /** Shared local SparkSession for all suites (one per forked test JVM). */
 trait SparkTestBase extends AnyFunSuite with Matchers {
   lazy val spark: SparkSession = SparkTestBase.session
+
+  /** Spark jobs started while `body` runs. The listener bus is drained
+    * before the listener joins (earlier jobs' queued events must not
+    * count) and again after `body` (a sleep fails OPEN under load: events
+    * delivered late are never counted and the assertion passes
+    * spuriously).
+    */
+  def jobsDuring(body: => Any): Int = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    org.apache.spark.NewspipeTestBridge.waitListenerBusEmpty(sc)
+    sc.addSparkListener(listener)
+    try {
+      body
+      org.apache.spark.NewspipeTestBridge.waitListenerBusEmpty(sc)
+    } finally sc.removeSparkListener(listener)
+    jobs.get()
+  }
 }
 
 object SparkTestBase {

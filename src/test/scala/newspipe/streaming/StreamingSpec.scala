@@ -784,4 +784,38 @@ class StreamingSpec extends SparkTestBase {
       feed.map(_._3).toSet shouldBe Set(idOf(1L))
     } finally q.stop()
   }
+
+  test("keyed change-feed stream started at latest survives restarts " +
+      "after the layer moved on (start pinned in the checkpoint)") {
+    val dir = java.nio.file.Files.createTempDirectory("lakecdf9").toString
+    val lake = new newspipe.io.Lake(spark, newspipe.io.LakeConfig(dir))
+    import spark.implicits._
+    lake.writeAtomic(Seq((1L, "a"), (2L, "b")).toDF("id", "v"), "t")
+    // one AvailableNow run on one checkpoint: its rows, or what it threw
+    def run(): (Set[(Long, String, String)], Option[Throwable]) = {
+      val got = new java.util.concurrent.ConcurrentLinkedQueue[(Long, String, String)]()
+      val q = spark.readStream
+        .format("newspipe.io.source.LakeChangeSource")
+        .option("basePath", dir).option("layer", "t")
+        .option("startingVersion", "latest").option("keyColumns", "id")
+        .load()
+        .writeStream
+        .option("checkpointLocation", s"$dir/_ckpt")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+          b.as[(Long, String, String)].collect().foreach(got.add); ()
+        }
+        .start()
+      val err = scala.util.Try(q.awaitTermination(120000)).failed.toOption
+        .orElse(q.exception)
+      (got.toArray(Array.empty[(Long, String, String)]).toSet, err)
+    }
+    run() shouldBe ((Set.empty, None)) // latest: no initial load
+    // the next run's start must not re-resolve `latest` to this commit
+    lake.mergeInto("t", Seq((1L, "a2"), (3L, "c")).toDF("id", "v"), Seq("id"))
+    run() shouldBe ((Set((1L, "a", "update_preimage"),
+      (1L, "a2", "update_postimage"), (3L, "c", "insert")), None))
+    lake.deleteWhere("t", $"id" === 2L)
+    run() shouldBe ((Set((2L, "b", "delete")), None))
+  }
 }
