@@ -130,19 +130,27 @@ object Bench {
     // which made real regressions indistinguishable from luck. The median
     // is the headline number; the min is kept as the "best achievable"
     // floor for plan-shape comparisons across rounds.
+    // A rep that throws is not a sample: its time-to-throw would make a
+    // broken query look fast. Such queries are named in "failed"; their
+    // median and minimum cover the reps that completed, and a query with
+    // no completed rep has no entry in "queries" at all.
     val reps = 3
-    val results = queries.map { case (name, fn) =>
+    val failed = scala.collection.mutable.LinkedHashSet.empty[String]
+    val results = queries.flatMap { case (name, fn) =>
       val before = childrenOf(benchTmp)
-      val times = (1 to reps).map { _ =>
+      val times = (1 to reps).flatMap { _ =>
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+        val ok =
+          try { fn(spark, sfDir).count(); true }
+          catch { case _: Throwable => false }
         val dt = (System.nanoTime() - t0) / 1e9
         dropCheckpoints()
-        dt
+        if (ok) Some(dt) else { failed += name; None }
       }.sorted
       quiesce()
       (childrenOf(benchTmp) -- before).foreach(deleteTree)
-      name -> ((times(reps / 2), times.head))
+      if (times.isEmpty) None
+      else Some(name -> ((times(times.length / 2), times.head)))
     }
     val qs = results.map { case (k, (med, _)) => s"\"" + k + "\":" + med }
       .mkString("{", ",", "}")
@@ -154,8 +162,9 @@ object Bench {
     // target/bench.json (round-5 artifact lost 16 per-query times to stdout
     // truncation under Spark's INFO noise). "queries" holds the medians
     // (driver contract); "queries_min" the per-query minima.
+    val failedJson = failed.map(n => "\"" + n + "\"").mkString("[", ",", "]")
     val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,"stat":"median","queries":$qs,"queries_min":$mins,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,"stat":"median","queries":$qs,"queries_min":$mins,"sf":"$sfDir","failed":$failedJson}"""
     try {
       val out = java.nio.file.Paths.get("target", "bench.json")
       java.nio.file.Files.createDirectories(out.getParent)

@@ -1,27 +1,21 @@
 package newspipe.io
 
-import org.apache.hadoop.fs.{FileSystem, Path}
-
-/** Persisted near-dedup index metadata and artifact serde — the MinHash
-  * sibling of [[VectorIndex]], sharing [[IndexArtifacts]]' per-data-file
-  * content-addressed layout (`layer/_dindex/<name>/`).
+/** The near-dedup index family ([[IndexArtifacts]] holds the shared
+  * layout, content addressing and coverage contract): one banded-MinHash
+  * signature artifact per data file under
+  * `layer/_dindex/<name>/shards/<digest>.sig`.
   *
-  * Each artifact holds the banded MinHash signatures of ONE immutable
-  * data file: `(id, band, bucket)` triples, where bucket is the xxhash64
-  * of the band's signature slice ([[newspipe.ops.Dedup.lshBands]]).
+  * Each artifact holds `(id, band, bucket)` triples, where bucket is the
+  * xxhash64 of the band's signature slice ([[newspipe.ops.Dedup.lshBands]]).
   * Shingling + hashing — the expensive pass over the text — therefore
-  * runs ONCE per file ever: an append signs its new files only
-  * (O(increment)), and [[Lake.nearDups]] joins artifact against artifact
-  * on `(band, bucket)` without re-reading a byte of text; document text
-  * is touched again only to exact-verify the candidate pairs.
-  *
-  * At 100 TB: signatures are ~3 orders of magnitude smaller than the
-  * text they summarize, so the steady-state dedup cost of landing a new
-  * batch is [sign the batch] + [join its signatures against the
-  * persisted corpus signatures] + [verify candidates] — the corpus text
-  * is never re-shingled.
+  * runs ONCE per file ever, and [[Lake.nearDups]] joins artifact against
+  * artifact on `(band, bucket)` without re-reading a byte of text;
+  * document text is touched again only to exact-verify the candidate
+  * pairs. Signatures are ~3 orders of magnitude smaller than the text
+  * they summarize, so landing a batch costs [sign the batch] + [join its
+  * signatures against the persisted ones] + [verify candidates].
   */
-object DedupIndex {
+object DedupIndex extends IndexArtifacts {
 
   /** A declared index. `numHashes`/`bands`/`rows` are the LSH S-curve
     * parameters (rows = numHashes / bands), `shingle` the n-gram size,
@@ -32,45 +26,35 @@ object DedupIndex {
       numHashes: Int, bands: Int, rows: Int, shingle: Int,
       threshold: Double)
 
+  val Family = "dedup"
   val DirName = "_dindex"
   val Ext = ".sig"
 
-  /** May a FOREIGN index's signature artifacts serve `local`'s
-    * declaration? ([[VectorIndex.artifactCompatible]]'s dedup sibling —
-    * a clone borrows by index NAME, so a source that recreated the name
-    * with different LSH parameters must be refused: a different
-    * `numHashes`/`bands` split makes the `(band, bucket)` join silently
-    * miss true near-dup pairs.) `threshold` is verification-time-only
-    * and deliberately excluded — artifacts hold band signatures, not
-    * verdicts.
+  def nameOf(m: Meta): String = m.name
+  def keyedColumns(m: Meta): Seq[String] = Seq(m.idCol, m.textCol)
+
+  /** Included: a signature of a deleted row only produces candidates,
+    * and candidates exact-verify against the ALIVE corpus, so stale ids
+    * verify away — [[Lake.nearDups]] genuinely serves these files from
+    * their artifacts.
+    */
+  val dvFilesCovered = true
+
+  /** A different `numHashes`/`bands` split makes the `(band, bucket)`
+    * join silently miss true near-dup pairs; `threshold` is
+    * verification-time-only (artifacts hold band signatures, not
+    * verdicts).
     */
   def artifactCompatible(local: Meta, foreign: Meta): Boolean =
     local.idCol == foreign.idCol && local.textCol == foreign.textCol &&
       local.numHashes == foreign.numHashes &&
       local.bands == foreign.bands && local.rows == foreign.rows &&
       local.shingle == foreign.shingle
-  val MetaFile: String = IndexArtifacts.MetaFile
 
   private val Magic = 0x44534731 // "DSG1"
 
-  def indexRoot(layerPath: String, name: String): Path =
-    IndexArtifacts.indexRoot(DirName, layerPath, name)
-
-  def shardsDir(layerPath: String, name: String): Path =
-    IndexArtifacts.shardsDir(DirName, layerPath, name)
-
-  def existingShards(f: FileSystem, layerPath: String,
-      name: String): Set[String] =
-    IndexArtifacts.existingShards(DirName, Ext, f, layerPath, name)
-
-  def writeShard(f: FileSystem, layerPath: String, name: String,
-      digest: String, bytes: Array[Byte]): Unit =
-    IndexArtifacts.writeShard(DirName, Ext, f, layerPath, name, digest,
-      bytes)
-
   def toJson(m: Meta): String = {
-    def q(s: String) = "\"" + s.replace("\\", "\\\\")
-      .replace("\"", "\\\"") + "\""
+    val q = IndexArtifacts.quote _
     s"""{"name": ${q(m.name)}, "idCol": ${q(m.idCol)}, """ +
       s""""textCol": ${q(m.textCol)}, "numHashes": ${m.numHashes}, """ +
       s""""bands": ${m.bands}, "rows": ${m.rows}, """ +
@@ -78,13 +62,7 @@ object DedupIndex {
   }
 
   def fromJson(s: String): Meta = {
-    def str(k: String): String = {
-      val re = ("\"" + k + "\"\\s*:\\s*\"((?:[^\"\\\\]|\\\\.)*)\"").r
-      re.findFirstMatchIn(s).map(_.group(1)
-          .replace("\\\"", "\"").replace("\\\\", "\\"))
-        .getOrElse(throw new IllegalStateException(
-          s"dedup index metadata missing '$k': $s"))
-    }
+    def str(k: String) = IndexArtifacts.jsonString(Family, s, k)
     def num(k: String): String = {
       val re = ("\"" + k + "\"\\s*:\\s*([0-9.eE+-]+)").r
       re.findFirstMatchIn(s).map(_.group(1))

@@ -2084,14 +2084,12 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
     // artifacts — renaming or dropping a keyed column would strand every
     // artifact and declaration (the bloom-sidecar rule applied to the
     // index families); unrelated columns stay free to evolve
-    val badIdx =
-      vectorIndexes(layer).collect {
-        case m if m.idCol.equalsIgnoreCase(col) ||
-            m.vecCol.equalsIgnoreCase(col) => s"vector index '${m.name}'"
-      } ++ dedupIndexes(layer).collect {
-        case m if m.idCol.equalsIgnoreCase(col) ||
-            m.textCol.equalsIgnoreCase(col) => s"dedup index '${m.name}'"
+    val badIdx = IndexArtifacts.families.flatMap { fam =>
+      indexesOf(layer, fam).collect {
+        case m if fam.keyedColumns(m).exists(_.equalsIgnoreCase(col)) =>
+          s"${fam.Family} index '${fam.nameOf(m)}'"
       }
+    }
     require(badIdx.isEmpty,
       s"$op('$layer', '$col'): ${badIdx.mkString(" and ")} key(s) the " +
         "column — drop the index first (shard artifacts key logical " +
@@ -4152,25 +4150,20 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
     }
   }
 
-  /** Post-commit index upkeep, BOTH families (vector shard graphs, dedup
-    * signature shards) — soft-failing (an index is DERIVED state: a
-    * failed build leaves files uncovered, which search/nearDups handle
-    * exactly, so a maintenance error must never fail the commit). One
-    * `_vindex` + one `_dindex` existence probe when the layer declares
-    * no index.
+  /** Post-commit index upkeep, every family — soft-failing per family
+    * (an index is DERIVED state: a failed build leaves files uncovered,
+    * which the family's reads answer exactly, so a maintenance error
+    * must never fail the commit). One existence probe per family when
+    * the layer declares no index.
     */
-  private def maintainIndexesSoftly(layer: String): Unit = {
-    try { maintainVectorIndexes(layer); () }
-    catch {
-      case scala.util.control.NonFatal(e) => Console.err.println(
-        s"[lake] vector index maintenance on '$layer' skipped: $e")
+  private def maintainIndexesSoftly(layer: String): Unit =
+    IndexArtifacts.families.foreach { fam =>
+      try { maintainIndexes(layer, fam); () }
+      catch {
+        case scala.util.control.NonFatal(e) => Console.err.println(
+          s"[lake] ${fam.Family} index maintenance on '$layer' skipped: $e")
+      }
     }
-    try { maintainDedupIndexes(layer); () }
-    catch {
-      case scala.util.control.NonFatal(e) => Console.err.println(
-        s"[lake] dedup index maintenance on '$layer' skipped: $e")
-    }
-  }
 
   /** Latest version recorded for `appId` in the layer's stream-txn ledger
     * (the `_TXN` markers [[appendAtomic]] commits atomically with its
@@ -4724,19 +4717,9 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
     // build local artifacts for THEIR files only. Bloom sidecars
     // (excluded above) cannot ride: they key canonical paths a rel need
     // not match.
-    srcLake.vectorIndexes(src).foreach { m =>
-      val root = VectorIndex.indexRoot(layerPath(dst), m.name)
-      fd.mkdirs(root)
-      val out = fd.create(new Path(root, VectorIndex.MetaFile), true)
-      try out.write(VectorIndex.toJson(m).getBytes("UTF-8"))
-      finally out.close()
-    }
-    srcLake.dedupIndexes(src).foreach { m =>
-      val root = DedupIndex.indexRoot(layerPath(dst), m.name)
-      fd.mkdirs(root)
-      val out = fd.create(new Path(root, DedupIndex.MetaFile), true)
-      try out.write(DedupIndex.toJson(m).getBytes("UTF-8"))
-      finally out.close()
+    IndexArtifacts.families.foreach { fam =>
+      srcLake.indexesOf(src, fam)
+        .foreach(writeIndexMeta(fam, layerPath(dst))(_))
     }
     // record which layers this clone references (`_CLONE_SOURCES` at the
     // clone root, before the commit): vacuum on a SOURCE layer consults
@@ -6290,17 +6273,384 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
     buf.result()
   }
 
+  // ---- persisted indexes: the shared lifecycle -----------------------------
+  //
+  // Both families ([[VectorIndex]], [[DedupIndex]]) run through one set of
+  // operations over the [[IndexArtifacts]] contract; the public per-family
+  // methods below are one-line entries into it.
+
+  /** Write a declaration (`_INDEX.json`) under a layer root — CREATE and
+    * SHALLOW CLONE share it.
+    */
+  private def writeIndexMeta(fam: IndexArtifacts, layerRoot: String)(
+      meta: fam.Meta): Unit = {
+    val root = fam.indexRoot(layerRoot, fam.nameOf(meta))
+    val f = fs(root)
+    f.mkdirs(root)
+    val out = f.create(new Path(root, fam.MetaFile), true)
+    try out.write(fam.toJson(meta).getBytes("UTF-8"))
+    finally out.close()
+  }
+
+  /** Declare + build (the family has validated its own parameters): one
+    * artifact per live data file, built in one Spark pass and maintained
+    * incrementally afterwards. Returns the number of artifacts built.
+    */
+  private def declareIndex(layer: String, fam: IndexArtifacts)(
+      meta: fam.Meta): Int = {
+    val name = fam.nameOf(meta)
+    val op = s"create${fam.Family.capitalize}Index"
+    require(name.nonEmpty && name.forall(c => c.isLetterOrDigit || c == '_'),
+      s"${fam.Family} index name '$name' must be alphanumeric/underscore")
+    val snap = latestSnapshot(layer).getOrElse(throw new IllegalStateException(
+      s"layer '$layer' has no committed snapshot — a ${fam.Family} index " +
+        "indexes committed data files (writeAtomic first)"))
+    require(mappingOf(snap).isEmpty,
+      s"$op('$layer'): column-mapped layers are not " +
+        "supported (shards key logical columns by name)")
+    val schema = snapshotSchema(layer, snap)
+    fam.keyedColumns(meta).foreach(c => require(
+      schema.fieldNames.exists(_.equalsIgnoreCase(c)),
+      s"$op('$layer'): layer has no column '$c'"))
+    require(indexesOf(layer, fam).forall(fam.nameOf(_) != name),
+      s"layer '$layer' already has a ${fam.Family} index '$name' — drop " +
+        "it first")
+    writeIndexMeta(fam, layerPath(layer))(meta)
+    maintainIndexes(layer, fam)
+  }
+
+  private[io] def dropIndex(layer: String, fam: IndexArtifacts,
+      name: String): Unit = {
+    val root = fam.indexRoot(layerPath(layer), name)
+    val f = fs(root)
+    if (!f.exists(new Path(root, fam.MetaFile)))
+      throw new NoSuchElementException(
+        s"layer '$layer' has no ${fam.Family} index '$name'")
+    f.delete(root, true)
+    ()
+  }
+
+  /** Declared indexes of one family (metadata-only listing). */
+  private def indexesOf(layer: String, fam: IndexArtifacts): Seq[fam.Meta] = {
+    val dir = new Path(s"${layerPath(layer)}/${fam.DirName}")
+    val f = fs(dir)
+    if (!f.exists(dir)) return Nil
+    f.listStatus(dir).iterator.filter(_.isDirectory).flatMap { st =>
+      val mf = new Path(st.getPath, fam.MetaFile)
+      if (f.exists(mf)) Some(fam.fromJson(readFully(mf))) else None
+    }.toSeq.sortBy(fam.nameOf)
+  }
+
+  private def namedIndex(layer: String, fam: IndexArtifacts)(
+      metas: Seq[fam.Meta], name: String): fam.Meta =
+    metas.find(fam.nameOf(_) == name).getOrElse(
+      throw new NoSuchElementException(s"layer '$layer' has no " +
+        s"${fam.Family} index '$name' (declared: " +
+        s"${metas.map(fam.nameOf).mkString(", ")})"))
+
+  /** The index a read path answers from: the named one, or the layer's
+    * only index of the family.
+    */
+  private def resolveIndex(layer: String, fam: IndexArtifacts,
+      indexName: Option[String]): fam.Meta = {
+    val metas = indexesOf(layer, fam)
+    require(metas.nonEmpty, s"layer '$layer' has no ${fam.Family} index " +
+      s"— create${fam.Family.capitalize}Index first")
+    indexName match {
+      case Some(n) => namedIndex(layer, fam)(metas, n)
+      case None =>
+        require(metas.lengthCompare(1) == 0, s"layer '$layer' declares " +
+          s"${metas.size} ${fam.Family} indexes — name one " +
+          s"(${metas.map(fam.nameOf).mkString(", ")})")
+        metas.head
+    }
+  }
+
+  /** Build missing artifacts for every declared index of the family
+    * against the CURRENT snapshot — O(new files). Idempotent and safe to
+    * call any time (a concurrent maintainer writes identical bytes).
+    */
+  private[io] def maintainIndexes(layer: String, fam: IndexArtifacts): Int =
+    indexesOf(layer, fam).iterator.map(maintainIndex(layer, fam)(_)).sum
+
+  /** Rebuild coverage for ONE named index: the explicit trigger for the
+    * paths that deliberately don't auto-maintain — a full [[writeAtomic]]
+    * overwrite (rebuilding the whole index inside a write would be a
+    * surprise O(corpus) cost) or a foreign writer's commits.
+    * O(uncovered files), idempotent.
+    */
+  private[io] def refreshIndex(layer: String, fam: IndexArtifacts,
+      name: String): Int =
+    maintainIndex(layer, fam)(namedIndex(layer, fam)(indexesOf(layer, fam),
+      name))
+
+  /** (rel, artifact digest) of each rel — the content address every
+    * family keys its artifacts by ([[IndexArtifacts.digestOf]]).
+    */
+  private def artifactDigests(layer: String,
+      rels: Seq[String]): Seq[(String, String)] = {
+    val base = layerPath(layer)
+    val f = fs(new Path(base))
+    rels.map(rel => rel -> IndexArtifacts.digestOf(
+      f.makeQualified(new Path(resolveRel(base, rel))).toString))
+  }
+
+  /** Per-index coverage against the CURRENT snapshot: (meta, the live
+    * files — rel, digest — the family's reads answer from a reachable
+    * artifact, the live inventory). Deletion-vector files count only
+    * where [[IndexArtifacts.dvFilesCovered]] says so. Metadata-only: one
+    * inventory walk + one shards listing per reachable root.
+    */
+  private def indexCoverage(layer: String, fam: IndexArtifacts)
+      : Seq[(fam.Meta, Seq[(String, String)], Seq[String])] = {
+    val metas = indexesOf(layer, fam)
+    if (metas.isEmpty) return Nil
+    val snapOpt = latestSnapshot(layer)
+    val inv = snapOpt.map(snapshotInventory(layer, _)).getOrElse(Nil)
+    val dv =
+      if (fam.dvFilesCovered) Map.empty[String, String]
+      else snapOpt.map(dvMapOf).getOrElse(Map.empty)
+    val digests = artifactDigests(layer, inv)
+    metas.map { meta =>
+      val reachable = reachableShardArtifacts(layer, fam)(meta, inv).keySet
+      (meta, digests.filter { case (rel, d) =>
+        reachable.contains(d) && !dv.contains(rel) }, inv)
+    }
+  }
+
+  /** Build the artifacts one index is missing against the CURRENT
+    * snapshot. Reachable, not just local, artifacts count: a shallow
+    * clone BORROWS the source's artifacts by content address, so shared
+    * files need no local build. A layer column-mapped after creation is
+    * skipped (its reads fall back to exact scans). Returns the number of
+    * artifacts built.
+    */
+  private def maintainIndex(layer: String, fam: IndexArtifacts)(
+      meta: fam.Meta): Int = {
+    val snap = latestSnapshot(layer).getOrElse(return 0)
+    if (mappingOf(snap).nonEmpty) return 0
+    val inv = snapshotInventory(layer, snap)
+    val artifacts = reachableShardArtifacts(layer, fam)(meta, inv)
+    val missing = artifactDigests(layer, inv)
+      .filterNot { case (_, d) => artifacts.contains(d) }
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    meta match {
+      case m: VectorIndex.Meta =>
+        val built = buildArtifacts(layer, VectorIndex, m.name, snap, missing,
+          Seq(col(m.idCol).cast("long").as("__id"), col(m.vecCol).as("__v")))(
+          r => Iterator.single((r.getLong(1),
+            newspipe.ops.Hnsw.toRaw(r.get(2)))))(
+          rows => VectorIndex.buildShard(m, rows.toArray))
+        if (built.nonEmpty) {
+          val base = layerPath(layer)
+          VectorIndex.writeRoutingSegment(fs(new Path(base)), base, m.name,
+            VectorIndex.serializeRouting(built.toSeq.map {
+              case (d, (n, mean, minCos)) => (d, n, mean, minCos) }))
+        }
+        backfillVectorRouting(layer, m, inv, artifacts,
+          justRouted = built.map(_._1).toSet)
+        built.length
+      case m: DedupIndex.Meta =>
+        buildArtifacts(layer, DedupIndex, m.name, snap, missing,
+          Seq(col(m.idCol).cast("long").as("__id"),
+            dedupBandsExpr(m).as("__bb")))(
+          // null id / null signature (null text) sign nothing — exactly
+          // the rows the from-scratch pipeline's explode drops
+          r => if (r.isNullAt(1) || r.isNullAt(2)) Iterator.empty else {
+            val id = r.getLong(1)
+            r.getSeq[org.apache.spark.sql.Row](2).iterator.collect {
+              case bb if !bb.isNullAt(0) && !bb.isNullAt(1) =>
+                (id, bb.getInt(0), bb.getLong(1))
+            }
+          })(
+          triples => (DedupIndex.serialize(triples.toArray), triples.length))
+          .length
+    }
+  }
+
+  /** The artifact build both families share: read the `missing` files
+    * once, route each row to its file's builder by `input_file_name`,
+    * repartition by file, group per file inside the task and write each
+    * file's artifact from the task. Rows are keyed by the DECODED URI
+    * path (scheme/authority dropped, percent-encoding resolved) because
+    * the two sides render the same file differently (`file:/` vs
+    * `file:///`, hive `k=v` escaping) — and last-segment keys are NOT
+    * unique: a hive write's single task reuses one part-file name across
+    * every partition dir. `itemsOf` turns one row (`__f` + `cols`) into
+    * the file's build items; `artifactOf` is the family's per-file
+    * builder (artifact bytes + a summary returned to the driver). Task
+    * closures capture only serializable values: the family object, the
+    * two functions and broadcasts. No job runs when nothing is missing.
+    */
+  private def buildArtifacts[T, S](layer: String, fam: IndexArtifacts,
+      name: String, snap: Path, missing: Seq[(String, String)],
+      cols: Seq[org.apache.spark.sql.Column])(
+      itemsOf: org.apache.spark.sql.Row => IterableOnce[T])(
+      artifactOf: scala.collection.Seq[T] => (Array[Byte], S))(
+      implicit enc: org.apache.spark.sql.Encoder[(String, S)])
+      : Array[(String, S)] = {
+    if (missing.isEmpty) return Array.empty
+    import org.apache.spark.sql.functions.{col, input_file_name}
+    val base = layerPath(layer)
+    val f = fs(new Path(base))
+    val pathKeyOf: String => String = s =>
+      try new java.net.URI(s).getPath catch { case _: Exception => s }
+    val byPath: Map[String, String] = missing.map { case (rel, d) =>
+      pathKeyOf(f.makeQualified(new Path(resolveRel(base, rel)))
+        .toUri.toString) -> d
+    }.toMap
+    val targetRels = missing.map(_._1)
+    val rows = readRelFiles(layer, targetRels,
+        schemaHint = Some(snapshotSchema(layer, snap)))
+      .select(input_file_name().as("__f") +: cols: _*)
+    val confB = spark.sparkContext.broadcast(
+      new org.apache.spark.util.SerializableConfiguration(
+        spark.sparkContext.hadoopConfiguration))
+    val pathsB = spark.sparkContext.broadcast(byPath)
+    val nParts = math.max(1, math.min(targetRels.size,
+      spark.sparkContext.defaultParallelism * 2))
+    rows.repartition(nParts, col("__f"))
+      .mapPartitions { it =>
+        val byFile = scala.collection.mutable.HashMap.empty[String,
+          scala.collection.mutable.ArrayBuffer[T]]
+        it.foreach { r =>
+          byFile.getOrElseUpdate(pathKeyOf(r.getString(0)),
+            scala.collection.mutable.ArrayBuffer.empty) ++= itemsOf(r)
+        }
+        val fsys = new Path(base).getFileSystem(confB.value.value)
+        byFile.iterator.flatMap { case (pathKey, items) =>
+          pathsB.value.get(pathKey).map { digest =>
+            val (bytes, summary) = artifactOf(items)
+            fam.writeShard(fsys, base, name, digest, bytes)
+            (digest, summary)
+          }
+        }
+      }.collect()
+  }
+
+  /** The layer root a cross-layer rel points into (None = the rel is
+    * layer-local): `../<layer>/…` sibling refs resolve against the lake
+    * base; `base:<root>//<rel>` refs carry their root explicitly. Used
+    * to locate a SHALLOW CLONE source's index artifacts.
+    */
+  private def foreignLayerRootOfRel(base: String, rel: String)
+      : Option[String] = {
+    if (rel.startsWith(Lake.BaseRefPrefix))
+      return Some(Lake.splitBaseRef(rel)._1)
+    if (!rel.startsWith("../")) return None
+    var b = base.stripSuffix("/")
+    var r = rel
+    while (r.startsWith("../")) {
+      val cut = b.lastIndexOf('/')
+      if (cut <= 0) return None
+      b = b.substring(0, cut)
+      r = r.substring(3)
+    }
+    val seg = r.indexOf('/')
+    if (seg <= 0) None else Some(s"$b/${r.substring(0, seg)}")
+  }
+
+  /** Layer roots whose index `meta` may serve this layer: the local
+    * root always, plus each distinct foreign root the inventory
+    * references (a shallow clone's rels) WHOSE `_INDEX.json` passes
+    * [[IndexArtifacts.artifactCompatible]]. A refused or missing foreign
+    * declaration degrades the clone to exact scans / local rebuilds of
+    * the shared files — cost, never correctness. One meta read per
+    * distinct foreign root (clones reference few sources).
+    */
+  private def reachableIndexRoots(layer: String, fam: IndexArtifacts)(
+      meta: fam.Meta, inv: Seq[String]): Seq[String] = {
+    val base = layerPath(layer)
+    val foreign = inv.flatMap(foreignLayerRootOfRel(base, _)).distinct
+      .filter { root =>
+        val mf = new Path(fam.indexRoot(root, fam.nameOf(meta)),
+          fam.MetaFile)
+        try fs(mf).exists(mf) &&
+          fam.artifactCompatible(meta, fam.fromJson(readFully(mf)))
+        catch { case _: Exception => false }
+      }
+    base +: foreign
+  }
+
+  /** digest → artifact path for every artifact of index `meta` REACHABLE
+    * from this layer: its own shards directory first (a locally built
+    * artifact always wins), then each compatible foreign root's
+    * ([[reachableIndexRoots]]). Content addressing makes borrowing
+    * sound: the digest keys the FS-qualified DATA-file path, which a
+    * clone's rel resolves to, so the source's artifact for a shared file
+    * is byte-identical to what a local rebuild would produce — a clone
+    * reads the source's index with ZERO artifact bytes copied, and
+    * maintenance skips shared files entirely. One listing per distinct
+    * root.
+    */
+  private def reachableShardArtifacts(layer: String, fam: IndexArtifacts)(
+      meta: fam.Meta, inv: Seq[String]): Map[String, Path] = {
+    val name = fam.nameOf(meta)
+    reachableIndexRoots(layer, fam)(meta, inv)
+      .foldLeft(Map.empty[String, Path]) { (acc, root) =>
+        val f = fs(new Path(root))
+        acc ++ fam.existingShards(f, root, name).iterator
+          .filterNot(acc.contains)
+          .map(d => d -> f.makeQualified(
+            new Path(fam.shardsDir(root, name), s"$d${fam.Ext}")))
+      }
+  }
+
+  /** Reclaim index artifacts (every family) no RETAINED snapshot's data
+    * file backs any more (post-vacuum: rewritten-away or deleted
+    * files') — the index-side leg of VACUUM, O(retained inventory +
+    * artifacts).
+    */
+  private def pruneIndexShards(layer: String): Unit = {
+    val declared = IndexArtifacts.families.flatMap(fam =>
+      indexesOf(layer, fam).map(m => fam -> fam.nameOf(m)))
+    if (declared.isEmpty) return
+    val base = layerPath(layer)
+    val f = fs(new Path(base))
+    val live: Set[String] = committedVersions(layer).flatMap(snap =>
+      artifactDigests(layer, snapshotInventory(layer, snap)).map(_._2)).toSet
+    declared.foreach { case (fam, name) =>
+      (fam.existingShards(f, base, name) -- live).foreach { d =>
+        f.delete(new Path(fam.shardsDir(base, name), s"$d${fam.Ext}"), false)
+      }
+      if (fam eq VectorIndex) compactRoutingSegments(f, base, name, live)
+    }
+  }
+
+  /** Fold every routing segment of a vector index into ONE holding only
+    * live digests (dead entries are harmless — search ignores them — but
+    * segments would otherwise accumulate one per maintenance call
+    * forever). Write-merged-then-delete-olds: a racing reader that loses
+    * a segment mid-read just over-probes.
+    */
+  private def compactRoutingSegments(f: org.apache.hadoop.fs.FileSystem,
+      base: String, name: String, live: Set[String]): Unit = {
+    val segs = VectorIndex.routingSegmentFiles(f, base, name)
+    if (segs.isEmpty) return
+    val entries = VectorIndex.readRoutingEntries(f, base, name)
+      .filter { case (d, _) => live.contains(d) }
+      .map { case (d, r) => (d, r.count,
+        r.centroid.map(_.toDouble), r.minCos.toDouble) }
+      .toSeq
+    val keep: Option[String] =
+      if (entries.isEmpty) None
+      else {
+        val bytes = VectorIndex.serializeRouting(entries)
+        VectorIndex.writeRoutingSegment(f, base, name, bytes)
+        val md = java.security.MessageDigest.getInstance("MD5")
+        Some(md.digest(bytes).map("%02x".format(_)).mkString +
+          VectorIndex.RoutingExt)
+      }
+    segs.filterNot(p => keep.contains(p.getName)).foreach(f.delete(_, false))
+  }
+
   // ---- persisted vector index (ANN) ---------------------------------------
 
   /** Declare + build a persisted ANN index over `vecCol` (layout and
-    * rationale: [[VectorIndex]]): ONE serialized HNSW graph per live data
-    * file, content-addressed by the file's qualified path — built in a
-    * single Spark pass over the corpus (graphs build where the data
-    * sits), searched by [[vectorSearch]] WITHOUT ever re-reading the
-    * corpus, and maintained incrementally: [[appendAtomic]] and the
-    * OPTIMIZE/compaction family build graphs for their NEW files only
-    * (O(increment) — an immutable file's graph never invalidates).
-    * Returns the number of shard graphs built.
+    * lifecycle: [[IndexArtifacts]]; kinds: [[VectorIndex]]): one shard
+    * per live data file, searched by [[vectorSearch]] WITHOUT ever
+    * re-reading the corpus. Returns the number of shards built.
     *
     * The 100 TB posture this buys over [[newspipe.ops.Hnsw.hnswTopK]]:
     * hnswTopK re-reads the corpus and rebuilds every graph per CALL;
@@ -6314,197 +6664,44 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
       pqM: Int = 8, pqK: Int = 256): Int = {
     require(pqM >= 1 && pqK >= 1 && pqK <= 256,
       s"pq parameters out of range: pqM=$pqM, pqK=$pqK (codes are bytes)")
-    require(name.nonEmpty && name.forall(c => c.isLetterOrDigit || c == '_'),
-      s"vector index name '$name' must be alphanumeric/underscore")
     require(VectorIndex.Kinds.contains(kind),
       s"vector index kind '$kind' not supported (supported: " +
         s"${VectorIndex.Kinds.toSeq.sorted.mkString(", ")})")
-    val snap = latestSnapshot(layer).getOrElse(throw new IllegalStateException(
-      s"layer '$layer' has no committed snapshot — a vector index " +
-        "indexes committed data files (writeAtomic first)"))
-    require(mappingOf(snap).isEmpty,
-      s"createVectorIndex('$layer'): column-mapped layers are not " +
-        "supported (shards key logical columns by name)")
-    val schema = snapshotSchema(layer, snap)
-    Seq(vecCol, idCol).foreach(c => require(
-      schema.fieldNames.exists(_.equalsIgnoreCase(c)),
-      s"createVectorIndex('$layer'): layer has no column '$c'"))
-    require(vectorIndexes(layer).forall(_.name != name),
-      s"layer '$layer' already has a vector index '$name' — drop it first")
-    val meta = VectorIndex.Meta(name, kind, idCol, vecCol, m,
-      efConstruction, nlist, nprobe, pqM, pqK)
-    val root = VectorIndex.indexRoot(layerPath(layer), name)
-    val f = fs(root)
-    f.mkdirs(root)
-    val out = f.create(new Path(root, VectorIndex.MetaFile), true)
-    try out.write(VectorIndex.toJson(meta).getBytes("UTF-8"))
-    finally out.close()
-    maintainVectorIndexes(layer)
+    declareIndex(layer, VectorIndex)(VectorIndex.Meta(name, kind, idCol,
+      vecCol, m, efConstruction, nlist, nprobe, pqM, pqK))
   }
 
-  def dropVectorIndex(layer: String, name: String): Unit = {
-    val root = VectorIndex.indexRoot(layerPath(layer), name)
-    val f = fs(root)
-    if (!f.exists(new Path(root, VectorIndex.MetaFile)))
-      throw new NoSuchElementException(
-        s"layer '$layer' has no vector index '$name'")
-    f.delete(root, true)
-    ()
-  }
+  def dropVectorIndex(layer: String, name: String): Unit =
+    dropIndex(layer, VectorIndex, name)
 
   /** Declared vector indexes of the layer (metadata-only listing). */
-  def vectorIndexes(layer: String): Seq[VectorIndex.Meta] = {
-    val dir = new Path(s"${layerPath(layer)}/${VectorIndex.DirName}")
-    val f = fs(dir)
-    if (!f.exists(dir)) return Nil
-    f.listStatus(dir).iterator.filter(_.isDirectory).flatMap { st =>
-      val mf = new Path(st.getPath, VectorIndex.MetaFile)
-      if (f.exists(mf)) Some(VectorIndex.fromJson(readFully(mf))) else None
-    }.toSeq.sortBy(_.name)
-  }
+  def vectorIndexes(layer: String): Seq[VectorIndex.Meta] =
+    indexesOf(layer, VectorIndex)
 
-  /** Build missing shard graphs for every declared index against the
-    * CURRENT snapshot — O(new files), because content addressing makes
-    * already-covered files no-ops. Called automatically post-commit by
-    * [[appendAtomic]] and the compaction family; idempotent and safe to
-    * call any time (a concurrent maintainer writes identical bytes).
-    * Returns the number of shards built.
+  /** Build missing shards for every declared vector index — called
+    * post-commit by [[appendAtomic]] and the compaction family; returns
+    * the number of shards built.
     */
   def maintainVectorIndexes(layer: String): Int =
-    vectorIndexes(layer).iterator.map(maintainVectorIndex(layer, _)).sum
+    maintainIndexes(layer, VectorIndex)
 
-  /** Per-index coverage against the CURRENT snapshot: (meta, files whose
-    * artifact exists and that carry no deletion vector — the set a search
-    * answers from the index, the rest fall back to exact scans —, files
-    * among those with a ROUTING entry — the set a selective `shardProbe`
-    * can rank; unrouted covered files are always probed —, total live
-    * files). Metadata-only: one inventory walk + one shards listing +
-    * one routing listing per index (`SHOW VECTOR INDEXES`' engine).
+  /** `REFRESH VECTOR INDEX <name>` — see [[refreshIndex]]. */
+  def refreshVectorIndex(layer: String, name: String): Int =
+    refreshIndex(layer, VectorIndex, name)
+
+  /** Per-index coverage (`SHOW VECTOR INDEXES`' engine): (meta, covered
+    * files — DV-bearing files excluded, as [[vectorSearch]] scans them
+    * exactly —, covered files with a ROUTING entry — the set a selective
+    * `shardProbe` can rank; unrouted covered files are always probed —,
+    * total live files).
     */
   def vectorIndexStatus(layer: String)
-      : Seq[(VectorIndex.Meta, Int, Int, Int)] = {
-    val metas = vectorIndexes(layer)
-    if (metas.isEmpty) return Nil
-    val base = layerPath(layer)
-    val f = fs(new Path(base))
-    val snapOpt = latestSnapshot(layer)
-    val inv = snapOpt.map(snapshotInventory(layer, _)).getOrElse(Nil)
-    val dv = snapOpt.map(dvMapOf).getOrElse(Map.empty)
-    val digests = inv.map(rel => rel -> VectorIndex.digestOf(
-      f.makeQualified(new Path(resolveRel(base, rel))).toString))
-    metas.map { meta =>
-      val reachable = reachableShardArtifacts(layer, meta.name, inv,
-        vectorCompat(meta)).keySet
+      : Seq[(VectorIndex.Meta, Int, Int, Int)] =
+    indexCoverage(layer, VectorIndex).map { case (meta, covered, inv) =>
       val routes = reachableRoutingEntries(layer, meta, inv).keySet
-      val coveredDigests = digests.filter { case (rel, d) =>
-        reachable.contains(d) && !dv.contains(rel) }
-      val routed = coveredDigests.count { case (_, d) =>
-        routes.contains(d) }
-      (meta, coveredDigests.size, routed, inv.size)
+      (meta, covered.size, covered.count { case (_, d) =>
+        routes.contains(d) }, inv.size)
     }
-  }
-
-  /** Rebuild coverage for ONE named index (`REFRESH VECTOR INDEX`): the
-    * explicit maintenance trigger for the paths that deliberately don't
-    * auto-maintain — a full [[writeAtomic]] overwrite (auto-rebuilding
-    * the whole index inside a write would be a surprise O(corpus) cost)
-    * or a foreign writer's commits. O(uncovered files), idempotent.
-    */
-  def refreshVectorIndex(layer: String, name: String): Int = {
-    val meta = vectorIndexes(layer).find(_.name == name).getOrElse(
-      throw new NoSuchElementException(
-        s"layer '$layer' has no vector index '$name' (declared: " +
-          s"${vectorIndexes(layer).map(_.name).mkString(", ")})"))
-    maintainVectorIndex(layer, meta)
-  }
-
-  private def maintainVectorIndex(layer: String,
-      meta: VectorIndex.Meta): Int = {
-    val snap = latestSnapshot(layer).getOrElse(return 0)
-    if (mappingOf(snap).nonEmpty) return 0 // mapped post-creation: fallback
-    val base = layerPath(layer)
-    val f = fs(new Path(base))
-    val inv = snapshotInventory(layer, snap)
-    // reachable, not just local: a shallow clone BORROWS the source's
-    // artifacts by content address — shared files need no local build
-    val artifacts = reachableShardArtifacts(layer, meta.name, inv,
-      vectorCompat(meta))
-    val existing = artifacts.keySet
-    def qualify(rel: String): String =
-      f.makeQualified(new Path(resolveRel(base, rel))).toString
-    val missing = inv.map(rel => rel -> VectorIndex.digestOf(qualify(rel)))
-      .filterNot { case (_, d) => existing.contains(d) }
-    if (missing.isEmpty)
-      return { backfillVectorRouting(layer, meta, inv, artifacts); 0 }
-    // rows route to their file's builder by input_file_name; the task
-    // resolves the artifact name through a broadcast decoded-path →
-    // digest map. Keys are the DECODED URI paths (scheme/authority
-    // dropped, percent-encoding resolved) because the two sides render
-    // the same file differently (`file:/` vs `file:///`, hive `k=v`
-    // escaping) — and last-segment keys are NOT unique: a hive write's
-    // single task reuses one part-file name across every partition dir.
-    val pathKeyOf: String => String = s =>
-      try new java.net.URI(s).getPath catch { case _: Exception => s }
-    val byPath: Map[String, String] = missing.map { case (rel, d) =>
-      pathKeyOf(f.makeQualified(new Path(resolveRel(base, rel)))
-        .toUri.toString) -> d
-    }.toMap
-    val targetRels = missing.map(_._1)
-    val schema = snapshotSchema(layer, snap)
-    import org.apache.spark.sql.functions.{col, input_file_name}
-    val rows = readRelFiles(layer, targetRels, schemaHint = Some(schema))
-      .select(input_file_name().as("__f"),
-        col(meta.idCol).cast("long").as("__id"), col(meta.vecCol).as("__v"))
-    val confB = spark.sparkContext.broadcast(
-      new org.apache.spark.util.SerializableConfiguration(
-        spark.sparkContext.hadoopConfiguration))
-    val pathsB = spark.sparkContext.broadcast(byPath)
-    val (mName, mBase, mMeta) = (meta.name, base, meta)
-    val nParts = math.max(1, math.min(targetRels.size,
-      spark.sparkContext.defaultParallelism * 2))
-    import spark.implicits._
-    val built = rows.repartition(nParts, col("__f"))
-      .mapPartitions { it =>
-        val keyOf: String => String = s =>
-          try new java.net.URI(s).getPath catch { case _: Exception => s }
-        val byFile = scala.collection.mutable.HashMap.empty[String,
-          scala.collection.mutable.ArrayBuffer[(Long, Array[Double])]]
-        it.foreach { r =>
-          byFile.getOrElseUpdate(keyOf(r.getString(0)),
-            scala.collection.mutable.ArrayBuffer.empty) +=
-            ((r.getLong(1), newspipe.ops.Hnsw.toRaw(r.get(2))))
-        }
-        val fsys = new org.apache.hadoop.fs.Path(mBase)
-          .getFileSystem(confB.value.value)
-        byFile.iterator.flatMap { case (pathKey, buf) =>
-          pathsB.value.get(pathKey).map { digest =>
-            val bytes = mMeta.kind match {
-              case "ivf" => newspipe.ops.IvfFlat.buildShardBytes(
-                buf.toArray, mMeta.nlist)
-              case "pq" => newspipe.ops.PqShard.buildShardBytes(
-                buf.toArray, mMeta.pqM, mMeta.pqK)
-              case _ => newspipe.ops.Hnsw.buildGraphBytes(
-                buf.toArray, mMeta.m, mMeta.efConstruction)
-            }
-            VectorIndex.writeShard(fsys, mBase, mName, digest, bytes)
-            // routing summary: mean of the shard's unit vectors + the
-            // angular radius (min member cosine to the normalized
-            // mean) — the builder already holds the TRUE vectors, so
-            // this is one extra O(n·dim) pass and the radius is a
-            // sound pruning bound for every kind
-            val unit = buf.map(r => newspipe.ops.Hnsw.unitOrZero(r._2))
-            val (mean, minCos) = newspipe.ops.Hnsw.meanAndMinCos(unit)
-            (digest, unit.length, mean, minCos)
-          }
-        }
-      }.collect()
-    if (built.nonEmpty)
-      VectorIndex.writeRoutingSegment(f, base, meta.name,
-        VectorIndex.serializeRouting(built.toSeq))
-    backfillVectorRouting(layer, meta, inv, artifacts,
-      justRouted = built.map(_._1).toSet)
-    built.length
-  }
 
   /** Routing-segment BACKFILL: write summaries for covered shards that
     * lack a reachable routing entry (artifacts built before routing
@@ -6519,10 +6716,7 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
     val base = layerPath(layer)
     val f = fs(new Path(base))
     val routed = reachableRoutingEntries(layer, meta, inv).keySet
-    def qualify(rel: String): String =
-      f.makeQualified(new Path(resolveRel(base, rel))).toString
-    val unrouted = inv.iterator
-      .map(rel => VectorIndex.digestOf(qualify(rel)))
+    val unrouted = artifactDigests(layer, inv).iterator.map(_._2)
       .filter(d => artifacts.contains(d) && !routed.contains(d) &&
         !justRouted.contains(d))
       .toSeq.distinct
@@ -6556,15 +6750,14 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
         VectorIndex.serializeRouting(entries.toSeq))
   }
 
-  /** digest → routing summary for every shard of index `name` reachable
+  /** digest → routing summary for every shard of the index reachable
     * from this layer ([[reachableShardArtifacts]]' routing sibling —
     * same compatible-roots walk, local entries win).
     */
   private def reachableRoutingEntries(layer: String,
       meta: VectorIndex.Meta,
       inv: Seq[String]): Map[String, VectorIndex.Route] = {
-    val roots = reachableIndexRoots(layer, meta.name, inv,
-      VectorIndex.DirName, vectorCompat(meta))
+    val roots = reachableIndexRoots(layer, VectorIndex)(meta, inv)
     roots.foldLeft(Map.empty[String, VectorIndex.Route]) { (acc, root) =>
       val f = fs(new Path(root))
       acc ++ VectorIndex.readRoutingEntries(f, root, meta.name)
@@ -6615,23 +6808,6 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
     * probes everything, byte-identical to the unrouted plan with zero
     * routing overhead.
     */
-  private def resolveVectorIndex(layer: String,
-      indexName: Option[String]): VectorIndex.Meta = {
-    val metas = vectorIndexes(layer)
-    require(metas.nonEmpty,
-      s"layer '$layer' has no vector index — createVectorIndex first")
-    indexName match {
-      case Some(n) => metas.find(_.name == n).getOrElse(
-        throw new NoSuchElementException(s"layer '$layer' has no vector " +
-          s"index '$n' (declared: ${metas.map(_.name).mkString(", ")})"))
-      case None =>
-        require(metas.lengthCompare(1) == 0, s"layer '$layer' declares " +
-          s"${metas.size} vector indexes — name one " +
-          s"(${metas.map(_.name).mkString(", ")})")
-        metas.head
-    }
-  }
-
   def vectorSearch(layer: String, queries: DataFrame, k: Int,
       indexName: Option[String] = None, efSearch: Int = 96,
       version: Option[String] = None,
@@ -6640,7 +6816,7 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
     import org.apache.spark.sql.functions.{asc, col, desc, row_number}
     require(shardProbe > 0.0 && shardProbe <= 1.0,
       s"shardProbe must be in (0, 1], got $shardProbe")
-    val meta = resolveVectorIndex(layer, indexName)
+    val meta = resolveIndex(layer, VectorIndex, indexName)
     val snap = version match {
       case Some(v) =>
         val p = new Path(s"${layerPath(layer)}/_v/$v")
@@ -6652,14 +6828,10 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
           s"layer '$layer' has no committed snapshot"))
     }
     val base = layerPath(layer)
-    val f = fs(new Path(base))
     val inv = snapshotInventory(layer, snap)
     val dv = dvMapOf(snap)
-    val artifacts = reachableShardArtifacts(layer, meta.name, inv,
-      vectorCompat(meta))
-    def qualify(rel: String): String =
-      f.makeQualified(new Path(resolveRel(base, rel))).toString
-    val withDigest = inv.map(rel => rel -> VectorIndex.digestOf(qualify(rel)))
+    val artifacts = reachableShardArtifacts(layer, VectorIndex)(meta, inv)
+    val withDigest = artifactDigests(layer, inv)
     // filter-driven file pruning: a file whose stats refute the predicate
     // holds no qualifying neighbor — drop it from BOTH legs. Conservative
     // on stats-less/unknown files; head-snapshot searches only (the
@@ -6861,7 +7033,7 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
     * each chunk scanning the artifacts once — against an unbounded
     * corpus whose bytes are never re-read beyond the index artifacts;
     * one task per shard, zero shuffles before the final pair dedup.
-    * Covered shards are CAP-BOUND PRUNED (round 18): the routing
+    * Covered shards are CAP-BOUND PRUNED: the routing
     * entry's angular radius ([[VectorIndex.Route]] minCos) plus the
     * spherical triangle inequality prove when a shard can hold no
     * qualifying partner for the chunk — those shards skip EXACTLY
@@ -6889,7 +7061,7 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
     require(maxLandingRows >= 1 && chunkRows >= 1,
       s"maxLandingRows/chunkRows must be >= 1, got " +
         s"$maxLandingRows/$chunkRows")
-    val meta = resolveVectorIndex(layer, indexName)
+    val meta = resolveIndex(layer, VectorIndex, indexName)
     val snap = latestSnapshot(layer).getOrElse(
       throw new IllegalStateException(
         s"layer '$layer' has no committed snapshot"))
@@ -6907,8 +7079,8 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
     if (newRels.isEmpty) return emptyPairs
     val dv = dvMapOf(snap)
     val schema = snapshotSchema(layer, snap)
-    // the NEW side: the landing's alive vectors. BOUNDED-MEMORY (round
-    // 18): the landing streams to the driver (toLocalIterator) in
+    // the NEW side: the landing's alive vectors. BOUNDED-MEMORY: the
+    // landing streams to the driver (toLocalIterator) in
     // fixed-size broadcast chunks instead of one unbounded collect —
     // driver memory is ∝ chunkRows regardless of landing size, and each
     // chunk runs the same exact per-shard scan (per-chunk artifact
@@ -6939,19 +7111,15 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
           s"holds $landingN vectors, above maxLandingRows " +
           s"($maxLandingRows).$rewriteHint")
     }
-    val artifacts = reachableShardArtifacts(layer, meta.name, inv,
-      vectorCompat(meta))
-    def qualify(rel: String): String =
-      f.makeQualified(new Path(resolveRel(base, rel))).toString
-    val withDigest = inv.map(rel =>
-      rel -> IndexArtifacts.digestOf(qualify(rel)))
+    val artifacts = reachableShardArtifacts(layer, VectorIndex)(meta, inv)
+    val withDigest = artifactDigests(layer, inv)
     // pq artifacts hold lossy codes, not vectors — a threshold join must
     // stay exact, so under a pq index every file takes the exact parquet
     // leg (the index still accelerates top-k SEARCH; dedup correctness
     // beats reusing its bytes)
     val (covered, uncovered) = withDigest.partition { case (rel, d) =>
       meta.kind != "pq" && artifacts.contains(d) && !dv.contains(rel) }
-    // EXACT cap-bound pruning over the covered shards (round 18): a
+    // EXACT cap-bound pruning over the covered shards: a
     // routing entry's minCos is the shard's angular radius around its
     // centroid, so a chunk whose CLOSEST query is still further from
     // the centroid than radius + acos(threshold) provably shares no
@@ -7113,160 +7281,14 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
       .dropDuplicates("id_a", "id_b")
   }
 
-  /** The layer root a cross-layer rel points into (None = the rel is
-    * layer-local): `../<layer>/…` sibling refs resolve against the lake
-    * base; `base:<root>//<rel>` refs carry their root explicitly. Used
-    * to locate a SHALLOW CLONE source's index artifacts.
-    */
-  private def foreignLayerRootOfRel(base: String, rel: String)
-      : Option[String] = {
-    if (rel.startsWith(Lake.BaseRefPrefix))
-      return Some(Lake.splitBaseRef(rel)._1)
-    if (!rel.startsWith("../")) return None
-    var b = base.stripSuffix("/")
-    var r = rel
-    while (r.startsWith("../")) {
-      val cut = b.lastIndexOf('/')
-      if (cut <= 0) return None
-      b = b.substring(0, cut)
-      r = r.substring(3)
-    }
-    val seg = r.indexOf('/')
-    if (seg <= 0) None else Some(s"$b/${r.substring(0, seg)}")
-  }
-
-  /** Layer roots whose index `name` may serve this layer: the local
-    * root always, plus each distinct foreign root the inventory
-    * references (a shallow clone's rels) WHOSE `_INDEX.json` passes
-    * `compatible` — borrowing is keyed by index NAME, and a source that
-    * dropped and recreated the name with different parameters must be
-    * refused, or the borrowed bytes stop meaning what the local meta
-    * says (a kind swap crashes the deserializer; a different LSH split
-    * silently misses near-dup pairs). A refused or missing foreign
-    * declaration degrades the clone to exact scans / local rebuilds of
-    * the shared files — cost, never correctness. One meta read per
-    * distinct foreign root (clones reference few sources).
-    */
-  private def reachableIndexRoots(layer: String, name: String,
-      inv: Seq[String], dirName: String,
-      compatible: String => Boolean): Seq[String] = {
-    val base = layerPath(layer)
-    val foreign = inv.flatMap(foreignLayerRootOfRel(base, _)).distinct
-      .filter { root =>
-        val mf = new Path(IndexArtifacts.indexRoot(dirName, root, name),
-          IndexArtifacts.MetaFile)
-        try fs(mf).exists(mf) && compatible(readFully(mf))
-        catch { case _: Exception => false }
-      }
-    base +: foreign
-  }
-
-  /** digest → artifact path for every shard of index `name` REACHABLE
-    * from this layer: its own shards directory first (a locally built
-    * artifact always wins), then — for each PARAMETER-COMPATIBLE foreign
-    * layer root the inventory references ([[reachableIndexRoots]]) —
-    * that root's shards directory for the same index name. Content
-    * addressing makes borrowing sound: the digest keys the FS-qualified
-    * DATA-file path, which a clone's rel resolves to, so the source's
-    * artifact for a shared file is byte-identical to what a local
-    * rebuild would produce — a clone searches the source's index with
-    * ZERO artifact bytes copied, and maintenance skips shared files
-    * entirely. One listing per distinct root; a source that drops (or
-    * incompatibly recreates) its index degrades the clone's search to
-    * exact scans of the shared files, never to a wrong answer.
-    */
-  private def reachableShardArtifacts(layer: String, name: String,
-      inv: Seq[String], compatible: String => Boolean,
-      dirName: String = VectorIndex.DirName,
-      ext: String = ".ann"): Map[String, Path] = {
-    val roots = reachableIndexRoots(layer, name, inv, dirName, compatible)
-    roots.foldLeft(Map.empty[String, Path]) { (acc, root) =>
-      val f = fs(new Path(root))
-      val extra = IndexArtifacts.existingShards(dirName, ext, f, root, name)
-        .iterator
-        .filterNot(acc.contains)
-        .map(d => d ->
-          f.makeQualified(new Path(
-            IndexArtifacts.shardsDir(dirName, root, name), s"$d$ext")))
-        .toMap
-      acc ++ extra
-    }
-  }
-
-  /** [[reachableShardArtifacts]]' `compatible` check for a vector
-    * index: the foreign declaration must bake the same artifact
-    * parameters ([[VectorIndex.artifactCompatible]]).
-    */
-  private def vectorCompat(meta: VectorIndex.Meta): String => Boolean =
-    json => VectorIndex.artifactCompatible(meta, VectorIndex.fromJson(json))
-
-  /** The dedup-index sibling of [[vectorCompat]]. */
-  private def dedupCompat(meta: DedupIndex.Meta): String => Boolean =
-    json => DedupIndex.artifactCompatible(meta, DedupIndex.fromJson(json))
-
-  /** Reclaim index artifacts (both families: `_vindex` shard graphs,
-    * `_dindex` signature shards) no RETAINED snapshot's data file backs
-    * any more (post-vacuum: rewritten-away or deleted files') — the
-    * index-side leg of VACUUM, O(retained inventory + artifacts).
-    */
-  private def pruneIndexShards(layer: String): Unit = {
-    val vMetas = vectorIndexes(layer)
-    val dMetas = dedupIndexes(layer)
-    if (vMetas.isEmpty && dMetas.isEmpty) return
-    val base = layerPath(layer)
-    val f = fs(new Path(base))
-    val live: Set[String] = committedVersions(layer).flatMap { snap =>
-      snapshotInventory(layer, snap).map(rel => IndexArtifacts.digestOf(
-        f.makeQualified(new Path(resolveRel(base, rel))).toString))
-    }.toSet
-    vMetas.foreach { meta =>
-      (VectorIndex.existingShards(f, base, meta.name) -- live).foreach { d =>
-        f.delete(new Path(VectorIndex.shardsDir(base, meta.name),
-          s"$d.ann"), false)
-      }
-      // routing-segment compaction: fold every segment into ONE holding
-      // only live digests (dead entries are harmless — search ignores
-      // them — but segments would otherwise accumulate one per
-      // maintenance call forever). Write-merged-then-delete-olds: a
-      // racing reader that loses a segment mid-read just over-probes.
-      val segs = VectorIndex.routingSegmentFiles(f, base, meta.name)
-      if (segs.nonEmpty) {
-        val entries = VectorIndex.readRoutingEntries(f, base, meta.name)
-          .filter { case (d, _) => live.contains(d) }
-          .map { case (d, r) => (d, r.count,
-            r.centroid.map(_.toDouble), r.minCos.toDouble) }
-          .toSeq
-        val keep: Option[String] =
-          if (entries.isEmpty) None
-          else {
-            val bytes = VectorIndex.serializeRouting(entries)
-            VectorIndex.writeRoutingSegment(f, base, meta.name, bytes)
-            val md = java.security.MessageDigest.getInstance("MD5")
-            Some(md.digest(bytes).map("%02x".format(_)).mkString +
-              VectorIndex.RoutingExt)
-          }
-        segs.filterNot(p => keep.contains(p.getName))
-          .foreach(f.delete(_, false))
-      }
-    }
-    dMetas.foreach { meta =>
-      (DedupIndex.existingShards(f, base, meta.name) -- live).foreach { d =>
-        f.delete(new Path(DedupIndex.shardsDir(base, meta.name),
-          s"$d${DedupIndex.Ext}"), false)
-      }
-    }
-  }
-
   // ---- persisted dedup index (MinHash near-dup) ---------------------------
 
   /** Declare + build a persisted near-dedup index over `textCol` (layout
-    * and rationale: [[DedupIndex]]): one banded-MinHash signature
-    * artifact per live data file, content-addressed by the file's
-    * qualified path — the expensive shingle+hash pass over the text runs
-    * ONCE per file ever. [[appendAtomic]] and the compaction family sign
-    * their NEW files only (O(increment)); [[nearDups]] then finds
-    * near-duplicate pairs by joining artifact against artifact and
-    * re-reads text only to exact-verify candidates.
+    * and lifecycle: [[IndexArtifacts]]; artifacts: [[DedupIndex]]): one
+    * banded-MinHash signature artifact per live data file, so the
+    * shingle+hash pass over the text runs ONCE per file ever;
+    * [[nearDups]] then finds near-duplicate pairs by joining artifact
+    * against artifact and re-reads text only to exact-verify candidates.
     *
     * `bands` defaults to the recall-heavy 16×4 shape (64 hashes): at the
     * default 0.8 threshold a true near-dup pair shares a band with
@@ -7277,225 +7299,39 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
   def createDedupIndex(layer: String, name: String, textCol: String,
       idCol: String, threshold: Double = 0.8, numHashes: Int = 64,
       bands: Int = 16, shingle: Int = 3): Int = {
-    require(name.nonEmpty && name.forall(c => c.isLetterOrDigit || c == '_'),
-      s"dedup index name '$name' must be alphanumeric/underscore")
     require(threshold > 0.0 && threshold < 1.0,
       s"threshold must be in (0, 1), got $threshold")
     require(numHashes > 0 && bands > 0 && numHashes % bands == 0,
       s"bands ($bands) must divide numHashes ($numHashes)")
     require(shingle >= 1, s"shingle must be >= 1, got $shingle")
-    val snap = latestSnapshot(layer).getOrElse(throw new IllegalStateException(
-      s"layer '$layer' has no committed snapshot — a dedup index " +
-        "indexes committed data files (writeAtomic first)"))
-    require(mappingOf(snap).isEmpty,
-      s"createDedupIndex('$layer'): column-mapped layers are not " +
-        "supported (shards key logical columns by name)")
-    val schema = snapshotSchema(layer, snap)
-    Seq(textCol, idCol).foreach(c => require(
-      schema.fieldNames.exists(_.equalsIgnoreCase(c)),
-      s"createDedupIndex('$layer'): layer has no column '$c'"))
-    require(dedupIndexes(layer).forall(_.name != name),
-      s"layer '$layer' already has a dedup index '$name' — drop it first")
-    val meta = DedupIndex.Meta(name, idCol, textCol, numHashes, bands,
-      numHashes / bands, shingle, threshold)
-    val root = DedupIndex.indexRoot(layerPath(layer), name)
-    val f = fs(root)
-    f.mkdirs(root)
-    val out = f.create(new Path(root, DedupIndex.MetaFile), true)
-    try out.write(DedupIndex.toJson(meta).getBytes("UTF-8"))
-    finally out.close()
-    maintainDedupIndexes(layer)
+    declareIndex(layer, DedupIndex)(DedupIndex.Meta(name, idCol, textCol,
+      numHashes, bands, numHashes / bands, shingle, threshold))
   }
 
-  def dropDedupIndex(layer: String, name: String): Unit = {
-    val root = DedupIndex.indexRoot(layerPath(layer), name)
-    val f = fs(root)
-    if (!f.exists(new Path(root, DedupIndex.MetaFile)))
-      throw new NoSuchElementException(
-        s"layer '$layer' has no dedup index '$name'")
-    f.delete(root, true)
-    ()
-  }
+  def dropDedupIndex(layer: String, name: String): Unit =
+    dropIndex(layer, DedupIndex, name)
 
   /** Declared dedup indexes of the layer (metadata-only listing). */
-  def dedupIndexes(layer: String): Seq[DedupIndex.Meta] = {
-    val dir = new Path(s"${layerPath(layer)}/${DedupIndex.DirName}")
-    val f = fs(dir)
-    if (!f.exists(dir)) return Nil
-    f.listStatus(dir).iterator.filter(_.isDirectory).flatMap { st =>
-      val mf = new Path(st.getPath, DedupIndex.MetaFile)
-      if (f.exists(mf)) Some(DedupIndex.fromJson(readFully(mf))) else None
-    }.toSeq.sortBy(_.name)
-  }
+  def dedupIndexes(layer: String): Seq[DedupIndex.Meta] =
+    indexesOf(layer, DedupIndex)
 
-  /** Per-index coverage against the CURRENT snapshot (meta, files with a
-    * reachable signature artifact, total live files) — `SHOW DEDUP
-    * INDEXES`' engine; metadata-only.
-    *
-    * DELIBERATE asymmetry with [[vectorIndexStatus]]: DV-bearing files
-    * COUNT as covered here, because [[nearDups]] genuinely serves them
-    * from their artifacts — a signature of a DV-deleted row only
-    * produces candidates, and candidates exact-verify against the ALIVE
-    * corpus, so stale ids verify away (LakeDedupIndexSpec pins it). A
-    * vector search has no verification leg — its graphs would resurrect
-    * deleted rows as neighbors, so its status excludes DV files exactly
-    * as its search path does. Each status reports what its OWN search
-    * path answers from the index.
+  /** Per-index coverage (`SHOW DEDUP INDEXES`' engine): (meta, files with
+    * a reachable signature artifact — DV-bearing files included, see
+    * [[DedupIndex.dvFilesCovered]] —, total live files).
     */
-  def dedupIndexStatus(layer: String): Seq[(DedupIndex.Meta, Int, Int)] = {
-    val metas = dedupIndexes(layer)
-    if (metas.isEmpty) return Nil
-    val base = layerPath(layer)
-    val f = fs(new Path(base))
-    val inv = latestSnapshot(layer).map(snapshotInventory(layer, _))
-      .getOrElse(Nil)
-    val digests = inv.map(rel => IndexArtifacts.digestOf(
-      f.makeQualified(new Path(resolveRel(base, rel))).toString))
-    metas.map { meta =>
-      val reachable = reachableShardArtifacts(layer, meta.name, inv,
-        dedupCompat(meta), DedupIndex.DirName, DedupIndex.Ext).keySet
-      (meta, digests.count(reachable.contains), inv.size)
-    }
-  }
+  def dedupIndexStatus(layer: String): Seq[(DedupIndex.Meta, Int, Int)] =
+    indexCoverage(layer, DedupIndex).map { case (meta, covered, inv) =>
+      (meta, covered.size, inv.size) }
 
   /** Sign missing files for every declared dedup index — O(new files);
     * the post-commit hook's dedup leg. Idempotent; returns shards built.
     */
   def maintainDedupIndexes(layer: String): Int =
-    dedupIndexes(layer).iterator.map(maintainDedupIndex(layer, _)).sum
+    maintainIndexes(layer, DedupIndex)
 
-  /** Rebuild coverage for ONE named dedup index (`REFRESH DEDUP
-    * INDEX`) — the explicit trigger after a full overwrite or a foreign
-    * writer's commits. O(uncovered files), idempotent.
-    */
-  def refreshDedupIndex(layer: String, name: String): Int = {
-    val meta = dedupIndexes(layer).find(_.name == name).getOrElse(
-      throw new NoSuchElementException(
-        s"layer '$layer' has no dedup index '$name' (declared: " +
-          s"${dedupIndexes(layer).map(_.name).mkString(", ")})"))
-    maintainDedupIndex(layer, meta)
-  }
-
-  private def maintainDedupIndex(layer: String,
-      meta: DedupIndex.Meta): Int = {
-    val snap = latestSnapshot(layer).getOrElse(return 0)
-    if (mappingOf(snap).nonEmpty) return 0 // mapped post-creation: fallback
-    val base = layerPath(layer)
-    val f = fs(new Path(base))
-    val inv = snapshotInventory(layer, snap)
-    val existing = reachableShardArtifacts(layer, meta.name, inv,
-      dedupCompat(meta), DedupIndex.DirName, DedupIndex.Ext).keySet
-    def qualify(rel: String): String =
-      f.makeQualified(new Path(resolveRel(base, rel))).toString
-    val missing = inv.map(rel => rel -> IndexArtifacts.digestOf(qualify(rel)))
-      .filterNot { case (_, d) => existing.contains(d) }
-    if (missing.isEmpty) return 0
-    // same file-routing shape as the vector maintainer: rows reach their
-    // file's signer via input_file_name, decoded-URI-path keyed (the two
-    // sides render the same file differently; last segments alone are
-    // not unique across hive partition dirs)
-    val pathKeyOf: String => String = s =>
-      try new java.net.URI(s).getPath catch { case _: Exception => s }
-    val byPath: Map[String, String] = missing.map { case (rel, d) =>
-      pathKeyOf(f.makeQualified(new Path(resolveRel(base, rel)))
-        .toUri.toString) -> d
-    }.toMap
-    val targetRels = missing.map(_._1)
-    val schema = snapshotSchema(layer, snap)
-    import org.apache.spark.sql.functions.{col, input_file_name}
-    val bandsExpr = newspipe.ops.Dedup.lshBands(
-      newspipe.ops.Dedup.minhashSignature(
-        newspipe.ops.Dedup.shingles(col(meta.textCol), meta.shingle),
-        meta.numHashes),
-      meta.bands, meta.rows)
-    val rows = readRelFiles(layer, targetRels, schemaHint = Some(schema))
-      .select(input_file_name().as("__f"),
-        col(meta.idCol).cast("long").as("__id"), bandsExpr.as("__bb"))
-    val confB = spark.sparkContext.broadcast(
-      new org.apache.spark.util.SerializableConfiguration(
-        spark.sparkContext.hadoopConfiguration))
-    val pathsB = spark.sparkContext.broadcast(byPath)
-    val (mName, mBase) = (meta.name, base)
-    val nParts = math.max(1, math.min(targetRels.size,
-      spark.sparkContext.defaultParallelism * 2))
-    import spark.implicits._
-    val built = rows.repartition(nParts, col("__f"))
-      .mapPartitions { it =>
-        val keyOf: String => String = s =>
-          try new java.net.URI(s).getPath catch { case _: Exception => s }
-        val byFile = scala.collection.mutable.HashMap.empty[String,
-          scala.collection.mutable.ArrayBuffer[(Long, Int, Long)]]
-        it.foreach { r =>
-          val buf = byFile.getOrElseUpdate(keyOf(r.getString(0)),
-            scala.collection.mutable.ArrayBuffer.empty)
-          // null id / null signature (null text) sign nothing — exactly
-          // the rows the from-scratch pipeline's explode drops
-          if (!r.isNullAt(1) && !r.isNullAt(2)) {
-            val id = r.getLong(1)
-            r.getSeq[org.apache.spark.sql.Row](2).foreach { bb =>
-              if (!bb.isNullAt(0) && !bb.isNullAt(1))
-                buf += ((id, bb.getInt(0), bb.getLong(1)))
-            }
-          }
-        }
-        val fsys = new org.apache.hadoop.fs.Path(mBase)
-          .getFileSystem(confB.value.value)
-        byFile.iterator.flatMap { case (pathKey, buf) =>
-          pathsB.value.get(pathKey).map { digest =>
-            DedupIndex.writeShard(fsys, mBase, mName, digest,
-              DedupIndex.serialize(buf.toArray))
-            digest
-          }
-        }
-      }.collect()
-    built.length
-  }
-
-  /** Near-duplicate pairs THROUGH the persisted index: candidates from
-    * an artifact-against-artifact `(band, bucket)` join (document text
-    * is NOT read), exact n-gram-Jaccard verification of the candidates
-    * against the ALIVE corpus (rows a deletion vector removed verify
-    * away, as do ids from stale artifacts), emitted as
-    * `(id_a, id_b, jaccard)` with `jaccard >= threshold`, `id_a < id_b`.
-    *
-    * `sinceVersion`: INCREMENTAL dedup — only pairs with at least one
-    * side in a file added AFTER that committed snapshot (the "dedup the
-    * new batch against the whole corpus" production shape: cost is the
-    * new files' signatures against the persisted ones; the corpus text
-    * is never re-shingled). None = all corpus pairs.
-    *
-    * Files without an artifact (crash window, foreign writer, fresh
-    * overwrite) have signatures computed inline — cost, never
-    * correctness. `maxBucket` is the LSH skew guard: hotter buckets are
-    * dropped (their members still meet through other bands), and in
-    * incremental mode buckets holding no NEW member leave before the
-    * join — old-old buckets cannot produce a wanted pair.
-    *
-    * Incremental reads are BUCKET-PRUNED (round 18): every v2 signature
-    * artifact leads with a Bloom over its distinct `(band, bucket)`
-    * keys, and the landing's key set is probed against each corpus
-    * artifact's header — an artifact sharing no bucket with the landing
-    * skips its body entirely, so the steady-state landing cost is ∝ the
-    * batch and its bucket-mates, not corpus signature volume. Exact for
-    * pair recall (no Bloom false negatives); the lazy TVF route and
-    * over-sized probes skip pruning, never correctness.
-    */
-  private def resolveDedupIndex(layer: String,
-      indexName: Option[String]): DedupIndex.Meta = {
-    val metas = dedupIndexes(layer)
-    require(metas.nonEmpty,
-      s"layer '$layer' has no dedup index — createDedupIndex first")
-    indexName match {
-      case Some(n) => metas.find(_.name == n).getOrElse(
-        throw new NoSuchElementException(s"layer '$layer' has no dedup " +
-          s"index '$n' (declared: ${metas.map(_.name).mkString(", ")})"))
-      case None =>
-        require(metas.lengthCompare(1) == 0, s"layer '$layer' declares " +
-          s"${metas.size} dedup indexes — name one " +
-          s"(${metas.map(_.name).mkString(", ")})")
-        metas.head
-    }
-  }
+  /** `REFRESH DEDUP INDEX <name>` — see [[refreshIndex]]. */
+  def refreshDedupIndex(layer: String, name: String): Int =
+    refreshIndex(layer, DedupIndex, name)
 
   /** The index's banded-signature expression — the ONE definition both
     * the artifact builder and every inline-signing path evaluate, so
@@ -7534,19 +7370,12 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
       snap: Path, rels: Seq[String],
       probe: () => Option[Array[Long]] = () => None): DataFrame = {
     import org.apache.spark.sql.functions.{col, explode}
-    val base = layerPath(layer)
-    val f = fs(new Path(base))
     // reachability spans the FULL inventory (clone roots), even when
     // rels is a subset of it
     val inv = snapshotInventory(layer, snap)
-    val artifacts = reachableShardArtifacts(layer, meta.name, inv,
-      dedupCompat(meta), DedupIndex.DirName, DedupIndex.Ext)
-    def qualify(rel: String): String =
-      f.makeQualified(new Path(resolveRel(base, rel))).toString
-    val withDigest = rels.map(rel =>
-      rel -> IndexArtifacts.digestOf(qualify(rel)))
-    val (covered, uncovered) = withDigest.partition { case (_, d) =>
-      artifacts.contains(d) }
+    val artifacts = reachableShardArtifacts(layer, DedupIndex)(meta, inv)
+    val (covered, uncovered) = artifactDigests(layer, rels)
+      .partition { case (_, d) => artifacts.contains(d) }
     import spark.implicits._
     def emptySigs: DataFrame =
       spark.emptyDataset[(Long, Int, Long)].toDF("id", "band", "bucket")
@@ -7558,8 +7387,8 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
             spark.sparkContext.hadoopConfiguration))
         // the probe thunk runs a Spark job (distinct + collect on the
         // landing's signatures) — invoke it only when enough artifact
-        // bodies could be skipped to pay for it (round 19; the
-        // unconditional probe regressed q189 at small corpus sizes)
+        // bodies could be skipped to pay for it: below that, the extra
+        // job costs more than the artifact reads it saves
         val probeKeys =
           if (covered.size >= dedupPruneMinArtifacts) probe() else None
         val probeB = probeKeys.map(spark.sparkContext.broadcast(_))
@@ -7608,12 +7437,41 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
       r.getLong(1))))
   }
 
+  /** Near-duplicate pairs THROUGH the persisted index: candidates from
+    * an artifact-against-artifact `(band, bucket)` join (document text
+    * is NOT read), exact n-gram-Jaccard verification of the candidates
+    * against the ALIVE corpus (rows a deletion vector removed verify
+    * away, as do ids from stale artifacts), emitted as
+    * `(id_a, id_b, jaccard)` with `jaccard >= threshold`, `id_a < id_b`.
+    *
+    * `sinceVersion`: INCREMENTAL dedup — only pairs with at least one
+    * side in a file added AFTER that committed snapshot (the "dedup the
+    * new batch against the whole corpus" production shape: cost is the
+    * new files' signatures against the persisted ones; the corpus text
+    * is never re-shingled). None = all corpus pairs.
+    *
+    * Files without an artifact (crash window, foreign writer, fresh
+    * overwrite) have signatures computed inline — cost, never
+    * correctness. `maxBucket` is the LSH skew guard: hotter buckets are
+    * dropped (their members still meet through other bands), and in
+    * incremental mode buckets holding no NEW member leave before the
+    * join — old-old buckets cannot produce a wanted pair.
+    *
+    * Incremental reads are BUCKET-PRUNED: every v2 signature
+    * artifact leads with a Bloom over its distinct `(band, bucket)`
+    * keys, and the landing's key set is probed against each corpus
+    * artifact's header — an artifact sharing no bucket with the landing
+    * skips its body entirely, so the steady-state landing cost is ∝ the
+    * batch and its bucket-mates, not corpus signature volume. Exact for
+    * pair recall (no Bloom false negatives); the lazy TVF route and
+    * over-sized probes skip pruning, never correctness.
+    */
   def nearDups(layer: String, indexName: Option[String] = None,
       sinceVersion: Option[String] = None, maxBucket: Int = 1000,
       eager: Boolean = true): DataFrame = {
     import org.apache.spark.sql.functions.{col, count, greatest, least,
       lit, max}
-    val meta = resolveDedupIndex(layer, indexName)
+    val meta = resolveIndex(layer, DedupIndex, indexName)
     val snap = latestSnapshot(layer).getOrElse(
       throw new IllegalStateException(
         s"layer '$layer' has no committed snapshot"))
@@ -7719,7 +7577,7 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
       txn: Option[(String, Long)] = None)
       : Lake.AppendDedupResult = {
     import org.apache.spark.sql.functions.{col, count, explode, lit}
-    val meta = resolveDedupIndex(layer, indexName)
+    val meta = resolveIndex(layer, DedupIndex, indexName)
     val snap = latestSnapshot(layer).getOrElse(
       throw new IllegalStateException(
         s"layer '$layer' has no committed snapshot — appendDeduped lands " +

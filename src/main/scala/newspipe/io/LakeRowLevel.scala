@@ -268,14 +268,10 @@ final class LakeRowLevelWrite(spark: SparkSession, base: String,
     private val newSnap = lake.rowLevelStagingDir(layer)
 
     override def createBatchWriterFactory(pinfo: PhysicalWriteInfo)
-        : DataWriterFactory = {
-      if (sys.env.contains("NEWSPIPE_ROWLEVEL_DEBUG"))
-        println(s"ROWLEVEL write schema: ${info.schema().toDDL} | read: " +
-          s"${ctx.readSchema.toDDL}")
+        : DataWriterFactory =
       LakeTaskWrite.factory(spark, layer, newSnap, info.schema(),
         ctx.partCols, ctx.mapping, ctx.logicalSchema,
         ctx.constraints, ctx.generated)
-    }
 
     override def commit(messages: Array[WriterCommitMessage]): Unit = {
       val keep = messages.iterator.flatMap {

@@ -540,19 +540,20 @@ object LakeSql {
       m: Option[Int], ef: Option[Int], nlist: Option[Int] = None,
       nprobe: Option[Int] = None, pqM: Option[Int] = None,
       pqK: Option[Int] = None) extends LakeMaint
-  final case class LakeDropVectorIndex(base: String, layer: String,
-      name: String) extends LakeMaint
-  /** `REFRESH VECTOR INDEX [name] ON lake.`…`.layer` — explicit
-    * coverage rebuild (post-writeAtomic / foreign-writer commits);
-    * no name = every declared index.
+  /** `DROP (VECTOR|DEDUP) INDEX <name> ON lake.`…`.layer`. */
+  final case class LakeDropIndex(base: String, layer: String,
+      family: IndexArtifacts, name: String) extends LakeMaint
+  /** `REFRESH (VECTOR|DEDUP) INDEX [name] ON lake.`…`.layer` — explicit
+    * coverage rebuild (post-writeAtomic / foreign-writer commits); no
+    * name = every declared index of that family.
     */
-  final case class LakeRefreshVectorIndex(base: String, layer: String,
-      name: Option[String]) extends LakeMaint
-  /** `SHOW VECTOR INDEXES ON lake.`…`.layer` — one row per declared
-    * index with parameters + live-file coverage.
+  final case class LakeRefreshIndex(base: String, layer: String,
+      family: IndexArtifacts, name: Option[String]) extends LakeMaint
+  /** `SHOW (VECTOR|DEDUP) INDEXES ON lake.`…`.layer` — one row per
+    * declared index of the family with parameters + live-file coverage.
     */
-  final case class LakeShowVectorIndexes(base: String,
-      layer: String) extends LakeMaint
+  final case class LakeShowIndexes(base: String, layer: String,
+      family: IndexArtifacts) extends LakeMaint
   /** `CREATE DEDUP INDEX <name> ON lake.`…`.layer (textCol) ID idCol
     * [THRESHOLD f] [HASHES n] [BANDS n] [SHINGLE n]` — persisted
     * per-file MinHash signature index ([[Lake.createDedupIndex]]).
@@ -561,13 +562,6 @@ object LakeSql {
       name: String, textCol: String, idCol: String,
       threshold: Option[Double], hashes: Option[Int], bands: Option[Int],
       shingle: Option[Int]) extends LakeMaint
-  final case class LakeDropDedupIndex(base: String, layer: String,
-      name: String) extends LakeMaint
-  /** `REFRESH DEDUP INDEX [name] ON lake.`…`.layer` — explicit signature
-    * coverage rebuild; no name = every declared index.
-    */
-  final case class LakeRefreshDedupIndex(base: String, layer: String,
-      name: Option[String]) extends LakeMaint
   /** `OPTIMIZE lake.`…`.layer CLUSTER BY VECTOR col [CLUSTERS n]` —
     * vector-clustering rewrite ([[Lake.clusterByVector]]): regroup the
     * corpus so each file holds semantically neighboring vectors, the
@@ -586,11 +580,6 @@ object LakeSql {
   final case class LakeInsertDeduped(base: String, layer: String,
       index: Option[String], maxBucket: Option[Int],
       sourceSql: String) extends LakeMaint
-  /** `SHOW DEDUP INDEXES ON lake.`…`.layer` — one row per declared
-    * index with parameters + live-file coverage.
-    */
-  final case class LakeShowDedupIndexes(base: String,
-      layer: String) extends LakeMaint
   /** `ANALYZE TABLE … COMPUTE STATISTICS` — full-inventory stats
     * re-harvest as a metadata-only commit ([[Lake.analyzeStats]]).
     */
@@ -665,8 +654,10 @@ object LakeSql {
       "\\s+COMPUTE\\s+STATISTICS\\s*;?\\s*$")
   private val DetailRe = java.util.regex.Pattern.compile(
     s"(?is)^\\s*DESCRIBE\\s+DETAIL\\s+$TargetRe" + "\\s*;?\\s*$")
-  // CREATE/DROP VECTOR INDEX is not Spark grammar (a lake extension) —
-  // non-lake targets fall through to Spark's parser and its natural error
+  // The index statements are not Spark grammar (a lake extension) —
+  // non-lake targets fall through to Spark's parser and its natural
+  // error. CREATE is per family (its clauses differ); DROP, REFRESH and
+  // SHOW name the family in one (VECTOR|DEDUP) group.
   private val CreateVIdxRe = java.util.regex.Pattern.compile(
     "(?is)^\\s*CREATE\\s+VECTOR\\s+INDEX\\s+([A-Za-z0-9_]+)\\s+ON\\s+" +
       TargetRe +
@@ -679,17 +670,6 @@ object LakeSql {
       "(?:\\s+NPROBE\\s+([0-9]+))?" +
       "(?:\\s+PQM\\s+([0-9]+))?" +
       "(?:\\s+PQK\\s+([0-9]+))?\\s*;?\\s*$")
-  private val DropVIdxRe = java.util.regex.Pattern.compile(
-    "(?is)^\\s*DROP\\s+VECTOR\\s+INDEX\\s+([A-Za-z0-9_]+)\\s+ON\\s+" +
-      TargetRe + "\\s*;?\\s*$")
-  private val RefreshVIdxRe = java.util.regex.Pattern.compile(
-    "(?is)^\\s*REFRESH\\s+VECTOR\\s+INDEX(?:\\s+([A-Za-z0-9_]+))?\\s+ON\\s+" +
-      TargetRe + "\\s*;?\\s*$")
-  private val ShowVIdxRe = java.util.regex.Pattern.compile(
-    "(?is)^\\s*SHOW\\s+VECTOR\\s+INDEXES\\s+ON\\s+" + TargetRe +
-      "\\s*;?\\s*$")
-  // CREATE/DROP/REFRESH/SHOW DEDUP INDEX — the MinHash sibling of the
-  // vector-index statements; same lake-extension routing
   private val CreateDIdxRe = java.util.regex.Pattern.compile(
     "(?is)^\\s*CREATE\\s+DEDUP\\s+INDEX\\s+([A-Za-z0-9_]+)\\s+ON\\s+" +
       TargetRe +
@@ -699,15 +679,17 @@ object LakeSql {
       "(?:\\s+HASHES\\s+([0-9]+))?" +
       "(?:\\s+BANDS\\s+([0-9]+))?" +
       "(?:\\s+SHINGLE\\s+([0-9]+))?\\s*;?\\s*$")
-  private val DropDIdxRe = java.util.regex.Pattern.compile(
-    "(?is)^\\s*DROP\\s+DEDUP\\s+INDEX\\s+([A-Za-z0-9_]+)\\s+ON\\s+" +
+  private val DropIdxRe = java.util.regex.Pattern.compile(
+    "(?is)^\\s*DROP\\s+(VECTOR|DEDUP)\\s+INDEX\\s+([A-Za-z0-9_]+)" +
+      "\\s+ON\\s+" + TargetRe + "\\s*;?\\s*$")
+  private val RefreshIdxRe = java.util.regex.Pattern.compile(
+    "(?is)^\\s*REFRESH\\s+(VECTOR|DEDUP)\\s+INDEX" +
+      "(?:\\s+([A-Za-z0-9_]+))?\\s+ON\\s+" + TargetRe + "\\s*;?\\s*$")
+  private val ShowIdxRe = java.util.regex.Pattern.compile(
+    "(?is)^\\s*SHOW\\s+(VECTOR|DEDUP)\\s+INDEXES\\s+ON\\s+" +
       TargetRe + "\\s*;?\\s*$")
-  private val RefreshDIdxRe = java.util.regex.Pattern.compile(
-    "(?is)^\\s*REFRESH\\s+DEDUP\\s+INDEX(?:\\s+([A-Za-z0-9_]+))?\\s+ON\\s+" +
-      TargetRe + "\\s*;?\\s*$")
-  private val ShowDIdxRe = java.util.regex.Pattern.compile(
-    "(?is)^\\s*SHOW\\s+DEDUP\\s+INDEXES\\s+ON\\s+" + TargetRe +
-      "\\s*;?\\s*$")
+  private def familyOf(word: String): IndexArtifacts =
+    IndexArtifacts.families.find(_.Family.equalsIgnoreCase(word)).get
   // OPTIMIZE … CLUSTER BY VECTOR is a lake extension (not Spark grammar)
   private val OptimizeVecRe = java.util.regex.Pattern.compile(
     s"(?is)^\\s*OPTIMIZE\\s+$TargetRe\\s+CLUSTER\\s+BY\\s+VECTOR\\s+" +
@@ -805,21 +787,22 @@ object LakeSql {
         pqM = Option(cvi.group(12)).map(_.toInt),
         pqK = Option(cvi.group(13)).map(_.toInt)))
     }
-    val dvi = DropVIdxRe.matcher(sqlText)
-    if (dvi.matches()) {
-      val (base, layer) = targetOf(dvi, 2)
-      return Some(LakeDropVectorIndex(base, layer, dvi.group(1)))
+    val di = DropIdxRe.matcher(sqlText)
+    if (di.matches()) {
+      val (base, layer) = targetOf(di, 3)
+      return Some(LakeDropIndex(base, layer, familyOf(di.group(1)),
+        di.group(2)))
     }
-    val rvi = RefreshVIdxRe.matcher(sqlText)
-    if (rvi.matches()) {
-      val (base, layer) = targetOf(rvi, 2)
-      return Some(LakeRefreshVectorIndex(base, layer,
-        Option(rvi.group(1))))
+    val ri = RefreshIdxRe.matcher(sqlText)
+    if (ri.matches()) {
+      val (base, layer) = targetOf(ri, 3)
+      return Some(LakeRefreshIndex(base, layer, familyOf(ri.group(1)),
+        Option(ri.group(2))))
     }
-    val svi = ShowVIdxRe.matcher(sqlText)
-    if (svi.matches()) {
-      val (base, layer) = targetOf(svi, 1)
-      return Some(LakeShowVectorIndexes(base, layer))
+    val si = ShowIdxRe.matcher(sqlText)
+    if (si.matches()) {
+      val (base, layer) = targetOf(si, 2)
+      return Some(LakeShowIndexes(base, layer, familyOf(si.group(1))))
     }
     val cdi = CreateDIdxRe.matcher(sqlText)
     if (cdi.matches()) {
@@ -830,22 +813,6 @@ object LakeSql {
         hashes = Option(cdi.group(8)).map(_.toInt),
         bands = Option(cdi.group(9)).map(_.toInt),
         shingle = Option(cdi.group(10)).map(_.toInt)))
-    }
-    val ddi = DropDIdxRe.matcher(sqlText)
-    if (ddi.matches()) {
-      val (base, layer) = targetOf(ddi, 2)
-      return Some(LakeDropDedupIndex(base, layer, ddi.group(1)))
-    }
-    val rdi = RefreshDIdxRe.matcher(sqlText)
-    if (rdi.matches()) {
-      val (base, layer) = targetOf(rdi, 2)
-      return Some(LakeRefreshDedupIndex(base, layer,
-        Option(rdi.group(1))))
-    }
-    val sdi = ShowDIdxRe.matcher(sqlText)
-    if (sdi.matches()) {
-      val (base, layer) = targetOf(sdi, 1)
-      return Some(LakeShowDedupIndexes(base, layer))
     }
     val ins = InsertDedupedRe.matcher(sqlText)
     if (ins.matches()) {
@@ -954,8 +921,8 @@ object LakeSql {
     // appended (consumers stay index-stable): the pq kind's parameters
     AttributeReference("pq_m", IntegerType, nullable = false)(),
     AttributeReference("pq_k", IntegerType, nullable = false)(),
-    // appended round 18: covered files with a routing entry (the set a
-    // selective shardProbe can rank; unrouted files are always probed)
+    // appended: covered files with a routing entry (the set a selective
+    // shardProbe can rank; unrouted files are always probed)
     AttributeReference("routed_files", IntegerType, nullable = false)())
 
   private[io] val dedupIndexOutput: Seq[Attribute] = Seq(
@@ -973,8 +940,8 @@ object LakeSql {
   def maintOutputFor(m: LakeMaint): Seq[Attribute] = m match {
     case _: LakeHistory => historyOutput
     case _: LakeDetail => detailOutput
-    case _: LakeShowVectorIndexes => vectorIndexOutput
-    case _: LakeShowDedupIndexes => dedupIndexOutput
+    case LakeShowIndexes(_, _, VectorIndex) => vectorIndexOutput
+    case _: LakeShowIndexes => dedupIndexOutput
     case _ => maintenanceOutput
   }
 
@@ -987,7 +954,7 @@ object LakeSql {
       case LakeHistory(base, layer, limit) =>
         new Lake(session, LakeConfig(basePath = base))
           .historyRows(layer, limit)
-      case LakeShowVectorIndexes(base, layer) =>
+      case LakeShowIndexes(base, layer, VectorIndex) =>
         new Lake(session, LakeConfig(basePath = base))
           .vectorIndexStatus(layer).map {
             case (m, covered, routed, total) =>
@@ -995,7 +962,7 @@ object LakeSql {
                 m.efConstruction, m.nlist, m.nprobe, covered, total,
                 m.pqM, m.pqK, routed)
           }
-      case LakeShowDedupIndexes(base, layer) =>
+      case LakeShowIndexes(base, layer, _) =>
         new Lake(session, LakeConfig(basePath = base))
           .dedupIndexStatus(layer).map { case (m, covered, total) =>
             Row(m.name, m.idCol, m.textCol, m.numHashes, m.bands, m.rows,
@@ -1029,14 +996,10 @@ object LakeSql {
         throw new IllegalArgumentException(
           "DESCRIBE DETAIL returns the wide metadata row — use " +
             "runMaintenanceRows, not runMaintenance")
-      case _: LakeShowVectorIndexes =>
+      case LakeShowIndexes(_, _, fam) =>
         throw new IllegalArgumentException(
-          "SHOW VECTOR INDEXES returns one row per index — use " +
-            "runMaintenanceRows, not runMaintenance")
-      case _: LakeShowDedupIndexes =>
-        throw new IllegalArgumentException(
-          "SHOW DEDUP INDEXES returns one row per index — use " +
-            "runMaintenanceRows, not runMaintenance")
+          s"SHOW ${fam.Family.toUpperCase} INDEXES returns one row per " +
+            "index — use runMaintenanceRows, not runMaintenance")
       case LakeOptimize(_, layer, zcols, where) =>
         // Delta's delta.targetFileSize role: the statement has no size
         // clause, so the layer property decides the OPTIMIZE output sizing
@@ -1101,15 +1064,15 @@ object LakeSql {
           nlist = nlist.getOrElse(64), nprobe = nprobe.getOrElse(8),
           pqM = pqM.getOrElse(8), pqK = pqK.getOrElse(256))
         Row("CREATE VECTOR INDEX", s"shards=$built")
-      case LakeDropVectorIndex(_, layer, name) =>
-        lake.dropVectorIndex(layer, name)
-        Row("DROP VECTOR INDEX", name)
-      case LakeRefreshVectorIndex(_, layer, name) =>
+      case LakeDropIndex(_, layer, fam, name) =>
+        lake.dropIndex(layer, fam, name)
+        Row(s"DROP ${fam.Family.toUpperCase} INDEX", name)
+      case LakeRefreshIndex(_, layer, fam, name) =>
         val built = name match {
-          case Some(n) => lake.refreshVectorIndex(layer, n)
-          case None => lake.maintainVectorIndexes(layer)
+          case Some(n) => lake.refreshIndex(layer, fam, n)
+          case None => lake.maintainIndexes(layer, fam)
         }
-        Row("REFRESH VECTOR INDEX", s"shards=$built")
+        Row(s"REFRESH ${fam.Family.toUpperCase} INDEX", s"shards=$built")
       case LakeCreateDedupIndex(_, layer, name, textCol, idCol, threshold,
           hashes, bands, shingle) =>
         val built = lake.createDedupIndex(layer, name, textCol, idCol,
@@ -1117,15 +1080,6 @@ object LakeSql {
           numHashes = hashes.getOrElse(64), bands = bands.getOrElse(16),
           shingle = shingle.getOrElse(3))
         Row("CREATE DEDUP INDEX", s"shards=$built")
-      case LakeDropDedupIndex(_, layer, name) =>
-        lake.dropDedupIndex(layer, name)
-        Row("DROP DEDUP INDEX", name)
-      case LakeRefreshDedupIndex(_, layer, name) =>
-        val built = name match {
-          case Some(n) => lake.refreshDedupIndex(layer, n)
-          case None => lake.maintainDedupIndexes(layer)
-        }
-        Row("REFRESH DEDUP INDEX", s"shards=$built")
       case LakeOptimizeVector(_, layer, vecCol, clusters) =>
         val snap = lake.clusterByVector(layer, vecCol,
           clusters = clusters.getOrElse(0))

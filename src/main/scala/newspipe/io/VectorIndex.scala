@@ -2,36 +2,14 @@ package newspipe.io
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 
-/** Persisted vector-index metadata and artifact naming — the declarative
-  * half of [[Lake]]'s `createVectorIndex`/`vectorSearch` family.
-  *
-  * === Layout ===
-  *
-  * {{{
-  * layer/_vindex/<name>/_INDEX.json        — the declaration (this doc)
-  * layer/_vindex/<name>/shards/<digest>.ann — one serialized HNSW graph
-  *                                            PER DATA FILE, digest =
-  *                                            md5(qualified file path)
-  * }}}
-  *
-  * The design is CONTENT-ADDRESSED per data file: lake data files are
-  * immutable, so a file's shard graph never invalidates — append adds
-  * graphs for the new files only (O(increment)), OPTIMIZE's rewritten
-  * outputs get fresh graphs while the inputs' graphs become unreferenced
-  * debris that VACUUM reclaims, and time-travel reads of older snapshots
-  * could search the same artifacts. Coverage is evaluated per search
-  * against the CURRENT inventory: a file without an artifact (crashed
-  * maintenance, fresh OPTIMIZE output, foreign writer) falls back to an
-  * exact brute-force scan OF THAT FILE ONLY — search degrades in cost,
-  * never in correctness. Underscore-prefixed, so data listings and
-  * partition discovery never see the index.
-  *
-  * At 100 TB: graphs build where the data sits (one pass over NEW files
-  * per maintenance call), searches read ONLY the index artifacts (the
-  * corpus is never re-scanned), and the artifact set is embarrassingly
-  * parallel — one task per shard graph, queries ride a broadcast.
+/** The vector index family ([[IndexArtifacts]] holds the shared layout,
+  * content addressing and coverage contract): one ANN shard per data
+  * file under `layer/_vindex/<name>/shards/<digest>.ann`, plus routing
+  * segments (below). Searches read only the artifacts, one task per
+  * shard with the queries broadcast; a file without an artifact, or
+  * carrying deletion vectors, is searched by an exact scan of that file.
   */
-object VectorIndex {
+object VectorIndex extends IndexArtifacts {
 
   /** A declared index. `kind` is `hnsw` (per-file graphs; `m` /
     * `efConstruction` are the build parameters), `ivf` (per-file
@@ -47,15 +25,22 @@ object VectorIndex {
 
   val Kinds: Set[String] = Set("hnsw", "ivf", "pq")
 
-  /** May a FOREIGN index's shard artifacts serve `local`'s declaration?
-    * Borrowing across a shallow clone is keyed by index NAME, and a
-    * source may drop and recreate a same-named index with different
-    * parameters — then the borrowed bytes no longer mean what the local
-    * meta says (an hnsw→ivf swap crashes the deserializer mid-task; a
-    * different `m`/`efConstruction` silently changes recall). Equality
-    * here covers every parameter baked into artifact BYTES; `nprobe` is
-    * search-time-only and deliberately excluded (a clone may probe
-    * differently over the same cells).
+  val Family = "vector"
+  val DirName = "_vindex"
+  val Ext = ".ann"
+
+  def nameOf(m: Meta): String = m.name
+  def keyedColumns(m: Meta): Seq[String] = Seq(m.idCol, m.vecCol)
+
+  /** Excluded: a search has no verification leg, so a graph would
+    * resurrect deleted rows as neighbors.
+    */
+  val dvFilesCovered = false
+
+  /** An hnsw→ivf swap crashes the deserializer mid-task and a different
+    * `m`/`efConstruction` silently changes recall; `nprobe` is
+    * search-time-only (a clone may probe differently over the same
+    * cells).
     */
   def artifactCompatible(local: Meta, foreign: Meta): Boolean =
     local.kind == foreign.kind && local.idCol == foreign.idCol &&
@@ -65,23 +50,8 @@ object VectorIndex {
       (local.kind != "pq" ||
         (local.pqM == foreign.pqM && local.pqK == foreign.pqK))
 
-  val DirName = "_vindex"
-  val MetaFile: String = IndexArtifacts.MetaFile
-
-  def indexRoot(layerPath: String, name: String): Path =
-    IndexArtifacts.indexRoot(DirName, layerPath, name)
-
-  def shardsDir(layerPath: String, name: String): Path =
-    IndexArtifacts.shardsDir(DirName, layerPath, name)
-
-  /** Content address of a data file's shard artifact — see
-    * [[IndexArtifacts.digestOf]].
-    */
-  def digestOf(qualifiedPath: String): String =
-    IndexArtifacts.digestOf(qualifiedPath)
-
   def toJson(m: Meta): String = {
-    def q(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+    val q = IndexArtifacts.quote _
     s"""{"name": ${q(m.name)}, "kind": ${q(m.kind)}, """ +
       s""""idCol": ${q(m.idCol)}, "vecCol": ${q(m.vecCol)}, """ +
       s""""m": ${m.m}, "efConstruction": ${m.efConstruction}, """ +
@@ -90,13 +60,7 @@ object VectorIndex {
   }
 
   def fromJson(s: String): Meta = {
-    def str(k: String): String = {
-      val re = ("\"" + k + "\"\\s*:\\s*\"((?:[^\"\\\\]|\\\\.)*)\"").r
-      re.findFirstMatchIn(s).map(_.group(1)
-          .replace("\\\"", "\"").replace("\\\\", "\\"))
-        .getOrElse(throw new IllegalStateException(
-          s"vector index metadata missing '$k': $s"))
-    }
+    def str(k: String) = IndexArtifacts.jsonString(Family, s, k)
     def num(k: String, default: Option[Int] = None): Int = {
       val re = ("\"" + k + "\"\\s*:\\s*(\\d+)").r
       re.findFirstMatchIn(s).map(_.group(1).toInt)
@@ -110,20 +74,25 @@ object VectorIndex {
       pqM = num("pqM", Some(8)), pqK = num("pqK", Some(256)))
   }
 
-  /** Digests of the artifacts currently present (one listing). */
-  def existingShards(f: FileSystem, layerPath: String,
-      name: String): Set[String] =
-    IndexArtifacts.existingShards(DirName, ".ann", f, layerPath, name)
-
-  /** Write one shard artifact crash-safely (temp + rename; content is
-    * deterministic per data file — ascending-id insertion over immutable
-    * bytes — so a lost rename race is benign): see
-    * [[IndexArtifacts.writeShard]].
+  /** The per-file builder: one shard's bytes (ascending-id insertion
+    * over immutable rows, so deterministic per data file) and its
+    * routing summary — row count, mean of the shard's unit vectors and
+    * the angular radius (min member cosine to the normalized mean). The
+    * builder holds the true vectors, so the radius is a sound pruning
+    * bound for every kind.
     */
-  def writeShard(f: FileSystem, layerPath: String, name: String,
-      digest: String, bytes: Array[Byte]): Unit =
-    IndexArtifacts.writeShard(DirName, ".ann", f, layerPath, name, digest,
-      bytes)
+  def buildShard(m: Meta, rows: Array[(Long, Array[Double])])
+      : (Array[Byte], (Int, Array[Double], Double)) = {
+    val bytes = m.kind match {
+      case "ivf" => newspipe.ops.IvfFlat.buildShardBytes(rows, m.nlist)
+      case "pq" => newspipe.ops.PqShard.buildShardBytes(rows, m.pqM, m.pqK)
+      case _ => newspipe.ops.Hnsw.buildGraphBytes(rows, m.m,
+        m.efConstruction)
+    }
+    val unit = rows.map(r => newspipe.ops.Hnsw.unitOrZero(r._2))
+    val (mean, minCos) = newspipe.ops.Hnsw.meanAndMinCos(unit)
+    (bytes, (unit.length, mean, minCos))
+  }
 
   // ---- coarse shard routing ------------------------------------------------
   //

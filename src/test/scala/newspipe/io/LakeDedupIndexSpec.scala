@@ -490,4 +490,142 @@ class LakeDedupIndexSpec extends SparkTestBase {
     lake.dropDedupIndex("docs", "dix2")
     lake.renameColumn("docs", "text", "body") // free once the index is gone
   }
+
+  /** One layer both index families key: id, text and a 16-dim vector. */
+  private def mixed(ids: Range): DataFrame =
+    ids.map { i =>
+      val vec = (0 until 16).map { j =>
+        var z = i * 1000003L + j + 0x9e3779b97f4a7c15L
+        z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
+        z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
+        ((z ^ (z >>> 31)) & 0xffffffL).toDouble / 0xffffffL.toDouble - 0.5
+      }.toArray
+      (i.toLong, docText(i.toLong), vec)
+    }.toDF("doc_id", "text", "vec")
+      .select($"doc_id", $"text", $"vec".cast("array<double>").as("vec"))
+
+  test("both families on one layer: appends, vacuum, REFRESH, clone " +
+      "borrowing, the keyed-column guard and drop each act per family") {
+    val (base, lake) = newLake()
+    val f = new Path(base).getFileSystem(
+      spark.sparkContext.hadoopConfiguration)
+    def vShards(layer: String) =
+      VectorIndex.existingShards(f, s"$base/$layer", "vix")
+    def dShards(layer: String) =
+      DedupIndex.existingShards(f, s"$base/$layer", "dix")
+    def files(layer: String) = lake.describeDetail(layer).numFiles.toInt
+    lake.writeAtomic(mixed(0 until 30).repartitionByRange(3, $"doc_id")
+      .sortWithinPartitions("doc_id"), "docs")
+    lake.createVectorIndex("docs", "vix", "vec", "doc_id") shouldBe 3
+    lake.createDedupIndex("docs", "dix", "text", "doc_id") shouldBe 3
+
+    // an append's post-commit hook builds exactly one artifact per new
+    // file in EACH family
+    val (v0, d0) = (vShards("docs"), dShards("docs"))
+    lake.appendAtomic(mixed(100 until 120).repartitionByRange(2, $"doc_id")
+      .sortWithinPartitions("doc_id"), "docs")
+    val added = files("docs") - 3
+    added should be >= 1
+    (vShards("docs") -- v0).size shouldBe added
+    (dShards("docs") -- d0).size shouldBe added
+    v0.subsetOf(vShards("docs")) shouldBe true
+    d0.subsetOf(dShards("docs")) shouldBe true
+    lake.maintainVectorIndexes("docs") shouldBe 0
+    lake.maintainDedupIndexes("docs") shouldBe 0
+
+    // compaction rewrites every file; vacuum reclaims each family's dead
+    // artifacts and keeps exactly the live files'
+    val (v1, d1) = (vShards("docs"), dShards("docs"))
+    lake.compact("docs")
+    lake.vacuum("docs", keep = 1, orphanGraceMs = 0L)
+    val live = files("docs")
+    vShards("docs").size shouldBe live
+    dShards("docs").size shouldBe live
+    (vShards("docs") & v1) shouldBe empty
+    (dShards("docs") & d1) shouldBe empty
+
+    // a full overwrite is not auto-maintained; REFRESH without a name
+    // reports and builds only its own family's shards
+    lake.writeAtomic(mixed(0 until 30).repartitionByRange(2, $"doc_id")
+      .sortWithinPartitions("doc_id"), "docs")
+    lake.vectorIndexStatus("docs").map(_._2) shouldBe Seq(0)
+    lake.dedupIndexStatus("docs").map(_._2) shouldBe Seq(0)
+    val rv = LakeSql.sql(spark,
+      s"REFRESH VECTOR INDEX ON lake.`$base`.docs").collect().head
+    (rv.getString(0), rv.getString(1)) shouldBe
+      (("REFRESH VECTOR INDEX", "shards=2"))
+    lake.vectorIndexStatus("docs").map(_._2) shouldBe Seq(2)
+    lake.dedupIndexStatus("docs").map(_._2) shouldBe Seq(0)
+    val rd = LakeSql.sql(spark,
+      s"REFRESH DEDUP INDEX ON lake.`$base`.docs").collect().head
+    (rd.getString(0), rd.getString(1)) shouldBe
+      (("REFRESH DEDUP INDEX", "shards=2"))
+    lake.dedupIndexStatus("docs").map(_._2) shouldBe Seq(2)
+
+    // a shallow clone borrows both families: declarations ride, zero
+    // shard files are copied, and every file is covered
+    lake.clone("docs", "fork")
+    lake.vectorIndexes("fork").map(_.name) shouldBe Seq("vix")
+    lake.dedupIndexes("fork").map(_.name) shouldBe Seq("dix")
+    vShards("fork") shouldBe empty
+    dShards("fork") shouldBe empty
+    lake.maintainVectorIndexes("fork") shouldBe 0
+    lake.maintainDedupIndexes("fork") shouldBe 0
+    lake.vectorIndexStatus("fork").map(s => (s._2, s._4)) shouldBe
+      Seq((2, 2))
+    lake.dedupIndexStatus("fork").map(s => (s._2, s._3)) shouldBe
+      Seq((2, 2))
+
+    // a column both families key cannot be renamed; the refusal names
+    // both indexes
+    lake.setProperties("docs", Map("lake.columnMapping.mode" -> "name"))
+    val refused = intercept[IllegalArgumentException] {
+      lake.renameColumn("docs", "doc_id", "id2")
+    }.getMessage
+    refused should include("vector index 'vix'")
+    refused should include("dedup index 'dix'")
+
+    // dropping one family's index leaves the other's declaration and
+    // shards in place
+    val dLeft = dShards("docs")
+    lake.dropVectorIndex("docs", "vix")
+    lake.vectorIndexes("docs") shouldBe Nil
+    vShards("docs") shouldBe empty
+    lake.dedupIndexes("docs").map(_.name) shouldBe Seq("dix")
+    dShards("docs") shouldBe dLeft
+  }
+
+  test("index layout is fixed: shard names are md5(qualified data-file " +
+      "path) + Ext in both families, and _INDEX.json round-trips") {
+    val (base, lake) = newLake()
+    lake.writeAtomic(mixed(0 until 12).repartitionByRange(2, $"doc_id")
+      .sortWithinPartitions("doc_id"), "docs")
+    lake.createVectorIndex("docs", "vix", "vec", "doc_id", m = 8)
+    lake.createDedupIndex("docs", "dix", "text", "doc_id", bands = 8)
+    val f = new Path(base).getFileSystem(
+      spark.sparkContext.hadoopConfiguration)
+    val md5s = lake.read("docs").inputFiles.toSeq.map { p =>
+      java.security.MessageDigest.getInstance("MD5")
+        .digest(f.makeQualified(new Path(p)).toString.getBytes("UTF-8"))
+        .map("%02x".format(_)).mkString
+    }
+    md5s should have size 2
+    def names(dir: String): Set[String] =
+      f.listStatus(new Path(dir)).map(_.getPath.getName)
+        .filterNot(_.startsWith(".")).toSet
+    names(s"$base/docs/_vindex/vix/shards") shouldBe md5s.map(_ + ".ann").toSet
+    names(s"$base/docs/_dindex/dix/shards") shouldBe md5s.map(_ + ".sig").toSet
+    def meta(dir: String): String = {
+      val in = f.open(new Path(dir, "_INDEX.json"))
+      try new String(in.readAllBytes(), "UTF-8") finally in.close()
+    }
+    val vJson = meta(s"$base/docs/_vindex/vix")
+    VectorIndex.fromJson(vJson) shouldBe
+      VectorIndex.Meta("vix", "hnsw", "doc_id", "vec", 8, 128)
+    VectorIndex.toJson(VectorIndex.fromJson(vJson)) shouldBe vJson
+    val dJson = meta(s"$base/docs/_dindex/dix")
+    DedupIndex.fromJson(dJson) shouldBe
+      DedupIndex.Meta("dix", "doc_id", "text", 64, 8, 8, 3, 0.8)
+    DedupIndex.toJson(DedupIndex.fromJson(dJson)) shouldBe dJson
+  }
 }
