@@ -163,6 +163,13 @@ object FileStats {
     } finally pool.shutdown()
   }
 
+  /** Slices for a Spark job of one task per file over `n` driver-listed
+    * files: one file per slice up to twice the default parallelism.
+    */
+  private[io] def slicesFor(spark: org.apache.spark.sql.SparkSession,
+      n: Int): Int =
+    math.max(1, math.min(n, spark.sparkContext.defaultParallelism * 2))
+
   /** Exact per-file row counts from parquet footers as a SPARK JOB over
     * the file list — the 100 TB form of [[collectResolved]]'s count-only
     * use ([[Lake.enableRowTracking]]'s one-time backfill): at 10⁶ files a
@@ -176,9 +183,7 @@ object FileStats {
     if (files.isEmpty) return Map.empty
     val conf = new org.apache.spark.util.SerializableConfiguration(
       spark.sparkContext.hadoopConfiguration)
-    val slices = math.max(1, math.min(files.size,
-      spark.sparkContext.defaultParallelism * 2))
-    spark.sparkContext.parallelize(files, slices)
+    spark.sparkContext.parallelize(files, slicesFor(spark, files.size))
       .map { case (rel, p) =>
         val reader = ParquetFileReader.open(
           HadoopInputFile.fromPath(new Path(p), conf.value))

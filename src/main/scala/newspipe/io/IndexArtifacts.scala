@@ -118,6 +118,14 @@ object IndexArtifacts {
       .map("%02x".format(_)).mkString
   }
 
+  /** An artifact's bytes, read whole. */
+  def readArtifact(f: FileSystem, p: Path): Array[Byte] = {
+    val bytes = new Array[Byte](f.getFileStatus(p).getLen.toInt)
+    val in = f.open(p)
+    try in.readFully(bytes) finally in.close()
+    bytes
+  }
+
   /** JSON string literal, as both families' `_INDEX.json` codecs write it. */
   private[io] def quote(s: String): String =
     "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""

@@ -1298,9 +1298,7 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
            else committed.fold(reader)(reader.schema))
             .load(snap.toString)
         }
-      case Some(m) if m.files.isEmpty =>
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], m.schema)
+      case Some(m) if m.files.isEmpty => emptyFrame(m.schema)
       case Some(m) =>
         // the RECORDED schema is authoritative (Delta's log-schema role):
         // files predating a schema-evolving merge/append read null for the
@@ -1771,9 +1769,7 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
   }
 
   def readVersionWithRowIds(layer: String, version: String): DataFrame = {
-    val snap = new Path(s"${layerPath(layer)}/_v/$version")
-    require(fs(snap).exists(new Path(snap, "_COMMITTED")),
-      s"layer '$layer' has no committed snapshot '$version'")
+    val snap = committedSnap(layer, version)
     withRowIdsFrame(layer, snap, snapshotInventory(layer, snap))
   }
 
@@ -1787,12 +1783,7 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
     require(rowTrackingEnabled(layer),
       s"layer '$layer' does not track row ids — enableRowTracking first")
     val schema = snapshotSchema(layer, snap)
-    if (rels.isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(schema.fields :+
-          org.apache.spark.sql.types.StructField(Lake.RowIdCol,
-            org.apache.spark.sql.types.LongType)))
+    if (rels.isEmpty) return emptyFrame(Lake.withRowIdField(schema))
     val m = manifestOf(snap).getOrElse(throw new IllegalStateException(
       s"layer '$layer' snapshot ${snap.getName} has no manifest — row " +
         "tracking requires manifest commits (enableRowTracking backfills)"))
@@ -1803,11 +1794,8 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
         "committed before enableRowTracking? Re-run enableRowTracking")
     val mapping = mappingOf(snap)
     val base = layerPath(layer)
-    val hint = org.apache.spark.sql.types.StructType(
-      physicalSchema(schema, mapping).fields :+
-        org.apache.spark.sql.types.StructField(Lake.RowIdCol,
-          org.apache.spark.sql.types.LongType))
-    val raw = readRelFiles(layer, rels, schemaHint = Some(hint),
+    val raw = readRelFiles(layer, rels,
+      schemaHint = Some(Lake.withRowIdField(physicalSchema(schema, mapping))),
       withMeta = true)
     val f = fs(new Path(base))
     val qualBase = f.makeQualified(new Path(base)).toString.stripSuffix("/")
@@ -2685,8 +2673,7 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
         .toSeq.distinct.filterNot(fileSchema.fieldNames.contains)
       val schema = StructType(fileSchema.fields ++
         partCols.map(StructField(_, StringType)))
-      val empty = spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+      val empty = emptyFrame(schema)
       // the sample-file schema speaks PHYSICAL names — translate the
       // predicate so stats pruning stays correct under column mapping
       resolvedCondition(empty.filter(predicateToPhysical(predicate, mapping)))
@@ -3067,14 +3054,25 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
 
   /** Read one specific committed snapshot of a layer (see [[listVersions]]). */
   def readVersion(layer: String, version: String,
-      mergeSchema: Boolean = false): DataFrame = {
+      mergeSchema: Boolean = false): DataFrame =
+    loadSnapshot(layer, committedSnap(layer, version), mergeSchema)
+
+  /** `version`'s snapshot dir, refused loudly (naming the known versions)
+    * unless it is committed.
+    */
+  private def committedSnap(layer: String, version: String): Path = {
     val snap = new Path(s"${layerPath(layer)}/_v/$version")
-    val f = fs(snap)
-    require(f.exists(new Path(snap, "_COMMITTED")),
+    require(fs(snap).exists(new Path(snap, "_COMMITTED")),
       s"layer '$layer' has no committed snapshot '$version' " +
         s"(known: ${listVersions(layer).mkString(", ")})")
-    loadSnapshot(layer, snap, mergeSchema)
+    snap
   }
+
+  /** A zero-row frame of `schema`. */
+  private[io] def emptyFrame(
+      schema: org.apache.spark.sql.types.StructType): DataFrame =
+    spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
 
   /** Idempotent micro-batch landing for streaming sinks: each batch lands
     * under a `__batch_id=<id>` partition; a replay (foreachBatch reruns
@@ -4579,10 +4577,7 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
     */
   def restore(layer: String, version: String): Lake.RowOpResult = {
     val base = layerPath(layer)
-    val target = new Path(s"$base/_v/$version")
-    require(fs(target).exists(new Path(target, "_COMMITTED")),
-      s"layer '$layer' has no committed snapshot '$version' " +
-        s"(known: ${listVersions(layer).mkString(", ")})")
+    val target = committedSnap(layer, version)
     val head = latestSnapshot(layer).get // exists: target is committed
     if (head.getName == version)
       return Lake.RowOpResult(head.toString, 0,
@@ -4663,12 +4658,7 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
       s"clone: source and destination are both '$src'")
     val srcBase = srcLake.layerPath(src)
     val target = version match {
-      case Some(v) =>
-        val t = new Path(s"$srcBase/_v/$v")
-        require(fs(t).exists(new Path(t, "_COMMITTED")),
-          s"layer '$src' has no committed snapshot '$v' " +
-            s"(known: ${srcLake.listVersions(src).mkString(", ")})")
-        t
+      case Some(v) => srcLake.committedSnap(src, v)
       case None => srcLake.latestSnapshot(src).getOrElse(throw
         new IllegalArgumentException(s"clone: layer '$src' has no " +
           "committed snapshot (flat layers: convertToLake first)"))
@@ -5631,9 +5621,7 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
         Some(if (parentDv.isEmpty) raw
           else dvFilter(raw, dvPairs(base, snap, Some(affected.toSet))))
       }
-    val affectedRows = alive0.map(transform).getOrElse(
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema))
+    val affectedRows = alive0.map(transform).getOrElse(emptyFrame(schema))
     if (tracking && affected.nonEmpty)
       require(affectedRows.columns.exists(
           _.equalsIgnoreCase(Lake.RowIdCol)),
@@ -5857,15 +5845,8 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
     * union; nothing executes until the consumer acts.
     */
   def changeFeed(layer: String, fromVersion: String,
-      toVersion: String): DataFrame = {
-    val steps = feedSteps(layer, fromVersion, toVersion)
-    val legs = steps.flatMap { case (a, b) =>
-      val (ins, del) = diff(layer, a, b)
-      Seq(tagChange(ins, "insert", b), tagChange(del, "delete", b))
-    }
-    legs.reduceOption(_.unionByName(_))
-      .getOrElse(emptyFeedLeg(layer, toVersion, withIds = false))
-  }
+      toVersion: String): DataFrame =
+    feedWalk(layer, fromVersion, toVersion, Lake.FeedKey.Rows)
 
   /** [[changeFeed]] with UPDATE CLASSIFICATION: when `keys` identify a row,
     * a key present on both sides of one commit is an update, not an
@@ -5884,20 +5865,7 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
   def changeFeedKeyed(layer: String, fromVersion: String, toVersion: String,
       keys: Seq[String]): DataFrame = {
     require(keys.nonEmpty, "changeFeedKeyed requires at least one key column")
-    import org.apache.spark.sql.functions.col
-    val steps = feedSteps(layer, fromVersion, toVersion)
-    val legs = steps.flatMap { case (a, b) =>
-      val (ins, del) = diff(layer, a, b)
-      val insKeys = ins.select(keys.map(col): _*).distinct()
-      val delKeys = del.select(keys.map(col): _*).distinct()
-      Seq(
-        tagChange(ins.join(delKeys, keys, "left_semi"), "update_postimage", b),
-        tagChange(ins.join(delKeys, keys, "left_anti"), "insert", b),
-        tagChange(del.join(insKeys, keys, "left_semi"), "update_preimage", b),
-        tagChange(del.join(insKeys, keys, "left_anti"), "delete", b))
-    }
-    legs.reduceOption(_.unionByName(_))
-      .getOrElse(emptyFeedLeg(layer, toVersion, withIds = false))
+    feedWalk(layer, fromVersion, toVersion, Lake.FeedKey.Columns(keys))
   }
 
   /** [[changeFeedKeyed]] WITHOUT caller-supplied keys: on a row-tracking
@@ -5915,70 +5883,45 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
     */
   def changeFeedTracked(layer: String, fromVersion: String,
       toVersion: String): DataFrame = {
-    import org.apache.spark.sql.functions.col
     require(rowTrackingEnabled(layer),
       s"layer '$layer' does not track row ids — enableRowTracking first " +
         "(or use changeFeedKeyed with explicit keys)")
-    val steps = feedSteps(layer, fromVersion, toVersion)
-    val legs = steps.flatMap { case (a, b) =>
-      val (ins, del) = diffWithIds(layer, a, b)
-      val insKeys = ins.select(col(Lake.RowIdCol)).distinct()
-      val delKeys = del.select(col(Lake.RowIdCol)).distinct()
-      Seq(
-        tagChange(ins.join(delKeys, Seq(Lake.RowIdCol), "left_semi"),
-          "update_postimage", b),
-        tagChange(ins.join(delKeys, Seq(Lake.RowIdCol), "left_anti"),
-          "insert", b),
-        tagChange(del.join(insKeys, Seq(Lake.RowIdCol), "left_semi"),
-          "update_preimage", b),
-        tagChange(del.join(insKeys, Seq(Lake.RowIdCol), "left_anti"),
-          "delete", b))
-    }
-    legs.reduceOption(_.unionByName(_))
-      .getOrElse(emptyFeedLeg(layer, toVersion, withIds = true))
+    feedWalk(layer, fromVersion, toVersion, Lake.FeedKey.RowIds)
   }
 
-  /** [[diff]] with each side's stable row ids attached — the multiset
-    * difference then keys on (data, id), so carried-unchanged rows cancel
-    * even across rewrites. Both sides surface in the TO version's schema
-    * (columns the from-side predates read null, like every evolved read).
+  /** The one per-commit walk behind every change feed (the three
+    * `changeFeed*` entries, the `lake_changes*` table functions and the
+    * keyed and tracked change streams): each step of [[feedSteps]] is one
+    * diff, tagged with its committing version. [[Lake.FeedKey.Rows]]
+    * emits the insert/delete pair; a key emits the four tags, legs in
+    * the order update_postimage, insert, update_preimage, delete. All
+    * legs of a step derive from the step's ONE shared aggregate
+    * ([[symmetricExceptAll]]), so exchange reuse scans and shuffles each
+    * step once however many legs consume it.
     */
-  private def diffWithIds(layer: String, fromVersion: String,
-      toVersion: String): (DataFrame, DataFrame) = {
-    import org.apache.spark.sql.functions.{col, lit}
-    val base = layerPath(layer)
-    def snapOf(version: String): Path = {
-      val snap = new Path(s"$base/_v/$version")
-      require(fs(snap).exists(new Path(snap, "_COMMITTED")),
-        s"layer '$layer' has no committed snapshot '$version' " +
-          s"(known: ${listVersions(layer).mkString(", ")})")
-      snap
+  private[io] def feedWalk(layer: String, fromVersion: String,
+      toVersion: String, key: Lake.FeedKey): DataFrame = {
+    import org.apache.spark.sql.functions.col
+    val legs = feedSteps(layer, fromVersion, toVersion).flatMap {
+      case (a, b) =>
+        val (ins, del) = diffCore(layer, a, b, withIds = key.withIds)
+        val keys = key.columns
+        if (keys.isEmpty)
+          Seq(tagChange(ins, "insert", b), tagChange(del, "delete", b))
+        else {
+          val insKeys = ins.select(keys.map(col): _*).distinct()
+          val delKeys = del.select(keys.map(col): _*).distinct()
+          Seq(
+            tagChange(ins.join(delKeys, keys, "left_semi"),
+              "update_postimage", b),
+            tagChange(ins.join(delKeys, keys, "left_anti"), "insert", b),
+            tagChange(del.join(insKeys, keys, "left_semi"),
+              "update_preimage", b),
+            tagChange(del.join(insKeys, keys, "left_anti"), "delete", b))
+        }
     }
-    val fromSnap = snapOf(fromVersion)
-    val toSnap = snapOf(toVersion)
-    def pairs(snap: Path): Map[String, String] = {
-      val dv = dvMapOf(snap)
-      snapshotInventory(layer, snap)
-        .map(rel => rel -> dv.getOrElse(rel, "")).toMap
-    }
-    val from = pairs(fromSnap)
-    val to = pairs(toSnap)
-    val outSchema = snapshotSchema(layer, toSnap)
-    val outCols = outSchema.fieldNames.toSeq :+ Lake.RowIdCol
-    def readSide(snap: Path, rels: Seq[String]): DataFrame = {
-      val f = withRowIdsFrame(layer, snap, rels.sorted)
-      val have = f.columns.map(_.toLowerCase).toSet
-      val widened = outSchema.fields.filterNot(fd =>
-        have.contains(fd.name.toLowerCase)).foldLeft(f) { (acc, fd) =>
-        acc.withColumn(fd.name, lit(null).cast(fd.dataType))
-      }
-      widened.select(outCols.map(col): _*)
-    }
-    val changedTo = to.filter { case (rel, d) => !from.get(rel).contains(d) }
-    val changedFrom = from.filter { case (rel, d) => !to.get(rel).contains(d) }
-    val onlyTo = readSide(toSnap, changedTo.keys.toSeq)
-    val onlyFrom = readSide(fromSnap, changedFrom.keys.toSeq)
-    exceptBothWays(onlyTo, onlyFrom)
+    legs.reduceOption(_.unionByName(_))
+      .getOrElse(emptyFeedLeg(layer, toVersion, key.withIds))
   }
 
   /** `exceptAll` both ways, VARIANT-safe: Spark refuses set operations
@@ -6104,7 +6047,7 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
     * itself). Results are identical with the skip on or off — the
     * maintenance contract is spec-pinned — only the cost differs.
     */
-  private def feedSteps(layer: String, fromVersion: String,
+  private[io] def feedSteps(layer: String, fromVersion: String,
       toVersion: String): Seq[(String, String)] = {
     val slice = versionSlice(layer, fromVersion, toVersion)
     slice.zip(slice.tail).filterNot { case (_, b) =>
@@ -6116,7 +6059,7 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
     * maintenance rewrite. Unlabeled commits (pre-`_OP` snapshots, foreign
     * writers) are conservatively NOT maintenance.
     */
-  private[io] def maintenanceCommit(layer: String, version: String): Boolean = {
+  private def maintenanceCommit(layer: String, version: String): Boolean = {
     val p = new Path(s"${layerPath(layer)}/_v/$version/_OP")
     val f = fs(p)
     f.exists(p) && {
@@ -6131,16 +6074,9 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
     */
   private def emptyFeedLeg(layer: String, toVersion: String,
       withIds: Boolean): DataFrame = {
-    val snap = new Path(s"${layerPath(layer)}/_v/$toVersion")
-    val base = snapshotSchema(layer, snap)
-    val schema =
-      if (withIds)
-        org.apache.spark.sql.types.StructType(base.fields :+
-          org.apache.spark.sql.types.StructField(Lake.RowIdCol,
-            org.apache.spark.sql.types.LongType))
-      else base
-    tagChange(spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema),
+    val base = snapshotSchema(layer,
+      new Path(s"${layerPath(layer)}/_v/$toVersion"))
+    tagChange(emptyFrame(if (withIds) Lake.withRowIdField(base) else base),
       "insert", toVersion)
   }
 
@@ -6172,17 +6108,21 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
     *         not `fromVersion`, and vice versa.
     */
   def diff(layer: String, fromVersion: String, toVersion: String)
-      : (DataFrame, DataFrame) = {
+      : (DataFrame, DataFrame) =
+    diffCore(layer, fromVersion, toVersion, withIds = false)
+
+  /** The one diff behind [[diff]] and the row-id feed. With `withIds`
+    * each side's stable row ids are attached, so the multiset difference
+    * keys on (data, id) and carried-unchanged rows cancel even across
+    * rewrites. Either way both sides surface in the TO version's schema
+    * (columns the from-side predates read null, like every evolved read).
+    */
+  private def diffCore(layer: String, fromVersion: String,
+      toVersion: String, withIds: Boolean): (DataFrame, DataFrame) = {
+    import org.apache.spark.sql.functions.{col, lit}
     val base = layerPath(layer)
-    def snapOf(version: String): Path = {
-      val snap = new Path(s"$base/_v/$version")
-      require(fs(snap).exists(new Path(snap, "_COMMITTED")),
-        s"layer '$layer' has no committed snapshot '$version' " +
-          s"(known: ${listVersions(layer).mkString(", ")})")
-      snap
-    }
-    val fromSnap = snapOf(fromVersion)
-    val toSnap = snapOf(toVersion)
+    val fromSnap = committedSnap(layer, fromVersion)
+    val toSnap = committedSnap(layer, toVersion)
     // inventory IDENTITY is (file, dv): a file present in both snapshots
     // whose deletion vector changed DID contribute changes (its newly-dead
     // rows), so it must be read on both sides — with each side's own DV
@@ -6197,10 +6137,9 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
     // under column mapping both sides' files carry PHYSICAL names (stable
     // across renames — files are immutable), so the TO snapshot's mapping
     // translates the shared read schema for either side
-    val diffMapping = mappingOf(toSnap)
-    def readSide(snap: Path, rels: Seq[String]): DataFrame =
-      if (rels.isEmpty) spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    lazy val diffMapping = mappingOf(toSnap)
+    def readRows(snap: Path, rels: Seq[String]): DataFrame =
+      if (rels.isEmpty) emptyFrame(schema)
       else {
         val dv = dvMapOf(snap)
         val hasDv = rels.exists(dv.contains)
@@ -6210,9 +6149,19 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
         val alive =
           if (hasDv) dvFilter(raw, dvPairs(base, snap, Some(rels.toSet)))
           else raw
-        alive.select(schema.fieldNames
-          .map(org.apache.spark.sql.functions.col).toSeq: _*)
+        alive.select(schema.fieldNames.map(col).toSeq: _*)
       }
+    def readWithIds(snap: Path, rels: Seq[String]): DataFrame = {
+      val f = withRowIdsFrame(layer, snap, rels)
+      val have = f.columns.map(_.toLowerCase).toSet
+      val widened = schema.fields.filterNot(fd =>
+        have.contains(fd.name.toLowerCase)).foldLeft(f) { (acc, fd) =>
+        acc.withColumn(fd.name, lit(null).cast(fd.dataType))
+      }
+      widened.select((schema.fieldNames.toSeq :+ Lake.RowIdCol).map(col): _*)
+    }
+    val readSide: (Path, Seq[String]) => DataFrame =
+      if (withIds) readWithIds else readRows
     val changedTo = to.filter { case (rel, d) => !from.get(rel).contains(d) }
     val changedFrom = from.filter { case (rel, d) => !to.get(rel).contains(d) }
     val onlyTo = readSide(toSnap, changedTo.keys.toSeq.sorted)
@@ -6508,9 +6457,7 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
       new org.apache.spark.util.SerializableConfiguration(
         spark.sparkContext.hadoopConfiguration))
     val pathsB = spark.sparkContext.broadcast(byPath)
-    val nParts = math.max(1, math.min(targetRels.size,
-      spark.sparkContext.defaultParallelism * 2))
-    rows.repartition(nParts, col("__f"))
+    rows.repartition(FileStats.slicesFor(spark, targetRels.size), col("__f"))
       .mapPartitions { it =>
         val byFile = scala.collection.mutable.HashMap.empty[String,
           scala.collection.mutable.ArrayBuffer[T]]
@@ -6584,6 +6531,27 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
     * maintenance skips shared files entirely. One listing per distinct
     * root.
     */
+  /** The per-artifact read every index query runs: the artifact paths
+    * spread over [[FileStats.slicesFor]] tasks, the Hadoop conf shipped
+    * as one broadcast, and `read` handed each path with its FileSystem.
+    * `read` runs in the task, so it must capture no `Lake`.
+    */
+  private def perArtifact[U: scala.reflect.ClassTag](paths: Seq[String])(
+      read: (org.apache.hadoop.fs.FileSystem, Path) => Iterator[U])
+      : org.apache.spark.rdd.RDD[U] = {
+    val confB = spark.sparkContext.broadcast(
+      new org.apache.spark.util.SerializableConfiguration(
+        spark.sparkContext.hadoopConfiguration))
+    spark.sparkContext.parallelize(paths, FileStats.slicesFor(spark, paths.size))
+      .mapPartitions { ps =>
+        val hc = confB.value.value
+        ps.flatMap { p =>
+          val path = new Path(p)
+          read(path.getFileSystem(hc), path)
+        }
+      }
+  }
+
   private def reachableShardArtifacts(layer: String, fam: IndexArtifacts)(
       meta: fam.Meta, inv: Seq[String]): Map[String, Path] = {
     val name = fam.nameOf(meta)
@@ -6721,30 +6689,17 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
         !justRouted.contains(d))
       .toSeq.distinct
     if (unrouted.isEmpty) return
-    val confB = spark.sparkContext.broadcast(
-      new org.apache.spark.util.SerializableConfiguration(
-        spark.sparkContext.hadoopConfiguration))
-    val paths = unrouted.map(d => (d, artifacts(d).toString))
-    val nSlices = math.max(1, math.min(paths.size,
-      spark.sparkContext.defaultParallelism * 2))
-    val kind = meta.kind
-    val entries = spark.sparkContext.parallelize(paths, nSlices)
-      .mapPartitions { ps =>
-        val hc = confB.value.value
-        ps.map { case (d, p) =>
-          val path = new org.apache.hadoop.fs.Path(p)
-          val fsys = path.getFileSystem(hc)
-          val bytes = new Array[Byte](fsys.getFileStatus(path).getLen.toInt)
-          val in = fsys.open(path)
-          try in.readFully(bytes) finally in.close()
-          val (n, c, minCos) = kind match {
-            case "ivf" => newspipe.ops.IvfFlat.centroidOfShardBytes(bytes)
-            case "pq" => newspipe.ops.PqShard.centroidOfShardBytes(bytes)
-            case _ => newspipe.ops.Hnsw.centroidOfGraphBytes(bytes)
-          }
-          (d, n, c, minCos)
+    val (kind, ext) = (meta.kind, VectorIndex.Ext)
+    val entries = perArtifact(unrouted.map(d => artifacts(d).toString)) {
+      (fsys, path) =>
+        val bytes = IndexArtifacts.readArtifact(fsys, path)
+        val (n, c, minCos) = kind match {
+          case "ivf" => newspipe.ops.IvfFlat.centroidOfShardBytes(bytes)
+          case "pq" => newspipe.ops.PqShard.centroidOfShardBytes(bytes)
+          case _ => newspipe.ops.Hnsw.centroidOfGraphBytes(bytes)
         }
-      }.collect()
+        Iterator((path.getName.stripSuffix(ext), n, c, minCos))
+    }.collect()
     if (entries.nonEmpty)
       VectorIndex.writeRoutingSegment(f, base, meta.name,
         VectorIndex.serializeRouting(entries.toSeq))
@@ -6818,11 +6773,7 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
       s"shardProbe must be in (0, 1], got $shardProbe")
     val meta = resolveIndex(layer, VectorIndex, indexName)
     val snap = version match {
-      case Some(v) =>
-        val p = new Path(s"${layerPath(layer)}/_v/$v")
-        require(fs(p).exists(new Path(p, "_COMMITTED")),
-          s"layer '$layer' has no committed snapshot '$v'")
-        p
+      case Some(v) => committedSnap(layer, v)
       case None => latestSnapshot(layer).getOrElse(
         throw new IllegalStateException(
           s"layer '$layer' has no committed snapshot"))
@@ -6919,12 +6870,7 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
     val ann: DataFrame =
       if (covered.isEmpty) emptyCands
       else {
-        val confB = spark.sparkContext.broadcast(
-          new org.apache.spark.util.SerializableConfiguration(
-            spark.sparkContext.hadoopConfiguration))
         val paths = covered.map { case (_, d) => artifacts(d).toString }
-        val nSlices = math.max(1, math.min(paths.size,
-          spark.sparkContext.defaultParallelism * 2))
         // +1: a query's own row may occupy one slot in its file; a
         // filter over-fetches so post-validation still fills k, and PQ
         // over-fetches so the exact refine can reorder the quantized
@@ -6934,26 +6880,17 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
             k * math.max(1, oversample) + 1
           else k + 1
         val (ef, mMeta) = (efSearch, meta)
-        val raw0 = spark.sparkContext.parallelize(paths, nSlices)
-          .mapPartitions { ps =>
-            val hc = confB.value.value
-            ps.flatMap { p =>
-              val path = new org.apache.hadoop.fs.Path(p)
-              val fsys = path.getFileSystem(hc)
-              val bytes =
-                new Array[Byte](fsys.getFileStatus(path).getLen.toInt)
-              val in = fsys.open(path)
-              try in.readFully(bytes) finally in.close()
-              mMeta.kind match {
-                case "ivf" => newspipe.ops.IvfFlat.searchShardBytes(
-                  bytes, qB.value, fetch, mMeta.nprobe)
-                case "pq" => newspipe.ops.PqShard.searchShardBytes(
-                  bytes, qB.value, fetch)
-                case _ => newspipe.ops.Hnsw.searchGraphBytes(
-                  bytes, qB.value, fetch, ef)
-              }
-            }
-          }.toDF("query_id", "neighbor_id", "cos")
+        val raw0 = perArtifact(paths) { (fsys, path) =>
+          val bytes = IndexArtifacts.readArtifact(fsys, path)
+          (mMeta.kind match {
+            case "ivf" => newspipe.ops.IvfFlat.searchShardBytes(
+              bytes, qB.value, fetch, mMeta.nprobe)
+            case "pq" => newspipe.ops.PqShard.searchShardBytes(
+              bytes, qB.value, fetch)
+            case _ => newspipe.ops.Hnsw.searchGraphBytes(
+              bytes, qB.value, fetch, ef)
+          }).iterator
+        }.toDF("query_id", "neighbor_id", "cos")
         // PQ emits QUANTIZED scores — refine the shortlist exactly
         // (FAISS's refine step): one column-pruned id scan of the
         // covered files for the candidate ids only, cosine recomputed
@@ -7068,9 +7005,7 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
     val base = layerPath(layer)
     val f = fs(new Path(base))
     val inv = snapshotInventory(layer, snap)
-    val since = new Path(s"$base/_v/$sinceVersion")
-    require(f.exists(new Path(since, "_COMMITTED")),
-      s"layer '$layer' has no committed snapshot '$sinceVersion'")
+    val since = committedSnap(layer, sinceVersion)
     val oldInv = snapshotInventory(layer, since).toSet
     val newRels = inv.filterNot(oldInv)
     import spark.implicits._
@@ -7199,32 +7134,17 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
       val fromArtifacts: DataFrame =
         if (chunkCovered.isEmpty) emptyPairs
         else {
-          val confB = spark.sparkContext.broadcast(
-            new org.apache.spark.util.SerializableConfiguration(
-              spark.sparkContext.hadoopConfiguration))
-          val paths = chunkCovered.map { case (_, d) =>
-            artifacts(d).toString }
-          val nSlices = math.max(1, math.min(paths.size,
-            spark.sparkContext.defaultParallelism * 2))
           val (t, kind) = (threshold, meta.kind)
-          spark.sparkContext.parallelize(paths, nSlices)
-            .mapPartitions { ps =>
-              val hc = confB.value.value
-              ps.flatMap { p =>
-                val path = new org.apache.hadoop.fs.Path(p)
-                val fsys = path.getFileSystem(hc)
-                val bytes =
-                  new Array[Byte](fsys.getFileStatus(path).getLen.toInt)
-                val in = fsys.open(path)
-                try in.readFully(bytes) finally in.close()
-                kind match {
-                  case "ivf" => newspipe.ops.IvfFlat.scanShardBytes(
-                    bytes, qB.value, t)
-                  case _ => newspipe.ops.Hnsw.scanGraphBytes(
-                    bytes, qB.value, t)
-                }
-              }
-            }.toDF("id_a", "id_b", "cos")
+          perArtifact(chunkCovered.map { case (_, d) =>
+              artifacts(d).toString }) { (fsys, path) =>
+            val bytes = IndexArtifacts.readArtifact(fsys, path)
+            (kind match {
+              case "ivf" => newspipe.ops.IvfFlat.scanShardBytes(
+                bytes, qB.value, t)
+              case _ => newspipe.ops.Hnsw.scanGraphBytes(
+                bytes, qB.value, t)
+            }).iterator
+          }.toDF("id_a", "id_b", "cos")
         }
       val fromScan: DataFrame =
         if (uncovered.isEmpty) emptyPairs
@@ -7382,9 +7302,6 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
     val fromArtifacts: DataFrame =
       if (covered.isEmpty) emptySigs
       else {
-        val confB = spark.sparkContext.broadcast(
-          new org.apache.spark.util.SerializableConfiguration(
-            spark.sparkContext.hadoopConfiguration))
         // the probe thunk runs a Spark job (distinct + collect on the
         // landing's signatures) — invoke it only when enough artifact
         // bodies could be skipped to pay for it: below that, the extra
@@ -7392,25 +7309,16 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
         val probeKeys =
           if (covered.size >= dedupPruneMinArtifacts) probe() else None
         val probeB = probeKeys.map(spark.sparkContext.broadcast(_))
-        val paths = covered.map { case (_, d) => artifacts(d).toString }
-        val nSlices = math.max(1, math.min(paths.size,
-          spark.sparkContext.defaultParallelism * 2))
-        spark.sparkContext.parallelize(paths, nSlices)
-          .mapPartitions { ps =>
-            val hc = confB.value.value
-            val pr = probeB.map(_.value)
-            ps.flatMap { p =>
-              val path = new org.apache.hadoop.fs.Path(p)
-              val fsys = path.getFileSystem(hc)
-              // streaming read: a pruned artifact costs its header only
-              val in = new java.io.DataInputStream(
-                new java.io.BufferedInputStream(fsys.open(path), 1 << 16))
-              try DedupIndex.readPruned(in, pr) match {
-                case Some(triples) => triples.iterator
-                case None => Iterator.empty
-              } finally in.close()
-            }
-          }.toDF("id", "band", "bucket")
+        perArtifact(covered.map { case (_, d) => artifacts(d).toString }) {
+          (fsys, path) =>
+            // streaming read: a pruned artifact costs its header only
+            val in = new java.io.DataInputStream(
+              new java.io.BufferedInputStream(fsys.open(path), 1 << 16))
+            try DedupIndex.readPruned(in, probeB.map(_.value)) match {
+              case Some(triples) => triples.iterator
+              case None => Iterator.empty
+            } finally in.close()
+        }.toDF("id", "band", "bucket")
       }
     val schema = snapshotSchema(layer, snap)
     val fromScan: Option[DataFrame] =
@@ -7480,10 +7388,7 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
     val inv = snapshotInventory(layer, snap)
     val newRels: Set[String] = sinceVersion match {
       case Some(v) =>
-        val p = new Path(s"$base/_v/$v")
-        require(f.exists(new Path(p, "_COMMITTED")),
-          s"layer '$layer' has no committed snapshot '$v'")
-        val oldInv = snapshotInventory(layer, p).toSet
+        val oldInv = snapshotInventory(layer, committedSnap(layer, v)).toSet
         inv.filterNot(oldInv).toSet
       case None => Set.empty
     }
@@ -8106,6 +8011,26 @@ object Lake {
     * role. Reserved on row-tracking layers.
     */
   val RowIdCol = "_row_id"
+
+  /** `schema` plus the nullable LongType [[RowIdCol]]. */
+  private[io] def withRowIdField(schema: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType =
+    org.apache.spark.sql.types.StructType(schema.fields :+
+      org.apache.spark.sql.types.StructField(RowIdCol,
+        org.apache.spark.sql.types.LongType))
+
+  /** What a change-feed walk ([[Lake.feedWalk]]) classifies updates by:
+    * nothing (plain insert/delete rows), declared key columns, or the
+    * stable row id (each side then read with its ids attached).
+    */
+  private[io] sealed abstract class FeedKey(val columns: Seq[String],
+      val withIds: Boolean)
+  private[io] object FeedKey {
+    case object Rows extends FeedKey(Nil, withIds = false)
+    final case class Columns(keys: Seq[String])
+      extends FeedKey(keys, withIds = false)
+    case object RowIds extends FeedKey(Seq(RowIdCol), withIds = true)
+  }
 
   /** An IDENTITY column declaration (Delta's
     * `GENERATED { ALWAYS | BY DEFAULT } AS IDENTITY (START WITH start

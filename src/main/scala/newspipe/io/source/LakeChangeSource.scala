@@ -17,12 +17,25 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   *
   * Offsets are committed version ids (zero-padded millis — lexicographic
   * = time order, so offset progression IS the snapshot lineage, restart-
-  * safe through the checkpoint). Each micro-batch is
-  * [[newspipe.io.Lake.diff]] between consecutive polled versions: only the
-  * two snapshots' symmetric-difference files are read, so a batch costs
-  * ~2× the touched fraction — incremental consumption stays proportional
-  * to change volume, not layer size, which is the property that matters
-  * when the layer is 100 TB and a delete touched 1% of it.
+  * safe through the checkpoint). A micro-batch covers the commits between
+  * two polled versions, read in one of four modes fixed when the options
+  * are parsed ([[LakeChangeSource.FeedMode]]):
+  *  - plain (the default): ONE net-range [[newspipe.io.Lake.diff]] from
+  *    the batch's start to its end, tagged insert/delete — a row inserted
+  *    and deleted inside one batch never surfaces;
+  *  - `keyColumns` and `trackedFeed`: the per-commit walk behind
+  *    [[newspipe.io.Lake.changeFeedKeyed]] and
+  *    [[newspipe.io.Lake.changeFeedTracked]] (the same path the
+  *    `lake_changes*` table functions scan), so updates classify per
+  *    commit even when one batch spans several commits;
+  *  - `skipChangeCommits` (plain-rows streams only): the same commit
+  *    steps, each diffed on its own and dropped whole if it deletes
+  *    anything.
+  * Every diff reads only the two snapshots' symmetric-difference files,
+  * so a batch costs ~2× the touched fraction — incremental consumption
+  * stays proportional to change volume, not layer size, which is the
+  * property that matters when the layer is 100 TB and a delete touched
+  * 1% of it.
   *
   * Options:
   *  - `startingVersion`: `earliest` (default) replays the OLDEST retained
@@ -90,42 +103,23 @@ class LakeChangeSource extends StreamSourceProvider {
     (base, layer)
   }
 
-  private def trackedOf(parameters: Map[String, String]): Boolean = {
-    val tracked = parameters.get("trackedFeed").exists(_.toBoolean)
-    require(!tracked || !parameters.get("keyColumns").exists(_.nonEmpty),
-      "options 'trackedFeed' and 'keyColumns' are mutually exclusive — " +
-        "tracked feeds attribute updates by row id, not declared keys")
-    // skipChangeCommits is the PLAIN-ROWS posture (Delta's option): this
-    // source's own surface is the change feed, which exists to carry
-    // changes — only the rows-only wrapper (LakeStreamSink, which sets
-    // the internal plain-rows marker) may pass it through
-    require(!parameters.get("skipChangeCommits").exists(_.toBoolean) ||
-        parameters.get(LakeChangeSource.PlainRowsMarker).exists(_.toBoolean),
-      "skipChangeCommits applies to plain-rows table streams " +
-        "(readStream.format(\"lake\")/readStream.table WITHOUT " +
-        "readChangeFeed) — a change feed exists to carry changes")
-    tracked
-  }
-
   override def sourceSchema(sqlContext: SQLContext,
       schema: Option[StructType], providerName: String,
       parameters: Map[String, String]): (String, StructType) = {
     val (base, layer) = layerOf(parameters)
     val lake = new Lake(sqlContext.sparkSession, LakeConfig(basePath = base))
-    val tracked = trackedOf(parameters)
-    // fail at load() time, not asynchronously on the stream thread
-    if (tracked) require(lake.rowTrackingEnabled(layer),
-      s"trackedFeed=true needs row tracking on layer '$layer' — " +
-        "enableRowTracking first (or use keyColumns)")
+    val mode = LakeChangeSource.modeOf(parameters, lake, layer)
     (providerName, LakeChangeSource.cdfSchema(lake.layerSchema(layer),
-      tracked = tracked))
+      tracked = mode.tracked))
   }
 
   override def createSource(sqlContext: SQLContext, metadataPath: String,
       schema: Option[StructType], providerName: String,
       parameters: Map[String, String]): Source = {
     val (base, layer) = layerOf(parameters)
-    new LakeChangeStream(sqlContext.sparkSession, base, layer, metadataPath,
+    val lake = new Lake(sqlContext.sparkSession, LakeConfig(basePath = base))
+    new LakeChangeStream(sqlContext.sparkSession, lake, base, layer,
+      metadataPath, LakeChangeSource.modeOf(parameters, lake, layer),
       parameters.getOrElse("startingVersion", "earliest"),
       parameters.get("startingTimestamp").map(_.toLong),
       parameters.get("maxVersionsPerTrigger").map { v =>
@@ -137,12 +131,7 @@ class LakeChangeSource extends StreamSourceProvider {
         val n = v.toLong
         require(n >= 1, s"maxBytesPerTrigger must be >= 1, got $n")
         n
-      },
-      parameters.get("keyColumns").toSeq
-        .flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty),
-      tracked = trackedOf(parameters),
-      skipChangeCommits =
-        parameters.get("skipChangeCommits").exists(_.toBoolean))
+      })
   }
 }
 
@@ -155,13 +144,58 @@ object LakeChangeSource {
   val PlainRowsMarker = "__plainRows"
 
   def cdfSchema(layerSchema: StructType,
-      tracked: Boolean = false): StructType = {
-    val dataFields =
-      if (!tracked) layerSchema.fields
-      else layerSchema.fields :+ StructField(Lake.RowIdCol,
-        org.apache.spark.sql.types.LongType, nullable = true)
-    StructType(dataFields :+ StructField(ChangeTypeCol, StringType,
-      nullable = false))
+      tracked: Boolean = false): StructType =
+    (if (tracked) Lake.withRowIdField(layerSchema) else layerSchema)
+      .add(StructField(ChangeTypeCol, StringType, nullable = false))
+
+  /** How a stream turns a batch's version range into tagged rows. */
+  private[source] sealed trait FeedMode {
+    /** Emitted rows carry `_row_id`. */
+    def tracked: Boolean = this == FeedMode.Walk(Lake.FeedKey.RowIds)
+  }
+  private[source] object FeedMode {
+    /** ONE net-range diff per batch, tagged insert/delete. */
+    case object NetRange extends FeedMode
+    /** Per commit, inserts only; a commit that deletes anything (an
+      * update, delete or merge rewrite) contributes nothing.
+      */
+    case object SkipChangeCommits extends FeedMode
+    /** [[Lake.feedWalk]]: the four tags per commit, keyed by declared
+      * columns (`keyColumns`) or by row id (`trackedFeed`).
+      */
+    final case class Walk(key: Lake.FeedKey) extends FeedMode
+  }
+
+  /** The stream's [[FeedMode]], refusing conflicting options. Runs in
+    * `sourceSchema` too, which Spark calls at load(), so a conflict
+    * surfaces at stream BUILD time, not as an async query error.
+    */
+  private[source] def modeOf(parameters: Map[String, String], lake: Lake,
+      layer: String): FeedMode = {
+    val tracked = parameters.get("trackedFeed").exists(_.toBoolean)
+    val keys = parameters.get("keyColumns").toSeq
+      .flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)
+    val skip = parameters.get("skipChangeCommits").exists(_.toBoolean)
+    require(!tracked || !parameters.get("keyColumns").exists(_.nonEmpty),
+      "options 'trackedFeed' and 'keyColumns' are mutually exclusive — " +
+        "tracked feeds attribute updates by row id, not declared keys")
+    // skipChangeCommits is the PLAIN-ROWS posture (Delta's option): this
+    // source's own surface is the change feed, which exists to carry
+    // changes — only the rows-only wrapper (LakeStreamSink, which sets
+    // the internal plain-rows marker) may pass it through, unkeyed
+    require(!skip || (parameters.get(PlainRowsMarker).exists(_.toBoolean) &&
+        keys.isEmpty && !tracked),
+      "skipChangeCommits applies to plain-rows table streams " +
+        "(readStream.format(\"lake\")/readStream.table WITHOUT " +
+        "readChangeFeed or keyColumns) — a change feed exists to carry " +
+        "changes")
+    if (tracked) require(lake.rowTrackingEnabled(layer),
+      s"trackedFeed=true needs row tracking on layer '$layer' — " +
+        "enableRowTracking first (or use keyColumns)")
+    if (tracked) FeedMode.Walk(Lake.FeedKey.RowIds)
+    else if (keys.nonEmpty) FeedMode.Walk(Lake.FeedKey.Columns(keys))
+    else if (skip) FeedMode.SkipChangeCommits
+    else FeedMode.NetRange
   }
 }
 
@@ -176,31 +210,23 @@ object LakeChangeSource {
   * catch-up run is exactly this: `maxBytesPerTrigger` bounds each batch's
   * scan volume, `Trigger.AvailableNow` bounds the run.
   */
-private[source] class LakeChangeStream(spark: SparkSession, basePath: String,
-    layer: String, metadataPath: String,
+private[source] class LakeChangeStream(spark: SparkSession, lake: Lake,
+    basePath: String, layer: String, metadataPath: String,
+    mode: LakeChangeSource.FeedMode,
     startingVersion: String, startingTimestamp: Option[Long],
-    maxVersionsPerTrigger: Option[Int], maxBytesPerTrigger: Option[Long],
-    keyColumns: Seq[String], tracked: Boolean = false,
-    skipChangeCommits: Boolean = false)
+    maxVersionsPerTrigger: Option[Int], maxBytesPerTrigger: Option[Long])
     extends Source
     with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
+  import LakeChangeSource.FeedMode
 
-  require(!skipChangeCommits || (keyColumns.isEmpty && !tracked),
-    "skipChangeCommits applies to PLAIN-ROWS streams (the change-feed " +
-      "surfaces exist to carry changes, not skip them)")
-
-  private val lake = new Lake(spark, LakeConfig(basePath = basePath))
   private val layerSchema = lake.layerSchema(layer)
   override val schema: StructType =
-    LakeChangeSource.cdfSchema(layerSchema, tracked)
+    LakeChangeSource.cdfSchema(layerSchema, mode.tracked)
   /** Data columns each emitted row carries (the schema minus the tag):
     * a tracked feed surfaces `_row_id` as a first-class column.
     */
   private val dataCols: Seq[String] =
     schema.fieldNames.toSeq.filterNot(_ == LakeChangeSource.ChangeTypeCol)
-  if (tracked) require(lake.rowTrackingEnabled(layer),
-    s"trackedFeed=true needs row tracking on layer '$layer' — " +
-      "enableRowTracking first (or use keyColumns)")
 
   private case class VersionOffset(version: String) extends V1Offset {
     override def json: String = version
@@ -454,49 +480,33 @@ private[source] class LakeChangeStream(spark: SparkSession, basePath: String,
       col(LakeChangeSource.ChangeTypeCol)): _*)
   }
 
-  /** The delta between two committed versions, tagged: row-id-attributed
-    * four tags when `trackedFeed` is set, the keyed four-tag
-    * classification when `keyColumns` is set (per commit, even across a
-    * multi-commit batch), the plain insert/delete pair otherwise.
-    */
-  private def delta(fromV: String, endV: String): DataFrame =
-    if (tracked)
-      conformTagged(lake.changeFeedTracked(layer, fromV, endV))
-    else if (keyColumns.nonEmpty)
-      conformTagged(lake.changeFeedKeyed(layer, fromV, endV, keyColumns))
-    else if (skipChangeCommits) {
+  /** A batch with no rows. */
+  private def emptyBatch: DataFrame =
+    conform(lake.emptyFrame(layerSchema), "insert")
+
+  /** The delta between two committed versions, tagged per [[mode]]. */
+  private def delta(fromV: String, endV: String): DataFrame = mode match {
+    case FeedMode.Walk(key) =>
+      conformTagged(lake.feedWalk(layer, fromV, endV, key))
+    case FeedMode.SkipChangeCommits =>
       // Delta's skipChangeCommits: COMMIT granularity — a commit whose
       // diff contains ANY delete (update/delete/merge rewrite) is
       // skipped WHOLE, so an update's post-image can never leak into an
       // append-only consumer as a duplicate insert. One diff per commit
       // (the batch's commit count is admission-bounded); the emptiness
-      // probe reads only the commit's symmetric-difference files.
-      val asc = lake.listVersions(layer).reverse
-        .filter(v => v > fromV && v <= endV)
-      val steps = (fromV +: asc).zip(asc)
-      val legs = steps.map { case (a, b) =>
-        // declared-maintenance commits (OPTIMIZE/REORG) contribute
-        // nothing by contract — skip them WITHOUT the emptiness-probe
-        // diff, which for a compaction reads two full snapshots just to
-        // cancel (round 19; same gate as Lake.feedSteps)
-        if (lake.maintenanceCommit(layer, b))
-          conform(spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            layerSchema), "insert")
-        else {
-          val (ins, del) = lake.diff(layer, a, b)
-          if (del.isEmpty) conform(ins, "insert")
-          else conform(ins.limit(0), "insert") // change commit: skip whole
-        }
-      }
-      legs.reduceOption(_.unionByName(_)).getOrElse(
-        conform(spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          layerSchema), "insert"))
-    } else {
+      // probe reads only the commit's symmetric-difference files. The
+      // walk's steps leave out declared-maintenance commits
+      // (OPTIMIZE/REORG), which contribute nothing by contract: their
+      // emptiness probe would read two full snapshots just to cancel.
+      lake.feedSteps(layer, fromV, endV).map { case (a, b) =>
+        val (ins, del) = lake.diff(layer, a, b)
+        if (del.isEmpty) conform(ins, "insert")
+        else conform(ins.limit(0), "insert") // change commit: skip whole
+      }.reduceOption(_.unionByName(_)).getOrElse(emptyBatch)
+    case FeedMode.NetRange =>
       val (inserted, deleted) = lake.diff(layer, fromV, endV)
       conform(inserted, "insert").unionByName(conform(deleted, "delete"))
-    }
+  }
 
   override def getBatch(start: Option[V1Offset], end: V1Offset): DataFrame = {
     val endV = versionOf(end)
@@ -509,10 +519,7 @@ private[source] class LakeChangeStream(spark: SparkSession, basePath: String,
         "checkpoint's offsets do not match this layer's history"))
     lastEnd = Some(endV)
     val batch: DataFrame = start.map(versionOf).orElse(baseVersion) match {
-      case Some(fromV) if fromV == endV =>
-        conform(spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], layerSchema),
-          "insert")
+      case Some(fromV) if fromV == endV => emptyBatch
       case Some(fromV) =>
         delta(fromV, endV)
       case None =>
@@ -522,7 +529,7 @@ private[source] class LakeChangeStream(spark: SparkSession, basePath: String,
         // everything at or before `end`, not just the oldest state
         val oldest = lake.listVersions(layer).last
         val initialRows =
-          if (tracked) lake.readVersionWithRowIds(layer, oldest)
+          if (mode.tracked) lake.readVersionWithRowIds(layer, oldest)
           else lake.readVersion(layer, oldest)
         val initial = conform(initialRows, "insert")
         if (oldest == endV) initial

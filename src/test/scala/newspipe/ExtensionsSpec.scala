@@ -326,6 +326,19 @@ class ExtensionsSpec extends SparkTestBase {
     rows.map(r => (r._1, r._2, r._4)).toSet shouldBe Set(
       (2L, "b", "update_preimage"), (2L, "B", "update_postimage"))
     rows.map(_._3).toSet.size shouldBe 1 // ONE shared row id
+    // over a longer range through a DV delete and a compaction, the table
+    // function IS the API feed, row for row
+    lake.deleteWhereDv("docs", $"id" === 1L)
+    lake.compact("docs")
+    val v3 = lake.listVersions("docs").head
+    val api = lake.changeFeedTracked("docs", v0, v3)
+    val sql = spark.sql(
+      s"SELECT * FROM lake_changes_tracked('$dir', 'docs', '$v0', '$v3')")
+    sql.columns.toSeq shouldBe api.columns.toSeq
+    sql.collect().sortBy(_.toString).toSeq shouldBe
+      api.collect().sortBy(_.toString).toSeq
+    api.filter($"_change_type" === "delete").select("id").as[Long]
+      .collect() shouldBe Array(1L)
   }
 
   test("lake_changes / lake_changes_keyed: table_changes() from SQL equals the API feed") {
@@ -354,6 +367,24 @@ class ExtensionsSpec extends SparkTestBase {
          |GROUP BY 1 ORDER BY 1""".stripMargin)
       .as[(String, Long)].collect() shouldBe
       Array(("insert", 1L), ("update_postimage", 1L), ("update_preimage", 1L))
+    // over a longer range through a DV delete and a compaction, each
+    // table function IS its API feed, row for row
+    lake.deleteWhereDv("docs", $"id" === 1L)
+    lake.compact("docs")
+    val vHead = lake.listVersions("docs").head
+    def same(sqlText: String, api: org.apache.spark.sql.DataFrame): Unit = {
+      val sql = spark.sql(sqlText)
+      sql.columns.toSeq shouldBe api.columns.toSeq
+      sql.collect().sortBy(_.toString).toSeq shouldBe
+        api.collect().sortBy(_.toString).toSeq
+    }
+    same(s"SELECT * FROM lake_changes('$dir', 'docs', '$vFrom', '$vHead')",
+      lake.changeFeed("docs", vFrom, vHead))
+    same(s"SELECT * FROM lake_changes_keyed('$dir', 'docs', '$vFrom', " +
+      s"'$vHead', 'id')", lake.changeFeedKeyed("docs", vFrom, vHead, Seq("id")))
+    lake.changeFeed("docs", vFrom, vHead)
+      .filter($"_change_type" === "delete").select("id").as[Long]
+      .collect().sorted shouldBe Array(1L, 2L)
   }
 
 

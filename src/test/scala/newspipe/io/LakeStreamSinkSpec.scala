@@ -337,6 +337,53 @@ class LakeStreamSinkSpec extends SparkTestBase {
       .option("checkpointLocation", freshDir("scc_ck3")).start()
   }
 
+  test("skipChangeCommits=true over append, compact, append, update: " +
+      "only the appends' rows, each once across a restart") {
+    val base = freshDir("src_scc_maint")
+    val lake = new Lake(spark, LakeConfig(basePath = base))
+    lake.writeAtomic(Seq((1L, "a"), (2L, "b")).toDF("id", "text"), "docs")
+    val start = lake.listVersions("docs").head
+    def commits(body: => Unit): Int = {
+      val before = lake.listVersions("docs").size
+      body
+      lake.listVersions("docs").size - before
+    }
+    val got = new java.util.concurrent.ConcurrentLinkedQueue[(Long, String)]()
+    val ckpt = freshDir("src_scc_maint_ck")
+    def run(): Unit = {
+      val q = spark.readStream.format("lake")
+        .option("skipChangeCommits", "true")
+        .option("startingVersion", start)
+        .option("basePath", base).option("layer", "docs").load()
+        .writeStream.option("checkpointLocation", ckpt)
+        .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+          b.as[(Long, String)].collect().foreach(got.add); ()
+        }.start()
+      try q.processAllAvailable() finally q.stop()
+    }
+    // four commits land before the first poll, so one batch spans the
+    // compaction (a maintenance commit) and the update (a change commit)
+    commits(lake.appendAtomic(Seq((3L, "c")).toDF("id", "text"), "docs")) shouldBe 1
+    commits(lake.compact("docs")) shouldBe 1
+    commits(lake.appendAtomic(Seq((4L, "d")).toDF("id", "text"), "docs")) shouldBe 1
+    commits(lake.updateWhere("docs", $"id" === 1L,
+      Map("text" -> lit("A")))) shouldBe 1
+    run()
+    got.toArray.toSeq.map(_.asInstanceOf[(Long, String)]).sorted shouldBe
+      Seq((3L, "c"), (4L, "d"))
+    // restart from the checkpoint: nothing is delivered again, and the
+    // next append flows alone past another compaction and update
+    run()
+    got.size shouldBe 2
+    commits(lake.appendAtomic(Seq((5L, "e")).toDF("id", "text"), "docs")) shouldBe 1
+    commits(lake.compact("docs")) shouldBe 1
+    commits(lake.updateWhere("docs", $"id" === 2L,
+      Map("text" -> lit("B")))) shouldBe 1
+    run()
+    got.toArray.toSeq.map(_.asInstanceOf[(Long, String)]).sorted shouldBe
+      Seq((3L, "c"), (4L, "d"), (5L, "e"))
+  }
+
   test("extension-less readStream.table rides the v1 fallback source") {
     val base = freshDir("src_tbl")
     spark.conf.set("spark.sql.catalog.lakefb", classOf[LakeCatalog].getName)
