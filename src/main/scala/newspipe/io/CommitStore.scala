@@ -10,8 +10,11 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * this section needs a coordination primitive, and WHICH primitive is
   * storage-dependent:
   *
-  *  - local FS / HDFS: atomic exclusive file creation exists →
-  *    [[FsCommitStore]] (the default) uses a lock file with stale-break.
+  *  - HDFS: exclusive file creation exists → [[FsCommitStore]] (the
+  *    default) uses a lock file with stale-break. The local FS has no
+  *    exclusive create (Hadoop's `RawLocalFileSystem.create` is an
+  *    `exists()` check followed by an open): there the lock file's owner
+  *    nonce re-reads are the guard (ROADMAP #1 has the fix).
   *  - S3-class object stores: there is NO atomic exclusive create or
   *    rename — a lock file degrades to advisory, exactly why Delta needs
   *    a LogStore / commit coordinator there. Production deployments plug
@@ -45,12 +48,16 @@ trait CommitStore {
 }
 
 /** The filesystem implementation (default): serialize the critical
-  * section with an atomic-exclusive lock file `<layer>/_v/_COMMIT_LOCK` —
-  * the plain-filesystem CAS that closes the residual
-  * two-writers-in-the-window race (two same-parent siblings both
-  * committing, the elder silently shadowed; surfaced by LakeSpec's
-  * 4-writer race). `create(overwrite = false)` is atomic on local FS and
-  * HDFS, so exactly one writer holds the section at a time; the DATA
+  * section with a lock file `<layer>/_v/_COMMIT_LOCK` — the
+  * plain-filesystem CAS that closes the residual two-writers-in-the-window
+  * race (two same-parent siblings both committing, the elder silently
+  * shadowed; surfaced by LakeSpec's 4-writer race). `create(overwrite =
+  * false)` is exclusive on HDFS, so there exactly one writer holds the
+  * section at a time. On the local FS it is NOT: Hadoop's
+  * `RawLocalFileSystem.create` is an `exists()` check followed by an open,
+  * and a race of 4 threads on one fresh path saw more than one winner in
+  * 480 of 500 trials (ROADMAP #1) — there the owner-nonce re-reads below
+  * are the guard, and ROADMAP #1 has the exclusive-create fix. The DATA
   * write (the long part) stays outside. A crashed holder's stale lock is
   * broken after 60 s (the section itself is two metadata ops — any older
   * lock is debris, not a writer). Stale breaks are themselves race-free:
@@ -76,10 +83,9 @@ object FsCommitStore extends CommitStore {
     while (true) {
       val acquired =
         try {
-          val out = f.create(lockPath, false) // atomic exclusive create
-          try out.write(
-            s"$nonce ${System.currentTimeMillis()}".getBytes("UTF-8"))
-          finally out.close()
+          // exclusive on HDFS only; the nonce re-read below guards local FS
+          Lake.putFile(f, lockPath, s"$nonce ${System.currentTimeMillis()}",
+            overwrite = false)
           true
         } catch { case _: java.io.IOException => false }
       if (acquired) {

@@ -93,12 +93,7 @@ trait IndexArtifacts extends Serializable {
       digest: String, bytes: Array[Byte]): Unit = {
     val dir = shardsDir(layerPath, name)
     f.mkdirs(dir)
-    val tmp = new Path(dir,
-      s".$digest$Ext.tmp-${java.util.UUID.randomUUID()}")
-    val out = f.create(tmp, true)
-    try out.write(bytes) finally out.close()
-    val dst = new Path(dir, s"$digest$Ext")
-    if (!f.rename(tmp, dst)) f.delete(tmp, false)
+    Lake.putViaRename(f, new Path(dir, s"$digest$Ext"), bytes)
   }
 }
 

@@ -4,14 +4,80 @@ import newspipe.StageBoundary.Ops
 import newspipe.model.Schemas
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
+final case class LakeConfig(
+    basePath: String,
+    database: String = "news_articles",
+    /** Land a [[FileStats]] `_STATS.json` sidecar (per-file
+      * min/max/nullCount from the parquet footers) inside every committed
+      * snapshot, enabling [[Lake.readWhere]] file pruning. Soft-fails to
+      * no-sidecar (pruning then degrades to a full scan — never to a wrong
+      * answer).
+      */
+    collectStats: Boolean = true,
+    /** Paths per manifest shard document (see [[SnapshotManifest]]); the
+      * default keeps any single driver-side JSON parse ≲ 3 MB however many
+      * files a row-op snapshot references.
+      */
+    manifestShardSize: Int = SnapshotManifest.DefaultShardSize,
+    optimizeWrite: Boolean = false,
+    /** Max consecutive INCREMENTAL (`_DELTA.json`) commits before a
+      * full-manifest checkpoint is forced (see [[DeltaDoc]]); bounds fold
+      * depth to a handful of small JSON reads. `1` disables incremental
+      * commits entirely (every commit writes the full manifest).
+      * Overridable per layer via the `lake.checkpointInterval` property.
+      */
+    checkpointInterval: Int = 20,
+    /** File count above which [[Lake.enableRowTracking]]'s one-time
+      * backfill counts footers with a SPARK JOB instead of a driver
+      * thread pool — the 10⁶-file inventory path.
+      */
+    backfillJobThreshold: Int = 512,
+    /** Minimum covered-artifact count for the dedup index's bucket-Bloom
+      * pruning to run at all: computing a landing's probe-key set is a
+      * Spark job (distinct + collect over the landing's
+      * signatures) — a FIXED cost that pruning must pay back in skipped
+      * artifact bodies. Below this many corpus artifacts the maximum
+      * possible saving (every body skipped) is smaller than the probe
+      * job itself, so the reader takes the unpruned path: read them all,
+      * no probe job, no header misses. At the 10⁶-file scale the index
+      * exists for, the threshold is invisible (always pruning); it only
+      * disarms the machinery on corpora small enough that it could never
+      * help. Pruning is an IO strategy — results are identical either
+      * way.
+      */
+    dedupPruneMinArtifacts: Int = 64,
+    /** Commit-coordination primitive for the [parent-check →
+      * marker-create] critical section ([[CommitStore]]): the default
+      * [[FsCommitStore]] lock file is exclusive on HDFS; on the local FS
+      * its create is an exists-check then an open, so there the owner
+      * nonce re-reads are the guard (ROADMAP #1 has the exclusive-create
+      * fix); S3-class stores need a real coordinator plugged here — the
+      * same storage caveat as Delta's LogStore.
+      */
+    commitStore: CommitStore = FsCommitStore,
+    /** Change feeds skip commits whose `_OP` declares a data-invisible
+      * maintenance rewrite (`OPTIMIZE` family / `REORG`) instead of
+      * diffing them (Delta parity: CDF skips `dataChange=false`
+      * commits). A compaction rewrites EVERY live file, so the per-commit
+      * feed walk would read two full snapshots
+      * only to have the multiset difference cancel to zero rows — the
+      * costliest possible no-op in a feed range, and pure waste at the
+      * 100 TB maintenance cadence. The skip trusts the commit contract
+      * the engine enforces elsewhere (compaction/REORG data-invisibility
+      * is spec-pinned and in-query asserted); disable to force the
+      * structural cancellation proof instead (results are identical —
+      * LakeCdfSpec pins the parity).
+      */
+    cdfSkipMaintenance: Boolean = true)
+
 /** Lake reader/writer — the reference's `write_to_datalake` /
   * `write_to_datalake_and_hive` (_lib_dq_helpers.py:21-54,198-233) and its
-  * `spark.read.format("delta").load` call sites, behind a format abstraction.
+  * `spark.read.format("delta").load` call sites.
   *
   * The reference's storage format is Delta, but the Delta semantics it
   * exercises are batch read, append/overwrite write, and partitionBy — all
   * covered by Parquet + directory layout (SURVEY.md §2.1 S3). This build has
-  * no Delta jars (zero-egress image), so `format` defaults to parquet. The
+  * no Delta jars (zero-egress image), so every layer is parquet. The
   * one Delta property a plain `mode("overwrite")` genuinely lacks — readers
   * never observing a half-written replacement — is provided by
   * [[Lake.writeAtomic]]'s snapshot protocol (below); time travel beyond
@@ -51,72 +117,6 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * arbitrarily (last committed wins on the next read), the same
   * last-writer-wins contract as Delta's blind overwrite.
   */
-/** `collectStats`: land a [[FileStats]] `_STATS.json` sidecar (per-file
-  * min/max/nullCount from the parquet footers) inside every committed
-  * snapshot, enabling [[Lake.readWhere]] file pruning. Parquet-format
-  * layers only; soft-fails to no-sidecar (pruning then degrades to a full
-  * scan — never to a wrong answer).
-  */
-/** `manifestShardSize`: paths per manifest shard document (see
-  * [[SnapshotManifest]]); the default keeps any single driver-side JSON
-  * parse ≲ 3 MB however many files a row-op snapshot references.
-  */
-/** `checkpointInterval`: max consecutive INCREMENTAL (`_DELTA.json`)
-  * commits before a full-manifest checkpoint is forced (see [[DeltaDoc]]);
-  * bounds fold depth to a handful of small JSON reads. `1` disables
-  * incremental commits entirely (every commit writes the full manifest —
-  * pre-round-13 behavior). Overridable per layer via the
-  * `lake.checkpointInterval` property.
-  */
-final case class LakeConfig(
-    basePath: String,
-    format: String = "parquet",
-    database: String = "news_articles",
-    collectStats: Boolean = true,
-    manifestShardSize: Int = SnapshotManifest.DefaultShardSize,
-    optimizeWrite: Boolean = false,
-    checkpointInterval: Int = 20,
-    /** File count above which [[Lake.enableRowTracking]]'s one-time
-      * backfill counts footers with a SPARK JOB instead of a driver
-      * thread pool — the 10⁶-file inventory path.
-      */
-    backfillJobThreshold: Int = 512,
-    /** Minimum covered-artifact count for the dedup index's bucket-Bloom
-      * pruning to run at all (round 19): computing a landing's probe-key
-      * set is a Spark job (distinct + collect over the landing's
-      * signatures) — a FIXED cost that pruning must pay back in skipped
-      * artifact bodies. Below this many corpus artifacts the maximum
-      * possible saving (every body skipped) is smaller than the probe
-      * job itself, so the reader takes the unpruned path: read them all,
-      * no probe job, no header misses. At the 10⁶-file scale the index
-      * exists for, the threshold is invisible (always pruning); it only
-      * disarms the machinery on corpora small enough that it could never
-      * help. Pruning is an IO strategy — results are identical either
-      * way.
-      */
-    dedupPruneMinArtifacts: Int = 64,
-    /** Commit-coordination primitive for the [parent-check →
-      * marker-create] critical section ([[CommitStore]]): the default
-      * [[FsCommitStore]] is correct on local FS / HDFS (atomic exclusive
-      * create); S3-class stores need a real coordinator plugged here —
-      * the same storage caveat as Delta's LogStore.
-      */
-    commitStore: CommitStore = FsCommitStore,
-    /** Change feeds skip commits whose `_OP` declares a data-invisible
-      * maintenance rewrite (`OPTIMIZE` family / `REORG`) instead of
-      * diffing them (round 19, guide §2/§6 — Delta parity: CDF skips
-      * `dataChange=false` commits). A compaction rewrites EVERY live
-      * file, so the per-commit feed walk would read two full snapshots
-      * only to have the multiset difference cancel to zero rows — the
-      * costliest possible no-op in a feed range, and pure waste at the
-      * 100 TB maintenance cadence. The skip trusts the commit contract
-      * the engine enforces elsewhere (compaction/REORG data-invisibility
-      * is spec-pinned and in-query asserted); disable to force the
-      * structural cancellation proof instead (results are identical —
-      * LakeCdfSpec pins the parity).
-      */
-    cdfSkipMaintenance: Boolean = true)
-
 final class Lake(spark: SparkSession, config: LakeConfig) {
 
   /** This lake's base path — cross-instance ops ([[cloneFrom]], the
@@ -219,7 +219,7 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
       partitionBy: Seq[String] = Nil, mode: String = "append"): String = {
     val path = layerPath(layer)
     requireFlatLayer(layer)
-    var writer = df.write.format(config.format).mode(mode)
+    var writer = df.write.format("parquet").mode(mode)
     if (partitionBy.nonEmpty) writer = writer.partitionBy(partitionBy: _*)
     writer.save(path)
     path
@@ -248,22 +248,6 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
     writeSnapshot(df, layer, partitionBy, requireParent = None,
       op = "REPLACE TABLE")
 
-  /** Optimistic-concurrency overwrite: commits only if the layer's newest
-    * committed snapshot is still `expectedParent` (`None` = the layer must
-    * have no committed snapshot yet) at commit time. A writer that lost the
-    * race gets a `ConcurrentModificationException` and its uncommitted
-    * snapshot dir is removed — read-modify-write cycles (compaction, upsert
-    * rewrites) can retry from the new state instead of silently clobbering a
-    * concurrent commit.
-    *
-    * The check runs AFTER the data lands, immediately before the marker
-    * creation, so the vulnerable window is one listing + one file create —
-    * not the whole (possibly minutes-long) save. Two writers inside that
-    * window can still both commit (no compare-and-swap primitive on a plain
-    * filesystem; Delta needs a commit service for the same guarantee on S3)
-    * — the recorded parent in each marker makes even that race detectable
-    * after the fact: two siblings sharing a parent.
-    */
   /** Optimistic-concurrency retry combinator: run a read-modify-write
     * `body` against this lake, re-running it FROM SCRATCH (so it re-reads
     * the new head) each time a concurrent writer wins the parent race.
@@ -293,27 +277,188 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
     throw new IllegalStateException("unreachable")
   }
 
+  /** Optimistic-concurrency overwrite: commits only if the layer's newest
+    * committed snapshot is still `expectedParent` (`None` = the layer must
+    * have no committed snapshot yet) at commit time. A writer that lost the
+    * race gets a `ConcurrentModificationException` and its uncommitted
+    * snapshot dir is removed — read-modify-write cycles (compaction, upsert
+    * rewrites) can retry from the new state instead of silently clobbering a
+    * concurrent commit.
+    *
+    * The check runs AFTER the data lands, immediately before the marker
+    * creation, so the vulnerable window is one listing + one file create —
+    * not the whole (possibly minutes-long) save. Two writers inside that
+    * window can still both commit (no compare-and-swap primitive on a plain
+    * filesystem; Delta needs a commit service for the same guarantee on S3)
+    * — the recorded parent in each marker makes even that race detectable
+    * after the fact: two siblings sharing a parent.
+    */
   def writeAtomicIfLatest(df: DataFrame, layer: String,
       expectedParent: Option[String], partitionBy: Seq[String] = Nil): String =
     writeSnapshot(df, layer, partitionBy, requireParent = Some(expectedParent),
       op = "WRITE")
 
-  /** Fresh version id (zero-padded millis + random suffix) with the
-    * ORDERING FLOOR: version names are the
-    * lineage order (history, "newest", restore targets, the rebase re-id
-    * all sort by name), so a writer whose clock runs BEHIND the writer
-    * that committed the current head must not mint a name that sorts
-    * below it — the new commit would silently not be "newest". Floor =
-    * head's millis + 1: one O(1) head resolution per mint. The
-    * [[commitMarker]] ordering guard backstops the race window between
-    * this mint and the marker.
+  // ---- commit staging ------------------------------------------------------
+  //
+  // The filesystem steps every commit producer shares: the version mint,
+  // the clean-up of a staged directory that never committed, the manifest
+  // write, the manifest-carried counters and the soft-failing sidecars.
+  // Every metadata file goes through [[Lake.putFile]].
+
+  /** A fresh, not yet created version directory `base/_v/<id>` (Spark's
+    * `errorifexists` save must be the one to create it). The id is
+    * zero-padded millis + a random suffix with the ORDERING FLOOR:
+    * version names are the lineage order (history, "newest", restore
+    * targets and the rebase re-id all sort by name), so a writer whose
+    * clock runs BEHIND the writer that committed the current head must
+    * not mint a name that sorts below it — the new commit would silently
+    * not be "newest". Floor = head's millis + 1: one O(1) head resolution
+    * per mint. The [[commitMarker]] ordering guard backstops the race
+    * window between this mint and the marker.
     */
-  private def newVersionIdAfterHead(layer: String): String = {
+  private def mintVersion(layer: String): Path = {
     val headMs = latestSnapshot(layer)
       .flatMap(p => scala.util.Try(p.getName.take(16).toLong).toOption)
       .getOrElse(0L)
-    f"${math.max(System.currentTimeMillis(), headMs + 1)}%016d-" +
-      java.util.UUID.randomUUID().toString.take(8)
+    new Path(s"${layerPath(layer)}/_v/" +
+      f"${math.max(System.currentTimeMillis(), headMs + 1)}%016d-" +
+      java.util.UUID.randomUUID().toString.take(8))
+  }
+
+  /** Run a commit's staging `body` for the version directory `snap`
+    * (by-name: a rebase may re-id it mid-body), with the one clean-up
+    * policy: a `ConcurrentModificationException` propagates as is
+    * ([[commitMarker]] or the rebase already removed what should go, and
+    * a rebase-eligible snapshot must survive the lost race); any other
+    * failure deletes the uncommitted directory, so it never waits for
+    * vacuum, and rethrows. A failing delete never masks the failure.
+    *
+    * A failed Spark job returns to its caller while the job's other tasks
+    * may still run, and a write task creates its attempt directory under
+    * `snap` before it notices: deleted first, the debris would come back.
+    * So the body's jobs carry a tag, and the delete waits (bounded) until
+    * every task of a tagged job has ended.
+    */
+  private def staged[T](snap: => Path)(body: => T): T = {
+    val sc = spark.sparkContext
+    val tag = s"lake-staged-${java.util.UUID.randomUUID()}"
+    sc.addJobTag(tag)
+    try body
+    catch {
+      case e: java.util.ConcurrentModificationException => throw e
+      case scala.util.control.NonFatal(e) =>
+        awaitTasksTagged(tag, timeoutMs = 30000L)
+        val p = snap
+        try fs(p).delete(p, true)
+        catch { case scala.util.control.NonFatal(_) => () }
+        throw e
+    } finally sc.removeJobTag(tag)
+  }
+
+  private def awaitTasksTagged(tag: String, timeoutMs: Long): Unit = {
+    val st = spark.sparkContext.statusTracker
+    def running: Int = st.getJobIdsForTag(tag).iterator
+      .flatMap(st.getJobInfo).flatMap(_.stageIds)
+      .flatMap(st.getStageInfo).map(_.numActiveTasks).sum
+    // the status store learns of tasks through the listener bus
+    try org.apache.spark.sql.NewspipeSqlBridge.drainListenerBus(
+      spark.sparkContext)
+    catch { case _: java.util.concurrent.TimeoutException => () }
+    val deadline = System.currentTimeMillis() + timeoutMs
+    while (running > 0 && System.currentTimeMillis() < deadline)
+      Thread.sleep(10L)
+  }
+
+  /** Write `m` into `snap`: shards first, then the head — a head naming N
+    * shards implies all N exist (a rebase that shrinks the shard count
+    * leaves stale higher-numbered shards behind, harmless: the head names
+    * what is read).
+    */
+  private def writeManifest(snap: Path, m: SnapshotManifest,
+      overwrite: Boolean): Unit = {
+    val f = fs(snap)
+    val (head, shards) =
+      SnapshotManifest.toJsonSharded(m, config.manifestShardSize)
+    shards.zipWithIndex.foreach { case (body, i) =>
+      Lake.putFile(f, new Path(snap, SnapshotManifest.shardName(i)), body,
+        overwrite)
+    }
+    Lake.putFile(f, new Path(snap, SnapshotManifest.FileName), head, overwrite)
+  }
+
+  /** ROW TRACKING base allocation: each of `rels` without a hint takes a
+    * fresh `[watermark, watermark + rows)` range, in rel order (a
+    * zero-row file still takes one id so bases stay distinct); hinted
+    * rels (files a RESTORE resurrects) keep their historical base.
+    * Returns the bases and the advanced watermark.
+    */
+  private def assignRowBases(rels: Seq[String], counts: Map[String, Long],
+      watermark: Long,
+      hints: Map[String, Long] = Map.empty): (Map[String, Long], Long) = {
+    var wm = watermark
+    val fresh = rels.filterNot(hints.contains).sorted.map { rel =>
+      val b = wm; wm += math.max(counts(rel), 1L); rel -> b
+    }
+    (rels.flatMap(r => hints.get(r).map(r -> _)).toMap ++ fresh, wm)
+  }
+
+  /** IDENTITY high watermarks after a commit: each declared column's
+    * prior high (from `parent`, else its START) advanced past the ADDED
+    * files' column stats (hard footer reads, never soft-failed), so even
+    * explicit BY-DEFAULT values bump the counter transactionally with the
+    * commit that landed them. Stats key PHYSICAL names (`mapping`); a
+    * RENAME re-keys the identity property to the new logical name while
+    * the parent's watermark still sits under the old one, so the prior
+    * high is also found through the (never-changing) physical name —
+    * the counter carries instead of silently restarting at START.
+    */
+  private def foldIdHighs(idCols: Map[String, Lake.Identity],
+      parent: Option[SnapshotManifest], added: Seq[FileStats.FileStat],
+      mapping: Map[String, String]): Map[String, Long] = {
+    val parentHighs = parent.map(_.idHighs).getOrElse(Map.empty)
+    val parentMapping = parent.map(_.mapping).getOrElse(Map.empty)
+    idCols.map { case (name, spec) =>
+      val phys = mapping.getOrElse(name, name)
+      val prior = parentHighs.get(name)
+        .orElse(parentHighs.collectFirst {
+          case (pn, v) if parentMapping.getOrElse(pn, pn) == phys => v
+        })
+        .getOrElse(spec.start)
+      val beyond = added.flatMap(_.cols.get(phys))
+        .flatMap(cs => if (spec.step > 0) cs.max else cs.min)
+        .flatMap(s => scala.util.Try(s.toLong).toOption)
+        .reduceOption((a, b) =>
+          if (spec.step > 0) math.max(a, b) else math.min(a, b))
+        .map(v => Lake.alignBeyond(v, spec.start, spec.step))
+      name -> beyond.map(b =>
+        if (spec.step > 0) math.max(prior, b)
+        else math.min(prior, b)).getOrElse(prior)
+    }
+  }
+
+  /** The soft-fail policy of a commit's stats and Bloom sidecars, landed
+    * BEFORE the commit marker (a committed snapshot carries complete stats
+    * or none — readers can trust what they find): with stats collection
+    * on, `harvest` footers the files, then `land` writes the sidecars. A
+    * failure in either is printed once and skips the rest of the landing
+    * (pruning degrades to a full scan, never to a wrong answer). Returns
+    * what `harvest` produced, even when `land` then failed (history's row
+    * count).
+    */
+  private def landSidecars(snap: Path)(
+      harvest: => Seq[FileStats.FileStat])(
+      land: Seq[FileStats.FileStat] => Unit): Option[Seq[FileStats.FileStat]] = {
+    if (!config.collectStats) return None
+    var harvested: Option[Seq[FileStats.FileStat]] = None
+    try {
+      val stats = harvest
+      harvested = Some(stats)
+      land(stats)
+    } catch {
+      case scala.util.control.NonFatal(e) =>
+        Console.err.println(s"[lake] stats sidecar for $snap skipped: $e")
+    }
+    harvested
   }
 
   /** Delta's `optimizeWrite` for hive-partitioned commits. Without it,
@@ -369,89 +514,57 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
     // mapped physical name
     val recordedSchema = org.apache.spark.sql.types.StructType(
       df.schema.fields.filterNot(_.name.equalsIgnoreCase(Lake.RowIdCol)))
-    val snap = new Path(s"${layerPath(layer)}/_v/${newVersionIdAfterHead(layer)}")
-    var writer = df.write.format(config.format).mode("errorifexists")
-    if (partitionBy.nonEmpty) writer = writer.partitionBy(partitionBy: _*)
-    writer.save(snap.toString)
-    // An EMPTY partitioned save lands no parquet footer at all (Spark only
-    // writes _SUCCESS when there are zero rows to place in partition
-    // dirs) — record the declared schema in a bare manifest so the
-    // committed snapshot reads as a schema-carrying empty frame (the
-    // `files.isEmpty` manifest case) instead of failing schema inference.
-    // This is how `CREATE TABLE … PARTITIONED BY` through [[LakeCatalog]]
-    // commits its empty first version.
-    if (partitionBy.nonEmpty && snapshotDirFilesRel(snap).isEmpty) {
-      val out = fs(snap).create(new Path(snap, SnapshotManifest.FileName),
-        false)
-      try out.write(SnapshotManifest.toJson(
-        SnapshotManifest(Nil, recordedSchema.toDDL)).getBytes("UTF-8"))
-      finally out.close()
-    }
-    // ROW TRACKING / IDENTITY: an overwrite snapshot still carries a
-    // manifest (the counters have to live somewhere) — fresh files
-    // allocate from the PRIOR head's watermark so row ids stay
-    // history-unique, and identity highs advance from the new files'
-    // column stats; materialized row ids a prearranged compaction
-    // carried win over the fresh ranges at read (coalesce order in
-    // [[withRowIdsFrame]])
-    if ((tracking || idCols.nonEmpty) && snapshotDirFilesRel(snap).nonEmpty) {
-      val rels = snapshotDirFilesRel(snap).map(s"_v/${snap.getName}/" + _)
-      val priorM = latestSnapshot(layer).flatMap(manifestOf)
-      val newStats = FileStats.collectResolved(
-        spark.sparkContext.hadoopConfiguration,
-        rels.map(r => r -> new Path(resolveRel(layerPath(layer), r))))
-      var wm = priorM.map(_.rowWatermark).getOrElse(0L)
-      val bases: Map[String, Long] = if (!tracking) Map.empty else {
-        val counts = newStats.map(st => st.path -> st.rows).toMap
-        rels.sorted.map { rel =>
-          val b = wm; wm += math.max(counts(rel), 1L); rel -> b
-        }.toMap
-      }
-      val highs = idCols.map { case (name, spec) =>
+    val snap = mintVersion(layer)
+    staged(snap) {
+      var writer = df.write.format("parquet").mode("errorifexists")
+      if (partitionBy.nonEmpty) writer = writer.partitionBy(partitionBy: _*)
+      writer.save(snap.toString)
+      val files = snapshotDirFilesRel(snap)
+      // An EMPTY partitioned save lands no parquet footer at all (Spark
+      // only writes _SUCCESS when there are zero rows to place in
+      // partition dirs) — record the declared schema in a bare manifest so
+      // the committed snapshot reads as a schema-carrying empty frame (the
+      // `files.isEmpty` manifest case) instead of failing schema
+      // inference. This is how `CREATE TABLE … PARTITIONED BY` through
+      // [[LakeCatalog]] commits its empty first version.
+      if (partitionBy.nonEmpty && files.isEmpty)
+        writeManifest(snap, SnapshotManifest(Nil, recordedSchema.toDDL),
+          overwrite = false)
+      // ROW TRACKING / IDENTITY: an overwrite snapshot still carries a
+      // manifest (the counters have to live somewhere) — fresh files
+      // allocate from the PRIOR head's watermark so row ids stay
+      // history-unique, and identity highs advance from the new files'
+      // column stats; materialized row ids a prearranged compaction
+      // carried win over the fresh ranges at read (coalesce order in
+      // [[withRowIdsFrame]])
+      val manifested = tracking || idCols.nonEmpty
+      if (manifested && files.nonEmpty) {
+        val rels = files.map(s"_v/${snap.getName}/" + _)
+        val priorM = latestSnapshot(layer).flatMap(manifestOf)
+        val newStats = FileStats.collectResolved(
+          spark.sparkContext.hadoopConfiguration,
+          rels.map(r => r -> new Path(resolveRel(layerPath(layer), r))))
+        val priorWm = priorM.map(_.rowWatermark).getOrElse(0L)
+        val (bases, wm) =
+          if (!tracking) (Map.empty[String, Long], priorWm)
+          else assignRowBases(rels,
+            newStats.map(st => st.path -> st.rows).toMap, priorWm)
         // REPLACE restarts identity numbering (row-id watermarks do NOT
         // restart: stable row ids must stay history-unique for the
         // tracked CDF across the replace boundary)
-        val prior =
-          (if (replace) None else priorM.flatMap(_.idHighs.get(name)))
-            .getOrElse(spec.start)
-        val beyond = newStats.flatMap(_.cols.get(name))
-          .flatMap(cs => if (spec.step > 0) cs.max else cs.min)
-          .flatMap(s => scala.util.Try(s.toLong).toOption)
-          .reduceOption((a, b) =>
-            if (spec.step > 0) math.max(a, b) else math.min(a, b))
-          .map(v => Lake.alignBeyond(v, spec.start, spec.step))
-        name -> beyond.map(b =>
-          if (spec.step > 0) math.max(prior, b)
-          else math.min(prior, b)).getOrElse(prior)
-      }
-      val (head, shards) = SnapshotManifest.toJsonSharded(
-        SnapshotManifest(rels, recordedSchema.toDDL,
+        val highs = foldIdHighs(idCols, if (replace) None else priorM,
+          newStats, mapping = Map.empty)
+        writeManifest(snap, SnapshotManifest(rels, recordedSchema.toDDL,
           rowBases = bases, rowWatermark = wm, idHighs = highs),
-        config.manifestShardSize)
-      val f = fs(snap)
-      shards.zipWithIndex.foreach { case (body, i) =>
-        val out = f.create(new Path(snap, SnapshotManifest.shardName(i)),
-          false)
-        try out.write(body.getBytes("UTF-8")) finally out.close()
+          overwrite = false)
       }
-      val out = f.create(new Path(snap, SnapshotManifest.FileName), false)
-      try out.write(head.getBytes("UTF-8")) finally out.close()
-    }
-    // stats sidecar BEFORE the commit marker: a committed snapshot either
-    // carries complete stats or none — readers can trust what they find.
-    // Runs before the optimistic-concurrency check so the (listing +
-    // marker-create) race window stays small.
-    var addedRowsOpt: Option[Long] = None
-    if (config.collectStats && config.format == "parquet") {
-      try {
-        val stats0 = FileStats.collect(
-          spark.sparkContext.hadoopConfiguration, snap.toString)
-        addedRowsOpt = Some(stats0.iterator.map(_.rows).sum)
-        // a manifest-carrying snapshot (row tracking OR identity columns
-        // — the SAME condition that wrote the manifest above) keys its
-        // stats by MANIFEST rel — sidecarStats would otherwise reject the
-        // sidecar as incomplete and silently disable pruning
-        val manifested = tracking || idCols.nonEmpty
+      // sidecars before the optimistic-concurrency check, so the
+      // (listing + marker-create) race window stays small
+      val harvested = landSidecars(snap)(FileStats.collect(
+          spark.sparkContext.hadoopConfiguration, snap.toString)) { stats0 =>
+        // a manifest-carrying snapshot keys its stats by MANIFEST rel —
+        // sidecarStats would otherwise reject the sidecar as incomplete
+        // and silently disable pruning
         val stats = if (!manifested) stats0
           else stats0.map(st =>
             st.copy(path = s"_v/${snap.getName}/${st.path}"))
@@ -464,29 +577,22 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
             rowsByRel = stats.map(st => st.path -> st.rows).toMap,
             mapping = Map.empty, schema = recordedSchema,
             carried = Map.empty)
-      } catch {
-        case scala.util.control.NonFatal(e) =>
-          Console.err.println(s"[lake] stats sidecar for $snap skipped: $e")
       }
-    }
-    // operation metrics (Delta's operationMetrics): a full overwrite adds
-    // every file of the new snapshot and removes the prior head's whole
-    // inventory — both already known, O(increment) to record
-    locally {
+      // operation metrics (Delta's operationMetrics): a full overwrite adds
+      // every file of the new snapshot and removes the prior head's whole
+      // inventory — both already known, O(increment) to record
       val removedCount =
         latestSnapshot(layer).map(p => snapshotInventory(layer, p).size)
           .getOrElse(0)
-      val out = fs(snap).create(new Path(snap, "_METRICS"), true)
-      try out.write(Lake.metricsJson(snapshotDirFilesRel(snap).size,
-        removedCount, addedRowsOpt).getBytes("UTF-8"))
-      finally out.close()
+      Lake.putFile(fs(snap), new Path(snap, "_METRICS"),
+        Lake.metricsJson(files.size, removedCount,
+          harvested.map(_.iterator.map(_.rows).sum)), overwrite = true)
+      commitMarker(layer, snap, requireParent, op)
     }
-    commitMarker(layer, snap, requireParent, op)
-    if (config.format == "parquet")
-      committedSchemas.put(snap.toString,
-        org.apache.spark.sql.NewspipeSqlBridge.nullableSchema(
-          org.apache.spark.sql.types.StructType(df.schema.fields.filterNot(f =>
-            partitionBy.exists(_.equalsIgnoreCase(f.name))))))
+    committedSchemas.put(snap.toString,
+      org.apache.spark.sql.NewspipeSqlBridge.nullableSchema(
+        org.apache.spark.sql.types.StructType(df.schema.fields.filterNot(f =>
+          partitionBy.exists(_.equalsIgnoreCase(f.name))))))
     // Keep the DECLARED layout property in sync with what this full
     // overwrite actually committed: a `writeAtomic(partitionBy = …)` is a
     // layout declaration too (the catalog's `partitioning()` — and so the
@@ -507,28 +613,18 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
     snap.toString
   }
 
-  private def writeSidecar(snap: Path, stats: Seq[FileStats.FileStat]): Unit = {
-    val out = fs(snap).create(new Path(snap, FileStats.SidecarName), false)
-    try out.write(FileStats.toJson(stats).getBytes("UTF-8"))
-    finally out.close()
-  }
+  private def writeSidecar(snap: Path, stats: Seq[FileStats.FileStat]): Unit =
+    Lake.putFile(fs(snap), new Path(snap, FileStats.SidecarName),
+      FileStats.toJson(stats), overwrite = false)
 
-  /** The shared commit tail of every snapshot-producing operation: the
-    * optimistic-concurrency parent check (when asked for) immediately
-    * followed by the single `_COMMITTED` file creation. Marker content =
-    * parent version id ("" for first snapshot): lineage audit + post-hoc
-    * detection of the residual commit race. Marker visibility is the
-    * single-file-creation atomicity the protocol relies on (content
-    * arrives with the create on local/HDFS and as one PUT on object
-    * stores).
-    */
   /** Serialize the [parent-check → marker-create] critical section
     * through the configured [[CommitStore]] — by default
-    * [[FsCommitStore]]'s atomic-exclusive lock file (see its doc for the
-    * full lock-file/stale-break mechanics and the object-store caveat);
-    * deployments on stores without atomic exclusive create plug a real
-    * coordinator through `LakeConfig.commitStore` and the rest of the
-    * protocol is unchanged.
+    * [[FsCommitStore]]'s lock file (see its doc for the lock-file and
+    * stale-break mechanics: exclusive on HDFS; on the local FS the owner
+    * nonce re-reads are the guard, ROADMAP #1 has the fix); deployments
+    * on stores without an exclusive create plug a real coordinator
+    * through `LakeConfig.commitStore` and the rest of the protocol is
+    * unchanged.
     */
   private def withCommitLock[T](layer: String)(body: (() => Boolean) => T): T = {
     val root = new Path(layerPath(layer))
@@ -557,6 +653,15 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
         "(reads are unaffected)")
   }
 
+  /** The shared commit tail of every snapshot-producing operation: the
+    * optimistic-concurrency parent check (when asked for) immediately
+    * followed by the single `_COMMITTED` file creation. Marker content =
+    * parent version id ("" for first snapshot): lineage audit + post-hoc
+    * detection of the residual commit race. Marker visibility is the
+    * single-file-creation atomicity the protocol relies on (content
+    * arrives with the create on local/HDFS and as one PUT on object
+    * stores).
+    */
   private def commitMarker(layer: String, snap: Path,
       requireParent: Option[Option[String]],
       op: String,
@@ -586,10 +691,10 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
             "committed first; re-read the layer and retry")
       }
     }
-    // ORDERING GUARD (backstop for [[newVersionIdAfterHead]]'s mint
-    // floor): a committing name must sort STRICTLY ABOVE the current
-    // head, or "newest" becomes ambiguous — history, restore targets and
-    // the rebase re-id all order by name, so a below-head commit would
+    // ORDERING GUARD (backstop for [[mintVersion]]'s floor): a
+    // committing name must sort STRICTLY ABOVE the current head, or
+    // "newest" becomes ambiguous — history, restore targets and the
+    // rebase re-id all order by name, so a below-head commit would
     // silently not be the head it just won. Only reachable when a
     // concurrent writer with a faster clock committed between OUR mint
     // and this marker (the floor covers the mint-time head) — thrown as
@@ -609,8 +714,7 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
     // operation label BEFORE the marker (same completeness contract as the
     // stats sidecar: a committed snapshot either has its `_OP` or predates
     // the feature → DESCRIBE HISTORY shows UNKNOWN, never a torn label)
-    val opOut = f.create(new Path(snap, "_OP"), false)
-    try opOut.write(op.getBytes("UTF-8")) finally opOut.close()
+    Lake.putFile(f, new Path(snap, "_OP"), op, overwrite = false)
     // Last-instant ownership probe before the point of no return: if our
     // fresh lock was mis-broken (tomb restore raced a third writer), abort
     // rather than let two writers both reach the marker create.
@@ -629,9 +733,8 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
     // that verifies, silently serving the previous head to every reader
     // until some writer happens to commit again.
     writeHeadPointer(layer, snap.getName)
-    val out = f.create(new Path(snap, "_COMMITTED"), false)
-    try out.write(parentAtCommit.getOrElse("").getBytes("UTF-8"))
-    finally out.close()
+    Lake.putFile(f, new Path(snap, "_COMMITTED"), parentAtCommit.getOrElse(""),
+      overwrite = false)
   }
 
   /** Delta's `DESCRIBE HISTORY`: one row per committed snapshot, OLDEST
@@ -845,7 +948,7 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
           f.getFileStatus(new Path(resolveRel(base, rp))).getLen)).sum
         def ms(v: String): Long = v.takeWhile(_ != '-').toLong
         val versions = listVersions(layer) // newest first
-        Lake.LayerDetail(config.format, base, inv.size, bytes,
+        Lake.LayerDetail("parquet", base, inv.size, bytes,
           layerPartitionCols(layer, inv), versions.size, dvMapOf(snap).size,
           ms(versions.last), ms(versions.head), properties(layer))
       case None =>
@@ -858,7 +961,7 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
           .flatMap(_.split('/').dropRight(1).toSeq.filter(_.contains('='))
             .map(seg => seg.substring(0, seg.indexOf('='))))
           .distinct
-        Lake.LayerDetail(config.format, base, rels.size,
+        Lake.LayerDetail("parquet", base, rels.size,
           stats.map(_.getLen).sum, parts, 0, 0,
           if (stats.isEmpty) 0L else stats.map(_.getModificationTime).min,
           if (stats.isEmpty) 0L else stats.map(_.getModificationTime).max,
@@ -1022,8 +1125,7 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
       bestEffort: Boolean = false): Unit =
     try {
       val p = headPointerPath(layer)
-      val out = fs(p).create(p, true)
-      try out.write(version.getBytes("UTF-8")) finally out.close()
+      Lake.putFile(fs(p), p, version, overwrite = true)
     } catch {
       case e: java.io.IOException if bestEffort => ()
       case e: java.io.IOException =>
@@ -1072,12 +1174,6 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
       .iterator.find(isCommittedDir(f, _))
   }
 
-  /** Parsed `_MANIFEST.json` of a snapshot, if it is a manifest (row-op)
-    * snapshot: data file paths relative to the LAYER root (they may live
-    * in older version directories) + the read schema (DDL) for the
-    * zero-files case. None = self-contained snapshot (its directory IS
-    * its inventory).
-    */
   /** A committed snapshot's manifest is IMMUTABLE, so positive parses are
     * cached (bounded: one row op consults the head manifest several times —
     * inventory, dvs, mapping, dropped — and at 10⁶ files each parse is a
@@ -1120,6 +1216,12 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
       .flatMap(s => scala.util.Try(s.trim.toInt).toOption)
       .getOrElse(config.checkpointInterval)
 
+  /** Parsed `_MANIFEST.json` of a snapshot, if it is a manifest (row-op)
+    * snapshot: data file paths relative to the LAYER root (they may live
+    * in older version directories) + the read schema (DDL) for the
+    * zero-files case. None = self-contained snapshot (its directory IS
+    * its inventory).
+    */
   private def manifestOf(snap: Path): Option[SnapshotManifest] = {
     def cached(p: Path): Option[SnapshotManifest] = manifestCache.get(p.toString)
     def store(p: Path, m: SnapshotManifest): SnapshotManifest = {
@@ -1288,12 +1390,12 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
         lazy val rels = snapshotDirFilesRel(snap)
         val committed =
           if (mergeSchema) None else committedSchemas.get(snap.toString)
-        if (!mergeSchema && config.format == "parquet" && rels.nonEmpty &&
+        if (!mergeSchema && rels.nonEmpty &&
             !rels.exists(_.contains("="))) {
           readIndexed(snap.toString, snap, rels, committed.getOrElse(
             footerSchema(s"${snap.toString}/${rels.head}")))
         } else {
-          val reader = spark.read.format(config.format)
+          val reader = spark.read.format("parquet")
           (if (mergeSchema) reader.option("mergeSchema", "true")
            else committed.fold(reader)(reader.schema))
             .load(snap.toString)
@@ -1311,8 +1413,7 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
         // union live there)
         val phys = physicalSchema(m.schema, m.mapping)
         val raw =
-          if (!mergeSchema && config.format == "parquet" &&
-              !m.files.exists(_.contains("=")))
+          if (!mergeSchema && !m.files.exists(_.contains("=")))
             readIndexed(layerPath(layer), snap, m.files, phys,
               statsIn = Some(statsOfSnapshot(layer, snap).values.toSeq),
               bloomIn = Some(bloomOfSnapshot(layer, snap)))
@@ -1420,13 +1521,6 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
 
   // ---- layer properties ---------------------------------------------------
 
-  /** Layer properties (`_PROPERTIES.json` at the layer root — CONFIG, not
-    * data, so not versioned with snapshots; Delta's TBLPROPERTIES role).
-    * Recognized keys: `lake.enableDeletionVectors` = true routes
-    * [[deleteWhere]] (and the SQL DELETE statement) through
-    * [[deleteWhereDv]], falling back to the rewrite path past
-    * `maxDvRows` — exactly Delta's enableDeletionVectors contract.
-    */
   /** Hive partition columns of a layer: derived from the inventory's
     * `k=v` path segments; when the inventory carries none (an EMPTY layer
     * — e.g. a catalog `CREATE TABLE … PARTITIONED BY` whose first commit
@@ -1446,6 +1540,13 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
       .getOrElse(Nil)
   }
 
+  /** Layer properties (`_PROPERTIES.json` at the layer root — CONFIG, not
+    * data, so not versioned with snapshots; Delta's TBLPROPERTIES role).
+    * Recognized keys: `lake.enableDeletionVectors` = true routes
+    * [[deleteWhere]] (and the SQL DELETE statement) through
+    * [[deleteWhereDv]], falling back to the rewrite path past
+    * `maxDvRows` — exactly Delta's enableDeletionVectors contract.
+    */
   def properties(layer: String): Map[String, String] = {
     val p = new Path(layerPath(layer), "_PROPERTIES.json")
     val f = fs(p)
@@ -1473,12 +1574,10 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
     val p = new Path(layerPath(layer), "_PROPERTIES.json")
     val f = fs(p)
     f.mkdirs(p.getParent)
-    val out = f.create(p, true)
-    try out.write(org.json4s.jackson.JsonMethods.compact(
+    Lake.putFile(f, p, org.json4s.jackson.JsonMethods.compact(
       org.json4s.jackson.JsonMethods.render(JObject(
         merged.toList.sortBy(_._1).map { case (k, v) =>
-          k -> (JString(v): JValue) }))).getBytes("UTF-8"))
-    finally out.close()
+          k -> (JString(v): JValue) }))), overwrite = true)
     merged
   }
 
@@ -1518,20 +1617,14 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
     * row index).
     */
   def enableRowTracking(layer: String): Unit = {
-    require(config.format == "parquet",
-      s"row tracking needs parquet row indexes; layer format is " +
-        s"'${config.format}'")
     setProperties(layer, Map("lake.rowTracking" -> "true"))
     latestSnapshot(layer).foreach { snap =>
       refootHeadManifest(layer, snap, { m =>
         val missing = m.files.filterNot(m.rowBases.contains)
         if (missing.isEmpty) m
         else {
-          val counts = parquetRowCounts(layer, missing)
-          var wm = m.rowWatermark
-          val assigned = missing.sorted.map { rel =>
-            val b = wm; wm += math.max(counts(rel), 1L); rel -> b
-          }
+          val (assigned, wm) = assignRowBases(missing,
+            parquetRowCounts(layer, missing), m.rowWatermark)
           m.copy(rowBases = m.rowBases ++ assigned, rowWatermark = wm)
         }
       })
@@ -1578,18 +1671,8 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
     }
     val updated = update(m)
     if (updated == m) return
-    val f = fs(snap)
-    val (head, shards) = SnapshotManifest.toJsonSharded(updated,
-      config.manifestShardSize)
-    def put(name: String, body: String): Unit = {
-      val out = f.create(new Path(snap, name), true)
-      try out.write(body.getBytes("UTF-8")) finally out.close()
-    }
-    shards.zipWithIndex.foreach { case (body, i) =>
-      put(SnapshotManifest.shardName(i), body)
-    }
-    put(SnapshotManifest.FileName, head) // head LAST (checkpoint rule)
-    f.delete(new Path(snap, DeltaDoc.FileName), false)
+    writeManifest(snap, updated, overwrite = true)
+    fs(snap).delete(new Path(snap, DeltaDoc.FileName), false)
     manifestCache.put(snap.toString, updated)
   }
 
@@ -2429,23 +2512,16 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
         .map(pr => dvPayload(base, pr).getOrElse(rel, Nil)).getOrElse(Nil)
       rel -> (old ++ pos).distinct.sorted
     }
-    val newSnap = new Path(s"$base/_v/${newVersionIdAfterHead(layer)}")
-    val nf = fs(newSnap)
-    try {
+    val newSnap = mintVersion(layer)
+    staged(newSnap) {
+      val nf = fs(newSnap)
       nf.mkdirs(newSnap) // no data files — positions + manifest only
       val payloadRel = s"_v/${newSnap.getName}/${DeletionVectors.payloadName(0)}"
-      val out = nf.create(new Path(newSnap, DeletionVectors.payloadName(0)),
-        false)
-      try out.write(DeletionVectors.toJson(merged).getBytes("UTF-8"))
-      finally out.close()
+      Lake.putFile(nf, new Path(newSnap, DeletionVectors.payloadName(0)),
+        DeletionVectors.toJson(merged), overwrite = false)
       commitManifest(layer, snap, newSnap, inventory, oldStats, schema.toDDL,
         dvs = carriedDv ++ merged.keys.map(_ -> payloadRel), op = "DELETE",
         mapping = mapping, dropped = droppedOf(snap))
-    } catch {
-      case e: java.util.ConcurrentModificationException => throw e
-      case scala.util.control.NonFatal(e) =>
-        nf.delete(newSnap, true)
-        throw e
     }
     Right(Lake.RowOpResult(newSnap.toString, 0, inventory.size))
   }
@@ -2473,7 +2549,7 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
     val groups = rels.groupBy(versionDirOf).toSeq.sortBy(_._1)
     val frames = groups.map { case (vdir, files) =>
       val root = if (vdir.isEmpty) base else resolveRel(base, vdir)
-      var reader = spark.read.format(config.format).option("basePath", root)
+      var reader = spark.read.format("parquet").option("basePath", root)
       // an explicit schema makes columns a file predates read as null —
       // the schema-evolution read — and pins one shape across groups
       schemaHint.foreach(s => reader = reader.schema(s))
@@ -2516,7 +2592,7 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
           s"layer '$layer' is snapshot-managed but has no committed snapshot " +
             "yet — the first writeAtomic has not finished (or crashed before " +
             "committing)")
-        val reader = spark.read.format(config.format)
+        val reader = spark.read.format("parquet")
         (if (mergeSchema) reader.option("mergeSchema", "true") else reader)
           .load(layerPath(layer))
     }
@@ -2567,7 +2643,7 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
           else raw
         alive.filter(predicate)
       case Some(p) =>
-        val reader = spark.read.format(config.format)
+        val reader = spark.read.format("parquet")
           .option("basePath", p.base)
         (if (mergeSchema) reader.option("mergeSchema", "true") else reader)
           .load(p.keptPaths.map(rp => s"${p.base}/$rp"): _*)
@@ -2645,7 +2721,7 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
   /** Footer schema of one immutable data file (cached). */
   private def footerSchema(file: String): org.apache.spark.sql.types.StructType =
     schemaCache.getOrElseUpdate(file)(
-      spark.read.format(config.format).load(file).schema)
+      spark.read.format("parquet").load(file).schema)
 
   /** Resolve the predicate WITHOUT listing the layer: analyze+optimize the
     * filter over an empty LogicalRDD with the layer's schema (one cached
@@ -2844,11 +2920,9 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
 
   private def writeBloomSidecar(snap: Path, fpp: Double, cols: Seq[String],
       files: Map[String, Map[String, Array[Byte]]],
-      overwrite: Boolean = false): Unit = {
-    val out = fs(snap).create(new Path(snap, BloomIndex.SidecarName), overwrite)
-    try out.write(BloomIndex.toJson(fpp, cols, files).getBytes("UTF-8"))
-    finally out.close()
-  }
+      overwrite: Boolean = false): Unit =
+    Lake.putFile(fs(snap), new Path(snap, BloomIndex.SidecarName),
+      BloomIndex.toJson(fpp, cols, files), overwrite)
 
   /** Land the `_BLOOM.json` sidecar for a snapshot being committed, when
     * the layer declares indexed columns: `carried` entries already
@@ -3112,7 +3186,7 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
     if (f.exists(own)) f.delete(own, true) // failed attempt's debris, whole
     if (f.exists(ownStats)) f.delete(ownStats, false) // stats replay with it
     df.withColumn("__batch_id", org.apache.spark.sql.functions.lit(batchId))
-      .write.format(config.format)
+      .write.format("parquet")
       .mode("append")
       .partitionBy(("__batch_id" +: partitionBy): _*)
       .save(path)
@@ -3120,7 +3194,7 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
     // the snapshot sidecar: [[readWhere]] prunes streaming-landed layers
     // too, and a replay replaces its stats together with its partition
     // (delete above), so stale stats can never describe re-landed data
-    if (config.collectStats && config.format == "parquet") {
+    if (config.collectStats) {
       try {
         val stats = FileStats
           .collect(spark.sparkContext.hadoopConfiguration, own.toString)
@@ -3128,9 +3202,7 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
             path = s"__batch_id=$batchId/${s.path}",
             partitionValues = s.partitionValues +
               ("__batch_id" -> batchId.toString)))
-        val out = f.create(ownStats, false)
-        try out.write(FileStats.toJson(stats).getBytes("UTF-8"))
-        finally out.close()
+        Lake.putFile(f, ownStats, FileStats.toJson(stats), overwrite = false)
       } catch {
         case scala.util.control.NonFatal(e) =>
           Console.err.println(s"[lake] batch stats for $own skipped: $e")
@@ -3150,29 +3222,6 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
         "refused — use writeAtomic")
   }
 
-  /** Small-files compaction through the snapshot protocol: read the
-    * layer's current state, rewrite it as one new snapshot with file count
-    * sized by bytes (`ceil(dataBytes / targetFileBytes)`), commit
-    * atomically. Readers see the old snapshot until the commit flips —
-    * compaction is just another atomic overwrite, so it is safe under
-    * concurrent readers; reclaim the old snapshot with [[vacuum]]
-    * afterwards. Returns the new snapshot path.
-    *
-    * At 100 TB this is the maintenance op that keeps scan parallelism
-    * honest: streaming appends and per-run overwrites accrete small files,
-    * and a scan of 10⁶ tiny files pays per-file open/footer cost that
-    * dwarfs the read itself.
-    *
-    * Compacting a FLAT layer migrates it to snapshot management (the new
-    * snapshot becomes the layer's truth; subsequent flat `write`s are
-    * refused). The superseded flat files stay on disk for readers mid-scan
-    * — remove them once drained, the same retention contract as vacuum.
-    * QUIESCE FLAT WRITERS FIRST: an append racing the migration can land
-    * after compact's read listed files and before the snapshot commits —
-    * those rows would be invisible to every later read, and the writer's
-    * next batch fails the flat-layer guard. Snapshot-managed layers have
-    * no such hazard (compaction is one more last-writer-wins snapshot).
-    */
   /** Partial OPTIMIZE — Delta's ACTUAL compaction shape: bin-pack ONLY
     * the files smaller than `smallFileBytes` into ~`targetFileBytes`
     * outputs and carry every already-right-sized file by manifest
@@ -3324,7 +3373,7 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
     // trees never trip CONFLICTING_DIRECTORY_STRUCTURES on the explicit
     // file list
     val df = spark.read.option("basePath", srcDir)
-      .format(config.format).load(fresh: _*)
+      .format("parquet").load(fresh: _*)
     appendAtomic(df, layer,
       markers = Map(Lake.CopyMarker -> fresh.mkString("\n")))
   }
@@ -3393,36 +3442,47 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
     require(flatFiles.nonEmpty,
       s"layer '$layer' has no data files to convert")
     val schema = read(layer).schema
-    val snap = new Path(s"$base/_v/${newVersionIdAfterHead(layer)}")
-    f.mkdirs(snap)
-    val (head, shards) = SnapshotManifest.toJsonSharded(
-      SnapshotManifest(flatFiles, schema.toDDL), config.manifestShardSize)
-    def put(name: String, body: String): Unit = {
-      val out = f.create(new Path(snap, name), false)
-      try out.write(body.getBytes("UTF-8")) finally out.close()
-    }
-    shards.zipWithIndex.foreach { case (body, i) =>
-      put(SnapshotManifest.shardName(i), body)
-    }
-    put(SnapshotManifest.FileName, head)
-    if (config.collectStats && config.format == "parquet") {
-      try {
-        val stats = FileStats.collectFiles(
-          spark.sparkContext.hadoopConfiguration, base, flatFiles)
+    val snap = mintVersion(layer)
+    staged(snap) {
+      f.mkdirs(snap)
+      writeManifest(snap, SnapshotManifest(flatFiles, schema.toDDL),
+        overwrite = false)
+      landSidecars(snap)(FileStats.collectFiles(
+          spark.sparkContext.hadoopConfiguration, base, flatFiles)) { stats =>
         writeSidecar(snap, stats)
         if (!flatFiles.exists(_.contains("=")))
           maybeBloomSidecar(layer, snap, base = base, rels = flatFiles,
             rowsByRel = stats.map(st => st.path -> st.rows).toMap,
             mapping = Map.empty, schema = schema, carried = Map.empty)
-      } catch {
-        case scala.util.control.NonFatal(e) =>
-          Console.err.println(s"[lake] stats sidecar for $snap skipped: $e")
       }
+      commitMarker(layer, snap, requireParent = Some(None), op = "CONVERT")
     }
-    commitMarker(layer, snap, requireParent = Some(None), op = "CONVERT")
     snap.toString
   }
 
+  /** Small-files compaction through the snapshot protocol: read the
+    * layer's current state, rewrite it as one new snapshot with file count
+    * sized by bytes (`ceil(dataBytes / targetFileBytes)`), commit
+    * atomically. Readers see the old snapshot until the commit flips —
+    * compaction is just another atomic overwrite, so it is safe under
+    * concurrent readers; reclaim the old snapshot with [[vacuum]]
+    * afterwards. Returns the new snapshot path.
+    *
+    * At 100 TB this is the maintenance op that keeps scan parallelism
+    * honest: streaming appends and per-run overwrites accrete small files,
+    * and a scan of 10⁶ tiny files pays per-file open/footer cost that
+    * dwarfs the read itself.
+    *
+    * Compacting a FLAT layer migrates it to snapshot management (the new
+    * snapshot becomes the layer's truth; subsequent flat `write`s are
+    * refused). The superseded flat files stay on disk for readers mid-scan
+    * — remove them once drained, the same retention contract as vacuum.
+    * QUIESCE FLAT WRITERS FIRST: an append racing the migration can land
+    * after compact's read listed files and before the snapshot commits —
+    * those rows would be invisible to every later read, and the writer's
+    * next batch fails the flat-layer guard. Snapshot-managed layers have
+    * no such hazard (compaction is one more last-writer-wins snapshot).
+    */
   def compact(layer: String, targetFileBytes: Long = 128L * 1024 * 1024,
       partitionBy: Seq[String] = Nil, zorderBy: Seq[String] = Nil): String = {
     require(targetFileBytes > 0, s"targetFileBytes must be positive")
@@ -4092,12 +4152,12 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
       dfG.schema.fieldNames.filterNot(old.fieldNames.contains))
     enforceConstraints(layer, dfG, s"appendAtomic('$layer')")
     val partCols = layerPartitionCols(layer, carried)
-    val newSnap = new Path(s"$base/_v/${newVersionIdAfterHead(layer)}")
-    try {
+    val newSnap = mintVersion(layer)
+    staged(newSnap) {
       // partition columns are never renameable (column mapping refuses
       // them), so the rebalance's logical names hold on the physical frame
       var writer = maybeRebalance(toPhysical(dfG, mapping), layer, partCols)
-        .write.format(config.format).mode("errorifexists")
+        .write.format("parquet").mode("errorifexists")
       if (partCols.nonEmpty) writer = writer.partitionBy(partCols: _*)
       writer.save(newSnap.toString)
       // stream-txn ledger entry (Delta's txn appId/version): an underscore
@@ -4105,9 +4165,8 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
       // (invisible to the manifest walk) — [[txnVersion]] reads it back for
       // replay fencing of idempotent streaming appends
       txn.foreach { case (appId, version) =>
-        val out = fs(newSnap).create(new Path(newSnap, "_TXN"), false)
-        try out.write(s"$appId\n$version".getBytes("UTF-8"))
-        finally out.close()
+        Lake.putFile(fs(newSnap), new Path(newSnap, "_TXN"),
+          s"$appId\n$version", overwrite = false)
       }
       // caller-supplied underscore markers (e.g. [[copyInto]]'s loaded-
       // file ledger entry) land INSIDE the snapshot dir before the
@@ -4115,8 +4174,8 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
       markers.foreach { case (name, body) =>
         require(name.startsWith("_"),
           s"appendAtomic marker '$name' must be underscore-hidden")
-        val out = fs(newSnap).create(new Path(newSnap, name), false)
-        try out.write(body.getBytes("UTF-8")) finally out.close()
+        Lake.putFile(fs(newSnap), new Path(newSnap, name), body,
+          overwrite = false)
       }
       // APPEND REBASE (Delta's append-vs-append conflict class): an
       // append rewrites NOTHING, so losing the parent race to a
@@ -4140,11 +4199,6 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
       // uncovered file rides the exact-scan fallback until the next pass
       maintainIndexesSoftly(layer)
       Lake.RowOpResult(committed.toString, 0, carried.size)
-    } catch {
-      case e: java.util.ConcurrentModificationException => throw e
-      case scala.util.control.NonFatal(e) =>
-        fs(newSnap).delete(newSnap, true)
-        throw e
     }
   }
 
@@ -4163,6 +4217,14 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
       }
     }
 
+  /** Whether the layer is under the snapshot protocol (has a committed
+    * version) — how a path-agnostic writer (the streaming sink) picks
+    * between the atomic-append commit path and the flat
+    * `__batch_id`-partition protocol.
+    */
+  def isSnapshotManaged(layer: String): Boolean =
+    latestSnapshot(layer).isDefined
+
   /** Latest version recorded for `appId` in the layer's stream-txn ledger
     * (the `_TXN` markers [[appendAtomic]] commits atomically with its
     * data) — Delta's `txnVersion(appId)`: a streaming sink checks this
@@ -4175,14 +4237,6 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
     * Delta's: the ledger only reaches as far back as retained versions —
     * keep retention longer than the longest possible sink outage.
     */
-  /** Whether the layer is under the snapshot protocol (has a committed
-    * version) — how a path-agnostic writer (the streaming sink) picks
-    * between the atomic-append commit path and the flat
-    * `__batch_id`-partition protocol.
-    */
-  def isSnapshotManaged(layer: String): Boolean =
-    latestSnapshot(layer).isDefined
-
   def txnVersion(layer: String, appId: String): Option[Long] =
     committedVersions(layer).iterator.flatMap { snap =>
       val p = new Path(snap, "_TXN")
@@ -4209,12 +4263,6 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
       case None => Map.empty
     }
 
-  /** Shared commit tail of every manifest-snapshot producer: walk the new
-    * version dir, write `_MANIFEST.json` (carried + new files), land the
-    * layer-root-relative stats sidecar (carried stats reused, new and
-    * stats-unknown files re-footered; soft-fail to no-sidecar), then the
-    * parent-checked `_COMMITTED` marker.
-    */
   /** Max times one staged maintenance snapshot re-parents onto a newer
     * head before giving up and surfacing the conflict (each iteration
     * needs a FRESH concurrent commit to occur, so hitting this means a
@@ -4231,7 +4279,14 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
     */
   @volatile var onBeforeManifestCommit: () => Unit = () => ()
 
-  /** @param rebaseRewritten enables LOGICAL CONFLICT RESOLUTION on a lost
+  /** Shared commit tail of every manifest-snapshot producer: walk the new
+    * version dir, write `_MANIFEST.json` (carried + new files) or, for a
+    * small change, `_DELTA.json`, land the layer-root-relative stats
+    * sidecar (carried stats reused, new and stats-unknown files
+    * re-footered; soft-fail to no-sidecar), then the parent-checked
+    * `_COMMITTED` marker.
+    *
+    * @param rebaseRewritten enables LOGICAL CONFLICT RESOLUTION on a lost
     *   parent race (see the CME handler): `Some(set)` = the staged
     *   commit's rewritten file set (EMPTY for a pure append — nothing
     *   rewritten, everything carried), `None` = no rebase, the conflict
@@ -4262,19 +4317,9 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
       val newPrefix = s"_v/${curSnap.getName}/"
       snapshotDirFilesRel(curSnap).map(newPrefix + _)
     }
-    def put(name: String, body: String): Unit = {
-      val out = f.create(new Path(curSnap, name), true)
-      try out.write(body.getBytes("UTF-8")) finally out.close()
-    }
     def stage(curParent: Path, curCarried: Seq[String],
         curStats: Map[String, FileStats.FileStat],
         curDvs: Map[String, String]): Unit = {
-      // operation metrics for DESCRIBE HISTORY (Delta's operationMetrics
-      // role): recorded AT COMMIT from the increment the funnel already
-      // computes — O(increment), never a post-hoc recomputation. Row
-      // count rides the stats harvest below (absent when stats are off
-      // or soft-failed: history then shows null, never a wrong number).
-      var addedRowsOpt: Option[Long] = None
       val newInv = curCarried ++ newFiles
       // INCREMENTAL COMMIT DECISION (see [[DeltaDoc]]): record only the
       // change against the parent when (a) incremental commits are on,
@@ -4299,11 +4344,12 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
       val interval = checkpointIntervalOf(layer)
       val incremental = interval > 1 && chain <= interval &&
         (addFiles.size + removeFiles.size) * 2 < newInv.size
-      // ROW TRACKING base allocation — O(added files): each added file
-      // takes a fresh [watermark, watermark+rows) range (one footer read
-      // per file, never soft-failed), EXCEPT files a RESTORE resurrects —
+      // ROW TRACKING: added files take fresh ranges (one footer read per
+      // file, never soft-failed), except the files a RESTORE resurrects —
       // baseHints hands them their historical bases so their rows keep
-      // their identities. Carried files keep their parent entries.
+      // their identities. Carried files keep their parent entries. The
+      // staged dir's rels resolve through the same resolveRel as
+      // committed ones.
       val tracking = rowTrackingEnabled(layer)
       val parentBases =
         if (!tracking) Map.empty[String, Long]
@@ -4311,139 +4357,92 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
       val (addBases, rowWm) =
         if (!tracking) (Map.empty[String, Long], 0L)
         else {
-          var wm = parentM.map(_.rowWatermark).getOrElse(0L)
           val toAssign = addFiles.filterNot(parentBases.contains)
-          val hinted = toAssign.flatMap(r => baseHints.get(r).map(r -> _))
-          val fresh = toAssign.filterNot(baseHints.contains)
-          // stage() runs before the marker lands — the staged dir's rels
-          // resolve through the same resolveRel as committed ones
-          val counts = parquetRowCounts(layer, fresh)
-          val assigned = fresh.sorted.map { rel =>
-            val b = wm; wm += math.max(counts(rel), 1L); rel -> b
-          }
-          ((hinted ++ assigned).toMap, wm)
+          assignRowBases(toAssign,
+            parquetRowCounts(layer, toAssign.filterNot(baseHints.contains)),
+            parentM.map(_.rowWatermark).getOrElse(0L), baseHints)
         }
-      // IDENTITY watermarks: advanced from the ADDED files' column stats
-      // (hard footer reads, O(added files), never soft-failed) so even
-      // explicit BY-DEFAULT values bump the counter transactionally with
-      // the commit that landed them — no later allocation can collide
       val idCols = identityColumns(layer)
       val idHighs: Map[String, Long] =
         if (idCols.isEmpty) Map.empty
-        else {
-          val parentHighs = parentM.map(_.idHighs).getOrElse(Map.empty)
-          val addStats: Seq[FileStats.FileStat] =
-            if (addFiles.isEmpty) Nil
-            else FileStats.collectResolved(
-              spark.sparkContext.hadoopConfiguration,
-              addFiles.map(r => r -> new Path(resolveRel(base, r))))
-          val parentMapping = parentM.map(_.mapping).getOrElse(
-            Map.empty[String, String])
-          idCols.map { case (name, spec) =>
-            val phys = mapping.getOrElse(name, name)
-            // a RENAME re-keys the identity property to the new logical
-            // name, but the parent manifest's watermark still sits under
-            // the old one — follow the (never-changing) physical name
-            // back to the parent's logical key so the counter carries
-            // instead of silently restarting at spec.start
-            val prior = parentHighs.get(name)
-              .orElse(parentHighs.collectFirst {
-                case (pn, v) if parentMapping.getOrElse(pn, pn) == phys => v
-              })
-              .getOrElse(spec.start)
-            val beyond = addStats.flatMap(_.cols.get(phys))
-              .flatMap(cs => if (spec.step > 0) cs.max else cs.min)
-              .flatMap(s => scala.util.Try(s.toLong).toOption)
-              .reduceOption((a, b) =>
-                if (spec.step > 0) math.max(a, b) else math.min(a, b))
-              .map(v => Lake.alignBeyond(v, spec.start, spec.step))
-            name -> beyond.map(b =>
-              if (spec.step > 0) math.max(prior, b)
-              else math.min(prior, b)).getOrElse(prior)
-          }
-        }
+        else foldIdHighs(idCols, parentM,
+          if (addFiles.isEmpty) Nil
+          else FileStats.collectResolved(
+            spark.sparkContext.hadoopConfiguration,
+            addFiles.map(r => r -> new Path(resolveRel(base, r)))),
+          mapping)
       if (incremental) {
         // a rebase RESTAGE may have left a full manifest from a previous
         // staging decision — manifestOf prefers it, so it must go
         f.delete(new Path(curSnap, SnapshotManifest.FileName), false)
-        put(DeltaDoc.FileName, DeltaDoc.toJson(DeltaDoc(
-          curParent.getName, chain, newInv.size, schemaDdl,
-          addFiles, removeFiles,
-          dvSet = curDvs.filter { case (k, v) =>
-            !parentDvsAll.get(k).contains(v) },
-          dvUnset = parentDvsAll.keysIterator.filterNot(curDvs.contains)
-            .toSeq,
-          mapping = mapping, dropped = dropped,
-          addBases = addBases, rowWatermark = rowWm, idHighs = idHighs)))
+        Lake.putFile(f, new Path(curSnap, DeltaDoc.FileName),
+          DeltaDoc.toJson(DeltaDoc(
+            curParent.getName, chain, newInv.size, schemaDdl,
+            addFiles, removeFiles,
+            dvSet = curDvs.filter { case (k, v) =>
+              !parentDvsAll.get(k).contains(v) },
+            dvUnset = parentDvsAll.keysIterator.filterNot(curDvs.contains)
+              .toSeq,
+            mapping = mapping, dropped = dropped,
+            addBases = addBases, rowWatermark = rowWm, idHighs = idHighs)),
+          overwrite = true)
       } else {
         f.delete(new Path(curSnap, DeltaDoc.FileName), false)
-        val manifest = SnapshotManifest(newInv, schemaDdl,
+        writeManifest(curSnap, SnapshotManifest(newInv, schemaDdl,
           curDvs, mapping, dropped,
           rowBases = if (!tracking) Map.empty
             else (parentBases.filter { case (r, _) => newSet(r) }
               ++ addBases),
-          rowWatermark = rowWm, idHighs = idHighs)
-        val (head, shards) =
-          SnapshotManifest.toJsonSharded(manifest, config.manifestShardSize)
-        // shards BEFORE the head: a head naming N shards implies all N
-        // exist (a rebase that SHRINKS the shard count leaves stale
-        // higher-numbered shard files behind — harmless, the head names
-        // what's read)
-        shards.zipWithIndex.foreach { case (body, i) =>
-          put(SnapshotManifest.shardName(i), body)
-        }
-        put(SnapshotManifest.FileName, head)
+          rowWatermark = rowWm, idHighs = idHighs), overwrite = true)
       }
-      if (config.collectStats && config.format == "parquet") {
-        try {
-          val conf = spark.sparkContext.hadoopConfiguration
-          val refooter = newFiles ++ curCarried.filterNot(curStats.contains)
-          // pre-resolve each rel: clone-carried `../<layer>/…` refs must
-          // reach the filesystem as canonical paths (resolveRel's own
-          // invariant — HDFS rejects literal `..` segments), while the
-          // stat stays KEYED by the manifest rel so sidecar lookups match
-          val ownStats = FileStats.collectResolved(conf,
-            refooter.map(rel => rel -> new Path(resolveRel(base, rel))))
-          val newSet0 = newFiles.toSet
-          addedRowsOpt = Some(ownStats.iterator
-            .filter(st => newSet0(st.path)).map(_.rows).sum)
-          // a rebase RESTAGES into a renamed dir: both sidecars from the
-          // previous staging must go, or the bloom write (create
-          // overwrite=false) fails and the commit keeps entries keyed to
-          // the pre-rename version dir — matching no manifest rel
-          f.delete(new Path(curSnap, FileStats.SidecarName), false)
-          f.delete(new Path(curSnap, BloomIndex.SidecarName), false)
-          // incremental commits land O(increment) stats — this commit's
-          // files only; readers fold the chain ([[statsOfSnapshot]]).
-          // Checkpoints keep the complete-sidecar form.
-          if (incremental) { if (ownStats.nonEmpty) writeSidecar(curSnap, ownStats) }
-          else writeSidecar(curSnap, curCarried.flatMap(curStats.get) ++
-            ownStats)
-          // bloom maintenance ∝ commit increment: carried files keep their
-          // parent entries by key (folded through the chain on incremental
-          // commits, re-serialized on checkpoints), only this commit's
-          // files get scanned; cross-layer (clone) refs opt the whole
-          // commit out — the clone carries no index until materialized
-          // (enableBloomIndex refuses)
-          if (!newInv.exists(r => r.contains("=") || Lake.isForeignRel(r)))
-            maybeBloomSidecar(layer, curSnap, base = base,
-              rels = newInv,
-              rowsByRel = curStats.map { case (r, st) => r -> st.rows } ++
-                ownStats.map(st => st.path -> st.rows),
-              mapping = mapping,
-              schema = org.apache.spark.sql.types.StructType.fromDDL(schemaDdl),
-              carried = bloomOfSnapshot(layer, curParent),
-              writeCarried = !incremental)
-        } catch {
-          case scala.util.control.NonFatal(e) =>
-            Console.err.println(s"[lake] stats sidecar for $curSnap skipped: $e")
-        }
+      val newSet0 = newFiles.toSet
+      // pre-resolve each rel: clone-carried `../<layer>/…` refs must
+      // reach the filesystem as canonical paths (resolveRel's own
+      // invariant — HDFS rejects literal `..` segments), while the stat
+      // stays KEYED by the manifest rel so sidecar lookups match
+      val harvested = landSidecars(curSnap)(FileStats.collectResolved(
+          spark.sparkContext.hadoopConfiguration,
+          (newFiles ++ curCarried.filterNot(curStats.contains))
+            .map(rel => rel -> new Path(resolveRel(base, rel))))) { ownStats =>
+        // a rebase RESTAGES into a renamed dir: both sidecars from the
+        // previous staging must go, or the bloom write (create
+        // overwrite=false) fails and the commit keeps entries keyed to
+        // the pre-rename version dir — matching no manifest rel
+        f.delete(new Path(curSnap, FileStats.SidecarName), false)
+        f.delete(new Path(curSnap, BloomIndex.SidecarName), false)
+        // incremental commits land O(increment) stats — this commit's
+        // files only; readers fold the chain ([[statsOfSnapshot]]).
+        // Checkpoints keep the complete-sidecar form.
+        if (incremental) { if (ownStats.nonEmpty) writeSidecar(curSnap, ownStats) }
+        else writeSidecar(curSnap, curCarried.flatMap(curStats.get) ++
+          ownStats)
+        // bloom maintenance ∝ commit increment: carried files keep their
+        // parent entries by key (folded through the chain on incremental
+        // commits, re-serialized on checkpoints), only this commit's
+        // files get scanned; cross-layer (clone) refs opt the whole
+        // commit out — the clone carries no index until materialized
+        // (enableBloomIndex refuses)
+        if (!newInv.exists(r => r.contains("=") || Lake.isForeignRel(r)))
+          maybeBloomSidecar(layer, curSnap, base = base,
+            rels = newInv,
+            rowsByRel = curStats.map { case (r, st) => r -> st.rows } ++
+              ownStats.map(st => st.path -> st.rows),
+            mapping = mapping,
+            schema = org.apache.spark.sql.types.StructType.fromDDL(schemaDdl),
+            carried = bloomOfSnapshot(layer, curParent),
+            writeCarried = !incremental)
       }
-      // end of staging: the metrics doc lands INSIDE the snapshot dir
-      // (atomic with the commit's visibility, like _OP); a rebase
-      // restages and overwrites it against the new parent
-      put("_METRICS", Lake.metricsJson(
-        addFiles.size, removeFiles.size, addedRowsOpt, opParams))
+      // end of staging: the operation metrics (Delta's operationMetrics)
+      // land INSIDE the snapshot dir (atomic with the commit's
+      // visibility, like _OP), recorded from the increment the funnel
+      // already computed; the row count rides the stats harvest (null in
+      // history when stats are off or soft-failed, never a wrong number).
+      // A rebase restages and overwrites them against the new parent
+      Lake.putFile(f, new Path(curSnap, "_METRICS"), Lake.metricsJson(
+        addFiles.size, removeFiles.size,
+        harvested.map(_.iterator.filter(st => newSet0(st.path))
+          .map(_.rows).sum),
+        opParams), overwrite = true)
     }
     val parentDv = dvMapOf(parent)
     var curParent = parent
@@ -4451,72 +4450,63 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
     var curStats = oldStats
     var curDvs = dvs
     var rebases = 0
-    while (true) try {
-      stage(curParent, curCarried, curStats, curDvs)
-      // (loop exits via `return curSnap` on a successful marker)
-      onBeforeManifestCommit()
-      try {
-        commitMarker(layer, curSnap,
-          requireParent = Some(Some(curParent.getName)), op,
-          deleteOnConflict = rebaseRewritten.isEmpty)
-        return curSnap
-      } catch {
-        case e: java.util.ConcurrentModificationException =>
-          // LOGICAL CONFLICT RESOLUTION (Delta's conflict matrix for
-          // maintenance vs blind appends): when the staged commit's
-          // REWRITTEN file set is untouched by the new head — all still
-          // present, none re-DV'd, schema/mapping unchanged — the staged
-          // data is byte-for-byte what a re-run against the new head
-          // would produce for those files. Re-parent: carry the head's
-          // inventory minus the rewritten set, keep the staged outputs,
-          // retry the marker. A long OPTIMIZE racing a steady append
-          // stream then lands in one pass instead of starving on
-          // retry-from-scratch.
-          val rewritten = rebaseRewritten.getOrElse(throw e) // snap deleted
-          rebases += 1
-          def bail(): Nothing = { f.delete(curSnap, true); throw e }
-          if (rebases > MaxCommitRebases) bail()
-          val head = latestSnapshot(layer).getOrElse(bail())
-          val mH = manifestOf(head).getOrElse(bail()) // self-contained head
-          // = a full overwrite replaced the corpus: staged outputs stale
-          val hFiles = mH.files.toSet
-          val compatible =
-            rewritten.subsetOf(hFiles) &&
-              mH.schemaDdl == schemaDdl &&
-              mH.mapping == mapping &&
-              mH.dropped.toSet == dropped.toSet &&
-              rewritten.forall(r => mH.dvs.get(r) == parentDv.get(r)) &&
-              rebaseRequireIdHighs.forall(_ == mH.idHighs)
-          if (!compatible) bail()
-          curParent = head
-          curCarried = mH.files.filterNot(rewritten)
-          curDvs = mH.dvs -- rewritten
-          curStats = statsOfSnapshot(layer, head)
-          // re-id the staged snapshot so the rebased commit becomes the
-          // name-ordered head (a dir rename: metadata-cheap on FS/HDFS,
-          // bounded by the staged outputs on object stores — still far
-          // cheaper than re-running the rewrite)
-          val fresh = new Path(s"$base/_v/${newVersionIdAfterHead(layer)}")
-          if (!f.rename(curSnap, fresh)) bail()
-          curSnap = fresh
-          val freshPrefix = s"_v/${curSnap.getName}/"
-          newFiles = snapshotDirFilesRel(curSnap).map(freshPrefix + _)
+    // a rebase iteration may have RENAMED the staged snapshot, so the
+    // clean-up reads the LIVE staged path; callers only know the original
+    staged(curSnap) {
+      while (true) {
+        stage(curParent, curCarried, curStats, curDvs)
+        // (loop exits via `return curSnap` on a successful marker)
+        onBeforeManifestCommit()
+        try {
+          commitMarker(layer, curSnap,
+            requireParent = Some(Some(curParent.getName)), op,
+            deleteOnConflict = rebaseRewritten.isEmpty)
+          return curSnap
+        } catch {
+          case e: java.util.ConcurrentModificationException =>
+            // LOGICAL CONFLICT RESOLUTION (Delta's conflict matrix for
+            // maintenance vs blind appends): when the staged commit's
+            // REWRITTEN file set is untouched by the new head — all still
+            // present, none re-DV'd, schema/mapping unchanged — the staged
+            // data is byte-for-byte what a re-run against the new head
+            // would produce for those files. Re-parent: carry the head's
+            // inventory minus the rewritten set, keep the staged outputs,
+            // retry the marker. A long OPTIMIZE racing a steady append
+            // stream then lands in one pass instead of starving on
+            // retry-from-scratch.
+            val rewritten = rebaseRewritten.getOrElse(throw e) // snap deleted
+            rebases += 1
+            def bail(): Nothing = { f.delete(curSnap, true); throw e }
+            if (rebases > MaxCommitRebases) bail()
+            val head = latestSnapshot(layer).getOrElse(bail())
+            val mH = manifestOf(head).getOrElse(bail()) // self-contained head
+            // = a full overwrite replaced the corpus: staged outputs stale
+            val hFiles = mH.files.toSet
+            val compatible =
+              rewritten.subsetOf(hFiles) &&
+                mH.schemaDdl == schemaDdl &&
+                mH.mapping == mapping &&
+                mH.dropped.toSet == dropped.toSet &&
+                rewritten.forall(r => mH.dvs.get(r) == parentDv.get(r)) &&
+                rebaseRequireIdHighs.forall(_ == mH.idHighs)
+            if (!compatible) bail()
+            curParent = head
+            curCarried = mH.files.filterNot(rewritten)
+            curDvs = mH.dvs -- rewritten
+            curStats = statsOfSnapshot(layer, head)
+            // re-id the staged snapshot so the rebased commit becomes the
+            // name-ordered head (a dir rename: metadata-cheap on FS/HDFS,
+            // bounded by the staged outputs on object stores — still far
+            // cheaper than re-running the rewrite)
+            val fresh = mintVersion(layer)
+            if (!f.rename(curSnap, fresh)) bail()
+            curSnap = fresh
+            val freshPrefix = s"_v/${curSnap.getName}/"
+            newFiles = snapshotDirFilesRel(curSnap).map(freshPrefix + _)
+        }
       }
-    } catch {
-      // A rebase iteration may have RENAMED the staged snapshot (curSnap
-      // != newSnap); callers' own cleanup (rewriteCore's catch) only knows
-      // the original path, so a non-CME failure after a rename would leave
-      // the renamed dir as uncommitted debris until vacuum's orphan grace.
-      // Clean up the LIVE staged path here; CME keeps its existing
-      // discipline (bail()/commitMarker already deleted what should go,
-      // and a rebase-eligible snapshot must survive the lost race).
-      case e if scala.util.control.NonFatal(e) &&
-          !e.isInstanceOf[java.util.ConcurrentModificationException] =>
-        try f.delete(curSnap, true)
-        catch { case scala.util.control.NonFatal(_) => () }
-        throw e
+      throw new IllegalStateException("unreachable")
     }
-    throw new IllegalStateException("unreachable")
   }
 
   /** MATERIALIZE the head's folded state as a full checkpoint (Delta's
@@ -4537,20 +4527,10 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
         "snapshot — nothing to checkpoint"))
     if (!isDeltaOnly(snap)) return snap.toString // already a checkpoint
     val m = manifestOf(snap).get
-    val f = fs(snap)
-    def put(name: String, body: String): Unit = {
-      val out = f.create(new Path(snap, name), true)
-      try out.write(body.getBytes("UTF-8")) finally out.close()
-    }
-    val (head, shards) =
-      SnapshotManifest.toJsonSharded(m, config.manifestShardSize)
-    shards.zipWithIndex.foreach { case (body, i) =>
-      put(SnapshotManifest.shardName(i), body)
-    }
-    if (config.collectStats && config.format == "parquet") {
+    if (config.collectStats) {
       val folded = statsOfSnapshot(layer, snap)
       if (m.files.forall(folded.contains)) {
-        f.delete(new Path(snap, FileStats.SidecarName), false)
+        fs(snap).delete(new Path(snap, FileStats.SidecarName), false)
         writeSidecar(snap, m.files.map(folded))
       }
       val inv = m.files.toSet
@@ -4561,9 +4541,10 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
           bloomColsOf(layer).map(c => m.mapping.getOrElse(c, c)), bloom,
           overwrite = true)
     }
-    // the head LAST (same complete-or-absent discipline as commits: a
-    // manifest naming N shards implies all N exist)
-    put(SnapshotManifest.FileName, head)
+    // the manifest LAST, its head after its shards (the complete-or-absent
+    // discipline of commits: a manifest naming N shards implies all N
+    // exist, and its sidecars sit beside it before readers prefer it)
+    writeManifest(snap, m, overwrite = true)
     snap.toString
   }
 
@@ -4576,33 +4557,18 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
     * layer costs one manifest write.
     */
   def restore(layer: String, version: String): Lake.RowOpResult = {
-    val base = layerPath(layer)
     val target = committedSnap(layer, version)
     val head = latestSnapshot(layer).get // exists: target is committed
-    if (head.getName == version)
-      return Lake.RowOpResult(head.toString, 0,
-        snapshotInventory(layer, target).size, noop = true)
     val inv = snapshotInventory(layer, target)
-    val schemaDdl = snapshotSchema(layer, target).toDDL
-    val newSnap = new Path(s"$base/_v/${newVersionIdAfterHead(layer)}")
-    val f = fs(newSnap)
-    try {
-      f.mkdirs(newSnap) // no data files — the manifest IS the snapshot
-      commitManifest(layer, head, newSnap, inv,
-        statsOfSnapshot(layer, target), schemaDdl, dvs = dvMapOf(target),
-        op = "RESTORE", mapping = mappingOf(target),
-        dropped = droppedOf(target),
-        // row tracking: files the restore RESURRECTS (absent from the
-        // head) get their HISTORICAL bases back, so restored rows keep
-        // the identities they always had
-        baseHints = manifestOf(target).map(_.rowBases).getOrElse(Map.empty))
-    } catch {
-      case e: java.util.ConcurrentModificationException => throw e
-      case scala.util.control.NonFatal(e) =>
-        f.delete(newSnap, true)
-        throw e
-    }
-    Lake.RowOpResult(newSnap.toString, 0, inv.size)
+    if (head.getName == version)
+      return Lake.RowOpResult(head.toString, 0, inv.size, noop = true)
+    commitMetaOnly(layer, head, inv, snapshotSchema(layer, target).toDDL,
+      mappingOf(target), droppedOf(target), "RESTORE")(
+      statsOfSnapshot(layer, target), dvMapOf(target),
+      // row tracking: files the restore RESURRECTS (absent from the head)
+      // get their HISTORICAL bases back, so restored rows keep the
+      // identities they always had
+      baseHints = manifestOf(target).map(_.rowBases).getOrElse(Map.empty))
   }
 
   /** SHALLOW CLONE (Delta's `CREATE TABLE … SHALLOW CLONE` shape,
@@ -4723,10 +4689,8 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
       val prior =
         if (fd.exists(mk)) readFully(mk).split("\n").toSeq else Nil
       fd.mkdirs(mk.getParent)
-      val out = fd.create(mk, true)
-      try out.write((prior ++ refLayers).distinct.filter(_.nonEmpty)
-        .mkString("\n").getBytes("UTF-8"))
-      finally out.close()
+      Lake.putFile(fd, mk, (prior ++ refLayers).distinct.filter(_.nonEmpty)
+        .mkString("\n"), overwrite = true)
     }
     // cross-base refs: register this clone at EACH referenced source
     // layer (`<layer root>/_CLONE_PINS/<md5-of-clone-path>`, content =
@@ -4745,40 +4709,24 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
       val token = java.security.MessageDigest.getInstance("MD5")
         .digest(clonePath.getBytes("UTF-8"))
         .map("%02x".format(_)).mkString
-      val out = pf.create(new Path(pinDir, token), true)
-      try out.write(clonePath.getBytes("UTF-8")) finally out.close()
+      Lake.putFile(pf, new Path(pinDir, token), clonePath, overwrite = true)
     }
-    val newSnap = new Path(s"${layerPath(dst)}/_v/${newVersionIdAfterHead(dst)}")
-    val f = fs(newSnap)
-    try {
-      f.mkdirs(newSnap) // no data files — the manifest IS the snapshot
+    val newSnap = mintVersion(dst)
+    staged(newSnap) {
+      fs(newSnap).mkdirs(newSnap) // no data files — the manifest IS the snapshot
       // row tracking rides the clone: the same data files keep the same
       // bases (keys rebased to the clone's ref form), so a row's id is
       // identical whether read through the source or the fork
       val srcM = srcLake.manifestOf(target)
-      val manifest = SnapshotManifest(files, schemaDdl, dvs,
+      writeManifest(newSnap, SnapshotManifest(files, schemaDdl, dvs,
         srcLake.mappingOf(target), srcLake.droppedOf(target),
         rowBases = srcM.map(_.rowBases).getOrElse(Map.empty)
           .map { case (k, v) => rebase(k) -> v },
         rowWatermark = srcM.map(_.rowWatermark).getOrElse(0L),
-        idHighs = srcM.map(_.idHighs).getOrElse(Map.empty))
-      val (head, shards) =
-        SnapshotManifest.toJsonSharded(manifest, config.manifestShardSize)
-      def put(name: String, body: String): Unit = {
-        val out = f.create(new Path(newSnap, name), false)
-        try out.write(body.getBytes("UTF-8")) finally out.close()
-      }
-      shards.zipWithIndex.foreach { case (body, i) =>
-        put(SnapshotManifest.shardName(i), body)
-      }
-      put(SnapshotManifest.FileName, head)
+        idHighs = srcM.map(_.idHighs).getOrElse(Map.empty)),
+        overwrite = false)
       if (config.collectStats && stats.nonEmpty) writeSidecar(newSnap, stats)
       commitMarker(dst, newSnap, requireParent = Some(None), op = "CLONE")
-    } catch {
-      case e: java.util.ConcurrentModificationException => throw e
-      case scala.util.control.NonFatal(e) =>
-        f.delete(newSnap, true)
-        throw e
     }
     newSnap.toString
   }
@@ -4833,7 +4781,7 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
     // next fill-at-commit
     rekeyColumnProperties(layer, from, Some(to))
     commitMetaOnly(layer, snap, inv, newSchema.toDDL, newMapping,
-      droppedOf(snap), "RENAME COLUMN")
+      droppedOf(snap), "RENAME COLUMN")()
   }
 
   /** Metadata-only column DROP: the logical schema loses the field, data
@@ -4877,7 +4825,7 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
     // would silently resurrect the column with constant values
     rekeyColumnProperties(layer, name, None)
     commitMetaOnly(layer, snap, inv, newSchema.toDDL, mapping - name,
-      (droppedOf(snap) :+ physical).distinct, "DROP COLUMN")
+      (droppedOf(snap) :+ physical).distinct, "DROP COLUMN")()
   }
 
   /** Metadata-only column ADD (Delta's `ALTER TABLE … ADD COLUMNS` role):
@@ -4906,7 +4854,7 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
       schema.fields :+ org.apache.spark.sql.types.StructField(
         name, dataType, nullable = true))
     commitMetaOnly(layer, snap, inv, newSchema.toDDL, mappingOf(snap),
-      droppedOf(snap), "ADD COLUMN")
+      droppedOf(snap), "ADD COLUMN")()
   }
 
   /** TYPE WIDENING (Delta 3.x's `ALTER TABLE … ALTER COLUMN … TYPE`):
@@ -4950,7 +4898,7 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
     val newSchema = org.apache.spark.sql.types.StructType(schema.fields.map(
       f => if (f.name == name) f.copy(dataType = newType) else f))
     commitMetaOnly(layer, snap, inv, newSchema.toDDL, mappingOf(snap),
-      droppedOf(snap), "ALTER COLUMN TYPE")
+      droppedOf(snap), "ALTER COLUMN TYPE")()
   }
 
   private def requireColumnMapping(layer: String, op: String): Unit =
@@ -4971,25 +4919,22 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
         "encoded in directory paths, so this op is a rewrite, not " +
         "metadata; compact the layer from a renamed frame instead")
 
-  /** The zero-data-files commit renameColumn/dropColumn share: carry the
-    * whole inventory (+ DVs, + stats) and re-record schema/mapping.
+  /** The zero-data-files commit the column ops, RESTORE and ANALYZE
+    * share: carry `inv` (+ DVs, + stats; the head's unless given) and
+    * re-record schema/mapping.
     */
   private def commitMetaOnly(layer: String, head: Path, inv: Seq[String],
       schemaDdl: String, mapping: Map[String, String],
-      dropped: Seq[String], op: String): Lake.RowOpResult = {
-    val base = layerPath(layer)
-    val newSnap = new Path(s"$base/_v/${newVersionIdAfterHead(layer)}")
-    val f = fs(newSnap)
-    try {
-      f.mkdirs(newSnap) // no data files — the manifest IS the change
-      commitManifest(layer, head, newSnap, inv, rebasedStats(layer, head),
-        schemaDdl, dvs = dvMapOf(head), op = op, mapping = mapping,
-        dropped = dropped)
-    } catch {
-      case e: java.util.ConcurrentModificationException => throw e
-      case scala.util.control.NonFatal(e) =>
-        f.delete(newSnap, true)
-        throw e
+      dropped: Seq[String], op: String)(
+      oldStats: Map[String, FileStats.FileStat] = rebasedStats(layer, head),
+      dvs: Map[String, String] = dvMapOf(head),
+      baseHints: Map[String, Long] = Map.empty): Lake.RowOpResult = {
+    val newSnap = mintVersion(layer)
+    staged(newSnap) {
+      fs(newSnap).mkdirs(newSnap) // no data files — the manifest IS the change
+      commitManifest(layer, head, newSnap, inv, oldStats, schemaDdl,
+        dvs = dvs, op = op, mapping = mapping, dropped = dropped,
+        baseHints = baseHints)
     }
     Lake.RowOpResult(newSnap.toString, 0, inv.size)
   }
@@ -5009,26 +4954,12 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
     */
   def analyzeStats(layer: String): Lake.RowOpResult = {
     val snap = headForMetaOp(layer)
-    val inv = snapshotInventory(layer, snap)
-    val base = layerPath(layer)
-    val newSnap = new Path(s"$base/_v/${newVersionIdAfterHead(layer)}")
-    val f = fs(newSnap)
-    try {
-      f.mkdirs(newSnap) // no data files — the refreshed sidecar IS the change
-      // oldStats EMPTY on purpose: the commit funnel's stats harvest
-      // re-footers every carried file instead of reusing a (possibly
-      // absent or partial) prior sidecar
-      commitManifest(layer, snap, newSnap, inv, Map.empty,
-        snapshotSchema(layer, snap).toDDL, dvs = dvMapOf(snap),
-        op = "ANALYZE", mapping = mappingOf(snap),
-        dropped = droppedOf(snap))
-    } catch {
-      case e: java.util.ConcurrentModificationException => throw e
-      case scala.util.control.NonFatal(e) =>
-        f.delete(newSnap, true)
-        throw e
-    }
-    Lake.RowOpResult(newSnap.toString, 0, inv.size)
+    // oldStats EMPTY on purpose: the commit funnel's stats harvest
+    // re-footers every carried file instead of reusing a (possibly absent
+    // or partial) prior sidecar
+    commitMetaOnly(layer, snap, snapshotInventory(layer, snap),
+      snapshotSchema(layer, snap).toDDL, mappingOf(snap), droppedOf(snap),
+      "ANALYZE")(oldStats = Map.empty)
   }
 
   /** Refuse a schema-evolving commit that re-adds a column whose physical
@@ -5047,10 +4978,6 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
         "the drop, then re-add.")
   }
 
-  /** An ARBITRARY snapshot's sidecar stats keyed layer-root-relative (the
-    * [[rebasedStats]] form, but not pinned to the latest snapshot — the
-    * restore path needs the target's stats, not HEAD's).
-    */
   /** Bounded cache of FOLDED per-snapshot stats maps — an incremental
     * (delta) head's stats are its chain's union, and commit/prune paths
     * consult the head several times.
@@ -5065,6 +4992,10 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
     "committedSchema" -> committedSchemas, "sidecar" -> sidecarCache,
     "foldedStats" -> foldedStatsCache)
 
+  /** An ARBITRARY snapshot's sidecar stats keyed layer-root-relative (the
+    * [[rebasedStats]] form, but not pinned to the latest snapshot — the
+    * restore path needs the target's stats, not HEAD's).
+    */
   private def statsOfSnapshot(layer: String,
       snap: Path): Map[String, FileStats.FileStat] = {
     foldedStatsCache.get(snap.toString).foreach(hit => return hit)
@@ -5679,10 +5610,10 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
     // were valid when they landed; cost ∝ rewritten fraction, zero when
     // the layer has no constraints
     enforceConstraints(layer, rewrittenG, s"row op on '$layer'")
-    val newSnap = new Path(s"$base/_v/${newVersionIdAfterHead(layer)}")
-    try {
+    val newSnap = mintVersion(layer)
+    staged(newSnap) {
       var writer = toPhysical(rewrittenG, mapping).write
-        .format(config.format).mode("errorifexists")
+        .format("parquet").mode("errorifexists")
       if (partCols.nonEmpty) writer = writer.partitionBy(partCols: _*)
       writer.save(newSnap.toString)
       // rewritten files materialized their DVs; carried files keep theirs.
@@ -5706,11 +5637,6 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
       // a rebase may have re-id'd the staged snapshot — report the path
       // that actually committed
       Lake.RowOpResult(committed.toString, affected.size, carried.size)
-    } catch {
-      case e: java.util.ConcurrentModificationException => throw e // cleaned
-      case scala.util.control.NonFatal(e) =>
-        fs(newSnap).delete(newSnap, true) // no marker — don't leak debris
-        throw e
     }
   }
 
@@ -5779,7 +5705,7 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
     * file creates never race the mkdir).
     */
   private[io] def rowLevelStagingDir(layer: String): Path = {
-    val p = new Path(s"${layerPath(layer)}/_v/${newVersionIdAfterHead(layer)}")
+    val p = mintVersion(layer)
     fs(p).mkdirs(p)
     p
   }
@@ -5800,7 +5726,7 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
     val base = layerPath(layer)
     val parent = new Path(s"$base/_v/$parentName")
     val f = fs(newSnap)
-    try {
+    staged(newSnap) {
       // sweep stray task files (speculation, failed attempts that
       // couldn't abort): only message-vouched files may enter the commit
       val stray = snapshotDirFilesRel(newSnap).filterNot(keep)
@@ -5819,11 +5745,6 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
         op = op, mapping = mappingOf(parent),
         dropped = if (carried.isEmpty) Nil else droppedOf(parent))
       Lake.RowOpResult(newSnap.toString, affected.size, carried.size)
-    } catch {
-      case e: java.util.ConcurrentModificationException => throw e // cleaned
-      case scala.util.control.NonFatal(e) =>
-        f.delete(newSnap, true)
-        throw e
     }
   }
 
@@ -6195,8 +6116,7 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
         // Hive-partitioned layouts keep the frame build: partition columns
         // live in directory names, not footers.
         lazy val rels = snapshotDirFilesRel(snap)
-        if (config.format == "parquet" && rels.nonEmpty &&
-            !rels.exists(_.contains("="))) {
+        if (rels.nonEmpty && !rels.exists(_.contains("="))) {
           org.apache.spark.sql.NewspipeSqlBridge.nullableSchema(
             committedSchemas.get(snap.toString).getOrElse(
               footerSchema(s"${snap.toString}/${rels.head}")))
@@ -6236,9 +6156,8 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
     val root = fam.indexRoot(layerRoot, fam.nameOf(meta))
     val f = fs(root)
     f.mkdirs(root)
-    val out = f.create(new Path(root, fam.MetaFile), true)
-    try out.write(fam.toJson(meta).getBytes("UTF-8"))
-    finally out.close()
+    Lake.putFile(f, new Path(root, fam.MetaFile), fam.toJson(meta),
+      overwrite = true)
   }
 
   /** Declare + build (the family has validated its own parameters): one
@@ -6520,17 +6439,6 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
     base +: foreign
   }
 
-  /** digest → artifact path for every artifact of index `meta` REACHABLE
-    * from this layer: its own shards directory first (a locally built
-    * artifact always wins), then each compatible foreign root's
-    * ([[reachableIndexRoots]]). Content addressing makes borrowing
-    * sound: the digest keys the FS-qualified DATA-file path, which a
-    * clone's rel resolves to, so the source's artifact for a shared file
-    * is byte-identical to what a local rebuild would produce — a clone
-    * reads the source's index with ZERO artifact bytes copied, and
-    * maintenance skips shared files entirely. One listing per distinct
-    * root.
-    */
   /** The per-artifact read every index query runs: the artifact paths
     * spread over [[FileStats.slicesFor]] tasks, the Hadoop conf shipped
     * as one broadcast, and `read` handed each path with its FileSystem.
@@ -6552,6 +6460,17 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
       }
   }
 
+  /** digest → artifact path for every artifact of index `meta` REACHABLE
+    * from this layer: its own shards directory first (a locally built
+    * artifact always wins), then each compatible foreign root's
+    * ([[reachableIndexRoots]]). Content addressing makes borrowing
+    * sound: the digest keys the FS-qualified DATA-file path, which a
+    * clone's rel resolves to, so the source's artifact for a shared file
+    * is byte-identical to what a local rebuild would produce — a clone
+    * reads the source's index with ZERO artifact bytes copied, and
+    * maintenance skips shared files entirely. One listing per distinct
+    * root.
+    */
   private def reachableShardArtifacts(layer: String, fam: IndexArtifacts)(
       meta: fam.Meta, inv: Seq[String]): Map[String, Path] = {
     val name = fam.nameOf(meta)
@@ -7650,8 +7569,7 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
       if (f.exists(cm)) {
         val dst = new Path(copyLedgerDir(layer), p.getName)
         f.mkdirs(dst.getParent)
-        val out = f.create(dst, true)
-        try out.write(readFully(cm).getBytes("UTF-8")) finally out.close()
+        Lake.putFile(f, dst, readFully(cm), overwrite = true)
       }
       f.delete(p, true)
     }
@@ -7806,13 +7724,45 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
       if (mode.equalsIgnoreCase("overwrite")) writeAtomic(df, layer, partitionBy)
       else write(df, layer, partitionBy, mode)
     spark.sql(s"CREATE DATABASE IF NOT EXISTS ${config.database}")
-    df.write.format(config.format).mode(SaveMode.valueOf(mode.capitalize))
+    df.write.format("parquet").mode(SaveMode.valueOf(mode.capitalize))
       .saveAsTable(s"${config.database}.$table")
     path
   }
 }
 
 object Lake {
+  /** The one writer of every metadata file the lake lands outside its data
+    * files: create `path` (`overwrite` as the caller's protocol needs),
+    * write `body`, close. `overwrite = false` is an exclusive create on
+    * HDFS; on the local FS it is an exists-check then an open (ROADMAP #1).
+    */
+  private[io] def putFile(f: org.apache.hadoop.fs.FileSystem,
+      path: org.apache.hadoop.fs.Path, body: Array[Byte],
+      overwrite: Boolean): Unit = {
+    val out = f.create(path, overwrite)
+    try out.write(body) finally out.close()
+  }
+
+  private[io] def putFile(f: org.apache.hadoop.fs.FileSystem,
+      path: org.apache.hadoop.fs.Path, body: String,
+      overwrite: Boolean): Unit =
+    putFile(f, path, body.getBytes("UTF-8"), overwrite)
+
+  /** Write `dst` crash-safely: a hidden temp file beside it, then one
+    * rename, so a reader never sees a torn file. Returns whether the
+    * rename won; a lost rename drops the temp file and the caller decides
+    * what losing means.
+    */
+  private[io] def putViaRename(f: org.apache.hadoop.fs.FileSystem,
+      dst: org.apache.hadoop.fs.Path, body: Array[Byte]): Boolean = {
+    val tmp = new org.apache.hadoop.fs.Path(dst.getParent,
+      s".${dst.getName}.tmp-${java.util.UUID.randomUUID()}")
+    putFile(f, tmp, body, overwrite = true)
+    val won = f.rename(tmp, dst)
+    if (!won) f.delete(tmp, false)
+    won
+  }
+
   /** Layer property holding the declared clustering keys (csv). */
   val ClusterByProp = "lake.clusterBy"
 

@@ -197,11 +197,6 @@ object SnapshotManifest {
     mp ++ dr
   }
 
-  /** Serialize as (head document, shard documents). Inline (no shards)
-    * up to `shardSize` paths; sharded head carries the shard count and
-    * total for integrity instead of the list. The dv map stays in the
-    * head in both forms.
-    */
   /** `rowBases` aligned with a files group (-1 = no base recorded). */
   private def basesArray(files: Seq[String],
       bases: Map[String, Long]): JValue =
@@ -216,6 +211,11 @@ object SnapshotManifest {
     wm ++ ih
   }
 
+  /** Serialize as (head document, shard documents). Inline (no shards)
+    * up to `shardSize` paths; sharded head carries the shard count and
+    * total for integrity instead of the list. The dv map stays in the
+    * head in both forms.
+    */
   def toJsonSharded(m: SnapshotManifest,
       shardSize: Int = DefaultShardSize): (String, Seq[String]) = {
     require(shardSize > 0, s"shardSize must be positive, got $shardSize")

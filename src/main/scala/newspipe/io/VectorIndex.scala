@@ -187,12 +187,7 @@ object VectorIndex extends IndexArtifacts {
     val segId = md.digest(bytes).map("%02x".format(_)).mkString
     val dir = routingDir(layerPath, name)
     f.mkdirs(dir)
-    val tmp = new Path(dir,
-      s".$segId$RoutingExt.tmp-${java.util.UUID.randomUUID()}")
-    val out = f.create(tmp, true)
-    try out.write(bytes) finally out.close()
-    val dst = new Path(dir, s"$segId$RoutingExt")
-    if (!f.rename(tmp, dst)) f.delete(tmp, false)
+    Lake.putViaRename(f, new Path(dir, s"$segId$RoutingExt"), bytes)
   }
 
   /** All routing entries under one index root (digest → route; one dir

@@ -263,13 +263,9 @@ private[source] class LakeChangeStream(spark: SparkSession, lake: Lake,
         }
       }
       // temp + rename: a crash mid-write never leaves a torn start
-      val tmp = new org.apache.hadoop.fs.Path(metadataPath,
-        s".startingVersion-${java.util.UUID.randomUUID()}.tmp")
-      val out = f.create(tmp, true)
-      try out.write(resolved.getOrElse("").getBytes("UTF-8"))
-      finally out.close()
-      if (!f.rename(tmp, file)) throw new java.io.IOException(
-        s"lake change feed: could not record the stream's start at $file")
+      if (!Lake.putViaRename(f, file, resolved.getOrElse("").getBytes("UTF-8")))
+        throw new java.io.IOException(
+          s"lake change feed: could not record the stream's start at $file")
       resolved
     }
   }

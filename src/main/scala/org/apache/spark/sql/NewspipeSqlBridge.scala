@@ -8,6 +8,12 @@ import org.apache.spark.sql.catalyst.expressions.Expression
   * same access pattern SparkSessionExtensions-based projects use).
   */
 object NewspipeSqlBridge {
+  /** Block until the listener bus has delivered every queued event (Spark
+    * bounds the wait and throws `TimeoutException` past it).
+    */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
+
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 

@@ -192,4 +192,107 @@ class LakeDeltaLogSpec extends SparkTestBase {
     hasDelta(base, "docs", head) shouldBe false
     lake.read("docs").count() shouldBe 51L
   }
+
+  test("every commit producer lands its pinned version-dir layout") {
+    val base = newBase()
+    val lake = lakeAt(base)
+    def head(layer: String): String = lake.listVersions(layer).head
+    def body(layer: String, v: String, name: String): Option[String] = {
+      val f = new java.io.File(s"$base/$layer/_v/$v/$name")
+      if (f.isFile) Some(new String(Files.readAllBytes(f.toPath), "UTF-8"))
+      else None
+    }
+    // top-level non-data files of the version dir (Hadoop's hidden .crc
+    // checksums and hive partition dirs aside)
+    def metaNames(layer: String, v: String): Seq[String] =
+      new java.io.File(s"$base/$layer/_v/$v").listFiles()
+        .filter(f => f.isFile && !f.getName.startsWith("part-") &&
+          !f.getName.startsWith("."))
+        .map(_.getName).sorted.toSeq
+    // (producer, non-data names, _OP, _COMMITTED is the prior head,
+    // _METRICS with the commit instant masked)
+    val seen = Seq.newBuilder[(String, Seq[String], String, Boolean, String)]
+    def record(producer: String, layer: String, v: String,
+        parent: String): Unit =
+      seen += ((producer, metaNames(layer, v),
+        body(layer, v, "_OP").getOrElse("<none>"),
+        body(layer, v, "_COMMITTED").contains(parent),
+        body(layer, v, "_METRICS").getOrElse("<none>")
+          .replaceAll("\"commitTimeMs\":\\d+", "\"commitTimeMs\":T")))
+    def commit(producer: String, layer: String)(op: => Any): Unit = {
+      val parent = lake.listVersions(layer).headOption.getOrElse("")
+      op
+      record(producer, layer, head(layer), parent)
+    }
+    def rows(ids: Long*) = ids.map(i => (i, s"s$i")).toDF("id", "s").coalesce(1)
+
+    commit("WRITE flat", "t")(lake.writeAtomic(rows(1, 2, 3, 4), "t"))
+    commit("WRITE hive", "hive")(lake.writeAtomic(
+      rows(1, 2).withColumn("k", lit("a")), "hive", partitionBy = Seq("k")))
+    lake.setProperties("tracked", Map("lake.rowTracking" -> "true"))
+    commit("WRITE row-tracking", "tracked")(
+      lake.writeAtomic(rows(1, 2), "tracked"))
+    commit("APPEND", "t")(lake.appendAtomic(rows(5), "t"))
+    val afterAppend = head("t")
+    commit("DV DELETE", "t")(lake.deleteWhereDv("t", col("id") === 1L))
+    commit("UPDATE", "t")(
+      lake.updateWhere("t", col("id") === 2L, Map("s" -> lit("z"))))
+    commit("OPTIMIZE", "t")(lake.compactSmall("t"))
+    commit("RESTORE", "t")(lake.restore("t", afterAppend))
+    lake.setProperties("t", Map("lake.columnMapping.mode" -> "name"))
+    commit("RENAME", "t")(lake.renameColumn("t", "s", "s2"))
+    commit("ANALYZE", "t")(lake.analyzeStats("t"))
+    // no new version: checkpoint() and enableRowTracking re-foot the head
+    val analyzed = head("t")
+    val analyzedParent = body("t", analyzed, "_COMMITTED").get
+    lake.checkpoint("t")
+    head("t") shouldBe analyzed
+    record("checkpoint()", "t", analyzed, analyzedParent)
+    lake.enableRowTracking("t")
+    head("t") shouldBe analyzed
+    record("enableRowTracking", "t", analyzed, analyzedParent)
+    lake.write(rows(1, 2), "conv")
+    commit("CONVERT", "conv")(lake.convertToLake("conv"))
+    commit("CLONE", "cl")(lake.clone("t", "cl"))
+
+    val marker = Seq("_COMMITTED", "_METRICS", "_OP")
+    def m(added: Int, removed: Int, rows: Int, params: String = ""): String =
+      s"""{"numAddedFiles":$added,"numRemovedFiles":$removed,""" +
+        s""""commitTimeMs":T,"numAddedRows":$rows$params}"""
+    val expected = Seq[(String, Seq[String], String, Boolean, String)](
+      ("WRITE flat", marker ++ Seq("_STATS.json", "_SUCCESS"), "WRITE",
+        true, m(1, 0, 4)),
+      ("WRITE hive", marker ++ Seq("_STATS.json", "_SUCCESS"), "WRITE",
+        true, m(1, 0, 2)),
+      ("WRITE row-tracking", (marker ++ Seq("_MANIFEST.json", "_STATS.json",
+        "_SUCCESS")).sorted, "WRITE", true, m(1, 0, 2)),
+      ("APPEND", (marker ++ Seq("_MANIFEST.json", "_STATS.json",
+        "_SUCCESS")).sorted, "APPEND", true, m(1, 0, 1)),
+      ("DV DELETE", (marker ++ Seq("_DELTA.json", "_DV-00000.json")).sorted,
+        "DELETE", true, m(0, 0, 0)),
+      ("UPDATE", (marker ++ Seq("_MANIFEST.json", "_STATS.json",
+        "_SUCCESS")).sorted, "UPDATE", true, m(1, 1, 3,
+        ""","params":{"columns":"s","predicate":"`=`(id, 2L)"}""")),
+      ("OPTIMIZE", (marker ++ Seq("_MANIFEST.json", "_STATS.json",
+        "_SUCCESS")).sorted, "OPTIMIZE", true, m(1, 2, 4)),
+      ("RESTORE", (marker ++ Seq("_MANIFEST.json", "_STATS.json")).sorted,
+        "RESTORE", true, m(2, 1, 0)),
+      ("RENAME", (marker :+ "_DELTA.json").sorted, "RENAME COLUMN", true,
+        m(0, 0, 0)),
+      ("ANALYZE", (marker ++ Seq("_DELTA.json", "_STATS.json")).sorted,
+        "ANALYZE", true, m(0, 0, 0)),
+      ("checkpoint()", (marker ++ Seq("_DELTA.json", "_MANIFEST.json",
+        "_STATS.json")).sorted, "ANALYZE", true, m(0, 0, 0)),
+      ("enableRowTracking", (marker ++ Seq("_MANIFEST.json",
+        "_STATS.json")).sorted, "ANALYZE", true, m(0, 0, 0)),
+      // CONVERT and CLONE keep their own commit shape: no _METRICS
+      ("CONVERT", Seq("_COMMITTED", "_MANIFEST.json", "_OP", "_STATS.json"),
+        "CONVERT", true, "<none>"),
+      ("CLONE", Seq("_COMMITTED", "_MANIFEST.json", "_OP", "_STATS.json"),
+        "CLONE", true, "<none>"))
+    val got = seen.result()
+    withClue(got.mkString("observed layouts:\n", "\n", "\n")) {
+      got shouldBe expected
+    }
+  }
 }

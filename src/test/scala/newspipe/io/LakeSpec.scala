@@ -1197,4 +1197,32 @@ class LakeSpec extends SparkTestBase {
     Await.result(writer, 60.seconds)
     lake.read("docs").count() shouldBe 2L
   }
+
+  test("a failed full overwrite leaves nothing staged: old snapshot, no orphan dir") {
+    val dir = Files.createTempDirectory("lakefail").toString
+    val lake = new Lake(spark, LakeConfig(basePath = dir))
+    lake.writeAtomic(Seq(1L, 2L, 3L).toDF("id"), "docs")
+    val committed = lake.listVersions("docs").toSet
+    committed should have size 1
+    // the save's task throws: the write aborts after Spark created the
+    // staged version directory
+    val boom = udf((x: Long) => {
+      if (x >= 0L) throw new IllegalStateException("task failure"); x
+    })
+    val bad = spark.range(3).select(boom(col("id")).as("id"))
+    val vDir = new java.io.File(s"$dir/docs/_v")
+    def versionDirs: Set[String] =
+      vDir.listFiles().filter(_.isDirectory).map(_.getName).toSet
+    Seq[(String, () => String)](
+      "writeAtomic" -> (() => lake.writeAtomic(bad, "docs")),
+      "replaceAtomic" -> (() => lake.replaceAtomic(bad, "docs"))
+    ).foreach { case (name, overwrite) =>
+      intercept[Exception](overwrite())
+      withClue(s"$name: ") {
+        lake.read("docs").as[Long].collect().sorted shouldBe Array(1L, 2L, 3L)
+        lake.listVersions("docs").toSet shouldBe committed
+        versionDirs shouldBe committed // no uncommitted _v/<id> left behind
+      }
+    }
+  }
 }
