@@ -21,6 +21,29 @@ object SparkEntry {
   private def t(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
 
+  /** One per-process root for every query's lakes and staging dirs,
+    * deleted at JVM exit (a Hadoop shutdown hook below Spark's own, so
+    * the session has stopped writing first).
+    */
+  private lazy val scratchRoot: java.nio.file.Path = {
+    val root = java.nio.file.Files.createTempDirectory("graft_lakes")
+    org.apache.hadoop.util.ShutdownHookManager.get().addShutdownHook(
+      () => org.apache.commons.io.FileUtils.deleteQuietly(root.toFile), 20)
+    root
+  }
+
+  /** A fresh directory under [[scratchRoot]]. */
+  private def scratchDir(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(scratchRoot, prefix).toString
+
+  /** A fresh lake in its own [[scratchDir]]: (its base path, the lake). */
+  private def freshLake(s: SparkSession, prefix: String,
+      optimizeWrite: Boolean = false): (String, newspipe.io.Lake) = {
+    val root = scratchDir(prefix)
+    (root, new newspipe.io.Lake(s, newspipe.io.LakeConfig(basePath = root,
+      optimizeWrite = optimizeWrite)))
+  }
+
   /** `events.ts` arrives as ns-since-epoch LongType in some driver testdata
     * generations (parquet timestamp(NANOS) — Spark has no ns timestamp, so
     * it surfaces nanosAsLong) and as timestamp[us] (TIMESTAMP_NTZ) in
@@ -1201,9 +1224,7 @@ object SparkEntry {
     // LakeSkippingSpec) and this aggregate proves pruning loses nothing:
     // the oracle is the plain full-scan filter
     "q82_lake_zorder_skipping" -> ((s, dir) => {
-      val root = java.nio.file.Files.createTempDirectory("q82_lake").toString
-      val lake = new newspipe.io.Lake(s,
-        newspipe.io.LakeConfig(basePath = root))
+      val (root, lake) = freshLake(s, "q82_lake")
       lake.writeAtomic(t(s, dir, "documents"), "docs")
       lake.compact("docs", targetFileBytes = 64 * 1024,
         zorderBy = Seq("lang", "n_chars"))
@@ -1223,9 +1244,7 @@ object SparkEntry {
     // anti-filter over the original table: DELETE means exactly
     // "subsequent reads see the complement".
     "q85_lake_delete" -> ((s, dir) => {
-      val root = java.nio.file.Files.createTempDirectory("q85_lake").toString
-      val lake = new newspipe.io.Lake(s,
-        newspipe.io.LakeConfig(basePath = root))
+      val (root, lake) = freshLake(s, "q85_lake")
       lake.writeAtomic(t(s, dir, "documents")
         .repartitionByRange(8, col("n_chars"))
         .sortWithinPartitions("n_chars"), "docs")
@@ -1242,9 +1261,7 @@ object SparkEntry {
     // double n_chars on long docs, leave everything else untouched;
     // oracle replays the assignment as a CASE over the original table.
     "q86_lake_update" -> ((s, dir) => {
-      val root = java.nio.file.Files.createTempDirectory("q86_lake").toString
-      val lake = new newspipe.io.Lake(s,
-        newspipe.io.LakeConfig(basePath = root))
+      val (root, lake) = freshLake(s, "q86_lake")
       lake.writeAtomic(t(s, dir, "documents")
         .repartitionByRange(8, col("n_chars"))
         .sortWithinPartitions("n_chars"), "docs")
@@ -1263,9 +1280,7 @@ object SparkEntry {
     // clustering means the source's key IN-set rewrites only can-match
     // files; oracle replays the merge as anti-join ∪ source.
     "q87_lake_merge" -> ((s, dir) => {
-      val root = java.nio.file.Files.createTempDirectory("q87_lake").toString
-      val lake = new newspipe.io.Lake(s,
-        newspipe.io.LakeConfig(basePath = root))
+      val (root, lake) = freshLake(s, "q87_lake")
       val docs = t(s, dir, "documents")
       lake.writeAtomic(docs
         .repartitionByRange(8, col("doc_id"))
@@ -1291,9 +1306,7 @@ object SparkEntry {
     // files never read, updates surface as delete+insert pairs. Oracle
     // replays the delta relationally from the original table.
     "q88_lake_diff" -> ((s, dir) => {
-      val root = java.nio.file.Files.createTempDirectory("q88_lake").toString
-      val lake = new newspipe.io.Lake(s,
-        newspipe.io.LakeConfig(basePath = root))
+      val (root, lake) = freshLake(s, "q88_lake")
       val docs = t(s, dir, "documents")
       lake.writeAtomic(docs
         .repartitionByRange(8, col("doc_id"))
@@ -1318,9 +1331,7 @@ object SparkEntry {
     // maintained state. Oracle recomputes the aggregate over the post-op
     // corpus replayed relationally — incremental must equal recompute.
     "q89_incremental_agg" -> ((s, dir) => {
-      val root = java.nio.file.Files.createTempDirectory("q89_lake").toString
-      val lake = new newspipe.io.Lake(s,
-        newspipe.io.LakeConfig(basePath = root))
+      val (root, lake) = freshLake(s, "q89_lake")
       lake.writeAtomic(t(s, dir, "documents")
         .repartitionByRange(8, col("doc_id"))
         .sortWithinPartitions("doc_id"), "docs")
@@ -1354,9 +1365,7 @@ object SparkEntry {
     // precedent), so the oracle is q85's verbatim.
     "q91_sql_lake_read" -> ((s, dir) => {
       newspipe.NewspipeExtensions.register(s)
-      val root = java.nio.file.Files.createTempDirectory("q91_lake").toString
-      val lake = new newspipe.io.Lake(s,
-        newspipe.io.LakeConfig(basePath = root))
+      val (root, lake) = freshLake(s, "q91_lake")
       lake.writeAtomic(t(s, dir, "documents")
         .repartitionByRange(8, col("n_chars"))
         .sortWithinPartitions("n_chars"), "docs")
@@ -1375,9 +1384,7 @@ object SparkEntry {
     // Lake.deleteWhere — statement form == API form on the driver's own
     // hash compare (oracle is q85's verbatim).
     "q92_sql_lake_delete" -> ((s, dir) => {
-      val root = java.nio.file.Files.createTempDirectory("q92_lake").toString
-      val lake = new newspipe.io.Lake(s,
-        newspipe.io.LakeConfig(basePath = root))
+      val (root, lake) = freshLake(s, "q92_lake")
       lake.writeAtomic(t(s, dir, "documents")
         .repartitionByRange(8, col("n_chars"))
         .sortWithinPartitions("n_chars"), "docs")
@@ -1396,9 +1403,7 @@ object SparkEntry {
     // session entry point; parser injection is exercised by q92). Oracle
     // is q86's verbatim.
     "q93_sql_lake_update" -> ((s, dir) => {
-      val root = java.nio.file.Files.createTempDirectory("q93_lake").toString
-      val lake = new newspipe.io.Lake(s,
-        newspipe.io.LakeConfig(basePath = root))
+      val (root, lake) = freshLake(s, "q93_lake")
       lake.writeAtomic(t(s, dir, "documents")
         .repartitionByRange(8, col("n_chars"))
         .sortWithinPartitions("n_chars"), "docs")
@@ -1416,9 +1421,7 @@ object SparkEntry {
     // source — WHEN MATCHED UPDATE SET * / WHEN NOT MATCHED INSERT *,
     // the Lake.mergeInto contract. Oracle is q87's verbatim.
     "q94_sql_lake_merge" -> ((s, dir) => {
-      val root = java.nio.file.Files.createTempDirectory("q94_lake").toString
-      val lake = new newspipe.io.Lake(s,
-        newspipe.io.LakeConfig(basePath = root))
+      val (root, lake) = freshLake(s, "q94_lake")
       val docs = t(s, dir, "documents")
       lake.writeAtomic(docs
         .repartitionByRange(8, col("doc_id"))
@@ -1451,9 +1454,7 @@ object SparkEntry {
     // between consecutive versions compose (no insert is later deleted
     // here), so the oracle replays initial + net delta relationally.
     "q95_stream_changefeed" -> ((s, dir) => {
-      val root = java.nio.file.Files.createTempDirectory("q95_lake").toString
-      val lake = new newspipe.io.Lake(s,
-        newspipe.io.LakeConfig(basePath = root))
+      val (root, lake) = freshLake(s, "q95_lake")
       val docs = t(s, dir, "documents")
       lake.writeAtomic(docs
         .repartitionByRange(8, col("doc_id"))
@@ -1490,9 +1491,7 @@ object SparkEntry {
     // picks seq=2; the new-key file is key-disjoint), so the oracle is the
     // relational replay of "latest version wins ∪ inserts".
     "q96_stream_cdc_upsert" -> ((s, dir) => {
-      val root = java.nio.file.Files.createTempDirectory("q96_lake").toString
-      val lake = new newspipe.io.Lake(s,
-        newspipe.io.LakeConfig(basePath = root))
+      val (root, lake) = freshLake(s, "q96_lake")
       val docs = t(s, dir, "documents")
       lake.writeAtomic(docs.withColumn("seq", lit(0L))
         .repartitionByRange(8, col("doc_id"))
@@ -1540,9 +1539,7 @@ object SparkEntry {
     // referenced files through the vacuum. Oracle = the original table:
     // rollback means subsequent reads are exactly the pre-mutation state.
     "q97_lake_restore" -> ((s, dir) => {
-      val root = java.nio.file.Files.createTempDirectory("q97_lake").toString
-      val lake = new newspipe.io.Lake(s,
-        newspipe.io.LakeConfig(basePath = root))
+      val (root, lake) = freshLake(s, "q97_lake")
       lake.writeAtomic(t(s, dir, "documents")
         .repartitionByRange(8, col("doc_id"))
         .sortWithinPartitions("doc_id"), "docs")
@@ -1563,9 +1560,7 @@ object SparkEntry {
     // as new files, carry the whole existing inventory by reference —
     // O(appended data), no layer rewrite. Oracle = the union replay.
     "q90_lake_append" -> ((s, dir) => {
-      val root = java.nio.file.Files.createTempDirectory("q90_lake").toString
-      val lake = new newspipe.io.Lake(s,
-        newspipe.io.LakeConfig(basePath = root))
+      val (root, lake) = freshLake(s, "q90_lake")
       val docs = t(s, dir, "documents")
       lake.writeAtomic(docs
         .repartitionByRange(8, col("doc_id"))
@@ -1588,9 +1583,7 @@ object SparkEntry {
     // SEQUENCE via the version list; the oracle replays each commit
     // relationally.
     "q98_lake_changefeed" -> ((s, dir) => {
-      val root = java.nio.file.Files.createTempDirectory("q98_lake").toString
-      val lake = new newspipe.io.Lake(s,
-        newspipe.io.LakeConfig(basePath = root))
+      val (root, lake) = freshLake(s, "q98_lake")
       val docs = t(s, dir, "documents")
       lake.writeAtomic(docs
         .repartitionByRange(8, col("doc_id"))
@@ -1620,9 +1613,7 @@ object SparkEntry {
     // must stay 'delete' (no same-commit key overlap). Oracle replays the
     // four tag populations relationally.
     "q99_cdf_keyed" -> ((s, dir) => {
-      val root = java.nio.file.Files.createTempDirectory("q99_lake").toString
-      val lake = new newspipe.io.Lake(s,
-        newspipe.io.LakeConfig(basePath = root))
+      val (root, lake) = freshLake(s, "q99_lake")
       val docs = t(s, dir, "documents")
       lake.writeAtomic(docs
         .repartitionByRange(8, col("doc_id"))
@@ -1651,9 +1642,7 @@ object SparkEntry {
     // self-contained so reclamation is real). Read-back must equal the
     // delete's complement — compaction and vacuum are data-invisible.
     "q100_sql_lake_maint" -> ((s, dir) => {
-      val root = java.nio.file.Files.createTempDirectory("q100_lake").toString
-      val lake = new newspipe.io.Lake(s,
-        newspipe.io.LakeConfig(basePath = root))
+      val (root, lake) = freshLake(s, "q100_lake")
       lake.writeAtomic(t(s, dir, "documents")
         .repartitionByRange(8, col("doc_id"))
         .sortWithinPartitions("doc_id"), "docs")
@@ -1676,9 +1665,7 @@ object SparkEntry {
     // change feed reports exactly the dead rows. Read-back aggregate must
     // equal the rewrite-delete semantics (oracle: complement filter).
     "q101_lake_dv_delete" -> ((s, dir) => {
-      val root = java.nio.file.Files.createTempDirectory("q101_lake").toString
-      val lake = new newspipe.io.Lake(s,
-        newspipe.io.LakeConfig(basePath = root))
+      val (root, lake) = freshLake(s, "q101_lake")
       lake.writeAtomic(t(s, dir, "documents")
         .repartitionByRange(8, col("doc_id"))
         .sortWithinPartitions("doc_id"), "docs")
@@ -1698,9 +1685,7 @@ object SparkEntry {
     // valid increment. Enforcement cost ∝ increment (validated here by
     // the oracle only seeing the accepted rows).
     "q102_lake_constraints" -> ((s, dir) => {
-      val root = java.nio.file.Files.createTempDirectory("q102_lake").toString
-      val lake = new newspipe.io.Lake(s,
-        newspipe.io.LakeConfig(basePath = root))
+      val (root, lake) = freshLake(s, "q102_lake")
       val docs = t(s, dir, "documents")
       lake.writeAtomic(docs
         .repartitionByRange(8, col("doc_id"))
@@ -1944,9 +1929,7 @@ object SparkEntry {
     // run-dependent, so the query exposes the deterministic (ordinal,
     // operation) projection; the oracle is the literal expected ledger.
     "q115_lake_history" -> ((s, dir) => {
-      val root = java.nio.file.Files.createTempDirectory("q115_lake").toString
-      val lake = new newspipe.io.Lake(s,
-        newspipe.io.LakeConfig(basePath = root))
+      val (root, lake) = freshLake(s, "q115_lake")
       val docs = t(s, dir, "documents")
       lake.writeAtomic(docs, "docs")
       lake.deleteWhere("docs", col("lang") === "zh")
@@ -1996,9 +1979,7 @@ object SparkEntry {
     // The history tail double-checks a real OPTIMIZE commit happened (so
     // the query can't silently pass by never compacting).
     "q117_lake_compact_small" -> ((s, dir) => {
-      val root = java.nio.file.Files.createTempDirectory("q117_lake").toString
-      val lake = new newspipe.io.Lake(s,
-        newspipe.io.LakeConfig(basePath = root))
+      val (root, lake) = freshLake(s, "q117_lake")
       val docs = t(s, dir, "documents")
       lake.writeAtomic(docs.repartition(16), "docs") // 16 sliver files
       val r = lake.compactSmall("docs",
@@ -2063,7 +2044,7 @@ object SparkEntry {
     // (projected to the dedup key, so the survivor choice is invisible) —
     // the oracle is SELECT DISTINCT
     "q121_stream_dedup" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("q121_sd").toString
+      val tmp = scratchDir("q121_sd")
       t(s, dir, "documents").filter(col("text").isNotNull)
         .select(timestamp_seconds(lit(1767225600L) + col("doc_id") % 3600)
           .as("ts"), col("text"))
@@ -2136,9 +2117,7 @@ object SparkEntry {
     // ±5% contract against the exact post-append distinct the oracle
     // recomputes from the same replayed composition.
     "q123_incremental_distinct" -> ((s, dir) => {
-      val root = java.nio.file.Files.createTempDirectory("q123_lake").toString
-      val lake = new newspipe.io.Lake(s,
-        newspipe.io.LakeConfig(basePath = root))
+      val (root, lake) = freshLake(s, "q123_lake")
       val docs = t(s, dir, "documents")
       lake.writeAtomic(docs.repartitionByRange(8, col("doc_id"))
         .sortWithinPartitions("doc_id"), "docs")
@@ -2211,9 +2190,7 @@ object SparkEntry {
     // op chain; oracle is q115's literal VALUES text verbatim (SQL = API)
     "q125_sql_lake_history" -> ((s, dir) => {
       newspipe.NewspipeExtensions.register(s)
-      val root = java.nio.file.Files.createTempDirectory("q125_lake").toString
-      val lake = new newspipe.io.Lake(s,
-        newspipe.io.LakeConfig(basePath = root))
+      val (root, lake) = freshLake(s, "q125_lake")
       val docs = t(s, dir, "documents")
       lake.writeAtomic(docs, "docs")
       lake.deleteWhere("docs", col("lang") === "zh")
@@ -2232,9 +2209,7 @@ object SparkEntry {
     // conf-registered SQL (oracle is q85's verbatim).
     "q126_catalog_sql_delete" -> ((s, dir) => {
       s.conf.set("spark.sql.catalog.lake", "newspipe.io.LakeCatalog")
-      val root = java.nio.file.Files.createTempDirectory("q126_lake").toString
-      val lake = new newspipe.io.Lake(s,
-        newspipe.io.LakeConfig(basePath = root))
+      val (root, lake) = freshLake(s, "q126_lake")
       lake.writeAtomic(t(s, dir, "documents")
         .repartitionByRange(8, col("n_chars"))
         .sortWithinPartitions("n_chars"), "docs")
@@ -2252,9 +2227,7 @@ object SparkEntry {
     // union computation, oracle verbatim.
     "q127_catalog_sql_insert" -> ((s, dir) => {
       s.conf.set("spark.sql.catalog.lake", "newspipe.io.LakeCatalog")
-      val root = java.nio.file.Files.createTempDirectory("q127_lake").toString
-      val lake = new newspipe.io.Lake(s,
-        newspipe.io.LakeConfig(basePath = root))
+      val (root, lake) = freshLake(s, "q127_lake")
       lake.writeAtomic(t(s, dir, "documents")
         .repartitionByRange(8, col("n_chars"))
         .sortWithinPartitions("n_chars"), "docs")
@@ -2280,9 +2253,7 @@ object SparkEntry {
     // agg, the lake_read_version contract).
     "q128_catalog_version_asof" -> ((s, dir) => {
       s.conf.set("spark.sql.catalog.lake", "newspipe.io.LakeCatalog")
-      val root = java.nio.file.Files.createTempDirectory("q128_lake").toString
-      val lake = new newspipe.io.Lake(s,
-        newspipe.io.LakeConfig(basePath = root))
+      val (root, lake) = freshLake(s, "q128_lake")
       lake.writeAtomic(t(s, dir, "documents")
         .repartitionByRange(8, col("n_chars"))
         .sortWithinPartitions("n_chars"), "docs")
@@ -2318,7 +2289,7 @@ object SparkEntry {
     // no pair in C reaches 0.8, every planted pair is at 1.0).
     "q129_stream_near_dedup" -> ((s, dir) => {
       import newspipe.ops.Dedup
-      val tmp = java.nio.file.Files.createTempDirectory("q129_sn").toString
+      val tmp = scratchDir("q129_sn")
       val docs = t(s, dir, "documents")
         .filter(col("text").isNotNull && col("doc_id") % 97 === 0)
         .filter(size(Dedup.tokens(col("text"))) > 0)
@@ -2373,7 +2344,7 @@ object SparkEntry {
     // stream must emit exactly the batch join's row set, so the oracle is
     // q118's ANSI replay verbatim.
     "q130_stream_interval_join" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("q130_sj").toString
+      val tmp = scratchDir("q130_sj")
       val ev0 = t(s, dir, "events")
       val ev = ev0.withColumn("ts2", eventTs(ev0))
       val purchases = ev.filter(col("event_type") === "purchase")
@@ -2446,9 +2417,7 @@ object SparkEntry {
     // the renamed column). History pins the op labels.
     "q132_sql_rename_drop" -> ((s, dir) => {
       s.conf.set("spark.sql.catalog.lake", "newspipe.io.LakeCatalog")
-      val root = java.nio.file.Files.createTempDirectory("q132_lake").toString
-      val lake = new newspipe.io.Lake(s,
-        newspipe.io.LakeConfig(basePath = root))
+      val (root, lake) = freshLake(s, "q132_lake")
       lake.writeAtomic(t(s, dir, "documents")
         .repartitionByRange(8, col("n_chars"))
         .sortWithinPartitions("n_chars"), "docs")
@@ -2539,7 +2508,7 @@ object SparkEntry {
     // full-corpus agg verbatim). The in-query require pins the layout.
     "q135_catalog_partitioned" -> ((s, dir) => {
       s.conf.set("spark.sql.catalog.lake", "newspipe.io.LakeCatalog")
-      val root = java.nio.file.Files.createTempDirectory("q135_lake").toString
+      val root = scratchDir("q135_lake")
       s.sql(s"CREATE TABLE lake.`$root`.docs " +
         "(doc_id BIGINT, lang STRING, n_chars BIGINT) PARTITIONED BY (lang)")
       s.sql(s"INSERT INTO lake.`$root`.docs " +
@@ -2567,9 +2536,7 @@ object SparkEntry {
     // hash, and one that missed an append would drop a lang bucket.
     "q136_catalog_stream" -> ((s, dir) => {
       s.conf.set("spark.sql.catalog.lake", "newspipe.io.LakeCatalog")
-      val root = java.nio.file.Files.createTempDirectory("q136_lake").toString
-      val lake = new newspipe.io.Lake(s,
-        newspipe.io.LakeConfig(basePath = root))
+      val (root, lake) = freshLake(s, "q136_lake")
       val docs = t(s, dir, "documents").select("doc_id", "lang", "n_chars")
       lake.writeAtomic(docs.filter(col("doc_id") % 2 === 0), "docs")
       val s2 = org.apache.spark.sql.NewspipeSqlBridge.sessionWithExtensions(
@@ -2601,9 +2568,7 @@ object SparkEntry {
     // per lang per commit across write+append); results are
     // layout-invisible, so the oracle is the full-corpus agg verbatim.
     "q137_optimize_write" -> ((s, dir) => {
-      val root = java.nio.file.Files.createTempDirectory("q137_lake").toString
-      val lake = new newspipe.io.Lake(s,
-        newspipe.io.LakeConfig(basePath = root, optimizeWrite = true))
+      val (root, lake) = freshLake(s, "q137_lake", optimizeWrite = true)
       val docs = t(s, dir, "documents").select("doc_id", "lang", "n_chars")
         .repartition(32)
       lake.writeAtomic(docs.filter(col("doc_id") % 2 === 0), "docs",
@@ -2632,9 +2597,7 @@ object SparkEntry {
     // timestamps) are pinned by in-query requires — they vary with task
     // parallelism and codec, not correctness.
     "q138_describe_detail" -> ((s, dir) => {
-      val root = java.nio.file.Files.createTempDirectory("q138_lake").toString
-      val lake = new newspipe.io.Lake(s,
-        newspipe.io.LakeConfig(basePath = root, optimizeWrite = true))
+      val (root, lake) = freshLake(s, "q138_lake", optimizeWrite = true)
       val docs = t(s, dir, "documents").select("doc_id", "lang", "n_chars")
       lake.writeAtomic(docs.filter(col("doc_id") % 2 === 0), "docs",
         partitionBy = Seq("lang"))
@@ -2664,9 +2627,7 @@ object SparkEntry {
     // relational oracle, no golden values.
     "q139_show_partitions" -> ((s, dir) => {
       s.conf.set("spark.sql.catalog.lake", "newspipe.io.LakeCatalog")
-      val root = java.nio.file.Files.createTempDirectory("q139_lake").toString
-      val lake = new newspipe.io.Lake(s,
-        newspipe.io.LakeConfig(basePath = root, optimizeWrite = true))
+      val (root, lake) = freshLake(s, "q139_lake", optimizeWrite = true)
       lake.writeAtomic(t(s, dir, "documents")
         .select("doc_id", "lang", "n_chars"), "docs",
         partitionBy = Seq("lang"))
@@ -2679,7 +2640,7 @@ object SparkEntry {
     // append lands beside them — the full lifecycle over adopted data.
     // Oracle: corpus minus the deleted tenth (relational, no goldens).
     "q140_convert_to_lake" -> ((s, dir) => {
-      val root = java.nio.file.Files.createTempDirectory("q140_lake").toString
+      val root = scratchDir("q140_lake")
       val docs = t(s, dir, "documents").select("doc_id", "lang", "n_chars")
       docs.filter(col("doc_id") % 2 === 0)
         .write.partitionBy("lang").parquet(s"$root/docs")
@@ -2738,9 +2699,7 @@ object SparkEntry {
     // path and stays correct; both legs ride the corpus oracle.
     "q142_metadata_count" -> ((s, dir) => {
       s.conf.set("spark.sql.catalog.lake", "newspipe.io.LakeCatalog")
-      val root = java.nio.file.Files.createTempDirectory("q142_lake").toString
-      val lake = new newspipe.io.Lake(s,
-        newspipe.io.LakeConfig(basePath = root))
+      val (root, lake) = freshLake(s, "q142_lake")
       lake.writeAtomic(t(s, dir, "documents")
         .select("doc_id", "lang", "n_chars"), "docs")
       lake.setProperties("docs",
@@ -2782,7 +2741,7 @@ object SparkEntry {
     // would double id_sum and fail the hash.
     "q144_stream_sink" -> ((s, dir) => {
       s.conf.set("spark.sql.catalog.lake", "newspipe.io.LakeCatalog")
-      val root = java.nio.file.Files.createTempDirectory("q144_lake").toString
+      val root = scratchDir("q144_lake")
       s.sql(s"CREATE TABLE lake.`$root`.docs " +
         "(doc_id BIGINT, lang STRING, n_chars BIGINT)")
       val docs = t(s, dir, "documents").select("doc_id", "lang", "n_chars")
@@ -2841,9 +2800,7 @@ object SparkEntry {
     // doesn't happen: O(selected partition) read+shuffle+write, not a
     // layer rewrite. Data-invisible → the oracle is the corpus agg.
     "q145_optimize_where" -> ((s, dir) => {
-      val root = java.nio.file.Files.createTempDirectory("q145_lake").toString
-      val lake = new newspipe.io.Lake(s,
-        newspipe.io.LakeConfig(basePath = root))
+      val (root, lake) = freshLake(s, "q145_lake")
       lake.writeAtomic(
         t(s, dir, "documents").select("doc_id", "lang", "n_chars")
           .repartition(8),
@@ -2895,9 +2852,7 @@ object SparkEntry {
     // deletes = the seeded evens the predicate removed.
     "q146_stream_read_cdf" -> ((s, dir) => {
       s.conf.set("spark.sql.catalog.lake", "newspipe.io.LakeCatalog")
-      val root = java.nio.file.Files.createTempDirectory("q146_lake").toString
-      val lake = new newspipe.io.Lake(s,
-        newspipe.io.LakeConfig(basePath = root))
+      val (root, lake) = freshLake(s, "q146_lake")
       val docs = t(s, dir, "documents").select("doc_id", "lang", "n_chars")
       lake.writeAtomic(docs.filter(col("doc_id") % 2 === 0), "docs")
       val s2 = org.apache.spark.sql.NewspipeSqlBridge.sessionWithExtensions(
@@ -2964,9 +2919,7 @@ object SparkEntry {
     // q86's verbatim.
     "q149_v2_update" -> ((s, dir) => {
       s.conf.set("spark.sql.catalog.lakev2", "newspipe.io.LakeCatalog")
-      val root = java.nio.file.Files.createTempDirectory("q149_lake").toString
-      val lake = new newspipe.io.Lake(s,
-        newspipe.io.LakeConfig(basePath = root))
+      val (root, lake) = freshLake(s, "q149_lake")
       lake.writeAtomic(t(s, dir, "documents")
         .repartitionByRange(8, col("n_chars"))
         .sortWithinPartitions("n_chars"), "docs")
@@ -2998,9 +2951,7 @@ object SparkEntry {
     // all three branches relationally.
     "q150_v2_merge" -> ((s, dir) => {
       s.conf.set("spark.sql.catalog.lakev2", "newspipe.io.LakeCatalog")
-      val root = java.nio.file.Files.createTempDirectory("q150_lake").toString
-      val lake = new newspipe.io.Lake(s,
-        newspipe.io.LakeConfig(basePath = root))
+      val (root, lake) = freshLake(s, "q150_lake")
       val docs = t(s, dir, "documents")
       lake.writeAtomic(docs
         .repartitionByRange(8, col("doc_id"))
@@ -3043,9 +2994,7 @@ object SparkEntry {
     // replays the lookups relationally; pruning may only shrink the scan,
     // never the answer.
     "q151_bloom_index" -> ((s, dir) => {
-      val root = java.nio.file.Files.createTempDirectory("q151_lake").toString
-      val lake = new newspipe.io.Lake(s,
-        newspipe.io.LakeConfig(basePath = root))
+      val (root, lake) = freshLake(s, "q151_lake")
       lake.writeAtomic(t(s, dir, "documents")
         .repartitionByRange(8, col("n_chars"))
         .sortWithinPartitions("n_chars"), "docs")
@@ -3144,9 +3093,7 @@ object SparkEntry {
     // closed-form).
     "q156_add_column" -> ((s, dir) => {
       s.conf.set("spark.sql.catalog.lakeac", "newspipe.io.LakeCatalog")
-      val root = java.nio.file.Files.createTempDirectory("q156_lake").toString
-      val lake = new newspipe.io.Lake(s,
-        newspipe.io.LakeConfig(basePath = root))
+      val (root, lake) = freshLake(s, "q156_lake")
       val docs = t(s, dir, "documents")
       lake.writeAtomic(docs, "docs")
       val before = lake.listVersions("docs").toSet
@@ -3220,9 +3167,7 @@ object SparkEntry {
     // one staging pass, re-parented marker — instead of retrying from
     // scratch. Data-invisible: the oracle is the union corpus.
     "q158_optimize_rebase" -> ((s, dir) => {
-      val root = java.nio.file.Files.createTempDirectory("q158_lake").toString
-      val lake = new newspipe.io.Lake(s,
-        newspipe.io.LakeConfig(basePath = root))
+      val (root, lake) = freshLake(s, "q158_lake")
       val docs = t(s, dir, "documents").select("doc_id", "lang", "n_chars")
       lake.writeAtomic(docs.repartition(16), "docs") // 16 sliver files
       val extra = docs.filter(col("doc_id") % 10 === 7)
@@ -3256,9 +3201,7 @@ object SparkEntry {
     // references ../docs), and read BOTH forks — the clone serves the
     // full version-1 corpus while the source serves the post-delete head.
     "q159_shallow_clone" -> ((s, dir) => {
-      val root = java.nio.file.Files.createTempDirectory("q159_lake").toString
-      val lake = new newspipe.io.Lake(s,
-        newspipe.io.LakeConfig(basePath = root))
+      val (root, lake) = freshLake(s, "q159_lake")
       lake.writeAtomic(t(s, dir, "documents")
         .select("doc_id", "lang", "n_chars")
         .repartitionByRange(8, col("n_chars"))
@@ -3298,9 +3241,7 @@ object SparkEntry {
     // while the pre-evolution version stays time-travel-readable. The
     // rewrite is data-invisible, so the oracle is the corpus agg.
     "q160_repartition_layer" -> ((s, dir) => {
-      val root = java.nio.file.Files.createTempDirectory("q160_lake").toString
-      val lake = new newspipe.io.Lake(s,
-        newspipe.io.LakeConfig(basePath = root))
+      val (root, lake) = freshLake(s, "q160_lake")
       val docs = t(s, dir, "documents").select("doc_id", "lang", "n_chars")
       lake.writeAtomic(docs.repartition(8), "docs") // flat, 8 files
       val v1 = lake.listVersions("docs").head
@@ -3336,9 +3277,7 @@ object SparkEntry {
     // values only a 64-bit column can hold. Time travel still serves the
     // pre-widening version at its own narrow schema.
     "q161_widen_column" -> ((s, dir) => {
-      val root = java.nio.file.Files.createTempDirectory("q161_lake").toString
-      val lake = new newspipe.io.Lake(s,
-        newspipe.io.LakeConfig(basePath = root))
+      val (root, lake) = freshLake(s, "q161_lake")
       val docs = t(s, dir, "documents").select(col("doc_id"), col("lang"),
         (col("n_chars") % 1000).cast("int").as("rating"))
       lake.writeAtomic(docs.repartition(4), "docs")
@@ -3372,9 +3311,7 @@ object SparkEntry {
     // n_chars predicate then skips files it previously couldn't. The
     // rewrite is data-invisible, so the oracle is the corpus agg.
     "q162_cluster_by" -> ((s, dir) => {
-      val root = java.nio.file.Files.createTempDirectory("q162_lake").toString
-      val lake = new newspipe.io.Lake(s,
-        newspipe.io.LakeConfig(basePath = root))
+      val (root, lake) = freshLake(s, "q162_lake")
       val docs = t(s, dir, "documents").select("doc_id", "lang", "n_chars")
       lake.writeAtomic(docs.repartition(8), "docs") // anti-clustered
       val pred = col("n_chars").between(400, 450)
@@ -3442,9 +3379,7 @@ object SparkEntry {
     // zero-copy fork can have). Both forks read through the same DV
     // commit; a later rewrite-delete on the clone diverges them.
     "q164_clone_dv" -> ((s, dir) => {
-      val root = java.nio.file.Files.createTempDirectory("q164_lake").toString
-      val lake = new newspipe.io.Lake(s,
-        newspipe.io.LakeConfig(basePath = root))
+      val (root, lake) = freshLake(s, "q164_lake")
       lake.writeAtomic(t(s, dir, "documents")
         .select("doc_id", "lang", "n_chars")
         .repartitionByRange(8, col("n_chars"))
@@ -3474,8 +3409,8 @@ object SparkEntry {
     // source serves its post-delete head, and the clone registered a
     // `_CLONE_PINS` entry so source vacuums can't reclaim what it reads.
     "q166_cross_base_clone" -> ((s, dir) => {
-      val rootA = java.nio.file.Files.createTempDirectory("q166_src").toString
-      val rootB = java.nio.file.Files.createTempDirectory("q166_dst").toString
+      val rootA = scratchDir("q166_src")
+      val rootB = scratchDir("q166_dst")
       val lakeA = new newspipe.io.Lake(s,
         newspipe.io.LakeConfig(basePath = rootA))
       val lakeB = new newspipe.io.Lake(s,
@@ -3525,9 +3460,7 @@ object SparkEntry {
     // checkpoint() materializes the fold data-invisibly. The oracle is
     // the corpus union (the 10 slices re-key the whole corpus).
     "q167_incremental_commits" -> ((s, dir) => {
-      val root = java.nio.file.Files.createTempDirectory("q167_lake").toString
-      val lake = new newspipe.io.Lake(s,
-        newspipe.io.LakeConfig(basePath = root))
+      val (root, lake) = freshLake(s, "q167_lake")
       val docs = t(s, dir, "documents").select("doc_id", "lang", "n_chars")
       lake.writeAtomic(docs.repartitionByRange(8, col("doc_id"))
         .sortWithinPartitions("doc_id"), "docs")
@@ -3566,9 +3499,7 @@ object SparkEntry {
     // travel keeps the narrow schema, and the append leg lands values
     // only the widened type can hold (8 integer digits, 4 decimals).
     "q165_widen_decimal" -> ((s, dir) => {
-      val root = java.nio.file.Files.createTempDirectory("q165_lake").toString
-      val lake = new newspipe.io.Lake(s,
-        newspipe.io.LakeConfig(basePath = root))
+      val (root, lake) = freshLake(s, "q165_lake")
       // exact decimal from digits (no division — string→decimal parses
       // identically in Spark and the oracle)
       val amount = concat(col("n_chars").cast("string"), lit("."),
@@ -3607,9 +3538,7 @@ object SparkEntry {
     // (Lake.augmentGenerated derives the implied d-conjunct), pinned
     // in-query before the relational answer.
     "q168_generated_columns" -> ((s, dir) => {
-      val root = java.nio.file.Files.createTempDirectory("q168_lake").toString
-      val lake = new newspipe.io.Lake(s,
-        newspipe.io.LakeConfig(basePath = root))
+      val (root, lake) = freshLake(s, "q168_lake")
       lake.addGeneratedColumn("ev", "d", "CAST(ts AS DATE)")
       lake.setProperties("ev", Map("lake.partitionBy" -> "d"))
       val evRaw = t(s, dir, "events")
@@ -3648,9 +3577,7 @@ object SparkEntry {
     // step contributes ZERO feed rows (same ids + same data cancel in
     // the multiset diff — compaction is invisible to the tracked feed).
     "q169_row_tracking" -> ((s, dir) => {
-      val root = java.nio.file.Files.createTempDirectory("q169_lake").toString
-      val lake = new newspipe.io.Lake(s,
-        newspipe.io.LakeConfig(basePath = root))
+      val (root, lake) = freshLake(s, "q169_lake")
       val docs = t(s, dir, "documents")
       lake.writeAtomic(docs.repartitionByRange(8, col("doc_id"))
         .sortWithinPartitions("doc_id"), "docs")
@@ -3689,9 +3616,7 @@ object SparkEntry {
     // ALWAYS mode refuses an explicit value, and the series is gap-free
     // across the two commits (watermark carried through the manifest).
     "q170_identity_columns" -> ((s, dir) => {
-      val root = java.nio.file.Files.createTempDirectory("q170_lake").toString
-      val lake = new newspipe.io.Lake(s,
-        newspipe.io.LakeConfig(basePath = root))
+      val (root, lake) = freshLake(s, "q170_lake")
       lake.addIdentityColumn("docs", "rid", start = 1000L, step = 7L)
       val docs = t(s, dir, "documents").select("doc_id", "lang", "n_chars")
       lake.writeAtomic(docs.filter(col("doc_id") % 2 === 0)
@@ -3723,9 +3648,7 @@ object SparkEntry {
     // replays all four clauses relationally.
     "q171_merge_matrix" -> ((s, dir) => {
       s.conf.set("spark.sql.catalog.lake", "newspipe.io.LakeCatalog")
-      val root = java.nio.file.Files.createTempDirectory("q171_lake").toString
-      val lake = new newspipe.io.Lake(s,
-        newspipe.io.LakeConfig(basePath = root))
+      val (root, lake) = freshLake(s, "q171_lake")
       val docs = t(s, dir, "documents").select("doc_id", "lang", "n_chars")
       lake.writeAtomic(docs.filter(col("doc_id") % 2 === 0)
         .repartitionByRange(6, col("doc_id"))
@@ -3757,9 +3680,7 @@ object SparkEntry {
     // one call the layer holds EXACTLY the source snapshot. The oracle is
     // simply the source definition (the whole point of the op).
     "q172_sync_from" -> ((s, dir) => {
-      val root = java.nio.file.Files.createTempDirectory("q172_lake").toString
-      val lake = new newspipe.io.Lake(s,
-        newspipe.io.LakeConfig(basePath = root))
+      val (root, lake) = freshLake(s, "q172_lake")
       val docs = t(s, dir, "documents").select("doc_id", "lang", "n_chars")
       lake.writeAtomic(docs.filter(col("doc_id") % 2 === 0)
         .repartitionByRange(6, col("doc_id"))
@@ -3783,9 +3704,7 @@ object SparkEntry {
     // appends read the constant, post-DROP appends read NULL again.
     "q173_default_values" -> ((s, dir) => {
       s.conf.set("spark.sql.catalog.lake", "newspipe.io.LakeCatalog")
-      val root = java.nio.file.Files.createTempDirectory("q173_lake").toString
-      val lake = new newspipe.io.Lake(s,
-        newspipe.io.LakeConfig(basePath = root))
+      val (root, lake) = freshLake(s, "q173_lake")
       val docs = t(s, dir, "documents").select("doc_id", "lang", "n_chars")
       lake.writeAtomic(docs.filter(col("doc_id") % 2 === 0), "docs")
       lake.addColumn("docs", "quality",
@@ -3817,9 +3736,7 @@ object SparkEntry {
     // limit documented in LakeVariantSpec: the variant column itself
     // contributes no min/max pruning; sibling scalars keep pruning.
     "q174_variant_metadata" -> ((s, dir) => {
-      val root = java.nio.file.Files.createTempDirectory("q174_lake").toString
-      val lake = new newspipe.io.Lake(s,
-        newspipe.io.LakeConfig(basePath = root))
+      val (root, lake) = freshLake(s, "q174_lake")
       val docs = t(s, dir, "documents")
         .select(col("doc_id"), expr(
           "parse_json(to_json(named_struct(" +
@@ -3850,9 +3767,7 @@ object SparkEntry {
     // pair shares ONE _row_id); the oracle replays the operation order
     // relationally.
     "q175_stream_tracked_feed" -> ((s, dir) => {
-      val root = java.nio.file.Files.createTempDirectory("q175_lake").toString
-      val lake = new newspipe.io.Lake(s,
-        newspipe.io.LakeConfig(basePath = root))
+      val (root, lake) = freshLake(s, "q175_lake")
       val docs = t(s, dir, "documents").select("doc_id", "lang", "n_chars")
       lake.writeAtomic(docs.filter(col("doc_id") % 2 === 0)
         .repartitionByRange(4, col("doc_id")), "docs")
@@ -3907,9 +3822,7 @@ object SparkEntry {
     // every clean file rides the manifest by reference. O(DV'd files),
     // data-invisible; the oracle is the post-delete corpus.
     "q176_reorg_purge" -> ((s, dir) => {
-      val root = java.nio.file.Files.createTempDirectory("q176_lake").toString
-      val lake = new newspipe.io.Lake(s,
-        newspipe.io.LakeConfig(basePath = root))
+      val (root, lake) = freshLake(s, "q176_lake")
       val docs = t(s, dir, "documents").select("doc_id", "lang", "n_chars")
       lake.writeAtomic(docs.repartitionByRange(8, col("doc_id"))
         .sortWithinPartitions("doc_id"), "docs")
@@ -3946,8 +3859,8 @@ object SparkEntry {
     // pin the idempotency (the re-run is a NOOP) and the incremental
     // load (only the new batch's files load).
     "q177_copy_into" -> ((s, dir) => {
-      val root = java.nio.file.Files.createTempDirectory("q177_lake").toString
-      val stage = java.nio.file.Files.createTempDirectory("q177_stg").toString
+      val root = scratchDir("q177_lake")
+      val stage = scratchDir("q177_stg")
       val lake = new newspipe.io.Lake(s,
         newspipe.io.LakeConfig(basePath = root))
       val docs = t(s, dir, "documents").select("doc_id", "lang", "n_chars")
@@ -3980,9 +3893,7 @@ object SparkEntry {
     // oracle replays the operation order relationally.
     "q178_sql_tracked_changes" -> ((s, dir) => {
       newspipe.NewspipeExtensions.register(s)
-      val root = java.nio.file.Files.createTempDirectory("q178_lake").toString
-      val lake = new newspipe.io.Lake(s,
-        newspipe.io.LakeConfig(basePath = root))
+      val (root, lake) = freshLake(s, "q178_lake")
       val docs = t(s, dir, "documents").select("doc_id", "lang", "n_chars")
       lake.writeAtomic(docs.filter(col("doc_id") % 2 === 0)
         .repartitionByRange(4, col("doc_id")), "docs")
@@ -4022,9 +3933,7 @@ object SparkEntry {
     // corpora relationally.
     "q179_replace_table" -> ((s, dir) => {
       s.conf.set("spark.sql.catalog.lake", "newspipe.io.LakeCatalog")
-      val root = java.nio.file.Files.createTempDirectory("q179_lake").toString
-      val lake = new newspipe.io.Lake(s,
-        newspipe.io.LakeConfig(basePath = root))
+      val (root, lake) = freshLake(s, "q179_lake")
       val docs = t(s, dir, "documents").select("doc_id", "lang", "n_chars")
       lake.writeAtomic(docs.filter(col("doc_id") % 2 === 0), "docs")
       val preV = lake.listVersions("docs")
@@ -4062,9 +3971,7 @@ object SparkEntry {
     // re-parented onto the winner); the oracle replays the union of the
     // three increments relationally.
     "q180_append_rebase" -> ((s, dir) => {
-      val root = java.nio.file.Files.createTempDirectory("q180_lake").toString
-      val lake = new newspipe.io.Lake(s,
-        newspipe.io.LakeConfig(basePath = root))
+      val (root, lake) = freshLake(s, "q180_lake")
       val docs = t(s, dir, "documents").select("doc_id", "lang", "n_chars")
       lake.writeAtomic(docs.filter(col("doc_id") % 3 === 0), "docs")
       var fired = 0
@@ -4097,7 +4004,7 @@ object SparkEntry {
     // replays the loaded corpus.
     "q181_v2_constraints" -> ((s, dir) => {
       s.conf.set("spark.sql.catalog.lake", "newspipe.io.LakeCatalog")
-      val root = java.nio.file.Files.createTempDirectory("q181_lake").toString
+      val root = scratchDir("q181_lake")
       val docs = t(s, dir, "documents").select("doc_id", "lang", "n_chars")
       docs.createOrReplaceTempView("q181_src")
       s.sql(
@@ -4139,9 +4046,7 @@ object SparkEntry {
     // the two re-landed regions.
     "q182_replace_where" -> ((s, dir) => {
       s.conf.set("spark.sql.catalog.lake", "newspipe.io.LakeCatalog")
-      val root = java.nio.file.Files.createTempDirectory("q182_lake").toString
-      val lake = new newspipe.io.Lake(s,
-        newspipe.io.LakeConfig(basePath = root))
+      val (root, lake) = freshLake(s, "q182_lake")
       val docs = t(s, dir, "documents").select("doc_id", "lang", "n_chars")
       lake.writeAtomic(docs, "docs", partitionBy = Seq("lang"))
       val r = lake.overwriteWhere("docs",
@@ -4179,9 +4084,7 @@ object SparkEntry {
     // covers 'zh'), so the file metrics are oracle constants while the
     // row metrics derive from the corpus relationally.
     "q183_history_metrics" -> ((s, dir) => {
-      val root = java.nio.file.Files.createTempDirectory("q183_lake").toString
-      val lake = new newspipe.io.Lake(s,
-        newspipe.io.LakeConfig(basePath = root))
+      val (root, lake) = freshLake(s, "q183_lake")
       val docs = t(s, dir, "documents")
       lake.writeAtomic(docs.coalesce(1), "docs")
       lake.appendAtomic(docs.filter(col("lang") === "en").coalesce(1),
@@ -4202,9 +4105,7 @@ object SparkEntry {
     // complement ∪ the two re-derived regions.
     "q185_dynamic_overwrite" -> ((s, dir) => {
       s.conf.set("spark.sql.catalog.lake", "newspipe.io.LakeCatalog")
-      val root = java.nio.file.Files.createTempDirectory("q185_lake").toString
-      val lake = new newspipe.io.Lake(s,
-        newspipe.io.LakeConfig(basePath = root))
+      val (root, lake) = freshLake(s, "q185_lake")
       val docs = t(s, dir, "documents").select("doc_id", "lang", "n_chars")
       lake.writeAtomic(docs, "docs", partitionBy = Seq("lang"))
       val r = lake.overwritePartitionsDynamic("docs",
@@ -4262,9 +4163,7 @@ object SparkEntry {
     // q37/q38/q184.
     "q186_vector_index" -> ((s, dir) => {
       newspipe.NewspipeExtensions.register(s)
-      val root = java.nio.file.Files.createTempDirectory("q186_lake").toString
-      val lake = new newspipe.io.Lake(s,
-        newspipe.io.LakeConfig(basePath = root))
+      val (root, lake) = freshLake(s, "q186_lake")
       val emb = t(s, dir, "embeddings").select("vec_id", "embedding")
         .filter(newspipe.ops.Similarity.l2Norm(col("embedding")) > 0)
       val queries = emb.filter(col("vec_id") < 10)
@@ -4292,9 +4191,7 @@ object SparkEntry {
     // truth as q186, through the SQL statement + TVF route.
     "q187_vector_index_ivf" -> ((s, dir) => {
       newspipe.NewspipeExtensions.register(s)
-      val root = java.nio.file.Files.createTempDirectory("q187_lake").toString
-      val lake = new newspipe.io.Lake(s,
-        newspipe.io.LakeConfig(basePath = root))
+      val (root, lake) = freshLake(s, "q187_lake")
       val emb = t(s, dir, "embeddings").select("vec_id", "embedding")
         .filter(newspipe.ops.Similarity.l2Norm(col("embedding")) > 0)
       val queries = emb.filter(col("vec_id") < 10)
@@ -4330,9 +4227,7 @@ object SparkEntry {
     // share their original's signature exactly).
     "q188_dedup_index" -> ((s, dir) => {
       newspipe.NewspipeExtensions.register(s)
-      val root = java.nio.file.Files.createTempDirectory("q188_lake").toString
-      val lake = new newspipe.io.Lake(s,
-        newspipe.io.LakeConfig(basePath = root))
+      val (root, lake) = freshLake(s, "q188_lake")
       val docs = t(s, dir, "documents").select("doc_id", "text")
       lake.writeAtomic(docs.repartitionByRange(6, col("doc_id"))
         .sortWithinPartitions("doc_id"), "docs")
@@ -4364,9 +4259,7 @@ object SparkEntry {
     // independent of corpus scale.
     "q189_append_deduped" -> ((s, dir) => {
       import s.implicits._
-      val root = java.nio.file.Files.createTempDirectory("q189_lake").toString
-      val lake = new newspipe.io.Lake(s,
-        newspipe.io.LakeConfig(basePath = root))
+      val (root, lake) = freshLake(s, "q189_lake")
       val docs = t(s, dir, "documents").select("doc_id", "text")
       val baseN = docs.count()
       lake.writeAtomic(docs.repartitionByRange(6, col("doc_id"))
@@ -4402,9 +4295,7 @@ object SparkEntry {
     // truth as q186/q187, through the statement + TVF route.
     "q191_vector_index_pq" -> ((s, dir) => {
       newspipe.NewspipeExtensions.register(s)
-      val root = java.nio.file.Files.createTempDirectory("q191_lake").toString
-      val lake = new newspipe.io.Lake(s,
-        newspipe.io.LakeConfig(basePath = root))
+      val (root, lake) = freshLake(s, "q191_lake")
       val emb = t(s, dir, "embeddings").select("vec_id", "embedding")
         .filter(newspipe.ops.Similarity.l2Norm(col("embedding")) > 0)
       val queries = emb.filter(col("vec_id") < 10)
@@ -4436,9 +4327,7 @@ object SparkEntry {
     // brute-force oracle applies with no planted-recall caveat). The
     // corpus parquet is read only for the landing itself.
     "q190_vector_near_dups" -> ((s, dir) => {
-      val root = java.nio.file.Files.createTempDirectory("q190_lake").toString
-      val lake = new newspipe.io.Lake(s,
-        newspipe.io.LakeConfig(basePath = root))
+      val (root, lake) = freshLake(s, "q190_lake")
       val emb = t(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       lake.writeAtomic(emb.repartitionByRange(6, col("vec_id"))
@@ -4471,9 +4360,7 @@ object SparkEntry {
     // truth applies unchanged. The 7-arg TVF form carries the probe.
     "q192_vector_routed" -> ((s, dir) => {
       newspipe.NewspipeExtensions.register(s)
-      val root = java.nio.file.Files.createTempDirectory("q192_lake").toString
-      val lake = new newspipe.io.Lake(s,
-        newspipe.io.LakeConfig(basePath = root))
+      val (root, lake) = freshLake(s, "q192_lake")
       val emb = t(s, dir, "embeddings").select("vec_id", "embedding")
         .filter(newspipe.ops.Similarity.l2Norm(col("embedding")) > 0)
       val queries = emb.filter(col("vec_id") < 10)
@@ -4512,9 +4399,7 @@ object SparkEntry {
     // require-pinned in-query.
     "q193_sql_insert_deduped" -> ((s, dir) => {
       import s.implicits._
-      val root = java.nio.file.Files.createTempDirectory("q193_lake").toString
-      val lake = new newspipe.io.Lake(s,
-        newspipe.io.LakeConfig(basePath = root))
+      val (root, lake) = freshLake(s, "q193_lake")
       val docs = t(s, dir, "documents").select("doc_id", "text")
       val baseN = docs.count()
       lake.writeAtomic(docs.repartitionByRange(6, col("doc_id"))

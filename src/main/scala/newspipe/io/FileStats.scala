@@ -98,7 +98,8 @@ object FileStats {
         if (s.isFile && !n.startsWith("_") && !n.startsWith(".") &&
           n.endsWith(".parquet")) buf += s.getPath
       }
-      buf.result()
+      // directory order varies by filesystem; the sidecar must not
+      buf.result().sortBy(_.toString)
     }
     if (files.isEmpty) return Nil
     // listFiles yields fs-qualified paths; qualify the root the same way

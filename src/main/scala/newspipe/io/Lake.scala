@@ -926,7 +926,7 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
         val inv = snapshotInventory(layer, snap)
         val f = fs(snap)
         // one recursive listing per referenced version dir (the object-
-        // store-friendly shape readIndexed uses), not a getFileStatus
+        // store-friendly shape scanFiles uses), not a getFileStatus
         // round-trip per inventory file — a 10⁵-file layer stays a handful
         // of LIST calls
         val sizeByRel = inv.map(versionDirOf).distinct
@@ -1370,76 +1370,123 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
         snapshotDirFilesRel(snap).map(layerPrefix + _)
     }
 
-  /** Read one snapshot, manifest-aware. Manifest snapshots load their
-    * explicit file list through [[readRelFiles]] (per-version-dir groups,
-    * so hive `k=v` segments surface as partition columns); an empty
-    * manifest (every row deleted) resolves to an empty frame with the
-    * recorded schema.
+  /** Read one snapshot, manifest-aware, through [[scanFiles]]. Manifest
+    * snapshots scan their inventory under the RECORDED schema (Delta's
+    * log-schema role: files predating a schema-evolving merge/append read
+    * null for the added columns) with folded stats and Bloom sidecars and
+    * their deletion vectors; an empty manifest (every row deleted)
+    * resolves to an empty frame with the recorded schema. Self-contained
+    * snapshots scan their directory under the schema this instance
+    * committed, else one sample footer's, with partition types inferred
+    * as discovery infers them. `mergeSchema` is the one discovery read of
+    * committed data, and so the independent reference for the index: on a
+    * self-contained snapshot the footer union, on a manifest snapshot
+    * Spark's own listing and partition parse under the recorded schema
+    * ([[scanFiles]]' `discovery` mode).
     */
   private def loadSnapshot(layer: String, snap: Path,
       mergeSchema: Boolean): DataFrame =
     manifestOf(snap) match {
+      case None if mergeSchema =>
+        spark.read.format("parquet").option("mergeSchema", "true")
+          .load(snap.toString)
       case None =>
-        // self-contained snapshot: the indexed read applies too (one
-        // listing, automatic stats skipping) when non-partitioned parquet;
-        // schema comes from what this instance committed, else one sample
-        // footer (cached) — the same single file mergeSchema=false
-        // discovery would have consulted. Hive-partitioned snapshots hand
-        // the committed data schema to discovery (partition columns still
-        // come from the directory names), which skips its inference job.
-        lazy val rels = snapshotDirFilesRel(snap)
-        val committed =
-          if (mergeSchema) None else committedSchemas.get(snap.toString)
-        if (!mergeSchema && rels.nonEmpty &&
-            !rels.exists(_.contains("="))) {
-          readIndexed(snap.toString, snap, rels, committed.getOrElse(
-            footerSchema(s"${snap.toString}/${rels.head}")))
-        } else {
-          val reader = spark.read.format("parquet")
-          (if (mergeSchema) reader.option("mergeSchema", "true")
-           else committed.fold(reader)(reader.schema))
-            .load(snap.toString)
-        }
+        val rels = snapshotDirFilesRel(snap)
+        val committed = committedSchemas.get(snap.toString)
+        if (rels.isEmpty) emptyFrame(committed.getOrElse(
+          throw new IllegalStateException(s"snapshot ${snap.getName} of " +
+            s"layer '$layer' holds no data files and records no schema")))
+        else scanFiles(snap.toString, snap, rels, committed.getOrElse(
+            footerSchema(s"${snap.toString}/${rels.head}")),
+          statsIn = snapshotSidecar(snap),
+          bloomIn = bloomSidecarRaw(snap).fold(
+            Map.empty[String, Map[String, Array[Byte]]])(_._2))
       case Some(m) if m.files.isEmpty => emptyFrame(m.schema)
+      case Some(m) if mergeSchema =>
+        scanFiles(layerPath(layer), snap, m.files, m.schema, m.mapping,
+          dvs = Some(snap), discovery = true)
       case Some(m) =>
-        // the RECORDED schema is authoritative (Delta's log-schema role):
-        // files predating a schema-evolving merge/append read null for the
-        // added columns. Under COLUMN MAPPING the files carry PHYSICAL
-        // names — scan with the physical schema, rename back to logical
-        // after. Non-partitioned parquet inventories read through
-        // a [[LakeFileIndex]] (one scan node, automatic stats skipping on
-        // any filter); hive-partitioned layers and mergeSchema reads keep
-        // the discovery-based union (partition-column resolution / footer
-        // union live there)
-        val phys = physicalSchema(m.schema, m.mapping)
-        val raw =
-          if (!mergeSchema && !m.files.exists(_.contains("=")))
-            readIndexed(layerPath(layer), snap, m.files, phys,
-              statsIn = Some(statsOfSnapshot(layer, snap).values.toSeq),
-              bloomIn = Some(bloomOfSnapshot(layer, snap)))
-          else if (m.dvs.isEmpty)
-            readRelFiles(layer, m.files, mergeSchema, schemaHint = Some(phys))
-          else
-            dvFilter(readRelFiles(layer, m.files, mergeSchema,
-              schemaHint = Some(phys), withMeta = true),
-              dvPairs(layerPath(layer), snap))
-        toLogical(raw, m.mapping)
+        scanFiles(layerPath(layer), snap, m.files, m.schema, m.mapping,
+          dvs = Some(snap),
+          statsIn = statsOfSnapshot(layer, snap).values.toSeq,
+          bloomIn = bloomOfSnapshot(layer, snap))
     }
 
-  /** Snapshot read through [[LakeFileIndex]]: statuses resolved with ONE
-    * recursive listing per referenced version dir (not per file — the
-    * object-store-friendly shape), stats keyed by qualified path so
-    * `listFiles` can prune against the exact identities Spark will scan.
-    * `base` is the root the inventory (and the snapshot's sidecar paths)
-    * are relative to: the layer root for manifest snapshots, the snapshot
-    * dir itself for self-contained ones.
+  /** The ONE read of committed snapshot data: exactly `rels` through a
+    * [[LakeFileIndex]] — one scan node however many `_v/<version>` dirs
+    * the list spans, every filter pruning by partition, stats and Bloom.
+    *
+    *  - `base` is the root `rels` (and the sidecar paths) are relative to:
+    *    the layer root for manifest snapshots, the snapshot dir for
+    *    self-contained ones. Statuses come from ONE recursive listing per
+    *    referenced version dir (the object-store-friendly shape).
+    *  - `schema` is the LOGICAL read schema; under column `mapping` the
+    *    scan reads the physical names and renames back. Hive `k=v`
+    *    segments below each rel's version dir become partition columns
+    *    (Spark's own parse: [[org.apache.spark.sql.NewspipeSqlBridge
+    *    .parsePartitions]]), typed by `schema` where it names them, else
+    *    inferred exactly as discovery infers them; they come last, after
+    *    the data columns, as in a discovery read.
+    *  - `dvs`: the snapshot whose deletion vectors drop rows from the
+    *    `rels` that carry one (None: raw files). `positions` keeps the
+    *    `__dv_file`/`__dv_pos` pair (file path as the scan renders it,
+    *    parquet row index) for callers that address rows by position.
+    *  - `statsIn`/`bloomIn`: sidecar entries (keys relative to `base`)
+    *    for file skipping and the plan's exact row count.
+    *  - `discovery` swaps the index for Spark's own file discovery
+    *    ([[discoveryScan]]): the `read(layer, mergeSchema = true)`
+    *    reference the index is checked against, and nothing else.
     */
-  private def readIndexed(base: String, snap: Path,
-      rels: Seq[String],
+  private def scanFiles(base: String, snap: Path, rels: Seq[String],
       schema: org.apache.spark.sql.types.StructType,
-      statsIn: Option[Seq[FileStats.FileStat]] = None,
-      bloomIn: Option[Map[String, Map[String, Array[Byte]]]] = None)
-      : DataFrame = {
+      mapping: Map[String, String] = Map.empty,
+      dvs: Option[Path] = None, positions: Boolean = false,
+      statsIn: Seq[FileStats.FileStat] = Nil,
+      bloomIn: Map[String, Map[String, Array[Byte]]] = Map.empty,
+      discovery: Boolean = false): DataFrame = {
+    import org.apache.spark.sql.functions.col
+    val phys = physicalSchema(schema, mapping)
+    val dvScope = dvs.map(d => (d, dvMapOf(d))).filter { case (_, dv) =>
+      rels.exists(dv.contains) }
+    // metadata columns resolve only on the file relation itself, so the
+    // (file, position) projection sits directly on each scan
+    def withMeta(df: DataFrame): DataFrame =
+      if (dvScope.isEmpty && !positions) df
+      else df.select((df.columns.map(c => col(s"`$c`")) :+
+        col("_metadata.file_path").as("__dv_file") :+
+        col("_metadata.row_index").as("__dv_pos")).toSeq: _*)
+    val metaed =
+      if (discovery) discoveryScan(base, rels, phys, withMeta)
+      else withMeta(indexScan(base, snap, rels, phys, statsIn, bloomIn))
+    val alive = dvScope.fold(metaed) { case (d, _) =>
+      dvFilter(metaed, dvPairs(base, d, rels.toSet), keepMeta = positions)
+    }
+    toLogical(alive, mapping)
+  }
+
+  /** Spark's own discovery over exactly `rels`, under the physical schema
+    * `phys`: one load per `_v/<version>` dir, each rooted at its dir
+    * (discovery needs ONE root per load, and a manifest spans several),
+    * `perScan` applied to each load, then unioned. Only the
+    * `mergeSchema = true` read goes through it.
+    */
+  private def discoveryScan(base: String, rels: Seq[String],
+      phys: org.apache.spark.sql.types.StructType,
+      perScan: DataFrame => DataFrame): DataFrame =
+    rels.groupBy(versionDirOf).toSeq.sortBy(_._1).map { case (vdir, files) =>
+      perScan(spark.read.format("parquet")
+        .option("basePath", if (vdir.isEmpty) base else resolveRel(base, vdir))
+        .schema(phys).load(files.map(resolveRel(base, _)): _*))
+    }.reduce(_ unionByName _)
+
+  /** The [[LakeFileIndex]] relation over exactly `rels` (see [[scanFiles]]),
+    * scanning the physical schema `phys`.
+    */
+  private def indexScan(base: String, snap: Path, rels: Seq[String],
+      phys: org.apache.spark.sql.types.StructType,
+      statsIn: Seq[FileStats.FileStat],
+      bloomIn: Map[String, Map[String, Array[Byte]]]): DataFrame = {
+    import org.apache.spark.sql.NewspipeSqlBridge
     val basePath = new Path(base)
     val f = fs(basePath)
     val qualBase = f.makeQualified(basePath).toString.stripSuffix("/")
@@ -1450,19 +1497,21 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
         f.makeQualified(new Path(resolveRel(base, rel))).toString
       else s"$qualBase/$rel"
     val byDir = rels.groupBy(versionDirOf)
-    val statusByRel = scala.collection.mutable.HashMap.empty[String, org.apache.hadoop.fs.FileStatus]
+    def dirOf(vdir: String): Path =
+      f.makeQualified(if (vdir.isEmpty) basePath
+        else new Path(resolveRel(base, vdir)))
+    val statusByRel = scala.collection.mutable.HashMap.empty[String,
+      org.apache.hadoop.fs.FileStatus]
     byDir.keysIterator.foreach { vdir =>
-      val dir = if (vdir.isEmpty) basePath
-        else new Path(resolveRel(base, vdir))
       // reconstruct each listed file's manifest-rel key from the GROUP's
       // key + the path below the listed dir, so cross-layer groups key
       // exactly as their manifest records them
-      val dirPrefix = f.makeQualified(dir).toString.stripSuffix("/") + "/"
+      val dir = dirOf(vdir)
+      val dirPrefix = dir.toString.stripSuffix("/") + "/"
       val relPrefix = if (vdir.isEmpty) "" else vdir + "/"
       FsListing.filesRecursive(f, dir).foreach { s =>
-        if (s.isFile)
-          statusByRel(relPrefix +
-            s.getPath.toString.stripPrefix(dirPrefix)) = s
+        if (s.isFile) statusByRel(
+          relPrefix + s.getPath.toString.stripPrefix(dirPrefix)) = s
       }
     }
     val statuses = rels.map(rel => statusByRel.getOrElse(rel,
@@ -1470,22 +1519,47 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
         s"snapshot ${snap.getName} references missing data file '$rel' " +
           s"(under $base) — vacuumed past a pinned version, or external " +
           "deletion")))
-    // manifest callers pass FOLDED stats/bloom (incremental snapshots
-    // spread both across their chain); self-contained reads use their own
-    val statsByPath = statsIn.getOrElse(snapshotSidecar(snap))
-      .map(st => qual(st.path) -> st).toMap
-    val bloomFiles = bloomIn.orElse(bloomSidecarRaw(snap).map(_._2))
-    val bloomByPath = bloomFiles match {
-      case None =>
-        Map.empty[String, Map[String, org.apache.spark.util.sketch.BloomFilter]]
-      case Some(files) => files.map { case (rel, m) =>
-        qual(rel) ->
-          m.map { case (c, b) => c -> BloomIndex.deserialize(b) } }
+    // hive partitions: each version dir is its own discovery root, so
+    // each group parses against its own base; every group must agree on
+    // the partition columns (one layout per snapshot)
+    val parsed = byDir.toSeq.sortBy(_._1).flatMap { case (vdir, group) =>
+      val leafDirs = group.iterator.map(r => statusByRel(r).getPath.getParent)
+        .toSeq.distinct
+      val root = dirOf(vdir)
+      if (leafDirs.forall(_ == root)) None
+      else Some(NewspipeSqlBridge.parsePartitions(spark, leafDirs, root,
+        Some(phys)))
     }
-    // asNullable: file sources force every read column nullable (the
-    // DataFrameReader normalization this hand-built relation bypasses) —
-    // without it the vectorized reader REFUSES a file missing a
-    // non-nullable evolved column instead of null-padding it
+    val partSchema = parsed.headOption.map(_._1)
+      .getOrElse(org.apache.spark.sql.types.StructType(Nil))
+    require(parsed.forall(_._1 == partSchema),
+      s"snapshot ${snap.getName} mixes hive layouts across version dirs: " +
+        parsed.map(_._1.simpleString).distinct.mkString(" vs "))
+    val valuesByDir = parsed.flatMap(_._2).toMap
+    val partitions =
+      if (partSchema.isEmpty)
+        Seq(org.apache.spark.sql.catalyst.InternalRow.empty -> statuses)
+      else {
+        val grouped = scala.collection.mutable.LinkedHashMap.empty[Seq[Any],
+          (org.apache.spark.sql.catalyst.InternalRow,
+            Vector[org.apache.hadoop.fs.FileStatus])]
+        statuses.foreach { s =>
+          val values = valuesByDir.getOrElse(s.getPath.getParent,
+            throw new IllegalStateException(
+              s"snapshot ${snap.getName}: '${s.getPath}' sits outside the " +
+                s"hive layout ${partSchema.simpleString}"))
+          val key = values.toSeq(partSchema)
+          val (v, fs0) = grouped.getOrElse(key, (values, Vector.empty))
+          grouped(key) = (v, fs0 :+ s)
+        }
+        grouped.valuesIterator.toSeq
+      }
+    val partNames = partSchema.fieldNames.map(_.toLowerCase).toSet
+    val dataSchema = org.apache.spark.sql.types.StructType(
+      phys.fields.filterNot(fd => partNames.contains(fd.name.toLowerCase)))
+    val statsByPath = statsIn.map(st => qual(st.path) -> st).toMap
+    val bloomByPath = bloomIn.map { case (rel, m) =>
+      qual(rel) -> m.map { case (c, b) => c -> BloomIndex.deserialize(b) } }
     // exact plan-time cardinality from the sidecar (None when any file
     // lacks stats — the optimizer then falls back to size-only, never a
     // wrong count). DV'd rows are NOT subtracted here: the dv filter
@@ -1495,20 +1569,16 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
       val counts = rels.map(rel => statsByPath.get(qual(rel)).map(_.rows))
       if (counts.forall(_.isDefined)) Some(counts.flatten.sum) else None
     }
-    val raw = org.apache.spark.sql.NewspipeSqlBridge.fileIndexedDataFrame(spark,
-      new LakeFileIndex(statuses, statsByPath, basePath, bloomByPath),
-      org.apache.spark.sql.NewspipeSqlBridge.nullableSchema(schema),
+    // asNullable: file sources force every read column nullable (the
+    // DataFrameReader normalization this hand-built relation bypasses) —
+    // without it the vectorized reader REFUSES a file missing a
+    // non-nullable evolved column instead of null-padding it
+    NewspipeSqlBridge.fileIndexedDataFrame(spark,
+      new LakeFileIndex(partitions, partSchema, statsByPath, basePath,
+        bloomByPath),
+      NewspipeSqlBridge.nullableSchema(dataSchema),
       rowCount = metaRowCount,
       statsName = snap.getName)
-    val dv = dvMapOf(snap)
-    if (dv.isEmpty) raw
-    else {
-      import org.apache.spark.sql.functions.col
-      val metaed = raw.select((raw.columns.map(col) :+
-        col("_metadata.file_path").as("__dv_file") :+
-        col("_metadata.row_index").as("__dv_pos")).toSeq: _*)
-      dvFilter(metaed, dvPairs(base, snap, Some(rels.toSet)))
-    }
   }
 
   // ---- deletion vectors ---------------------------------------------------
@@ -1875,28 +1945,15 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
       s"layer '$layer' snapshot ${snap.getName}: ${missing.size} file(s) " +
         s"have no row-id base (e.g. ${missing.take(3).mkString(", ")}) — " +
         "committed before enableRowTracking? Re-run enableRowTracking")
-    val mapping = mappingOf(snap)
     val base = layerPath(layer)
-    val raw = readRelFiles(layer, rels,
-      schemaHint = Some(Lake.withRowIdField(physicalSchema(schema, mapping))),
-      withMeta = true)
-    val f = fs(new Path(base))
-    val qualBase = f.makeQualified(new Path(base)).toString.stripSuffix("/")
-    def qual(rel: String): String =
-      if (Lake.isForeignRel(rel))
-        f.makeQualified(new Path(resolveRel(base, rel))).toString
-      else s"$qualBase/$rel"
+    val alive = scanFiles(base, snap, rels, Lake.withRowIdField(schema),
+      mappingOf(snap), dvs = Some(snap), positions = true)
     import spark.implicits._
-    val basesDf = broadcast(rels.map(r => (qual(r), m.rowBases(r)))
+    val basesDf = broadcast(rels.map(r => (scanPath(base, r), m.rowBases(r)))
       .toDF("__rb_file", "__rb_base"))
-    val withId = raw.join(basesDf, col("__dv_file") === col("__rb_file"),
-      "left")
-      .withColumn(Lake.RowIdCol, coalesce(col(Lake.RowIdCol),
-        col("__rb_base") + col("__dv_pos")))
-      .drop("__rb_file", "__rb_base")
-    val alive = dvFilter(withId, dvPairs(base, snap, Some(rels.toSet)))
-    toLogical(alive, mapping).select((schema.fieldNames.map(col) :+
-      col(Lake.RowIdCol)).toSeq: _*)
+    alive.join(basesDf, col("__dv_file") === col("__rb_file"), "left")
+      .select((schema.fieldNames.map(col) :+ coalesce(col(Lake.RowIdCol),
+        col("__rb_base") + col("__dv_pos")).as(Lake.RowIdCol)).toSeq: _*)
   }
 
   // ---- CHECK constraints --------------------------------------------------
@@ -2368,41 +2425,41 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
       DeletionVectors.fromJson(readFully(new Path(p))))
   }
 
-  /** (qualified absolute file path, deleted position) pairs of a
-    * snapshot's DVs, optionally restricted to a file scope — the
-    * broadcast side of the read-path anti-join. Bounded by the
-    * `maxDvRows` discipline [[deleteWhereDv]] enforces at write time.
+  /** (scan path, deleted position) pairs of `snap`'s DVs on the `scope`
+    * files — the broadcast side of [[scanFiles]]' anti-join. Bounded by
+    * the `maxDvRows` discipline [[deleteWhereDv]] enforces at write time.
     */
   private def dvPairs(base: String, snap: Path,
-      scope: Option[Set[String]] = None): Seq[(String, Long)] = {
-    val dv = dvMapOf(snap)
-    val wanted = scope match {
-      case Some(s) => dv.filter { case (rel, _) => s.contains(rel) }
-      case None => dv
-    }
-    if (wanted.isEmpty) return Nil
-    val f = fs(new Path(base))
-    val qualBase = f.makeQualified(new Path(base)).toString.stripSuffix("/")
-    def qual(rel: String): String =
-      if (Lake.isForeignRel(rel))
-        f.makeQualified(new Path(resolveRel(base, rel))).toString
-      else s"$qualBase/$rel"
-    val payloadKey = payloadKeyOf _
-    wanted.groupBy(_._2).toSeq.flatMap { case (payloadRel, entries) =>
-      val all = dvPayload(base, payloadRel)
-      entries.keysIterator.flatMap(rel =>
-        all.getOrElse(payloadKey(rel), Nil).map(pos => (qual(rel), pos)))
-        .toSeq
-    }
-  }
+      scope: Set[String]): Seq[(String, Long)] =
+    dvMapOf(snap).filter { case (rel, _) => scope.contains(rel) }
+      .groupBy(_._2).toSeq.flatMap { case (payloadRel, entries) =>
+        val all = dvPayload(base, payloadRel)
+        entries.keysIterator.flatMap { rel =>
+          val key = scanPath(base, rel)
+          all.getOrElse(payloadKeyOf(rel), Nil).map(pos => (key, pos))
+        }.toSeq
+      }
+
+  /** A data file's path as a scan renders it in `_metadata.file_path`:
+    * the qualified path's URI form, so hive values that need escaping
+    * stay percent-encoded. Position-addressed reads (the DV anti-join,
+    * row-id bases) key rows by it; [[relOfScanPath]] inverts it.
+    */
+  private def scanPath(base: String, rel: String): String =
+    new Path(fs(new Path(base)).makeQualified(
+      new Path(resolveRel(base, rel))).toString).toUri.toString
+
+  /** The `base`-relative rel of a local (non-clone) file's [[scanPath]]. */
+  private def relOfScanPath(base: String, path: String): String =
+    new Path(new java.net.URI(path)).toString.stripPrefix(
+      fs(new Path(base)).makeQualified(new Path(base)).toString
+        .stripSuffix("/") + "/")
 
   /** Anti-join out deleted positions; `df` must carry
-    * `__dv_file`/`__dv_pos` (the per-relation `_metadata` projection —
-    * selected BEFORE any union, because metadata columns resolve only on
-    * the file relation itself).
+    * `__dv_file`/`__dv_pos` ([[scanFiles]]' `_metadata` projection).
     */
   private def dvFilter(df: DataFrame, pairs: Seq[(String, Long)],
-      keepMeta: Boolean = false): DataFrame = {
+      keepMeta: Boolean): DataFrame = {
     import org.apache.spark.sql.functions.{broadcast, col}
     val out =
       if (pairs.isEmpty) df
@@ -2486,13 +2543,10 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
       return Right(Lake.RowOpResult(snap.toString, 0, inventory.size,
         noop = true))
     val schema = snapshotSchema(layer, snap)
-    val raw = toLogical(readRelFiles(layer, affected,
-      schemaHint = Some(physicalSchema(schema, mapping)),
-      withMeta = true), mapping)
     // already-dead rows must not re-match (their positions are already in
     // the carried payloads — re-adding would be harmless but skews counts)
-    val alive = dvFilter(raw, dvPairs(base, snap, Some(affected.toSet)),
-      keepMeta = true)
+    val alive = scanFiles(base, snap, affected, schema, mapping,
+      dvs = Some(snap), positions = true)
     val matchedDf = alive.filter(predicate)
       .select(col("__dv_file"), col("__dv_pos")).persist()
     val matched = try {
@@ -2503,10 +2557,8 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
       if (n > maxDvRows) return Left(n)
       matchedDf.collect().map(r => (r.getString(0), r.getLong(1)))
     } finally matchedDf.unpersist(blocking = false)
-    val qualBase = fs(new Path(base)).makeQualified(new Path(base))
-      .toString.stripSuffix("/") + "/"
-    val newByRel = matched.groupBy(_._1.stripPrefix(qualBase))
-      .map { case (rel, xs) => rel -> xs.map(_._2).toSeq }
+    val newByRel = matched.groupBy(_._1)
+      .map { case (file, xs) => relOfScanPath(base, file) -> xs.map(_._2).toSeq }
     val merged = newByRel.map { case (rel, pos) =>
       val old = carriedDv.get(rel)
         .map(pr => dvPayload(base, pr).getOrElse(rel, Nil)).getOrElse(Nil)
@@ -2526,53 +2578,14 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
     Right(Lake.RowOpResult(newSnap.toString, 0, inventory.size))
   }
 
-  /** Read an EXPLICIT layer-root-relative file list with hive partition
-    * columns intact. Spark's partition discovery walks each file leaf-up
-    * and requires every file to stop at the SAME root — a manifest
-    * inventory spanning several `_v/<version>` directories has one stop
-    * per version dir and fails `[CONFLICTING_DIRECTORY_STRUCTURES]` even
-    * with `basePath` set (the option only relocates the root, it can't
-    * split it). So: group the list by version dir, load each group with
-    * ITS dir as the discovery root, and union — group count = referenced
-    * version dirs (small, row-op-bounded), and each group's partition
-    * parsing is the ordinary single-root case. (Delta solves the same
-    * problem with a log-backed FileIndex that bypasses discovery; the
-    * grouped union is the same answer through public API.)
-    */
-  private def readRelFiles(layer: String, rels: Seq[String],
-      mergeSchema: Boolean = false,
-      schemaHint: Option[org.apache.spark.sql.types.StructType] = None,
-      withMeta: Boolean = false)
-      : DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val base = layerPath(layer)
-    val groups = rels.groupBy(versionDirOf).toSeq.sortBy(_._1)
-    val frames = groups.map { case (vdir, files) =>
-      val root = if (vdir.isEmpty) base else resolveRel(base, vdir)
-      var reader = spark.read.format("parquet").option("basePath", root)
-      // an explicit schema makes columns a file predates read as null —
-      // the schema-evolution read — and pins one shape across groups
-      schemaHint.foreach(s => reader = reader.schema(s))
-      val frame = (if (mergeSchema) reader.option("mergeSchema", "true")
-        else reader)
-        .load(files.map(rp => resolveRel(base, rp)): _*)
-      // metadata columns resolve only on the file relation itself, so the
-      // DV callers' (file, position) projection must happen INSIDE each
-      // group, before the union erases it
-      if (withMeta) frame.select((frame.columns.map(col) :+
-        col("_metadata.file_path").as("__dv_file") :+
-        col("_metadata.row_index").as("__dv_pos")).toSeq: _*)
-      else frame
-    }
-    frames.reduce((a, b) =>
-      a.unionByName(b, allowMissingColumns = mergeSchema))
-  }
-
   /** Ref 02:29, 03:30: batch read of a layer. Resolves the snapshot pointer
     * when the layer was written with [[writeAtomic]]; falls back to the flat
     * layout otherwise. `mergeSchema` unions parquet footers across files —
-    * the schema-evolution read for layers whose appends added columns
-    * (rows from pre-evolution files read null for the new columns).
+    * the schema-evolution read for flat and self-contained layers whose
+    * appends added columns (rows from pre-evolution files read null for
+    * the new columns); a manifest snapshot's recorded schema already is
+    * that union, so there it changes only the mechanism: Spark's own file
+    * discovery instead of the [[LakeFileIndex]] scan, same rows.
     */
   def read(layer: String, mergeSchema: Boolean = false): DataFrame =
     latestSnapshot(layer) match {
@@ -2597,57 +2610,39 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
           .load(layerPath(layer))
     }
 
-  /** FILTERED read with sidecar data skipping: resolve the newest
-    * snapshot, evaluate `predicate` against its `_STATS.json` (see
-    * [[FileStats]]), and scan ONLY the files that can possibly match —
-    * then re-apply the full predicate, so the result is always exactly
-    * `read(layer).filter(predicate)`. Falls back to that plain form when
-    * the layer is flat, the sidecar is absent, or nothing prunes.
+  /** FILTERED read with sidecar data skipping: exactly
+    * `read(layer).filter(predicate)`. On snapshot layers that plain form
+    * already skips files — the [[LakeFileIndex]] scan prunes by hive
+    * partition, `_STATS.json` min/max and `_BLOOM.json` for any filter —
+    * so two cases keep their own code: when the sidecar prunes EVERY
+    * file, an always-false residual lets Catalyst fold the scan to an
+    * empty relation (zero tasks); and a flat batch-sidecar layer, which
+    * has no index, loads only the files its sidecars keep.
     *
     * This is the read path that makes a 10⁵-file layer answer a selective
     * query without 10⁵ file opens: one driver-side JSON read replaces the
     * per-file footer round-trips, and with [[newspipe.ops.ZOrder]]-clustered
-    * layouts the surviving set is a small fraction of the layer. When
-    * every file prunes, the residual always-false filter lets Catalyst
-    * fold the scan to an empty relation — zero tasks.
+    * layouts the surviving set is a small fraction of the layer.
     */
   def readWhere(layer: String, predicate0: org.apache.spark.sql.Column,
       mergeSchema: Boolean = false): DataFrame = {
     // generated-column derivation first: a ts predicate on a layer
     // partitioned by a generated date(ts) gains the implied partition
-    // conjunct, so both the sidecar pruning below AND Spark's own hive
-    // partition pruning in the fallback paths skip whole directories
+    // conjunct, so both the sidecar pruning and the scan's partition
+    // pruning skip whole directories
     val predicate = augmentGenerated(layer, predicate0)
-    val plain = () => read(layer, mergeSchema).filter(predicate)
-    prunePlan(layer, predicate) match {
-      case None => plain()
-      case Some(p) if p.keptPaths.size == p.totalFiles => plain()
+    def plain = read(layer, mergeSchema).filter(predicate)
+    val head = latestSnapshot(layer)
+    prunePlan(layer, head, predicate) match {
       case Some(p) if p.keptPaths.isEmpty =>
-        plain().filter(org.apache.spark.sql.functions.lit(false))
-      case Some(p) if p.keptPaths.exists(r =>
-          r.startsWith("_v/") || Lake.isForeignRel(r)) =>
-        // manifest snapshot: kept files span version dirs (and, on
-        // clones, other layers/bases) — per-dir discovery roots + the
-        // recorded schema (see readRelFiles); DV'd files filter through
-        // their positions like every other read
-        val snap = latestSnapshot(layer).get // manifest paths ⇒ snapshot
-        val dv = dvMapOf(snap)
-        val mapping = mappingOf(snap)
-        val hasDv = p.keptPaths.exists(dv.contains)
-        val raw = toLogical(readRelFiles(layer, p.keptPaths, mergeSchema,
-          schemaHint = Some(physicalSchema(layerSchema(layer), mapping)),
-          withMeta = hasDv), mapping)
-        val alive =
-          if (hasDv) dvFilter(raw,
-            dvPairs(layerPath(layer), snap, Some(p.keptPaths.toSet)))
-          else raw
-        alive.filter(predicate)
-      case Some(p) =>
+        plain.filter(org.apache.spark.sql.functions.lit(false))
+      case Some(p) if head.isEmpty && p.keptPaths.size < p.totalFiles =>
         val reader = spark.read.format("parquet")
           .option("basePath", p.base)
         (if (mergeSchema) reader.option("mergeSchema", "true") else reader)
           .load(p.keptPaths.map(rp => s"${p.base}/$rp"): _*)
           .filter(predicate)
+      case _ => plain
     }
   }
 
@@ -2661,7 +2656,8 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
     */
   def pruneInfo(layer: String,
       predicate: org.apache.spark.sql.Column): Option[Lake.PruneInfo] =
-    prunePlan(layer, augmentGenerated(layer, predicate)).map(p =>
+    prunePlan(layer, latestSnapshot(layer),
+      augmentGenerated(layer, predicate)).map(p =>
       Lake.PruneInfo(p.keptPaths.size, p.totalFiles, p.keptRows, p.totalRows))
 
   private final case class PrunePlan(base: String, keptPaths: Seq[String],
@@ -2672,13 +2668,14 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
     * immutable); flat batch-sidecar layers prune against the ACTUAL
     * listing, keeping any file the sidecars don't describe — a plain
     * `write` append next to idempotent batches can never be skipped.
+    * `head` is the layer's [[latestSnapshot]] (None: a flat layer).
     */
-  private def prunePlan(layer: String,
+  private def prunePlan(layer: String, head: Option[Path],
       predicate: org.apache.spark.sql.Column): Option[PrunePlan] = {
     // Sidecar stats are keyed by PHYSICAL names; resolveCondition
     // translates the (logical) predicate through the head mapping, so
     // pruning stays exact on renamed layers too.
-    val headMapping = latestSnapshot(layer).map(mappingOf)
+    val headMapping = head.map(mappingOf)
       .getOrElse(Map.empty[String, String])
     sidecarStats(layer) match {
       case Some((snap, all)) =>
@@ -2687,7 +2684,7 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
         val kept = all.filter(st => cond.forall(FileStats.matches(st, _)))
         Some(PrunePlan(snap, kept.map(_.path), all.size,
           kept.map(_.rows).sum, all.map(_.rows).sum))
-      case None => flatBatchStats(layer).map { stats =>
+      case None if head.isEmpty => flatBatchStats(layer).map { stats =>
         lazy val cond = resolveCondition(layer, layerPath(layer), stats,
           predicate)
         def keep(st: FileStats.FileStat): Boolean =
@@ -2699,6 +2696,7 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
           keptPaths.flatMap(byPath.get).map(_.rows).sum,
           listed.flatMap(byPath.get).map(_.rows).sum)
       }
+      case None => None
     }
   }
 
@@ -2761,12 +2759,13 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
   }
 
   /** Merged per-batch sidecars of a flat [[writeBatchIdempotent]] layer —
-    * None for snapshot-managed layers or when no batch ever landed stats.
+    * None when no batch ever landed stats. Only for layers without a
+    * committed snapshot ([[prunePlan]] checks).
     */
   private def flatBatchStats(layer: String): Option[Seq[FileStats.FileStat]] = {
     val root = new Path(layerPath(layer))
     val f = fs(root)
-    if (!f.exists(root) || latestSnapshot(layer).isDefined) None
+    if (!f.exists(root)) None
     else {
       val sidecars = f.listStatus(root)
         .filter(s => s.isFile &&
@@ -2795,7 +2794,7 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
         if (visible) buf += rel
       }
     }
-    buf.result()
+    buf.result().sorted
   }
 
   private def readFully(p: Path): String = {
@@ -2972,24 +2971,18 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
     if (rels.isEmpty || physCols.isEmpty) return Map.empty
     val readFields = physSchema.fields.filter(f => physCols.contains(f.name))
     if (readFields.isEmpty) return Map.empty
-    val readSchema = org.apache.spark.sql.NewspipeSqlBridge.nullableSchema(
-      org.apache.spark.sql.types.StructType(readFields))
-    val basePath = new Path(base)
-    val qualBase =
-      fs(basePath).makeQualified(basePath).toString.stripSuffix("/")
-    def pathPart(s: String): String = new Path(s).toUri.getPath
-    val relByPath = rels.map(r => pathPart(s"$qualBase/$r") -> r).toMap
+    // rows are keyed by `_metadata.file_path`, the form [[scanPath]]
+    // renders (input_file_name() writes `file:///` where it has `file:/`)
+    val relByPath = rels.map(r => scanPath(base, r) -> r).toMap
     val rowsByPath = relByPath.flatMap { case (p, r) =>
       rowsByRel.get(r).filter(_ > 0L).map(p -> _) }
     if (rowsByPath.isEmpty) return Map.empty
-    import org.apache.spark.sql.functions.{col, input_file_name}
-    // one read per containing dir: explicit file lists spanning version
-    // dirs trip partition discovery (the readRelFiles lesson)
-    val frames = rels.groupBy(r => r.split('/').dropRight(1).mkString("/"))
-      .values.toSeq.map(rs => spark.read.schema(readSchema)
-        .format("parquet").load(rs.map(r => s"$base/$r"): _*))
-    val df = frames.reduce(_ union _)
-      .select((input_file_name().as("__bloom_file") +:
+    import org.apache.spark.sql.functions.col
+    // the files are being committed, not yet part of any snapshot: read
+    // them raw (no deletion vectors, no sidecars) through the one scan,
+    // under the full schema so partition columns keep their types
+    val df = scanFiles(base, new Path(base), rels, physSchema)
+      .select((col("_metadata.file_path").as("__bloom_file") +:
         readFields.toSeq.map(f => col(s"`${f.name}`"))): _*)
     val bRows = spark.sparkContext.broadcast(rowsByPath)
     val names = readFields.map(_.name).toIndexedSeq
@@ -2999,8 +2992,7 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
         .empty[(String, String), org.apache.spark.util.sketch.BloomFilter]
       it.foreach { row =>
         if (!row.isNullAt(0)) {
-          val fp = new org.apache.hadoop.fs.Path(row.getString(0))
-            .toUri.getPath
+          val fp = row.getString(0)
           val n = bRows.value.getOrElse(fp, -1L)
           if (n > 0L) {
             var i = 0
@@ -3079,8 +3071,8 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
       manifestOf(snap) match {
         case Some(m) =>
           // cross-layer (clone) refs are refused like partitioned layouts:
-          // the build keys entries by input_file_name, whose canonical
-          // form need not match a `../` rel — materialize first
+          // the build keys entries by the scanned file path, whose
+          // canonical form need not match a `../` rel — materialize first
           require(!m.files.exists(Lake.isForeignRel),
             s"enableBloomIndex: layer '$layer' holds shallow-clone " +
               "cross-layer references — materialize with compact() first")
@@ -5545,13 +5537,8 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
     val alive0 =
       if (affected.isEmpty) None
       else if (tracking) Some(withRowIdsFrame(layer, snap, affected))
-      else {
-        val raw = toLogical(readRelFiles(layer, affected,
-          schemaHint = Some(physicalSchema(schema, mapping)),
-          withMeta = parentDv.nonEmpty), mapping)
-        Some(if (parentDv.isEmpty) raw
-          else dvFilter(raw, dvPairs(base, snap, Some(affected.toSet))))
-      }
+      else Some(scanFiles(base, snap, affected, schema, mapping,
+        dvs = Some(snap)))
     val affectedRows = alive0.map(transform).getOrElse(emptyFrame(schema))
     if (tracking && affected.nonEmpty)
       require(affectedRows.columns.exists(
@@ -6061,17 +6048,8 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
     lazy val diffMapping = mappingOf(toSnap)
     def readRows(snap: Path, rels: Seq[String]): DataFrame =
       if (rels.isEmpty) emptyFrame(schema)
-      else {
-        val dv = dvMapOf(snap)
-        val hasDv = rels.exists(dv.contains)
-        val raw = toLogical(readRelFiles(layer, rels,
-          schemaHint = Some(physicalSchema(schema, diffMapping)),
-          withMeta = hasDv), diffMapping)
-        val alive =
-          if (hasDv) dvFilter(raw, dvPairs(base, snap, Some(rels.toSet)))
-          else raw
-        alive.select(schema.fieldNames.map(col).toSeq: _*)
-      }
+      else scanFiles(base, snap, rels, schema, diffMapping, dvs = Some(snap))
+        .select(schema.fieldNames.map(col).toSeq: _*)
     def readWithIds(snap: Path, rels: Seq[String]): DataFrame = {
       val f = withRowIdsFrame(layer, snap, rels)
       val have = f.columns.map(_.toLowerCase).toSet
@@ -6124,8 +6102,10 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
     }
 
   /** Data files under one snapshot directory, relative to IT (hidden files
-    * and sidecars excluded, `k=v` partition dirs kept) — the walk
-    * [[snapshotInventory]] and [[rewriteRows]] share.
+    * and sidecars excluded, `k=v` partition dirs kept), SORTED — the walk
+    * [[snapshotInventory]] and [[rewriteRows]] share. The sort makes every
+    * inventory a commit records (manifest, delta doc, stats sidecar)
+    * independent of the filesystem's directory order.
     */
   private def snapshotDirFilesRel(snap: Path): Seq[String] = {
     val f = fs(snap)
@@ -6139,7 +6119,7 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
         if (visible) buf += rel
       }
     }
-    buf.result()
+    buf.result().sorted
   }
 
   // ---- persisted indexes: the shared lifecycle -----------------------------
@@ -6369,8 +6349,7 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
         .toUri.toString) -> d
     }.toMap
     val targetRels = missing.map(_._1)
-    val rows = readRelFiles(layer, targetRels,
-        schemaHint = Some(snapshotSchema(layer, snap)))
+    val rows = scanFiles(base, snap, targetRels, snapshotSchema(layer, snap))
       .select(input_file_name().as("__f") +: cols: _*)
     val confB = spark.sparkContext.broadcast(
       new org.apache.spark.util.SerializableConfiguration(
@@ -6820,8 +6799,7 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
             val qDf = org.apache.spark.sql.functions.broadcast(
               qRows.toSeq.toDF("query_id", "__qv"))
             val cand = raw0.select("query_id", "neighbor_id")
-            val vecsDf = readRelFiles(layer, covered.map(_._1),
-                schemaHint = Some(schema))
+            val vecsDf = scanFiles(base, snap, covered.map(_._1), schema)
               .select(col(meta.idCol).cast("long").as("neighbor_id"),
                 col(meta.vecCol).cast("array<double>").as("__cv"))
               .join(cand.select("neighbor_id").distinct(),
@@ -6837,8 +6815,7 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
             // candidate VALIDATION: one column-pruned, predicate-pushed
             // id scan of the qualifying covered files — the only time a
             // filtered search touches data files, and only theirs
-            val validIds = readRelFiles(layer, covered.map(_._1),
-                schemaHint = Some(schema))
+            val validIds = scanFiles(base, snap, covered.map(_._1), schema)
               .filter(p)
               .select(col(meta.idCol).cast("long").as("neighbor_id"))
             raw.join(validIds.distinct(), Seq("neighbor_id"), "left_semi")
@@ -6848,11 +6825,8 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
     val brute: DataFrame =
       if (uncovered.isEmpty) emptyCands
       else {
-        val rels = uncovered.map(_._1)
-        val metaed = readRelFiles(layer, rels, schemaHint = Some(schema),
-          withMeta = dv.nonEmpty)
-        val alive0 = if (dv.isEmpty) metaed
-          else dvFilter(metaed, dvPairs(base, snap, Some(rels.toSet)))
+        val alive0 = scanFiles(base, snap, uncovered.map(_._1), schema,
+          dvs = Some(snap))
         val alive = filter.fold(alive0)(alive0.filter) // exact leg: inline
         newspipe.ops.Similarity.bruteForceTopK(
           queries.select(col(meta.idCol).cast("long").as(meta.idCol),
@@ -6944,11 +6918,7 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
     // the WHOLE corpus classifies as "new" — that is not an incremental
     // landing, and all-pairs whole-corpus dedup belongs to the
     // cluster-bucketed SemDeDup path in [[newspipe.ops.Dedup]].
-    val newMetaed = readRelFiles(layer, newRels,
-      schemaHint = Some(schema), withMeta = dv.nonEmpty)
-    val newAlive = if (dv.isEmpty) newMetaed
-      else dvFilter(newMetaed, dvPairs(base, snap, Some(newRels.toSet)))
-    val newSel = newAlive
+    val newSel = scanFiles(base, snap, newRels, schema, dvs = Some(snap))
       .select(col(meta.idCol).cast("long"), col(meta.vecCol))
     val landingN = newSel.count()
     if (landingN == 0) return emptyPairs
@@ -7068,11 +7038,8 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
       val fromScan: DataFrame =
         if (uncovered.isEmpty) emptyPairs
         else {
-          val rels = uncovered.map(_._1)
-          val metaed = readRelFiles(layer, rels, schemaHint = Some(schema),
-            withMeta = dv.nonEmpty)
-          val alive = if (dv.isEmpty) metaed
-            else dvFilter(metaed, dvPairs(base, snap, Some(rels.toSet)))
+          val alive = scanFiles(base, snap, uncovered.map(_._1), schema,
+            dvs = Some(snap))
           val t = threshold
           alive.select(col(meta.idCol).cast("long"), col(meta.vecCol)).rdd
             .mapPartitions { rows =>
@@ -7242,8 +7209,7 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
     val schema = snapshotSchema(layer, snap)
     val fromScan: Option[DataFrame] =
       if (uncovered.isEmpty) None
-      else Some(readRelFiles(layer, uncovered.map(_._1),
-          schemaHint = Some(schema))
+      else Some(scanFiles(layerPath(layer), snap, uncovered.map(_._1), schema)
         .select(col(meta.idCol).cast("long").as("id"),
           explode(dedupBandsExpr(meta)).as("__bb"))
         .select(col("id"), col("__bb.band").as("band"),

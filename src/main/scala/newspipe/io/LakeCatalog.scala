@@ -1429,7 +1429,7 @@ final class LakeV2ReadRewrite(session: SparkSession)
   * answers from the index's sidecar row counts — one cached JSON read
   * already in memory, zero tasks. This is Delta's
   * `OptimizeMetadataOnlyQuery` role for the lake. DV-filtered plans,
-  * hive-partitioned discovery reads, filtered/grouped counts, and
+  * `mergeSchema` discovery reads, filtered/grouped counts, and
   * stats-incomplete snapshots all fail the shape match and keep the scan
   * path (correct, just not free).
   */

@@ -66,32 +66,18 @@ object TextStats {
     * weights documented, deterministic).
     *
     * Compiled as a NATIVE one-pass codegen'd expression
-    * ([[QualityScoreExpr]], round 19): the column form below
-    * ([[qualityScoreHof]]) stacks four HOFs (`filter`/`aggregate` are
+    * ([[QualityScoreExpr]]): the equivalent column form — [[wordCount]],
+    * [[stopwordRatio]], [[punctRatio]] and [[avgWordLen]] banded and
+    * weighted — stacks four HOFs (`filter`/`aggregate` are
     * interpreted-only — CodegenFallback) that re-tokenize the text up to
     * four times and regex-rebuild it once more per row; measured 1.96 s
     * for 5 000 docs on one core. The kernel computes all four bands in
-    * one pass, bit-identical (parity property-pinned in
-    * CodegenParitySpec).
+    * one pass, bit-identical (CodegenParitySpec keeps the column form as
+    * its parity oracle).
     */
   def qualityScore(text: Column): Column =
     org.apache.spark.sql.NewspipeSqlBridge.column(QualityScoreExpr(
       org.apache.spark.sql.NewspipeSqlBridge.expression(text)))
-
-  /** The original HOF column form of [[qualityScore]] — kept ONLY as the
-    * parity oracle for [[QualityScoreExpr]] (CodegenParitySpec pins
-    * kernel == this form on adversarial inputs). Not a query path.
-    */
-  private[newspipe] def qualityScoreHof(text: Column): Column = {
-    val wc = wordCount(text)
-    val lenOk = when(wc.between(10, 10000), 1.0).otherwise(0.0)
-    val stopOk = when(stopwordRatio(text) >= 0.05, 1.0).otherwise(0.0)
-    val punctOk = when(punctRatio(text) <= 0.3, 1.0).otherwise(0.0)
-    val awl = avgWordLen(text)
-    val awlOk = when(awl.between(2.0, 12.0), 1.0).otherwise(0.0)
-    when(text.isNull, lit(null))
-      .otherwise((lenOk * 0.3 + stopOk * 0.3 + punctOk * 0.2 + awlOk * 0.2))
-  }
 
   // ---- language ID ---------------------------------------------------------
 
@@ -422,7 +408,9 @@ case class LangIdExpr(child: org.apache.spark.sql.catalyst.expressions.Expressio
 }
 
 /** Static kernel for the codegen'd quality-score expression — the exact
-  * arithmetic of [[TextStats.qualityScoreHof]] in ONE pass over the text
+  * arithmetic of [[TextStats.qualityScore]]'s column form (the banded
+  * [[TextStats.wordCount]], [[TextStats.stopwordRatio]],
+  * [[TextStats.punctRatio]] and [[TextStats.avgWordLen]]) in ONE pass over the text
   * instead of four interpreted HOF re-tokenizations plus a regex rebuild.
   *
   * Bit-parity notes (each mirrors the column form it replaces):

@@ -166,7 +166,7 @@ object NewspipeSqlBridge {
     val cs = spark.asInstanceOf[classic.SparkSession]
     val rel = org.apache.spark.sql.execution.datasources.HadoopFsRelation(
       location = index,
-      partitionSchema = org.apache.spark.sql.types.StructType(Nil),
+      partitionSchema = index.partitionSchema,
       dataSchema = dataSchema,
       bucketSpec = None,
       fileFormat = new org.apache.spark.sql.execution.datasources.parquet
@@ -201,6 +201,26 @@ object NewspipeSqlBridge {
         org.apache.spark.sql.execution.datasources.LogicalRelation(rel)
     }
     classic.Dataset.ofRows(cs, plan)
+  }
+
+  /** Spark's own hive-partition parse (`PartitioningUtils.parsePartitions`,
+    * the one directory discovery runs) over `leafDirs` below ONE `base`:
+    * each `k=v` value unescaped, `__HIVE_DEFAULT_PARTITION__` read as
+    * null, typed by `userSchema` where it names the column and otherwise
+    * inferred under the session's partition type-inference setting.
+    * Returns the partition schema (path order, every field nullable) and
+    * each leaf dir's values; an unpartitioned set yields an empty schema.
+    */
+  def parsePartitions(spark: SparkSession,
+      leafDirs: Seq[org.apache.hadoop.fs.Path], base: org.apache.hadoop.fs.Path,
+      userSchema: Option[types.StructType])
+      : (types.StructType,
+        Map[org.apache.hadoop.fs.Path, catalyst.InternalRow]) = {
+    val spec = execution.datasources.NewspipePartitionParse(
+      spark.asInstanceOf[classic.SparkSession].sessionState.conf,
+      leafDirs, base, userSchema)
+    (spec.partitionColumns,
+      spec.partitions.map(p => p.path -> p.values).toMap)
   }
 
   /** A computed batch frame re-tagged `isStreaming = true` — what a DSv1

@@ -1,7 +1,7 @@
 package newspipe.functions
 
 import newspipe.SparkTestBase
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Interpreted-vs-codegen parity for every custom Catalyst expression: the
@@ -25,6 +25,22 @@ class CodegenParitySpec extends SparkTestBase {
       conf.set("spark.sql.codegen.wholeStage", oldWhole)
       conf.set("spark.sql.codegen.factoryMode", oldMode)
     }
+  }
+
+  /** The HOF column form of [[newspipe.ops.TextStats.qualityScore]] — the
+    * parity oracle for its native kernel: the same four bands and weights
+    * built from the public per-feature columns.
+    */
+  private def qualityScoreHof(text: Column): Column = {
+    import newspipe.ops.TextStats._
+    val wc = wordCount(text)
+    val lenOk = when(wc.between(10, 10000), 1.0).otherwise(0.0)
+    val stopOk = when(stopwordRatio(text) >= 0.05, 1.0).otherwise(0.0)
+    val punctOk = when(punctRatio(text) <= 0.3, 1.0).otherwise(0.0)
+    val awl = avgWordLen(text)
+    val awlOk = when(awl.between(2.0, 12.0), 1.0).otherwise(0.0)
+    when(text.isNull, lit(null))
+      .otherwise((lenOk * 0.3 + stopOk * 0.3 + punctOk * 0.2 + awlOk * 0.2))
   }
 
   private def bothWays(df: => DataFrame): (Seq[String], Seq[String]) = {
@@ -103,7 +119,7 @@ class CodegenParitySpec extends SparkTestBase {
     def kernelFrame = df.select($"id",
       newspipe.ops.TextStats.qualityScore($"text").as("q"))
     val legacy = df.select($"id",
-      newspipe.ops.TextStats.qualityScoreHof($"text").as("q"))
+      qualityScoreHof($"text").as("q"))
       .collect().map(_.toString).toSeq.sorted
     val (g, i) = bothWays(kernelFrame)
     g shouldBe i
