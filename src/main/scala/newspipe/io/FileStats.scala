@@ -71,13 +71,6 @@ object FileStats {
 
   val SidecarName = "_STATS.json"
 
-  /** Per-batch sidecar of a flat [[Lake.writeBatchIdempotent]] layer —
-    * zero-padded so a listing sorts in batch order.
-    */
-  val BatchSidecarPrefix = "_STATS_batch_"
-  def batchSidecarName(batchId: Long): String =
-    f"$BatchSidecarPrefix$batchId%020d.json"
-
   // ---------------------------------------------------------------- collect
 
   /** Read footers of every parquet data file under `dir` (recursively, so

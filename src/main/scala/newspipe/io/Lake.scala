@@ -603,10 +603,7 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
     // the snapshot commit); prearranged maintenance rewrites keep the
     // declaration they inherited.
     if (!prearranged) {
-      val declared = properties(layer).get("lake.partitionBy")
-        .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-        .getOrElse(Nil)
-      if (declared != partitionBy)
+      if (declaredPartitionBy(layer) != partitionBy)
         setProperties(layer,
           Map("lake.partitionBy" -> partitionBy.mkString(",")))
     }
@@ -1604,11 +1601,13 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
         .filter(_.contains('='))
         .map(seg => seg.substring(0, seg.indexOf('='))))
       .distinct
-    if (derived.nonEmpty) derived
-    else properties(layer).get("lake.partitionBy")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-      .getOrElse(Nil)
+    if (derived.nonEmpty) derived else declaredPartitionBy(layer)
   }
+
+  /** The declared `lake.partitionBy` layout, Nil when none is declared. */
+  private[io] def declaredPartitionBy(layer: String): Seq[String] =
+    properties(layer).get("lake.partitionBy").toSeq
+      .flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)
 
   /** Layer properties (`_PROPERTIES.json` at the layer root — CONFIG, not
     * data, so not versioned with snapshots; Delta's TBLPROPERTIES role).
@@ -2598,10 +2597,7 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
         // unreadable; name that condition instead of letting Spark throw a
         // bare schema-inference error.
         val flat = new Path(layerPath(layer))
-        val f = fs(flat)
-        val hasFlatData = f.exists(flat) &&
-          f.listStatus(flat).exists(s => !s.getPath.getName.startsWith("_"))
-        require(hasFlatData || !f.exists(new Path(flat, "_v")),
+        require(hasFlatData(layer) || !fs(flat).exists(new Path(flat, "_v")),
           s"layer '$layer' is snapshot-managed but has no committed snapshot " +
             "yet — the first writeAtomic has not finished (or crashed before " +
             "committing)")
@@ -2610,14 +2606,24 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
           .load(layerPath(layer))
     }
 
+  /** Whether the layer root holds data outside the lake's `_`-prefixed
+    * metadata: a flat [[write]] layer, or flat data a first commit has
+    * not adopted yet.
+    */
+  private[io] def hasFlatData(layer: String): Boolean = {
+    val root = new Path(layerPath(layer))
+    val f = fs(root)
+    f.exists(root) &&
+      f.listStatus(root).exists(s => !s.getPath.getName.startsWith("_"))
+  }
+
   /** FILTERED read with sidecar data skipping: exactly
-    * `read(layer).filter(predicate)`. On snapshot layers that plain form
-    * already skips files — the [[LakeFileIndex]] scan prunes by hive
+    * `read(layer).filter(predicate)`. That plain form already skips
+    * files on snapshot layers — the [[LakeFileIndex]] scan prunes by hive
     * partition, `_STATS.json` min/max and `_BLOOM.json` for any filter —
-    * so two cases keep their own code: when the sidecar prunes EVERY
-    * file, an always-false residual lets Catalyst fold the scan to an
-    * empty relation (zero tasks); and a flat batch-sidecar layer, which
-    * has no index, loads only the files its sidecars keep.
+    * so one case keeps its own code: when the sidecar prunes EVERY file,
+    * an always-false residual lets Catalyst fold the scan to an empty
+    * relation (zero tasks). A flat layer has no stats and reads whole.
     *
     * This is the read path that makes a 10⁵-file layer answer a selective
     * query without 10⁵ file opens: one driver-side JSON read replaces the
@@ -2631,72 +2637,37 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
     // conjunct, so both the sidecar pruning and the scan's partition
     // pruning skip whole directories
     val predicate = augmentGenerated(layer, predicate0)
-    def plain = read(layer, mergeSchema).filter(predicate)
-    val head = latestSnapshot(layer)
-    prunePlan(layer, head, predicate) match {
-      case Some(p) if p.keptPaths.isEmpty =>
-        plain.filter(org.apache.spark.sql.functions.lit(false))
-      case Some(p) if head.isEmpty && p.keptPaths.size < p.totalFiles =>
-        val reader = spark.read.format("parquet")
-          .option("basePath", p.base)
-        (if (mergeSchema) reader.option("mergeSchema", "true") else reader)
-          .load(p.keptPaths.map(rp => s"${p.base}/$rp"): _*)
-          .filter(predicate)
-      case _ => plain
-    }
+    val plain = read(layer, mergeSchema).filter(predicate)
+    if (prunePlan(layer, predicate).exists(_.keptFiles == 0))
+      plain.filter(org.apache.spark.sql.functions.lit(false))
+    else plain
   }
 
   /** What [[readWhere]] would prune, without reading data — the
     * observability hook for specs and benchmarks. None when the layer has
-    * no stats at all (stats disabled, collection soft-failed, or a flat
-    * layer never written through [[writeBatchIdempotent]]). On flat
-    * batch-sidecar layers the row numbers cover stats-known files only
-    * (files landed outside the idempotent writer count in `totalFiles`
-    * and are always kept, but their row counts are unknown).
+    * no commit stats (a flat layer, stats disabled, or collection
+    * soft-failed).
     */
   def pruneInfo(layer: String,
       predicate: org.apache.spark.sql.Column): Option[Lake.PruneInfo] =
-    prunePlan(layer, latestSnapshot(layer),
-      augmentGenerated(layer, predicate)).map(p =>
-      Lake.PruneInfo(p.keptPaths.size, p.totalFiles, p.keptRows, p.totalRows))
+    prunePlan(layer, augmentGenerated(layer, predicate))
 
-  private final case class PrunePlan(base: String, keptPaths: Seq[String],
-      totalFiles: Int, keptRows: Long, totalRows: Long)
-
-  /** Shared pruning for [[readWhere]]/[[pruneInfo]]. Snapshot layers trust
-    * the sidecar as the complete file inventory (the snapshot is
-    * immutable); flat batch-sidecar layers prune against the ACTUAL
-    * listing, keeping any file the sidecars don't describe — a plain
-    * `write` append next to idempotent batches can never be skipped.
-    * `head` is the layer's [[latestSnapshot]] (None: a flat layer).
+  /** Shared pruning for [[readWhere]]/[[pruneInfo]]: the head snapshot's
+    * sidecar is the complete file inventory (the snapshot is immutable).
     */
-  private def prunePlan(layer: String, head: Option[Path],
-      predicate: org.apache.spark.sql.Column): Option[PrunePlan] = {
+  private def prunePlan(layer: String,
+      predicate: org.apache.spark.sql.Column): Option[Lake.PruneInfo] = {
     // Sidecar stats are keyed by PHYSICAL names; resolveCondition
     // translates the (logical) predicate through the head mapping, so
     // pruning stays exact on renamed layers too.
-    val headMapping = head.map(mappingOf)
+    val headMapping = latestSnapshot(layer).map(mappingOf)
       .getOrElse(Map.empty[String, String])
-    sidecarStats(layer) match {
-      case Some((snap, all)) =>
-        lazy val cond = resolveCondition(layer, snap, all, predicate,
-          headMapping)
-        val kept = all.filter(st => cond.forall(FileStats.matches(st, _)))
-        Some(PrunePlan(snap, kept.map(_.path), all.size,
-          kept.map(_.rows).sum, all.map(_.rows).sum))
-      case None if head.isEmpty => flatBatchStats(layer).map { stats =>
-        lazy val cond = resolveCondition(layer, layerPath(layer), stats,
-          predicate)
-        def keep(st: FileStats.FileStat): Boolean =
-          cond.forall(FileStats.matches(st, _))
-        val byPath = stats.map(s => s.path -> s).toMap
-        val listed = listDataFilesRel(layer)
-        val keptPaths = listed.filter(rel => byPath.get(rel).forall(keep))
-        PrunePlan(layerPath(layer), keptPaths, listed.size,
-          keptPaths.flatMap(byPath.get).map(_.rows).sum,
-          listed.flatMap(byPath.get).map(_.rows).sum)
-      }
-      case None => None
+    sidecarStats(layer).map { case (snap, all) =>
+      lazy val cond = resolveCondition(layer, snap, all, predicate,
+        headMapping)
+      val kept = all.filter(st => cond.forall(FileStats.matches(st, _)))
+      Lake.PruneInfo(kept.size, all.size, kept.map(_.rows).sum,
+        all.map(_.rows).sum)
     }
   }
 
@@ -2736,7 +2707,7 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
   private def resolveCondition(layer: String, base: String,
       stats: Seq[FileStats.FileStat],
       predicate: org.apache.spark.sql.Column,
-      mapping: Map[String, String] = Map.empty)
+      mapping: Map[String, String])
       : Option[org.apache.spark.sql.catalyst.expressions.Expression] = {
     import org.apache.spark.sql.types.{StringType, StructField, StructType}
     try {
@@ -2756,45 +2727,6 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
         // fallback resolves against the LOGICAL read frame — untranslated
         resolvedCondition(read(layer).filter(predicate))
     }
-  }
-
-  /** Merged per-batch sidecars of a flat [[writeBatchIdempotent]] layer —
-    * None when no batch ever landed stats. Only for layers without a
-    * committed snapshot ([[prunePlan]] checks).
-    */
-  private def flatBatchStats(layer: String): Option[Seq[FileStats.FileStat]] = {
-    val root = new Path(layerPath(layer))
-    val f = fs(root)
-    if (!f.exists(root)) None
-    else {
-      val sidecars = f.listStatus(root)
-        .filter(s => s.isFile &&
-          s.getPath.getName.startsWith(FileStats.BatchSidecarPrefix))
-        .map(_.getPath).sortBy(_.getName).toSeq
-      if (sidecars.isEmpty) None
-      else Some(sidecars.flatMap(p => FileStats.fromJson(readFully(p))))
-    }
-  }
-
-  /** Data files of a flat layer, paths relative to the layer root. Mirrors
-    * Spark's listing rules: `_`/`.`-prefixed names are hidden unless they
-    * are `k=v` partition directories.
-    */
-  private def listDataFilesRel(layer: String): Seq[String] = {
-    val root = new Path(layerPath(layer))
-    val f = fs(root)
-    val rootPrefix = f.makeQualified(root).toString.stripSuffix("/") + "/"
-    val buf = Vector.newBuilder[String]
-    FsListing.filesRecursive(f, root).foreach { s =>
-      if (s.isFile && s.getPath.toString.startsWith(rootPrefix)) {
-        val rel = s.getPath.toString.stripPrefix(rootPrefix)
-        val segments = rel.split('/')
-        val visible = segments.forall(seg =>
-          (!seg.startsWith("_") && !seg.startsWith(".")) || seg.contains("="))
-        if (visible) buf += rel
-      }
-    }
-    buf.result().sorted
   }
 
   private def readFully(p: Path): String = {
@@ -3139,69 +3071,6 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
       schema: org.apache.spark.sql.types.StructType): DataFrame =
     spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-
-  /** Idempotent micro-batch landing for streaming sinks: each batch lands
-    * under a `__batch_id=<id>` partition; a replay (foreachBatch reruns
-    * after a failure, same epoch id) first DELETES its own partition and
-    * re-lands it whole — effectively-once on top of an at-least-once sink
-    * callback. The explicit delete (rather than dynamic partition
-    * overwrite) matters with secondary `partitionBy`: a failed attempt can
-    * leave committed files in sub-partitions the replay no longer produces,
-    * which dynamic overwrite would leave standing as duplicates.
-    *
-    * Epoch ids must come from ONE streaming checkpoint per layer: Spark
-    * replays only the most recent unfinished batch, so a batchId REGRESSING
-    * by more than one means a wiped/foreign checkpoint is replaying epoch 0
-    * over committed history — refused loudly instead of silently deleting
-    * landed data. Readers see `__batch_id` as an ordinary partition column;
-    * filter or drop it downstream. Same flat-layer contract as [[write]].
-    */
-  def writeBatchIdempotent(df: DataFrame, layer: String, batchId: Long,
-      partitionBy: Seq[String] = Nil): String = {
-    val path = layerPath(layer)
-    requireFlatLayer(layer)
-    val root = new Path(path)
-    val f = fs(root)
-    val existing =
-      if (!f.exists(root)) Nil
-      else f.listStatus(root).map(_.getPath.getName)
-        .filter(_.startsWith("__batch_id=")).toSeq
-        .flatMap(n => scala.util.Try(n.stripPrefix("__batch_id=").toLong).toOption)
-    existing.maxOption.foreach { maxId =>
-      require(batchId >= maxId - 1,
-        s"layer '$layer' already holds batches up to $maxId but batch " +
-          s"$batchId arrived — a reset/foreign streaming checkpoint would " +
-          "overwrite committed history; use one checkpoint per layer")
-    }
-    val own = new Path(root, s"__batch_id=$batchId")
-    val ownStats = new Path(root, FileStats.batchSidecarName(batchId))
-    if (f.exists(own)) f.delete(own, true) // failed attempt's debris, whole
-    if (f.exists(ownStats)) f.delete(ownStats, false) // stats replay with it
-    df.withColumn("__batch_id", org.apache.spark.sql.functions.lit(batchId))
-      .write.format("parquet")
-      .mode("append")
-      .partitionBy(("__batch_id" +: partitionBy): _*)
-      .save(path)
-    // per-batch stats sidecar AFTER the data, same soft-fail contract as
-    // the snapshot sidecar: [[readWhere]] prunes streaming-landed layers
-    // too, and a replay replaces its stats together with its partition
-    // (delete above), so stale stats can never describe re-landed data
-    if (config.collectStats) {
-      try {
-        val stats = FileStats
-          .collect(spark.sparkContext.hadoopConfiguration, own.toString)
-          .map(s => s.copy(
-            path = s"__batch_id=$batchId/${s.path}",
-            partitionValues = s.partitionValues +
-              ("__batch_id" -> batchId.toString)))
-        Lake.putFile(f, ownStats, FileStats.toJson(stats), overwrite = false)
-      } catch {
-        case scala.util.control.NonFatal(e) =>
-          Console.err.println(s"[lake] batch stats for $own skipped: $e")
-      }
-    }
-    path
-  }
 
   /** Shared flat-layer guard: flat writes to a snapshot-managed layer are
     * invisible to snapshot readers (append) or destroy version history
@@ -3670,8 +3539,7 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
           s"(has: ${schema.fieldNames.mkString(", ")})"))
       val parts = latestSnapshot(layer).map(s =>
         layerPartitionCols(layer, snapshotInventory(layer, s)))
-        .getOrElse(properties(layer).get("lake.partitionBy").toSeq
-          .flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty))
+        .getOrElse(declaredPartitionBy(layer))
       require(cols.intersect(parts).isEmpty,
         s"setClusterBy('$layer'): ${cols.intersect(parts).mkString(", ")} " +
           "are hive partition columns — constant within their files, " +
@@ -4210,9 +4078,8 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
     }
 
   /** Whether the layer is under the snapshot protocol (has a committed
-    * version) — how a path-agnostic writer (the streaming sink) picks
-    * between the atomic-append commit path and the flat
-    * `__batch_id`-partition protocol.
+    * version) — the streaming sink creates a layer's first commit when it
+    * is not.
     */
   def isSnapshotManaged(layer: String): Boolean =
     latestSnapshot(layer).isDefined
@@ -7679,18 +7546,14 @@ final class Lake(spark: SparkSession, config: LakeConfig) {
     * data TWICE (delta `save` + hive `saveAsTable`, recomputing the plan);
     * here the second copy is a metastore-managed table written once from the
     * (already narrow) frame. Works against Hive or the in-memory catalog.
-    * Overwrite mode routes the path copy through the atomic snapshot
+    * Both copies overwrite; the path copy goes through the atomic snapshot
     * protocol, so layer readers never see a partial publish.
     */
   def writeAndPublish(df: DataFrame, layer: String, table: String,
-      partitionBy: Seq[String] = Nil, mode: String = "overwrite"): String = {
-    // case-insensitive like DataFrameWriter.mode — "Overwrite" must not
-    // silently fall through to the non-atomic flat path
-    val path =
-      if (mode.equalsIgnoreCase("overwrite")) writeAtomic(df, layer, partitionBy)
-      else write(df, layer, partitionBy, mode)
+      partitionBy: Seq[String] = Nil): String = {
+    val path = writeAtomic(df, layer, partitionBy)
     spark.sql(s"CREATE DATABASE IF NOT EXISTS ${config.database}")
-    df.write.format("parquet").mode(SaveMode.valueOf(mode.capitalize))
+    df.write.format("parquet").mode(SaveMode.Overwrite)
       .saveAsTable(s"${config.database}.$table")
     path
   }

@@ -999,11 +999,9 @@ final case class LakeTable(spark: SparkSession, base: String, layer: String,
     (lake.properties(layer) + ("provider" -> "lake")).asJava
 
   override def partitioning(): Array[Transform] =
-    lake.properties(layer).get("lake.partitionBy")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty)
-        .map(org.apache.spark.sql.connector.expressions.Expressions.identity)
-        .toArray[Transform])
-      .getOrElse(Array.empty)
+    lake.declaredPartitionBy(layer)
+      .map(org.apache.spark.sql.connector.expressions.Expressions.identity)
+      .toArray[Transform]
 
   // ---- SHOW PARTITIONS (SupportsPartitionManagement, read-only leg) -------
   //
@@ -1230,10 +1228,7 @@ final case class LakeTable(spark: SparkSession, base: String, layer: String,
               require(pinnedVersion.isEmpty,
                 s"${name()}: cannot write to a time-travel relation")
               // a declared PARTITIONED BY layout survives INSERT OVERWRITE
-              val declaredPart = lake.properties(layer)
-                .get("lake.partitionBy")
-                .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-                .getOrElse(Nil)
+              val declaredPart = lake.declaredPartitionBy(layer)
               overwriteFilters match {
                 case Some(Seq()) =>
                   lake.writeAtomic(data, layer, partitionBy = declaredPart)

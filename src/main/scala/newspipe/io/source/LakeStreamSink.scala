@@ -25,20 +25,22 @@ import org.apache.spark.sql.types.StructType
   * would mean hand-rolling per-task parquet materialization for zero
   * benefit at this sink's commit granularity.
   *
-  * Two landing modes, auto-detected from the target layer:
+  * One landing mechanism: each micro-batch is one [[Lake.appendAtomic]]
+  * commit carrying a stream-txn ledger entry `(appId, batchId)` — Delta's
+  * txn appId/version exactly. At-least-once replays (restart from an
+  * older checkpoint epoch, foreachBatch-style retries) are FENCED: a
+  * batch whose id is ≤ the ledger's latest for this appId is skipped, so
+  * the layer converges to exactly-once content. Constraints, schema
+  * evolution, optimizeWrite and partition layout all apply — it is the
+  * same commit path batch appends take.
   *
-  *  - SNAPSHOT-MANAGED layer (a catalog table / `writeAtomic` layer):
-  *    each micro-batch is one [[Lake.appendAtomic]] commit carrying a
-  *    stream-txn ledger entry `(appId, batchId)` — Delta's txn
-  *    appId/version exactly. At-least-once replays (restart from an older
-  *    checkpoint epoch, foreachBatch-style retries) are FENCED: a batch
-  *    whose id is ≤ the ledger's latest for this appId is skipped, so the
-  *    layer converges to exactly-once content. Constraints, schema
-  *    evolution, optimizeWrite and partition layout all apply — it is the
-  *    same commit path batch appends take.
-  *  - FLAT layer (or a layer that does not exist yet): delegates to
-  *    [[Lake.writeBatchIdempotent]] — each batch lands under its
-  *    `__batch_id=N` partition, replays overwrite their own partition.
+  * A layer with no commit yet first gets an empty one, the way
+  * `CREATE TABLE … PARTITIONED BY` creates a table (the sink's
+  * `partitionBy` becomes the declared `lake.partitionBy` when none is
+  * declared); every batch, the first included, is then a fenced
+  * `STREAMING APPEND`. A layer holding data files but no commit (a flat
+  * `Lake.write` layer) is refused: committing over it would hide the
+  * files. `CONVERT TO LAKE` adopts such a layer first.
   *
   * `appId` resolution (stable across restarts, distinct across queries):
   * explicit `txnAppId` option > `checkpointLocation` option (one
@@ -192,33 +194,47 @@ object LakeStreamSink {
   private val IdRe =
     "id = ([0-9a-fA-F-]{36})".r.unanchored
 
-  /** Shared micro-batch landing core — see class doc for the two modes.
-    * Used by both the format("lake") sink and [[newspipe.io.LakeTable]]'s
-    * `toTable` Sink implementation.
+  /** Shared micro-batch landing core — see the class doc. Used by the
+    * format("lake") sink, [[newspipe.io.LakeTable]]'s `toTable` and
+    * [[newspipe.streaming.StreamingSilver.writeToLake]].
     */
-  private[io] def landBatch(base: String, layer: String,
+  private[newspipe] def landBatch(lake: Lake, layer: String,
       partCols: Seq[String], appIdOpt: Option[String],
       batchId: Long, data: DataFrame, deduped: Boolean = false,
       dedupIndex: Option[String] = None, maxBucket: Int = 1000): Unit = {
-    val spark = data.sparkSession
-    val lake = new Lake(spark, LakeConfig(basePath = base))
     // rebind the incremental execution's rows as a batch frame — the
     // addBatch frame's logical plan still carries streaming leaves and
     // must not be re-planned (see NewspipeSqlBridge.batchDataFrame)
     val batch = NewspipeSqlBridge.batchDataFrame(data)
+    // appendDeduped lands increments against a committed corpus with a
+    // declared index, so a deduped sink never creates its layer; a
+    // sink silently landing duplicates would betray the option
+    if (deduped) require(lake.isSnapshotManaged(layer),
+      s"lake sink option deduped=true: layer '$layer' is not " +
+        "snapshot-managed — appendDeduped lands increments against a " +
+        "committed corpus (writeAtomic + CREATE DEDUP INDEX first)")
+    else createIfAbsent(lake, layer, batch.schema, partCols)
+    val appId = appIdOpt.orElse(threadQueryId()).getOrElse {
+      // Shared-constant fallback is only safe for a single writer per
+      // layer: two distinct queries landing here would share one ledger
+      // key and silently fence each other's micro-batches. Loud so the
+      // operator sets txnAppId/checkpointLocation instead.
+      Console.err.println(s"[lake] sink WARNING: layer '$layer' commit " +
+        "falling back to the shared txn app id 'lake-stream' (no " +
+        "txnAppId/checkpointLocation option, query id not recoverable " +
+        "from the execution thread). Safe ONLY if this is the layer's " +
+        "single streaming writer; set option(\"txnAppId\", ...) to fence " +
+        "multiple writers correctly.")
+      "lake-stream"
+    }
+    // the commit path may pass over the frame more than once (constraint
+    // enforcement + the write) — pin the rows so the micro-batch is
+    // computed exactly once
     if (deduped) {
-      // the DEDUPED landing path: appendDeduped owns BOTH fences — the
-      // (appId, batchId) txn ledger skips whole replays before any
-      // dedup work, and the signature passes shed near-duplicate rows;
-      // an all-duplicate batch commits nothing (and so re-noops on
-      // replay). Requires a snapshot-managed corpus + a declared index —
-      // refusals surface loudly (a sink silently landing duplicates
-      // would betray the option).
-      require(lake.isSnapshotManaged(layer),
-        s"lake sink option deduped=true: layer '$layer' is not " +
-          "snapshot-managed — appendDeduped lands increments against a " +
-          "committed corpus (writeAtomic + CREATE DEDUP INDEX first)")
-      val appId = appIdOpt.orElse(threadQueryId()).getOrElse("lake-stream")
+      // appendDeduped owns BOTH fences — the (appId, batchId) txn ledger
+      // skips whole replays before any dedup work, and the signature
+      // passes shed near-duplicate rows; an all-duplicate batch commits
+      // nothing (and so re-noops on replay)
       val pinned = batch.stageBoundary()
       try {
         val r = lake.appendDeduped(pinned, layer, dedupIndex,
@@ -227,47 +243,50 @@ object LakeStreamSink {
           s"landed=${r.landed} dropped_batch=${r.droppedInBatch} " +
           s"dropped_corpus=${r.droppedVsCorpus}")
       } finally { pinned.unpersist(); () }
-      return
-    }
-    if (lake.isSnapshotManaged(layer)) {
-      val appId = appIdOpt.orElse(threadQueryId()).getOrElse {
-        // Shared-constant fallback is only safe for a single writer per
-        // layer: two distinct queries landing here would share one ledger
-        // key and silently fence each other's micro-batches. Loud so the
-        // operator sets txnAppId/checkpointLocation instead.
-        Console.err.println(s"[lake] sink WARNING: layer '$layer' commit " +
-          "falling back to the shared txn app id 'lake-stream' (no " +
-          "txnAppId/checkpointLocation option, query id not recoverable " +
-          "from the execution thread). Safe ONLY if this is the layer's " +
-          "single streaming writer; set option(\"txnAppId\", ...) to fence " +
-          "multiple writers correctly.")
-        "lake-stream"
-      }
-      if (lake.txnVersion(layer, appId).exists(_ >= batchId)) {
-        Console.err.println(s"[lake] sink skip: layer '$layer' already " +
-          s"holds batch $batchId for app '$appId' (replay fenced)")
-      } else {
-        // the commit path may pass over the frame more than once
-        // (constraint enforcement + the write) — pin the rows so the
-        // micro-batch is computed exactly once
-        val pinned = batch.stageBoundary()
-        try {
-          if (!pinned.isEmpty)
-            lake.appendAtomic(pinned, layer, txn = Some((appId, batchId)))
-        } finally { pinned.unpersist(); () }
-      }
+    } else if (lake.txnVersion(layer, appId).exists(_ >= batchId)) {
+      Console.err.println(s"[lake] sink skip: layer '$layer' already " +
+        s"holds batch $batchId for app '$appId' (replay fenced)")
     } else {
-      lake.writeBatchIdempotent(batch, layer, batchId, partCols)
+      val pinned = batch.stageBoundary()
+      try {
+        if (!pinned.isEmpty)
+          lake.appendAtomic(pinned, layer, txn = Some((appId, batchId)))
+      } finally { pinned.unpersist(); () }
     }
   }
+
+  /** Give a layer with no commit its first, empty one — the commit a
+    * catalog `CREATE TABLE … PARTITIONED BY` makes — so the first batch
+    * lands as a ledger-fenced append like every later one. A racing
+    * creator that loses the parent check carries on over the winner's
+    * commit. Refuses a layer whose data files no commit describes.
+    */
+  private def createIfAbsent(lake: Lake, layer: String,
+      schema: StructType, partCols: Seq[String]): Unit =
+    if (!lake.isSnapshotManaged(layer)) {
+      require(!lake.hasFlatData(layer),
+        s"lake sink: layer '$layer' holds data files but no committed " +
+          "snapshot (a flat Lake.write layer); committing over it would " +
+          "hide them — adopt it with CONVERT TO LAKE (Lake.convertToLake) " +
+          "before streaming into it")
+      // the sink's partitionBy, else a layout declared before the first
+      // batch; the commit records it as lake.partitionBy, which carries
+      // the layout of an empty commit (no k=v paths) to the first append
+      val parts =
+        if (partCols.nonEmpty) partCols else lake.declaredPartitionBy(layer)
+      try lake.writeAtomicIfLatest(lake.emptyFrame(schema), layer,
+        expectedParent = None, partitionBy = parts)
+      catch { case _: java.util.ConcurrentModificationException => () }
+    }
 
   private[io] final class LakeSink(base: String, layer: String,
       partCols: Seq[String], appId: Option[String],
       deduped: Boolean = false, dedupIndex: Option[String] = None,
       maxBucket: Int = 1000) extends Sink {
     override def addBatch(batchId: Long, data: DataFrame): Unit =
-      landBatch(base, layer, partCols, appId, batchId, data,
-        deduped, dedupIndex, maxBucket)
+      landBatch(new Lake(data.sparkSession, LakeConfig(basePath = base)),
+        layer, partCols, appId, batchId, data, deduped, dedupIndex,
+        maxBucket)
     override def toString: String =
       s"LakeSink[$base/$layer${if (deduped) " deduped" else ""}]"
   }

@@ -1,5 +1,6 @@
 package newspipe.streaming
 
+import newspipe.io.source.LakeStreamSink
 import newspipe.pipeline.Silver
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -36,13 +37,15 @@ object StreamingSilver {
       .select(col("window.start").as("window_start"),
         col("SENTIMENT_LABEL"), col("count"))
 
-  /** Stream→lake sink: micro-batch writer reusing the BATCH lake writer via
-    * foreachBatch — the same partitioned-parquet layout as a batch append,
-    * so downstream gold reads are source-agnostic. Target a FLAT
-    * (append-mode) layer: `Lake.write` refuses snapshot-managed layers
-    * (ones written with `writeAtomic`), because flat appends there would be
-    * invisible to snapshot readers. Returns the started query; caller owns
-    * lifecycle.
+  /** Stream→lake sink, EXACTLY-ONCE: each micro-batch lands through the
+    * lake stream sink's one landing path
+    * ([[newspipe.io.source.LakeStreamSink]]) — a ledger-fenced
+    * `STREAMING APPEND` commit keyed by `(checkpoint, batchId)`, so an
+    * at-least-once foreachBatch replay, or a rerun under a reset
+    * checkpoint, never lands a row twice. A layer with no commit gets an
+    * empty first one partitioned by `partitionBy`; a flat layer holding
+    * data is refused (convert it first). Returns the started query;
+    * caller owns lifecycle.
     */
   def writeToLake(silverStream: DataFrame, lake: newspipe.io.Lake,
       layer: String, partitionBy: Seq[String] = Seq("COUNTRY"),
@@ -50,30 +53,9 @@ object StreamingSilver {
     silverStream.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        lake.write(batch, layer, partitionBy, mode = "append"); ()
-      }
-      .start()
-
-  /** [[writeToLake]] with EFFECTIVELY-ONCE landing: each micro-batch lands
-    * under its `__batch_id` partition via explicit per-batch partition
-    * delete + re-land ([[newspipe.io.Lake.writeBatchIdempotent]] — NOT
-    * Spark's dynamic partition overwrite, which would leave duplicate
-    * sub-partitions when a replayed batch partitions differently; see that
-    * method's doc), so the at-least-once
-    * foreachBatch replay after a failure overwrites its own partition
-    * instead of appending duplicate rows. Use when the layer feeds exact
-    * counts/dedup downstream; the plain append sink is fine when
-    * duplicates are cleaned later anyway.
-    */
-  def writeToLakeExactlyOnce(silverStream: DataFrame, lake: newspipe.io.Lake,
-      layer: String, partitionBy: Seq[String] = Seq("COUNTRY"),
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    silverStream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        lake.writeBatchIdempotent(batch, layer, id, partitionBy); ()
+        LakeStreamSink.landBatch(lake, layer, partitionBy, Some(checkpoint),
+          id, batch)
       }
       .start()
 
@@ -91,9 +73,9 @@ object StreamingSilver {
     * at-least-once, and re-merging an identical batch is a fixpoint — every
     * key now matches and is replaced with the values it already has — so
     * the landed layer converges to exactly-once CONTENT even when the
-    * callback fires twice. (Contrast [[writeToLakeExactlyOnce]], which
-    * needs the `__batch_id` partition protocol precisely because blind
-    * appends are NOT idempotent.) A crash mid-merge is also safe: the
+    * callback fires twice. (Contrast [[writeToLake]], which needs the
+    * `(appId, batchId)` txn ledger precisely because blind appends are
+    * NOT idempotent.) A crash mid-merge is also safe: the
     * snapshot commit is atomic, so the layer holds either the pre-batch or
     * post-batch state, never half.
     */

@@ -306,7 +306,7 @@ class LakeDedupIndexSpec extends SparkTestBase {
     lake.createDedupIndex("docs", "dix", "text", "doc_id")
     val v1 = lake.listVersions("docs").head
     val before = shardCount(base, "docs", "dix")
-    newspipe.io.source.LakeStreamSink.landBatch(base, "docs", Nil,
+    newspipe.io.source.LakeStreamSink.landBatch(lake, "docs", Nil,
       Some("didx_app"), 0L,
       docs(5 until 8).select(($"doc_id" + 7000).as("doc_id"), $"text")
         .toDF("doc_id", "text").coalesce(1))

@@ -293,55 +293,22 @@ class LakeSkippingSpec extends SparkTestBase {
       lake.read("pz").filter(p).agg(sum("id")).collect()
   }
 
-  test("streaming batches carry per-batch sidecars; readWhere prunes flat layers") {
+  test("sink-landed streaming batches carry commit stats; readWhere prunes them") {
     val lake = tmpLake()
-    // 5 micro-batches with disjoint id ranges — the streaming-sink shape
+    // 5 micro-batches with disjoint id ranges through the stream sink's
+    // landing path: a creating commit, then one fenced append per batch
     (0 until 5).foreach { b =>
       val df = spark.range(b * 100, (b + 1) * 100).toDF("id")
         .withColumn("v", concat(lit("r"), col("id")))
-      lake.writeBatchIdempotent(df, "stream", b.toLong)
+      newspipe.io.source.LakeStreamSink.landBatch(lake, "stream", Nil,
+        Some("app"), b.toLong, df)
     }
     val p = col("id") < 150 // batches 0 and 1 only
     val info = lake.pruneInfo("stream", p).get
     info.keptFiles should be < info.totalFiles
+    info.totalRows shouldBe 500
     lake.readWhere("stream", p).agg(count(lit(1)), sum("id")).collect() shouldBe
       lake.read("stream").filter(p).agg(count(lit(1)), sum("id")).collect()
-    // __batch_id is a partition column: pruning via the path works too
-    val pb = col("__batch_id") === 3
-    lake.pruneInfo("stream", pb).get.keptRows shouldBe 100
-    lake.readWhere("stream", pb).count() shouldBe 100
-  }
-
-  test("a replayed batch replaces its stats with its partition (no stale pruning)") {
-    val lake = tmpLake()
-    lake.writeBatchIdempotent(
-      spark.range(0, 100).toDF("id"), "replay", 0L)
-    lake.writeBatchIdempotent(
-      spark.range(100, 200).toDF("id"), "replay", 1L)
-    // batch 1 replays with a DIFFERENT id range — its old stats must die
-    lake.writeBatchIdempotent(
-      spark.range(5000, 5100).toDF("id"), "replay", 1L)
-    val p = col("id") >= 5000
-    lake.readWhere("replay", p).count() shouldBe 100
-    val info = lake.pruneInfo("replay", p).get
-    info.keptFiles should be < info.totalFiles // batch 0 pruned
-    // and the old 100-199 range no longer matches anything
-    lake.readWhere("replay", col("id").between(100, 199)).count() shouldBe 0
-  }
-
-  test("files landed OUTSIDE the idempotent writer are never skipped") {
-    val lake = tmpLake()
-    lake.writeBatchIdempotent(
-      spark.range(0, 100).toDF("id"), "mixed", 0L)
-    // a plain append next to the batches (same hive layout, but through
-    // the stats-less writer): no sidecar describes these files
-    lake.write(spark.range(9000, 9100).toDF("id")
-      .withColumn("__batch_id", lit(99L)), "mixed",
-      partitionBy = Seq("__batch_id"))
-    val p = col("id") >= 9000
-    // stats alone would prune everything; the unknown file must be kept
-    lake.readWhere("mixed", p).count() shouldBe 100
-    lake.read("mixed").count() shouldBe 200
   }
 
   test("sidecar JSON round-trips") {

@@ -81,16 +81,16 @@ class LakeSpec extends SparkTestBase {
   test("writeAndPublish registers a queryable catalog table (ref _lib:198-233)") {
     val lake = tmpLake()
     val df = Seq((1, "a")).toDF("id", "v")
-    lake.writeAndPublish(df, "gold", "t_publish_spec", mode = "overwrite")
+    lake.writeAndPublish(df, "gold", "t_publish_spec")
     spark.table("news_articles.t_publish_spec").count() shouldBe 1
+    lake.listVersions("gold").length shouldBe 1 // took the snapshot path
     spark.sql("DROP TABLE news_articles.t_publish_spec")
   }
 
   test("publish lands in the REAL Hive metastore (ref S6: Hive catalog, not the in-memory stub)") {
     spark.conf.get("spark.sql.catalogImplementation") shouldBe "hive"
     val lake = tmpLake()
-    lake.writeAndPublish(Seq((7, "h")).toDF("id", "v"), "gold", "t_hive_spec",
-      mode = "overwrite")
+    lake.writeAndPublish(Seq((7, "h")).toDF("id", "v"), "gold", "t_hive_spec")
     // the external (metastore-backed) catalog must know the table — this is
     // the API the reference's write_to_datalake_and_hive relies on
     spark.sharedState.externalCatalog
@@ -99,15 +99,6 @@ class LakeSpec extends SparkTestBase {
       .getTable("news_articles", "t_hive_spec")
     meta.provider shouldBe Some("parquet")
     spark.sql("DROP TABLE news_articles.t_hive_spec")
-  }
-
-  test("writeAndPublish routes overwrite atomically regardless of mode casing") {
-    val lake = tmpLake()
-    lake.writeAndPublish(Seq((1, "a")).toDF("id", "v"), "gold", "t_case_spec",
-      mode = "Overwrite") // DataFrameWriter-style casing
-    lake.listVersions("gold").length shouldBe 1 // took the snapshot path
-    spark.table("news_articles.t_case_spec").count() shouldBe 1
-    spark.sql("DROP TABLE news_articles.t_case_spec")
   }
 
   test("writeAtomic: a reader mid-overwrite sees only the old or the new complete snapshot") {
@@ -396,42 +387,6 @@ class LakeSpec extends SparkTestBase {
     an[IllegalArgumentException] should be thrownBy
       lake.readVersion("layer", "not-a-version")
     lake.listVersions("flat-layer") shouldBe empty
-  }
-
-  test("writeBatchIdempotent: a replayed batch overwrites itself; distinct batches accumulate") {
-    val lake = tmpLake()
-    lake.writeBatchIdempotent(Seq((1, "a"), (2, "b")).toDF("id", "v"), "stream", 0L)
-    lake.writeBatchIdempotent(Seq((3, "c")).toDF("id", "v"), "stream", 1L)
-    lake.read("stream").count() shouldBe 3
-    // batch 1 REPLAYED (failure rerun) with the same rows: no duplicates
-    lake.writeBatchIdempotent(Seq((3, "c")).toDF("id", "v"), "stream", 1L)
-    lake.read("stream").count() shouldBe 3
-    // replay may even carry corrected rows: its partition is replaced whole
-    lake.writeBatchIdempotent(Seq((3, "c2"), (4, "d")).toDF("id", "v"), "stream", 1L)
-    val rows = lake.read("stream").select("id", "v").as[(Int, String)]
-      .collect().sortBy(_._1)
-    rows shouldBe Array((1, "a"), (2, "b"), (3, "c2"), (4, "d"))
-    // batch 0 untouched by batch 1 replays
-    lake.read("stream").filter($"__batch_id" === 0).count() shouldBe 2
-    // a regressed epoch id (wiped/foreign checkpoint) is refused, not
-    // silently overwriting committed history
-    lake.writeBatchIdempotent(Seq((9, "z")).toDF("id", "v"), "stream", 2L)
-    an[IllegalArgumentException] should be thrownBy
-      lake.writeBatchIdempotent(Seq((0, "x")).toDF("id", "v"), "stream", 0L)
-  }
-
-  test("writeBatchIdempotent with secondary partitionBy: replay replaces the WHOLE batch partition") {
-    val lake = tmpLake()
-    // failed attempt landed GB rows; the replay produces only US rows —
-    // the stale GB sub-partition must not survive as duplicates
-    lake.writeBatchIdempotent(
-      Seq(("a", "US"), ("b", "GB")).toDF("v", "COUNTRY"), "stream", 0L,
-      partitionBy = Seq("COUNTRY"))
-    lake.writeBatchIdempotent(
-      Seq(("a", "US")).toDF("v", "COUNTRY"), "stream", 0L,
-      partitionBy = Seq("COUNTRY"))
-    lake.read("stream").select("v", "COUNTRY").as[(String, String)]
-      .collect() shouldBe Array(("a", "US"))
   }
 
   test("compact rewrites many small files as one atomic snapshot with fewer files") {

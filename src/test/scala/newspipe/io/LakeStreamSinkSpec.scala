@@ -8,12 +8,12 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 /** Streaming lake SINK (`writeStream.format("lake")` / `.toTable`):
-  * micro-batches land through the lake's own commit paths — flat
-  * `__batch_id` protocol for flat layers, txn-fenced atomic appends for
-  * snapshot-managed (catalog) layers — with at-least-once replays fenced
-  * to exactly-once content. Closes the produce half the change source
-  * consumes (ref `docs/pipeline_overview.md:160-166`, streaming ingestion
-  * as named future work).
+  * every micro-batch lands as one txn-fenced atomic append — a fresh
+  * layer first gets an empty creating commit, a flat layer holding data
+  * is refused — with at-least-once replays fenced to exactly-once
+  * content. Closes the produce half the change source consumes (ref
+  * `docs/pipeline_overview.md:160-166`, streaming ingestion as named
+  * future work).
   */
 class LakeStreamSinkSpec extends SparkTestBase {
   import spark.implicits._
@@ -21,10 +21,15 @@ class LakeStreamSinkSpec extends SparkTestBase {
   private def freshDir(tag: String): String =
     Files.createTempDirectory(tag).toString
 
-  test("format(lake) into a flat layer: batches land under __batch_id") {
+  private def operations(lake: Lake, layer: String): Seq[String] =
+    lake.history(layer).orderBy("ordinal").select("operation").as[String]
+      .collect().toSeq
+
+  test("format(lake) into a fresh layer: a WRITE creates it, every batch " +
+      "is a STREAMING APPEND") {
     implicit val sqlCtx = spark.sqlContext
-    val base = freshDir("sink_flat")
-    val ckpt = freshDir("sink_flat_ck")
+    val base = freshDir("sink_fresh")
+    val ckpt = freshDir("sink_fresh_ck")
     val stream = MemoryStream[(Long, String)]
     val q = stream.toDF().toDF("id", "text").writeStream
       .format("lake")
@@ -36,12 +41,65 @@ class LakeStreamSinkSpec extends SparkTestBase {
       stream.addData((3L, "c")); q.processAllAvailable()
     } finally q.stop()
     val lake = new Lake(spark, LakeConfig(basePath = base))
-    lake.isSnapshotManaged("docs") shouldBe false
+    lake.isSnapshotManaged("docs") shouldBe true
     val rows = lake.read("docs")
-    rows.columns should contain("__batch_id")
+    rows.columns.toSeq shouldBe Seq("id", "text")
     rows.select("id").as[Long].collect().sorted shouldBe Array(1L, 2L, 3L)
-    rows.select("__batch_id").distinct().as[Long].collect().sorted
-      .shouldBe(Array(0L, 1L))
+    operations(lake, "docs") shouldBe
+      Seq("WRITE", "STREAMING APPEND", "STREAMING APPEND")
+    lake.txnVersion("docs", ckpt) shouldBe Some(1L)
+  }
+
+  test("fresh layer: a checkpoint-reset replay lands no row twice") {
+    implicit val sqlCtx = spark.sqlContext
+    val base = freshDir("sink_fresh_replay")
+    def run(ckpt: String, data: Seq[(Long, String)]): Unit = {
+      val stream = MemoryStream[(Long, String)]
+      val q = stream.toDF().toDF("id", "text").writeStream
+        .format("lake")
+        .option("basePath", base).option("layer", "docs")
+        .option("txnAppId", "appA")
+        .option("checkpointLocation", ckpt)
+        .start()
+      try { data.foreach { r => stream.addData(r); q.processAllAvailable() } }
+      finally q.stop()
+    }
+    run(freshDir("sink_fresh_replay_ck1"), Seq((1L, "a"), (2L, "b")))
+    // a WIPED checkpoint replays both rows as batch 0: fenced
+    run(freshDir("sink_fresh_replay_ck2"), Seq((1L, "a"), (2L, "b")))
+    val lake = new Lake(spark, LakeConfig(basePath = base))
+    lake.read("docs").select("id").as[Long].collect().sorted shouldBe
+      Array(1L, 2L)
+  }
+
+  test("a layer holding data files but no commit is refused, not hidden") {
+    val base = freshDir("sink_flat")
+    val lake = new Lake(spark, LakeConfig(basePath = base))
+    lake.write(Seq((1L, "a")).toDF("id", "text"), "docs", mode = "append")
+    val e = intercept[IllegalArgumentException] {
+      LakeStreamSink.landBatch(lake, "docs", Nil, Some("app"), 0L,
+        Seq((2L, "b")).toDF("id", "text"))
+    }
+    e.getMessage should include("CONVERT TO LAKE")
+    lake.isSnapshotManaged("docs") shouldBe false
+    lake.read("docs").select("id").as[Long].collect() shouldBe Array(1L)
+    // once adopted, the same batch lands on top of the flat rows
+    lake.convertToLake("docs")
+    LakeStreamSink.landBatch(lake, "docs", Nil, Some("app"), 0L,
+      Seq((2L, "b")).toDF("id", "text"))
+    lake.read("docs").select("id").as[Long].collect().sorted shouldBe
+      Array(1L, 2L)
+  }
+
+  test("properties declared before the first batch are metadata, not data") {
+    val base = freshDir("sink_declared")
+    val lake = new Lake(spark, LakeConfig(basePath = base))
+    // the layer root holds only _PROPERTIES.json and its hidden checksum
+    lake.setProperties("docs", Map("lake.partitionBy" -> "lang"))
+    LakeStreamSink.landBatch(lake, "docs", Nil, Some("app"), 0L,
+      Seq((1L, "en")).toDF("id", "lang"))
+    lake.partitionColumns("docs") shouldBe Seq("lang")
+    lake.read("docs").select("id").as[Long].collect() shouldBe Array(1L)
   }
 
   test("format(lake) with path option and partitionBy") {
@@ -58,8 +116,8 @@ class LakeStreamSinkSpec extends SparkTestBase {
     val lake = new Lake(spark, LakeConfig(basePath = base))
     lake.read("docs").where($"lang" === "en").select("id")
       .as[Long].collect() shouldBe Array(1L)
-    // hive layout: lang is a real partition dir under the batch partition
-    new java.io.File(s"$base/docs/__batch_id=0/lang=en").exists() shouldBe true
+    // hive layout: the creating commit declares lang, the batch lands in it
+    lake.partitionColumns("docs") shouldBe Seq("lang")
   }
 
   test("snapshot-managed layer: commits are STREAMING APPEND, txn-fenced " +
@@ -145,13 +203,13 @@ class LakeStreamSinkSpec extends SparkTestBase {
     // of batch 0 re-noops BEFORE any dedup work
     lake.txnVersion("docs", "dd_sink") shouldBe Some(0L)
     val head = lake.listVersions("docs").head
-    LakeStreamSink.landBatch(base, "docs", Nil, Some("dd_sink"), 0L,
+    LakeStreamSink.landBatch(lake, "docs", Nil, Some("dd_sink"), 0L,
       Seq((9000L, textOf(9, "q"))).toDF("doc_id", "text"),
       deduped = true, dedupIndex = Some("dix"))
     lake.listVersions("docs").head shouldBe head
     // deduped into a non-snapshot layer is refused loudly
     val e = intercept[Exception] {
-      LakeStreamSink.landBatch(base, "flatlayer", Nil, Some("x"), 0L,
+      LakeStreamSink.landBatch(lake, "flatlayer", Nil, Some("x"), 0L,
         Seq((1L, "t")).toDF("doc_id", "text"), deduped = true)
     }
     e.getMessage should include("snapshot-managed")
@@ -162,10 +220,10 @@ class LakeStreamSinkSpec extends SparkTestBase {
     val lake = new Lake(spark, LakeConfig(basePath = base))
     lake.writeAtomic(Seq((0L, "seed")).toDF("id", "text"), "docs")
     val inc = Seq((1L, "a")).toDF("id", "text")
-    LakeStreamSink.landBatch(base, "docs", Nil, Some("app"), 0L, inc)
-    LakeStreamSink.landBatch(base, "docs", Nil, Some("app"), 0L, inc)
+    LakeStreamSink.landBatch(lake, "docs", Nil, Some("app"), 0L, inc)
+    LakeStreamSink.landBatch(lake, "docs", Nil, Some("app"), 0L, inc)
     lake.read("docs").count() shouldBe 2
-    LakeStreamSink.landBatch(base, "docs", Nil, Some("app"), 1L, inc)
+    LakeStreamSink.landBatch(lake, "docs", Nil, Some("app"), 1L, inc)
     lake.read("docs").count() shouldBe 3
   }
 

@@ -585,7 +585,7 @@ class LakeVectorIndexSpec extends SparkTestBase {
     val before = shardCount(base, "emb", "idx")
     // a lake-sink micro-batch is an appendAtomic with a _TXN ledger
     // entry — the same post-commit hook covers the batch's files
-    newspipe.io.source.LakeStreamSink.landBatch(base, "emb", Nil,
+    newspipe.io.source.LakeStreamSink.landBatch(lake, "emb", Nil,
       Some("vidx_app"), 0L,
       queries.select(($"vec_id" + 100000L).as("vec_id"),
         $"vec".cast("array<double>").as("vec"),
